@@ -375,11 +375,12 @@ CITY_CORRECTIONS = {"Mumabi": "Mumbai", "Banglore": "Bangalore", "Pune": "Pune"}
 _cascading = {
     k: v for k, v in CITY_CORRECTIONS.items() if v != k and v in CITY_CORRECTIONS
 }
-assert not _cascading, (
-    f"CITY_CORRECTIONS entries cascade ({_cascading}); normalize_city's "
-    "map lookup is single-step — collapse the chain (map A directly to "
-    "its final value) before shipping"
-)
+if _cascading:
+    raise ValueError(
+        f"CITY_CORRECTIONS entries cascade ({_cascading}); normalize_city's "
+        "map lookup is single-step — collapse the chain (map A directly to "
+        "its final value) before shipping"
+    )
 
 
 def normalize_city(col: Column | str) -> Column:

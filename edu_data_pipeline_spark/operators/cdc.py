@@ -8,9 +8,11 @@ changes per key per batch. ``apply_cdc`` is the full fold, Spark-first:
 1. last-change-wins per key — one window over (key, change order), the
    same in-batch rule as the reference's dict-overwrite dedup;
 2. delete wins by being the last op, not by a separate pass;
-3. one anti-join + union against the snapshot — identical shuffle shape
-   to ``merge_upsert``, so swapping in Delta ``MERGE ... WHEN MATCHED
-   DELETE`` changes the writer, not the plan shape.
+3. the snapshot is folded into the same pass: snapshot and change rows
+   are unioned and one key-partitioned window ranks every change above
+   every snapshot row, so a key keeps its latest change (or nothing,
+   for a delete) when any change touched it and its snapshot rows
+   otherwise — one exchange, the same shape as ``merge_upsert``.
 
 Idempotent per batch: applying the same change feed twice yields the
 same snapshot.

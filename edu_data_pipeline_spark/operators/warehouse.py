@@ -13,9 +13,10 @@ the transformation DAG (dags/data_transformation_pipeline.py), Spark-first:
   ``xxhash64(natural key)`` (deterministic, shuffle-free, join-colocatable);
   ``dense=True`` gives contiguous SKs for small-dim parity tests.
 - Upserts: the reference's ``INSERT .. ON CONFLICT DO UPDATE``
-  (db.py:45-65) becomes a key-based merge: in-batch last-write-wins dedup,
-  then target-minus-updates anti-join + union. With Delta available this
-  would be ``MERGE INTO``; the parquet fallback is semantically identical.
+  (db.py:45-65) becomes a key-based merge: target and updates are unioned
+  and one key-partitioned window keeps the last update per key, or the
+  target rows of keys no update touched. ``ParquetMergeWriter`` applies
+  it to a parquet table directory.
 """
 
 from __future__ import annotations
@@ -107,15 +108,14 @@ def merge_upsert(
     # precedent): a struct of the key columns is never NULL at the top
     # level and struct equality compares NULL fields as equal, so
     # partitioning on it groups rows exactly like the <=> conjunction
-    # (the documented NULL-key upsert fix). The row-order path is
-    # unaffected: monotonically_increasing_id is projected below the
-    # single window exchange, so each row's id (and therefore the
-    # per-key winner among update rows) is fixed before any
-    # partitioning decision; unioning the target in only shifts every
-    # update partition's id by a constant, preserving relative order.
+    # (the documented NULL-key upsert fix). Without order_col the
+    # per-key winner among update rows is the LAST in arrival order:
+    # a monotonically_increasing_id projected on the updates alone,
+    # so it never depends on how a union orders its children.
     kc = "_mu_k"
     cc = "_mu_c"  # 1 = update row, 0 = target row
-    reserved = {kc, cc, "__rn", "__hc"}
+    oc = "_mu_o"  # arrival order id of an update row; NULL on target rows
+    reserved = {kc, cc, oc, "__rn", "__hc"}
     cols = set(updates.columns) | (set(target.columns) if target is not None else set())
     clash = sorted(reserved & cols)
     if clash:
@@ -142,11 +142,15 @@ def merge_upsert(
     # key the row_number-1 row is the winning update when one exists
     # and the per-key max(cc) marker says whether target rows survive —
     # duplicate-key targets keep ALL rows, exactly like the anti-join.
+    if order_col is None:
+        tagged = tagged.withColumn(oc, F.monotonically_increasing_id())
+        order_expr = F.desc(oc)
     t_rows = target.withColumn(kc, F.struct(*keys)).withColumn(cc, F.lit(0))
-    # NULL-pad update-only columns (e.g. order_col) on the target side so
-    # the union carries the full update schema through the window
-    for f in updates.schema.fields:
-        if f.name not in target.columns:
+    # NULL-pad update-only columns (e.g. order_col, the order id) on the
+    # target side so the union carries the full update schema through
+    # the window
+    for f in tagged.schema.fields:
+        if f.name not in t_rows.columns:
             t_rows = t_rows.withColumn(f.name, F.lit(None).cast(f.dataType))
     all_rows = t_rows.unionByName(tagged.withColumn(cc, F.lit(1)))
     wk = Window.partitionBy(kc)
@@ -162,12 +166,10 @@ def merge_upsert(
 
 
 class ParquetMergeWriter:
-    """MERGE-style writer over a parquet directory (Delta-less fallback).
+    """MERGE-style writer over a parquet directory.
 
     Write path: read current target (if any) -> merge_upsert -> write to a
-    staging dir -> atomic-ish swap. Good enough for single-writer batch
-    jobs; a real deployment swaps this class for Delta ``MERGE INTO``
-    without touching callers.
+    staging dir -> atomic-ish swap. Single-writer batch jobs only.
     """
 
     def __init__(self, spark: SparkSession, path: str, keys: list[str]):
@@ -355,62 +357,3 @@ def scd2_apply(
         .unionByName(opened.select(*cols))
     )
 
-
-class DeltaMergeWriter:
-    """Delta Lake MERGE writer — the production swap-in for
-    ParquetMergeWriter (reference upsert semantics db.py:45-65 as a real
-    ``MERGE INTO``).
-
-    The sandbox has no delta-spark package, so construction degrades to
-    unavailable rather than failing the import; callers check
-    ``available`` (mirrors kafka_io.kafka_available). The merge body is
-    the exact call-site shape a Delta deployment runs — in-batch
-    last-write-wins dedup first (MERGE requires unique source keys),
-    then update-all/insert-all with null-safe key equality.
-    """
-
-    def __init__(self, spark: SparkSession, path: str, keys: list[str]):
-        self.spark = spark
-        self.path = path
-        self.keys = keys
-        try:  # pragma: no cover - package absent in this environment
-            from delta.tables import DeltaTable  # noqa: F401
-
-            self._delta_table_cls = DeltaTable
-        except ImportError:
-            self._delta_table_cls = None
-
-    @property
-    def available(self) -> bool:
-        return self._delta_table_cls is not None
-
-    def merge(self, updates: DataFrame, order_col: str | None = None) -> None:
-        """MERGE INTO target USING deduped-updates ON null-safe keys."""
-        if not self.available:
-            raise RuntimeError(
-                "delta-spark is not installed; use ParquetMergeWriter "
-                "(identical merge semantics over parquet)"
-            )
-        # pragma: no cover start - exercised only on Delta deployments
-        DeltaTable = self._delta_table_cls
-        w = Window.partitionBy(*self.keys).orderBy(
-            F.desc(order_col) if order_col else F.monotonically_increasing_id().desc()
-        )
-        deduped = (
-            updates.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        if not DeltaTable.isDeltaTable(self.spark, self.path):
-            deduped.write.format("delta").mode("overwrite").save(self.path)
-            return
-        target = DeltaTable.forPath(self.spark, self.path)
-        cond = " AND ".join(f"t.{k} <=> s.{k}" for k in self.keys)
-        (
-            target.alias("t")
-            .merge(deduped.alias("s"), cond)
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-        # pragma: no cover end

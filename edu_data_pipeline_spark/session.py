@@ -28,7 +28,7 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # (docs_dup_spans GC 0.14 s -> 0.02 s, wall 3.21 -> 2.19 s quiet-host).
 # 256 MB/thread is the guide's "more memory per concurrent task" rule
 # applied to local mode; on a cluster master this is inert (executor
-# sizing lives in cluster_profile.cluster_conf / the deployment).
+# sizing belongs to the deployment).
 _LOCAL_HEAP_MB_PER_CORE = 256
 _LOCAL_HEAP_MIN_MB = 2048
 
@@ -40,7 +40,7 @@ def _local_heap_mb(master: str) -> int | None:
     the override, like the default it replaces, applies ONLY in local
     mode (ADVICE r14): for non-local masters this factory never touches
     spark.driver.memory, so the env var is deliberately ignored there
-    (cluster sizing belongs to cluster_profile/the deployment)."""
+    (cluster sizing belongs to the deployment)."""
     import re
 
     m = re.fullmatch(r"local\[([0-9]+|\*)\]", master.strip())

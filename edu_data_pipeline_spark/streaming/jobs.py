@@ -265,10 +265,9 @@ def run_available_now(
     """Process the source's full current backlog, then stop
     (``Trigger.AvailableNow``): batch-incremental execution with
     streaming exactly-once bookkeeping. Each invocation picks up only
-    data that arrived since the last run — the checkpointed cousin of
-    ``sources/incremental.py``'s explicit ledger, and the standard way
-    to run a "streaming" pipeline as a scheduled job on a cluster
-    (pay for executors only while the backlog drains)."""
+    data that arrived since the last run — the standard way to run a
+    "streaming" pipeline as a scheduled job on a cluster (pay for
+    executors only while the backlog drains)."""
     q = (
         stream_df.writeStream.format("parquet")
         .option("path", sink_path)

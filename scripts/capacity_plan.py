@@ -12,9 +12,9 @@ exponent
 superlinear, a scale red flag) and projects the query's total shuffle
 volume at a 100 TB input under the measured exponent, plus the
 per-executor share on the 1000-executor reference cluster
-(`cluster_profile.cluster_conf`: 4 cores / 28 GB executors, 192 MB AQE
-advisory partitions — shuffle is streamed through disk, so the bound
-that matters is per-TASK partition size, which AQE pins at ~192 MB;
+(4 cores / 28 GB executors, 192 MB AQE advisory partitions — shuffle
+is streamed through disk, so the bound that matters is per-TASK
+partition size, which AQE pins at ~192 MB;
 the per-executor column sizes DISK, not memory).
 
 A two-point fit extrapolated 6 orders of magnitude is a MODEL, not a

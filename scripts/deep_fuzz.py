@@ -34,7 +34,6 @@ ROOT = pathlib.Path(__file__).resolve().parent.parent
 MODULES = [
     ("tests/test_properties.py", None),
     ("tests/test_graph_properties.py", None),
-    ("tests/test_dedup_index_properties.py", None),
     ("tests/test_warehouse_properties.py", None),
     ("tests/test_bpe_properties.py", None),
     ("tests/test_assembly_properties.py", None),

@@ -267,6 +267,67 @@ def test_cdc_boundary_seams_crafted(spark):
     assert got == _twin_cdc(docs)  # and the twin agrees with the pins
 
 
+def test_cdc_chunks_stable_under_insertion(spark):
+    """The point of content-defined chunking: inserting tokens near the
+    START of a document must leave the chunk fingerprints of the
+    document's tail intact (fixed-stride chunking re-addresses every
+    downstream chunk). We compare the two variants' surviving-chunk
+    counts on the same edit."""
+    import random
+
+    from edu_data_pipeline_spark.suite.scale_suite import docs_cdc_chunks
+
+    rng = random.Random(7)
+    words = [f"w{rng.randint(0, 500)}" for _ in range(400)]
+    original = " ".join(words)
+    edited = " ".join(["inserted", "tokens", "here"] + words)
+
+    def chunk_hashes(text):
+        d = spark.createDataFrame(
+            [(1, text, "en", "s", len(text))],
+            "doc_id long, text string, lang string, source string, n_chars long",
+        )
+        # docs_cdc_chunks reads via table(); run the same logic on this df
+        from edu_data_pipeline_spark.suite import scale_suite as ss
+        from pyspark.sql import functions as F2, Window as W2
+
+        toks = d.select(
+            "doc_id", F2.posexplode(F2.split(F2.trim(F2.col("text")), " ")).alias("pos0", "t")
+        ).select("doc_id", (F2.col("pos0") + 1).alias("pos"), "t")
+        h = F2.conv(F2.substring(F2.md5(F2.col("t")), 1, 8), 16, 10).cast("long")
+        marked = toks.withColumn("is_boundary", (h % ss.CDC_MODULUS == 0).cast("long"))
+        w = W2.partitionBy("doc_id").orderBy("pos").rowsBetween(
+            W2.unboundedPreceding, W2.currentRow
+        )
+        seg = marked.withColumn("chunk_id", F2.sum("is_boundary").over(w))
+        rows = seg.groupBy("doc_id", "chunk_id").agg(
+            F2.md5(
+                F2.array_join(
+                    F2.transform(
+                        F2.array_sort(F2.collect_list(F2.struct("pos", "t"))),
+                        lambda p: p["t"],
+                    ),
+                    " ",
+                )
+            ).alias("h")
+        ).collect()
+        return [r["h"] for r in rows]
+
+    base = set(chunk_hashes(original))
+    after = set(chunk_hashes(edited))
+    cdc_survivors = len(base & after)
+    # fixed-stride comparison: 8-token chunks by position
+    def strided(text):
+        t = text.split(" ")
+        return {" ".join(t[i : i + 8]) for i in range(0, len(t), 8)}
+
+    stride_survivors = len(strided(original) & strided(edited))
+    # CDC must preserve most tail chunks; the 3-token insert shifts every
+    # fixed-stride chunk (survivors ~0)
+    assert cdc_survivors >= int(0.8 * len(base)), (cdc_survivors, len(base))
+    assert cdc_survivors > stride_survivors
+
+
 def test_split_assign_stable_under_corpus_growth(spark):
     """The split contract: no document ever migrates when the corpus
     grows. Run the registered query on a corpus and on a superset —

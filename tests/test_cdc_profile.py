@@ -1,7 +1,6 @@
 from __future__ import annotations
 
 from edu_data_pipeline_spark.operators.cdc import apply_cdc
-from edu_data_pipeline_spark.operators.profile import profile_table
 
 
 def _changes(spark, rows):
@@ -65,19 +64,3 @@ def test_apply_cdc_null_keys(spark):
         ),
         key=str,
     ) == [(1, 2, "y"), (1, None, "x2")]
-
-
-def test_profile_table_one_row_per_column(spark):
-    df = spark.createDataFrame(
-        [(1, "x", 2.0), (2, "y", None), (None, "y", 6.0)],
-        ["id", "name", "score"],
-    )
-    prof = {r.column: r for r in profile_table(df).collect()}
-    assert set(prof) == {"id", "name", "score"}
-    assert all(r.n_rows == 3 for r in prof.values())
-    assert prof["id"].n_nulls == 1
-    assert prof["name"].n_nulls == 0
-    assert prof["name"].approx_distinct == 2
-    assert prof["score"].min == "2.0" and prof["score"].max == "6.0"
-    assert prof["score"].mean == "4.0"
-    assert prof["name"].mean is None

@@ -134,27 +134,3 @@ def test_streaming_listener(spark, tmp_path):
         assert listener.total_rows >= 5
     finally:
         listener.detach(spark)
-
-
-def test_pandas_udf_cosine_matches_native(spark):
-    """The Arrow-vectorized scalar pandas_udf must agree with the native
-    zip_with/aggregate expression to float precision — and the plan must
-    show ArrowEvalPython only on the pandas path."""
-    from edu_data_pipeline_spark.operators.vectorized import score_against_query
-    from edu_data_pipeline_spark.sources.testdata import table
-
-    e = table(spark, "/root/testdata/sf0.001", "embeddings")
-    native = {
-        r.vec_id: r.cos for r in score_against_query(e, use_pandas_udf=False).collect()
-    }
-    arrow = {
-        r.vec_id: r.cos for r in score_against_query(e, use_pandas_udf=True).collect()
-    }
-    assert set(native) == set(arrow)
-    assert all(abs(native[k] - arrow[k]) < 1e-12 for k in native)
-
-    native_plan = score_against_query(e)._jdf.queryExecution().executedPlan().toString()
-    arrow_plan = score_against_query(e, use_pandas_udf=True)._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in native_plan
-    assert "ArrowEvalPython" in arrow_plan
-    assert "BatchEvalPython" not in arrow_plan  # vectorized, not row-at-a-time

@@ -103,7 +103,7 @@ def _write_corpus(path: pathlib.Path, n: int, dim: int) -> None:
 def test_index_lsh_bits_stamp_survives_parquet_roundtrip(spark, tmp_path):
     """VERDICT r11 #4: a standing ANN index is MATERIALIZED — built once,
     written to parquet, reloaded by later screen jobs (the durable-index
-    cost model, operators/dedup_index.py). The lsh_bits stamp lives in
+    cost model). The lsh_bits stamp lives in
     the bucket column's schema metadata (streaming/jobs.py
     embedding_index), so it must survive write.parquet/read.parquet for
     a reloaded index to still self-describe its probe width. Asserts:

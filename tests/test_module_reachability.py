@@ -1,0 +1,133 @@
+"""Orphan-module guard: every package module is reachable from the engine.
+
+Walks the ``import`` / ``from ... import`` statements of the package with
+``ast`` (module-level, function-level and relative imports alike) from the
+engine's entry points: the batch pipeline, the query registry and its four
+suite modules, the stream jobs, the parity checker, the session factory and
+the cache registry. A module the walk never reaches has no production
+caller; it must be wired in, deleted, or listed in ``KEPT_UNREACHED`` with
+the reason it stays. No Spark session is needed.
+"""
+
+from __future__ import annotations
+
+import ast
+import pathlib
+
+import edu_data_pipeline_spark as pkg
+
+PKG_DIR = pathlib.Path(pkg.__file__).parent
+PKG = PKG_DIR.name
+
+ROOTS = (
+    "pipeline",
+    "suite",
+    "suite.analytics_suite",
+    "suite.cleaning_suite",
+    "suite.curation_suite",
+    "suite.scale_suite",
+    "streaming.jobs",
+    "parity",
+    "session",
+    "caches",
+)
+
+# Unreached on purpose, one line of reason each.
+KEPT_UNREACHED = {
+    "operators.metrics": "observe()-based run metrics; to be wired into pipeline runs",
+    "operators.prometheus": "Prometheus text registry; to be fed by engine stage spans",
+    "streaming.kafka_io": "the reference's Kafka topics as stream source and sink",
+    "operators.enrich": "stubbed AI enrichment of the reference",
+    "operators.reports": "the reference's summary report",
+    "schemas": "reference DDL for the schema conformance check",
+    "plans.inspect": "plan-assertion helper the tests use",
+}
+
+
+def _all_modules() -> dict[str, pathlib.Path]:
+    """Dotted name (relative to the package, '' for its root) -> file."""
+    out = {}
+    for path in PKG_DIR.rglob("*.py"):
+        parts = list(path.relative_to(PKG_DIR).with_suffix("").parts)
+        if parts[-1] == "__init__":
+            parts.pop()
+        out[".".join(parts)] = path
+    return out
+
+
+def _with_parents(name: str) -> list[str]:
+    """A module plus every package ``__init__`` importing it runs."""
+    parts = name.split(".") if name else []
+    return [".".join(parts[:i]) for i in range(len(parts) + 1)]
+
+
+def _imports(name: str, path: pathlib.Path, modules: dict) -> set[str]:
+    is_pkg = path.name == "__init__.py"
+    here = name.split(".") if name else []
+    found = set()
+
+    def absolute(dotted: str | None) -> str | None:
+        if not dotted:
+            return None
+        if dotted == PKG:
+            return ""
+        if dotted.startswith(PKG + "."):
+            return dotted[len(PKG) + 1:]
+        return None
+
+    for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+        if isinstance(node, ast.Import):
+            for alias in node.names:
+                found.add(absolute(alias.name))
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                base = here if is_pkg else here[:-1]
+                base = base[: len(base) - (node.level - 1)]
+                if node.module:
+                    base = base + node.module.split(".")
+                mod = ".".join(base)
+            else:
+                mod = absolute(node.module)
+            if mod is None:
+                continue
+            found.add(mod)
+            for alias in node.names:
+                sub = f"{mod}.{alias.name}" if mod else alias.name
+                if sub in modules:
+                    found.add(sub)
+    return {m for m in found if m is not None and m in modules}
+
+
+def _reached() -> set[str]:
+    modules = _all_modules()
+    seen: set[str] = set()
+    todo = [m for root in ROOTS for m in _with_parents(root)]
+    while todo:
+        name = todo.pop()
+        if name in seen:
+            continue
+        seen.add(name)
+        for dep in _imports(name, modules[name], modules):
+            todo.extend(_with_parents(dep))
+    return seen
+
+
+def test_roots_and_kept_modules_exist():
+    modules = _all_modules()
+    missing = sorted(
+        m for m in (*ROOTS, *KEPT_UNREACHED) if m not in modules
+    )
+    assert not missing, f"named modules no longer exist: {missing}"
+
+
+def test_every_module_is_reached_or_kept():
+    reached = _reached()
+    # importing a kept module runs its package __init__ files too
+    kept = {p for m in KEPT_UNREACHED for p in _with_parents(m)}
+    orphans = sorted(
+        m for m in _all_modules() if m not in reached and m not in kept
+    )
+    assert not orphans, (
+        "package modules no entry point imports (wire in, delete, or add "
+        "to KEPT_UNREACHED with a reason): " + ", ".join(orphans)
+    )

@@ -1,11 +1,10 @@
-"""Summary report formatting + applyInPandas groupwise equivalence."""
+"""Summary report formatting."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from edu_data_pipeline_spark.operators import groupwise, reports, transform
+from edu_data_pipeline_spark.operators import reports
 
 
 def test_summary_report(spark):
@@ -26,21 +25,3 @@ def test_summary_report(spark):
     assert "average quality score: 93.33" in md
     assert "- High Risk Students: 2 (risk > 70)" in md
     assert "Remediate invalid emails" in md
-
-
-def test_zscore_pandas_matches_native(spark):
-    emb = spark.createDataFrame(
-        [(i, i % 2, [float(i), float(i * 2), 7.0]) for i in range(12)],
-        "vec_id long, label int, embedding array<double>",
-    )
-    pandas_rows = {
-        (r.vec_id, r.dim): r.z for r in groupwise.zscore_per_label_pandas(emb).collect()
-    }
-    native_rows = {
-        (r.vec_id, r.dim): r.z for r in groupwise.zscore_per_label_native(emb).collect()
-    }
-    assert set(pandas_rows) == set(native_rows)
-    for k in pandas_rows:
-        assert pandas_rows[k] == pytest.approx(native_rows[k], abs=1e-9)
-    # constant dimension (7.0): std=0 -> z must be 0, not NaN/inf
-    assert all(v == 0.0 for (vid, dim), v in native_rows.items() if dim == 2)

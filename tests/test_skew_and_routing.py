@@ -1,48 +1,8 @@
-"""Skew-salting equivalence, corrupt-record routing, streaming dedup."""
+"""Corrupt-record routing, streaming dedup."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from edu_data_pipeline_spark.operators import skew
 from edu_data_pipeline_spark.sources import csv_ingest
-
-
-def test_salted_aggregate_equivalence(spark):
-    df = spark.createDataFrame(
-        [("HOT", float(i), i % 3) for i in range(500)]
-        + [("COLD", 1.0, 0), ("COLD", 2.0, 1)],
-        "k string, v double, w int",
-    )
-    plain = {
-        (r.k): (r.total, r.weighted, r.n_rows)
-        for r in df.groupBy("k")
-        .agg(F.sum("v").alias("total"), F.sum(F.col("v") * F.col("w")).alias("weighted"),
-             F.count(F.lit(1)).alias("n_rows"))
-        .collect()
-    }
-    salted = {
-        (r.k): (r.total, r.weighted, r.n_rows)
-        for r in skew.salted_sum_count(
-            df, ["k"],
-            {"total": F.col("v"), "weighted": F.col("v") * F.col("w")},
-            salt_buckets=8,
-        ).collect()
-    }
-    assert plain == salted
-
-
-def test_salted_join_equivalence(spark):
-    big = spark.createDataFrame(
-        [(i % 5, f"row{i}") for i in range(200)], "k int, payload string"
-    )
-    small = spark.createDataFrame([(i, f"dim{i}") for i in range(5)], "k int, label string")
-    plain = {(r.k, r.payload, r.label) for r in big.join(small, "k", "left").collect()}
-    salted = {
-        (r.k, r.payload, r.label)
-        for r in skew.salted_broadcast_left_join(big, small, "k").collect()
-    }
-    assert plain == salted
 
 
 def test_corrupt_record_routing(spark, tmp_path):

@@ -549,20 +549,6 @@ def test_cdc_feed_drives_scd2_dimension(spark, tmp_path):
     assert canon(replay_dim) == canon(dim)
 
 
-def test_delta_writer_degrades_gracefully(spark, tmp_path):
-    """delta-spark is absent here: the writer must construct, report
-    unavailable, and raise a clear error pointing at the parquet twin."""
-    import pytest as _pytest
-
-    from edu_data_pipeline_spark.operators.warehouse import DeltaMergeWriter
-
-    w = DeltaMergeWriter(spark, str(tmp_path / "delta_dim"), keys=["k"])
-    assert w.available is False
-    updates = spark.createDataFrame([("K1", "v")], "k string, v string")
-    with _pytest.raises(RuntimeError, match="ParquetMergeWriter"):
-        w.merge(updates)
-
-
 def test_multiprobe_recall_dominates_single_probe(spark):
     """Probing more cells can only add candidates: multiprobe's top-10
     overlap with exact brute force must be >= the single-probe overlap."""
