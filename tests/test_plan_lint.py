@@ -25,23 +25,34 @@ SF = "/root/testdata/sf0.001"
 PYTHON_ALLOWED = {"multimodal_features"}
 
 
-def _physical(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+@pytest.fixture(scope="module")
+def physical_plans():
+    """Physical plan per query name, shared by the three rules below:
+    they read the same plan, so each query is built and planned once."""
+    built: dict = {}
+    yield built
+    built.clear()
+
+
+def _executed_plan(spark, plans, name):
+    if name not in plans:
+        plans[name] = REGISTRY[name].fn(spark, SF)._jdf.queryExecution().executedPlan()
+    return plans[name]
 
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))
-def test_no_python_eval_in_plan(spark, name):
+def test_no_python_eval_in_plan(spark, physical_plans, name):
     if name in PYTHON_ALLOWED:
         pytest.skip("deliberate Arrow path")
-    plan = _physical(REGISTRY[name].fn(spark, SF))
+    plan = _executed_plan(spark, physical_plans, name).toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, (
         f"{name} contains Python evaluation in its plan"
     )
 
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))
-def test_no_raw_cartesian_product(spark, name):
-    plan = _physical(REGISTRY[name].fn(spark, SF))
+def test_no_raw_cartesian_product(spark, physical_plans, name):
+    plan = _executed_plan(spark, physical_plans, name).toString()
     # BroadcastNestedLoopJoin (broadcast small side) prints differently;
     # a raw CartesianProduct means both sides are full-size — forbidden.
     assert "CartesianProduct" not in plan, (
@@ -107,10 +118,10 @@ def _walk(p, out):
 
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))
-def test_non_equi_join_bounded_or_marked(spark, name):
+def test_non_equi_join_bounded_or_marked(spark, physical_plans, name):
     if "bruteforce" in name:
         pytest.skip("explicitly marked brute-force exhibit")
-    jplan = REGISTRY[name].fn(spark, SF)._jdf.queryExecution().executedPlan()
+    jplan = _executed_plan(spark, physical_plans, name)
     nodes: list = []
     _walk(jplan, nodes)
     for node in nodes:
