@@ -4,7 +4,8 @@ kafka/streaming.py:20-22).
 
 Spark-first equivalents:
 - Batch: ``df.observe()`` named metrics — collected on the driver when the
-  action completes, zero extra passes over the data.
+  action completes, zero extra passes over the data. ``write_counted`` is
+  how the batch pipeline counts every table it writes.
 - Streaming: a ``StreamingQueryListener`` exposing per-batch row counts
   (the consumer-lag-style metrics the docx asks for).
 Export to Prometheus is a driver-side concern (prometheus_client, not
@@ -13,10 +14,23 @@ bundled); these helpers produce the numbers.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+def write_counted(df: DataFrame, write: Callable[[DataFrame], None]) -> int:
+    """Run ``write`` on ``df`` and return the number of rows it wrote.
+
+    The count is an ``observe()`` metric of the write action itself, so
+    the output is never read back (a read-back ``count()`` costs a schema
+    inference job plus a two-job count).
+    """
+    obs = Observation()
+    write(df.observe(obs, F.count(F.lit(1)).alias("rows")))
+    return obs.get["rows"]
 
 
 @dataclass

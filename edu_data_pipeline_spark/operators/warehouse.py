@@ -27,8 +27,10 @@ import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.dates import date_key
+from .metrics import write_counted
 
 
 def build_dim_date(
@@ -104,18 +106,18 @@ def merge_upsert(
     documented fix for the reference's degenerate NULL-key upsert
     (SURVEY §7 hard-part 6).
     """
-    # MATERIALIZED struct partition key (r14, the bucketed_running_sum
-    # precedent): a struct of the key columns is never NULL at the top
-    # level and struct equality compares NULL fields as equal, so
-    # partitioning on it groups rows exactly like the <=> conjunction
-    # (the documented NULL-key upsert fix). Without order_col the
-    # per-key winner among update rows is the LAST in arrival order:
-    # a monotonically_increasing_id projected on the updates alone,
-    # so it never depends on how a union orders its children.
-    kc = "_mu_k"
+    # The window partitions on the key columns themselves: a window
+    # partition groups NULL keys together, exactly like the <=>
+    # conjunction (the documented NULL-key upsert fix), and it reuses an
+    # upstream exchange on the same keys — dedup_last_wins has just
+    # hash-partitioned a staging feed on them, so the bootstrap merge adds
+    # no shuffle. Without order_col the per-key winner among update rows
+    # is the LAST in arrival order: a monotonically_increasing_id
+    # projected on the updates alone, so it never depends on how a union
+    # orders its children.
     cc = "_mu_c"  # 1 = update row, 0 = target row
     oc = "_mu_o"  # arrival order id of an update row; NULL on target rows
-    reserved = {kc, cc, oc, "__rn", "__hc"}
+    reserved = {cc, oc, "__rn", "__hc"}
     cols = set(updates.columns) | (set(target.columns) if target is not None else set())
     clash = sorted(reserved & cols)
     if clash:
@@ -126,13 +128,12 @@ def merge_upsert(
     order_expr = (
         F.desc(order_col) if order_col else F.monotonically_increasing_id().desc()
     )
-    tagged = updates.withColumn(kc, F.struct(*keys))
+    wk = Window.partitionBy(*keys)
     if target is None:
-        w = Window.partitionBy(kc).orderBy(order_expr)
         return (
-            tagged.withColumn("__rn", F.row_number().over(w))
+            updates.withColumn("__rn", F.row_number().over(wk.orderBy(order_expr)))
             .filter(F.col("__rn") == 1)
-            .drop("__rn", kc)
+            .drop("__rn")
         )
     # SINGLE-EXCHANGE union fold (r15, VERDICT r14 #4; see apply_cdc for
     # the full rationale): the r14 shape consumed the deduped feed twice
@@ -142,10 +143,11 @@ def merge_upsert(
     # key the row_number-1 row is the winning update when one exists
     # and the per-key max(cc) marker says whether target rows survive —
     # duplicate-key targets keep ALL rows, exactly like the anti-join.
+    tagged = updates
     if order_col is None:
         tagged = tagged.withColumn(oc, F.monotonically_increasing_id())
         order_expr = F.desc(oc)
-    t_rows = target.withColumn(kc, F.struct(*keys)).withColumn(cc, F.lit(0))
+    t_rows = target.withColumn(cc, F.lit(0))
     # NULL-pad update-only columns (e.g. order_col, the order id) on the
     # target side so the union carries the full update schema through
     # the window
@@ -153,7 +155,6 @@ def merge_upsert(
         if f.name not in t_rows.columns:
             t_rows = t_rows.withColumn(f.name, F.lit(None).cast(f.dataType))
     all_rows = t_rows.unionByName(tagged.withColumn(cc, F.lit(1)))
-    wk = Window.partitionBy(kc)
     w = wk.orderBy(F.desc(cc), order_expr)
     flagged = all_rows.withColumn("__rn", F.row_number().over(w)).withColumn(
         "__hc", F.max(cc).over(wk)
@@ -169,18 +170,26 @@ class ParquetMergeWriter:
     """MERGE-style writer over a parquet directory.
 
     Write path: read current target (if any) -> merge_upsert -> write to a
-    staging dir -> atomic-ish swap. Single-writer batch jobs only.
+    staging dir -> atomic-ish swap. ``merge`` returns the table's row count
+    after the merge from an ``observe()`` metric of that write; the output
+    is never read back. After a merge, ``read`` reads the table with the
+    schema just written, so it runs no schema-inference job. One writer per
+    table; writers of different tables may run concurrently.
     """
 
     def __init__(self, spark: SparkSession, path: str, keys: list[str]):
         self.spark = spark
         self.path = path
         self.keys = keys
+        self.schema: StructType | None = None  # set by merge()
 
     def read(self) -> DataFrame | None:
         if not os.path.exists(self.path):
             return None
-        return self.spark.read.parquet(self.path)
+        reader = self.spark.read
+        if self.schema is not None:
+            reader = reader.schema(self.schema)
+        return reader.parquet(self.path)
 
     def merge(self, updates: DataFrame, order_col: str | None = None) -> int:
         # The merged plan reads the current target lazily; writing to the
@@ -188,11 +197,12 @@ class ParquetMergeWriter:
         # no driver-side materialization is needed.
         merged = merge_upsert(self.read(), updates, self.keys, order_col=order_col)
         tmp = f"{self.path}__tmp_{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp)
+        rows = write_counted(merged, lambda df: df.write.mode("overwrite").parquet(tmp))
         if os.path.exists(self.path):
             shutil.rmtree(self.path)
         os.rename(tmp, self.path)
-        return self.spark.read.parquet(self.path).count()
+        self.schema = merged.schema
+        return rows
 
 
 def build_fact_progress(

@@ -5,6 +5,19 @@ the reference's three Airflow DAGs (E1 file_ingestion, E2 data_cleaning,
 E3 data_transformation; SURVEY §3). XCom hand-offs become DataFrame
 lineage; psycopg2 upserts become keyed merges.
 
+The table writes form one DAG, run like the reference's parallel Airflow
+tasks: every input file is validated first, then each write starts as
+soon as the tables it reads are written, side by side with the other
+ready writes (the 4 raw appends; the 3 staging merges; dim_date and
+dim_courses, which need no staging table; the facts; the analytics views
+with the quality log). Each write runs on its own Python thread, which
+inherits the caller's job group, description and scheduler pool. Row
+counts come from an ``observe()`` metric of each write action, so no
+table is read back to be counted; a table later layers consume is read
+once, with the schema just written (no inference job).
+``metadata.pipeline_runs`` gets its SUCCESS row only after every other
+write succeeded.
+
 Reference quirks are replicated behind ``replicate_quirks`` (default True,
 matching observed reference output; see SURVEY §7 hard-parts):
 - E3 step 3 overwrites quality_score=100 / is_email_valid=True on the
@@ -22,12 +35,15 @@ from __future__ import annotations
 
 import json
 import os
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from .functions import dates, rules
-from .operators import analytics, cleaning, transform, warehouse
+from .operators import analytics, cleaning, metrics, transform, warehouse
 from .sources import csv_ingest
 
 
@@ -137,6 +153,36 @@ def build_dim_courses(raw_courses: DataFrame, replicate_quirks: bool = True) -> 
     return warehouse.with_surrogate_key(dim, "course_id", "course_sk")
 
 
+def _run_dag(
+    spark: SparkSession, tasks: dict[str, tuple[tuple[str, ...], Callable]]
+) -> dict[str, tuple[int | None, DataFrame | None]]:
+    """Run ``tasks`` (name -> (dependency names, function)) as a DAG.
+
+    A task starts as soon as every task it depends on has finished, and is
+    called with their frames. Ready tasks run side by side, each on a
+    Python thread that inherits the caller's job group, description,
+    scheduler pool and tags. Every task returns ``(rows, frame)``. The first
+    failure is raised once the tasks already running have finished; no
+    further task starts.
+    """
+    done: dict[str, tuple[int | None, DataFrame | None]] = {}
+    waiting = dict(tasks)
+    running: dict[Future, str] = {}
+    with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
+        while waiting or running:
+            for name, (deps, fn) in list(waiting.items()):
+                if all(d in done for d in deps):
+                    del waiting[name]
+                    args = [done[d][1] for d in deps]
+                    running[pool.submit(inheritable_thread_target(spark)(fn), *args)] = name
+            if not running:
+                raise ValueError(f"tasks with unmet dependencies: {sorted(waiting)}")
+            finished, _ = wait(running, return_when=FIRST_COMPLETED)
+            for fut in finished:
+                done[running.pop(fut)] = fut.result()
+    return done
+
+
 def run_batch_pipeline(
     spark: SparkSession,
     input_dir: str,
@@ -147,153 +193,159 @@ def run_batch_pipeline(
     replicate_quirks: bool = True,
 ) -> dict[str, int]:
     """Full E1+E2+E3 run. Returns per-table row counts (the BASELINE.md
-    golden numbers for a single clean run)."""
+    golden numbers for a single clean run), in table declaration order."""
     from .suite import ensure_session_confs
 
     ensure_session_confs(spark)
     ref = F.lit(ref_date).cast("date")
     ref_ts = F.lit(f"{ref_date} 00:00:00").cast("timestamp")
-    counts: dict[str, int] = {}
+    required = csv_ingest.REQUIRED_COLUMNS
+
+    # ---- pre-flight: every input is checked before anything is written --
+    paths = {name: os.path.join(input_dir, f"{name}.csv") for name in required}
+    checks = [csv_ingest.validate_file(p, required[n]) for n, p in paths.items()]
+    bad = [f"{c.path}: {c.problems}" for c in checks if not c.ok]
+    if bad:
+        raise csv_ingest.FileValidationError("; ".join(bad))
+
+    # ---- the write DAG: task name "layer.table" names the table's dir ----
+    tasks: dict[str, tuple[tuple[str, ...], Callable]] = {}
+
+    def table_dir(name: str) -> str:
+        return os.path.join(warehouse_dir, *name.split("."))
+
+    def append(df: DataFrame, path: str, write: Callable[[DataFrame, str], None]) -> int:
+        """Rows in the append-only table at ``path`` after appending ``df``."""
+        prior = (
+            spark.read.schema(df.schema).parquet(path).count()
+            if os.path.exists(path) else 0
+        )
+        return prior + metrics.write_counted(df, lambda d: write(d, path))
+
+    def ingest(source: str) -> None:
+        name = f"raw.{source}"
+
+        def task():
+            df = csv_ingest.with_lineage(
+                csv_ingest.read_raw_csv(spark, paths[source], required[source], validate=False),
+                batch_id=batch_id,
+            )
+            rows = append(df, table_dir(name), csv_ingest.append_raw)
+            return rows, spark.read.schema(df.schema).parquet(table_dir(name))
+        tasks[name] = ((), task)
+
+    def merge(name: str, deps: tuple[str, ...], keys: list[str], build: Callable) -> None:
+        def task(*inputs):
+            w = warehouse.ParquetMergeWriter(spark, table_dir(name), keys=keys)
+            return w.merge(build(*inputs)), w.read()
+        tasks[name] = (deps, task)
+
+    def overwrite(name: str, deps: tuple[str, ...], build: Callable) -> None:
+        def task(*inputs):
+            write = lambda d: d.write.mode("overwrite").parquet(table_dir(name))  # noqa: E731
+            return metrics.write_counted(build(*inputs), write), None
+        tasks[name] = (deps, task)
+
+    def plan(name: str, deps: tuple[str, ...], build: Callable) -> None:
+        """A lazy frame several writes share; it writes nothing."""
+        tasks[name] = (deps, lambda *inputs: (None, build(*inputs)))
 
     # ---- E1: ingest + raw layer -----------------------------------------
-    paths = {os.path.basename(p).removesuffix(".csv"): p
-             for p in csv_ingest.detect_new_files(input_dir)}
-    raw: dict[str, DataFrame] = {}
-    for name, path in paths.items():
-        df = csv_ingest.read_raw_csv(spark, path, csv_ingest.REQUIRED_COLUMNS[name])
-        staged = csv_ingest.with_lineage(df, batch_id=batch_id)
-        csv_ingest.append_raw(staged, os.path.join(warehouse_dir, "raw", name))
-        raw[name] = spark.read.parquet(os.path.join(warehouse_dir, "raw", name))
-        counts[f"raw.{name}"] = raw[name].count()
+    for source in paths:
+        ingest(source)
 
     # ---- E2: staging ----------------------------------------------------
-    master = _load_city_master(spark, city_master_path)
     lineage = ("file_row_number",)
-    stg_students = cleaning.dedup_last_wins(
-        cleaning.clean_students(
-            raw["students_enrollment"], master, ref_date=ref, batch_id=batch_id,
-            passthrough=lineage,
-        ),
-        "student_id",
-        "file_row_number",
-    )
-    stg_progress = cleaning.dedup_last_wins(
-        cleaning.clean_progress(
-            raw["student_progress"], ref_ts=ref_ts, batch_id=batch_id,
-            passthrough=lineage,
-        ),
-        "event_id",
-        "file_row_number",
-    )
-    stg_tickets = cleaning.dedup_last_wins(
-        cleaning.clean_tickets(
-            raw["support_tickets"], ref_date=ref, batch_id=batch_id,
-            passthrough=lineage,
-        ),
-        "ticket_id",
-        "file_row_number",
-    )
 
-    writers = {
-        "stg_students": (stg_students, ["student_id"]),
-        "stg_progress": (stg_progress, ["event_id"]),
-        "stg_tickets": (stg_tickets, ["ticket_id"]),
-    }
-    staged: dict[str, DataFrame] = {}
-    for name, (df, keys) in writers.items():
-        w = warehouse.ParquetMergeWriter(
-            spark, os.path.join(warehouse_dir, "staging", name), keys=keys
-        )
-        counts[f"staging.{name}"] = w.merge(df.drop("file_row_number"))
-        staged[name] = w.read()
+    def staged(clean: Callable, key: str) -> Callable:
+        return lambda raw: cleaning.dedup_last_wins(
+            clean(raw), key, "file_row_number"
+        ).drop("file_row_number")
+
+    merge("staging.stg_students", ("raw.students_enrollment",), ["student_id"],
+          staged(lambda raw: cleaning.clean_students(
+              raw, _load_city_master(spark, city_master_path), ref_date=ref,
+              batch_id=batch_id, passthrough=lineage,
+          ), "student_id"))
+    merge("staging.stg_progress", ("raw.student_progress",), ["event_id"],
+          staged(lambda raw: cleaning.clean_progress(
+              raw, ref_ts=ref_ts, batch_id=batch_id, passthrough=lineage,
+          ), "event_id"))
+    merge("staging.stg_tickets", ("raw.support_tickets",), ["ticket_id"],
+          staged(lambda raw: cleaning.clean_tickets(
+              raw, ref_date=ref, batch_id=batch_id, passthrough=lineage,
+          ), "ticket_id"))
 
     # ---- E3: warehouse --------------------------------------------------
-    dim_date = warehouse.build_dim_date(spark)
-    dim_students = build_dim_students(
-        staged["stg_students"], staged["stg_progress"], ref, replicate_quirks
-    )
-    dim_courses = build_dim_courses(raw["course_catalog"], replicate_quirks)
-    fact_progress = warehouse.build_fact_progress(
-        staged["stg_progress"], dim_students, dim_courses
-    )
-    sentiment, sent_score, sent_cat = transform.ticket_sentiment(
-        F.col("subject"), F.col("description")
-    )
-    fact_tickets = warehouse.build_fact_tickets(
-        staged["stg_tickets"].withColumn("ai_sentiment", sentiment)
-        .withColumn("ai_sentiment_score", sent_score.cast("decimal(5,4)"))
-        .withColumn("ai_category_suggestion", sent_cat),
-        dim_students,
-    ).withColumn("ai_sentiment", sentiment)
-    fact_enrollments = warehouse.build_fact_enrollments(
-        staged["stg_students"], dim_students
-    )
+    # The facts join the lazy dimension frames, not the written tables, so
+    # they need not wait for the dimension writes.
+    plan("plan.dim_students", ("staging.stg_students", "staging.stg_progress"),
+         lambda stg, progress: build_dim_students(stg, progress, ref, replicate_quirks))
+    plan("plan.dim_courses", ("raw.course_catalog",),
+         lambda raw: build_dim_courses(raw, replicate_quirks))
 
-    for name, df, keys in [
-        ("dim_date", dim_date, ["date_key"]),
-        ("dim_students", dim_students, ["student_id"]),
-        ("dim_courses", dim_courses, ["course_id"]),
-        ("fact_student_progress", fact_progress, ["event_id"]),
-        ("fact_support_tickets", fact_tickets, ["ticket_id"]),
-        ("fact_enrollments", fact_enrollments, ["student_sk", "course_sk"]),
-    ]:
-        w = warehouse.ParquetMergeWriter(
-            spark, os.path.join(warehouse_dir, "warehouse", name), keys=keys
+    def fact_tickets(stg: DataFrame, dim_students: DataFrame) -> DataFrame:
+        sentiment, sent_score, sent_cat = transform.ticket_sentiment(
+            F.col("subject"), F.col("description")
         )
-        counts[f"warehouse.{name}"] = w.merge(df)
+        return warehouse.build_fact_tickets(
+            stg.withColumn("ai_sentiment", sentiment)
+            .withColumn("ai_sentiment_score", sent_score.cast("decimal(5,4)"))
+            .withColumn("ai_category_suggestion", sent_cat),
+            dim_students,
+        ).withColumn("ai_sentiment", sentiment)
 
-    # ---- analytics ------------------------------------------------------
-    wh = lambda n: spark.read.parquet(os.path.join(warehouse_dir, "warehouse", n))
-    v360 = analytics.v_student_360(wh("dim_students"), wh("fact_support_tickets"))
-    insights = analytics.v_ai_insights(wh("dim_students"), wh("fact_support_tickets"))
-    daily = analytics.fact_daily_metrics(
-        wh("fact_student_progress"), wh("fact_enrollments"), wh("fact_support_tickets")
-    )
-    course_perf = analytics.v_course_performance(
-        wh("dim_courses"), wh("fact_enrollments")
-    )
-    dashboard = analytics.v_daily_dashboard(daily, wh("dim_date"))
-    for name, df in [
-        ("v_student_360", v360),
-        ("v_ai_insights", insights),
-        ("fact_daily_metrics", daily),
-        ("v_course_performance", course_perf),
-        ("v_daily_dashboard", dashboard),
-    ]:
-        df.write.mode("overwrite").parquet(os.path.join(warehouse_dir, "analytics", name))
-        counts[f"analytics.{name}"] = spark.read.parquet(
-            os.path.join(warehouse_dir, "analytics", name)
-        ).count()
+    merge("warehouse.dim_date", (), ["date_key"], lambda: warehouse.build_dim_date(spark))
+    merge("warehouse.dim_students", ("plan.dim_students",), ["student_id"], lambda d: d)
+    merge("warehouse.dim_courses", ("plan.dim_courses",), ["course_id"], lambda d: d)
+    merge("warehouse.fact_student_progress",
+          ("staging.stg_progress", "plan.dim_students", "plan.dim_courses"),
+          ["event_id"], warehouse.build_fact_progress)
+    merge("warehouse.fact_support_tickets", ("staging.stg_tickets", "plan.dim_students"),
+          ["ticket_id"], fact_tickets)
+    merge("warehouse.fact_enrollments", ("staging.stg_students", "plan.dim_students"),
+          ["student_sk", "course_sk"], warehouse.build_fact_enrollments)
+
+    # ---- analytics: each warehouse table is read once, schema known -----
+    student_views = ("warehouse.dim_students", "warehouse.fact_support_tickets")
+    plan("plan.fact_daily_metrics", (
+        "warehouse.fact_student_progress", "warehouse.fact_enrollments",
+        "warehouse.fact_support_tickets",
+    ), analytics.fact_daily_metrics)
+    overwrite("analytics.v_student_360", student_views, analytics.v_student_360)
+    overwrite("analytics.v_ai_insights", student_views, analytics.v_ai_insights)
+    overwrite("analytics.fact_daily_metrics", ("plan.fact_daily_metrics",), lambda d: d)
+    overwrite("analytics.v_course_performance",
+              ("warehouse.dim_courses", "warehouse.fact_enrollments"),
+              analytics.v_course_performance)
+    overwrite("analytics.v_daily_dashboard", ("plan.fact_daily_metrics", "warehouse.dim_date"),
+              analytics.v_daily_dashboard)
 
     # ---- metadata layer (init_schema.sql metadata.* tables) -------------
-    # pipeline_runs: one row per run (run_id uuid, status, per-table counts)
-    # data_quality_summary: per-rule valid/invalid stats from the audit log
+    # stg_quality_log: one row per (record, rule) from the cleaning notes;
+    # data_quality_summary: per-rule valid/invalid stats of that log
+    def rule_stats(stg: DataFrame) -> DataFrame:
+        return cleaning.quality_log(stg, "stg_students", "student_id").groupBy(
+            "source_table", "rule_applied"
+        ).agg(
+            F.count(F.when(F.col("is_valid"), 1)).alias("n_valid"),
+            F.count(F.when(~F.col("is_valid"), 1)).alias("n_invalid"),
+        )
+
+    overwrite("staging.stg_quality_log", ("staging.stg_students",),
+              lambda stg: cleaning.quality_log(stg, "stg_students", "student_id"))
+    overwrite("metadata.data_quality_summary", ("staging.stg_students",), rule_stats)
+
+    done = _run_dag(spark, tasks)
+    counts = {name: done[name][0] for name in tasks if done[name][0] is not None}
+
+    # pipeline_runs: one row per successful run, written after every table
     run_row = spark.createDataFrame(
         [(batch_id, "SUCCESS", json.dumps(counts))],
         "run_id string, status string, table_counts string",
     ).withColumn("finished_at", F.current_timestamp())
-    run_row.write.mode("append").parquet(
-        os.path.join(warehouse_dir, "metadata", "pipeline_runs")
+    counts["metadata.pipeline_runs"] = append(
+        run_row, table_dir("metadata.pipeline_runs"),
+        lambda d, path: d.write.mode("append").parquet(path),
     )
-    quality_rows = cleaning.quality_log(
-        spark.read.parquet(os.path.join(warehouse_dir, "staging", "stg_students")),
-        "stg_students",
-        "student_id",
-    )
-    rule_stats = quality_rows.groupBy("source_table", "rule_applied").agg(
-        F.count(F.when(F.col("is_valid"), 1)).alias("n_valid"),
-        F.count(F.when(~F.col("is_valid"), 1)).alias("n_invalid"),
-    )
-    rule_stats.write.mode("overwrite").parquet(
-        os.path.join(warehouse_dir, "metadata", "data_quality_summary")
-    )
-    quality_rows.write.mode("overwrite").parquet(
-        os.path.join(warehouse_dir, "staging", "stg_quality_log")
-    )
-    counts["staging.stg_quality_log"] = spark.read.parquet(
-        os.path.join(warehouse_dir, "staging", "stg_quality_log")
-    ).count()
-    counts["metadata.pipeline_runs"] = spark.read.parquet(
-        os.path.join(warehouse_dir, "metadata", "pipeline_runs")
-    ).count()
     return counts

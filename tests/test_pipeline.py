@@ -11,11 +11,13 @@ null-safe key equality, the documented fix (SURVEY §7 hard-part 6).
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
 
 from edu_data_pipeline_spark import pipeline
+from edu_data_pipeline_spark.sources.csv_ingest import FileValidationError
 
 DATE_VARIANTS = ["1999-05-15", "15/05/1999", "20-12-1998", "May 15, 1999", "18-Jan-24"]
 CITY_VARIANTS = ["Mumbai", "mumbai", "Mumabi", "Banglore", "Bhopal", "Delhi", "Pune"]
@@ -121,6 +123,132 @@ def test_golden_row_counts(counts):
     assert counts["metadata.pipeline_runs"] == 1
 
 
+def test_counts_match_tables_on_disk(spark, e2e):
+    """Every returned count is an observe() metric of the write; it must
+    equal what a read-back of the table finds."""
+    counts, wh = e2e
+    for key, n in counts.items():
+        layer, name = key.split(".")
+        assert spark.read.parquet(os.path.join(wh, layer, name)).count() == n, key
+
+
+def test_run_record_counts_in_declaration_order(spark, e2e):
+    """Tables are written concurrently, yet the run record lists their
+    counts in declaration order: every count but its own."""
+    counts, wh = e2e
+    (row,) = spark.read.parquet(os.path.join(wh, "metadata", "pipeline_runs")).collect()
+    assert row["status"] == "SUCCESS"
+    recorded = json.loads(row["table_counts"])
+    assert list(recorded.items()) == list(counts.items())[:-1]
+    assert list(counts)[-1] == "metadata.pipeline_runs"
+
+
+def _course_catalog(spark, wh):
+    return spark.read.parquet(os.path.join(wh, "raw", "course_catalog"))
+
+
+@pytest.mark.parametrize("fact", ["progress", "tickets", "enrollments"])
+def test_facts_skip_the_student_summary(spark, e2e, fact):
+    """dim_students left-joins a per-student progress summary, but the fact
+    tables use only its surrogate key, so Catalyst drops that join: no
+    Aggregate, and stg_progress is read only as the progress fact's own
+    source. Guards against a change that makes the facts recompute it."""
+    from pyspark.sql import functions as F
+
+    from edu_data_pipeline_spark.operators import warehouse
+
+    _, wh = e2e
+    stg = {
+        n: spark.read.parquet(os.path.join(wh, "staging", n))
+        for n in ("stg_students", "stg_progress", "stg_tickets")
+    }
+    dim = pipeline.build_dim_students(
+        stg["stg_students"], stg["stg_progress"], F.lit("2026-08-13").cast("date")
+    )
+    if fact == "progress":
+        df = warehouse.build_fact_progress(
+            stg["stg_progress"], dim, pipeline.build_dim_courses(_course_catalog(spark, wh))
+        )
+        scans = ["stg_progress", "stg_students", "course_catalog"]
+    elif fact == "tickets":
+        df = warehouse.build_fact_tickets(stg["stg_tickets"], dim)
+        scans = ["stg_tickets", "stg_students"]
+    else:
+        df = warehouse.build_fact_enrollments(stg["stg_students"], dim)
+        scans = ["stg_students", "stg_students"]
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "Aggregate" not in plan
+    # the dimension side is one stg_students scan, never stg_progress
+    assert plan.count("Relation ") == len(scans)
+    assert {os.path.basename(os.path.dirname(f)) for f in df.inputFiles()} == set(scans)
+
+
+def test_run_dag_follows_dependencies_concurrently(spark):
+    """Tasks start only after their dependencies finished, get their
+    frames, run side by side when ready together, and inherit the
+    caller's job group."""
+    import threading
+
+    log = []
+    both_running = threading.Barrier(2, timeout=30)
+
+    def task(name, concurrent=False):
+        def run(*inputs):
+            log.append(("start", name))
+            if concurrent:
+                both_running.wait()  # passes only if a and b overlap
+            group = spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+            log.append(("end", name))
+            return None, (name, inputs, group)
+        return run
+
+    tasks = {
+        "a": ((), task("a", concurrent=True)),
+        "b": ((), task("b", concurrent=True)),
+        "c": (("a", "b"), task("c")),
+        "d": (("c",), task("d")),
+    }
+    spark.sparkContext.setJobGroup("dag-test", "run_dag test")
+    try:
+        done = pipeline._run_dag(spark, tasks)
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+        spark.sparkContext.setLocalProperty("spark.job.description", None)
+    assert set(done) == set(tasks)
+    for name, (deps, _) in tasks.items():
+        frame = done[name][1]
+        assert frame[0] == name and frame[2] == "dag-test"
+        assert frame[1] == tuple(done[d][1] for d in deps)
+        for dep in deps:
+            assert log.index(("end", dep)) < log.index(("start", name))
+
+
+def test_run_dag_raises_the_failure_and_starts_nothing_after(spark):
+    import threading
+    import time
+
+    failed = threading.Event()
+    started = []
+
+    def slow():  # still running when the failure is read
+        failed.wait(30)
+        time.sleep(0.5)
+        return None, "slow"
+
+    def bad():
+        failed.set()
+        raise RuntimeError("task failed")
+
+    def after(*inputs):
+        started.append("after")
+        return None, None
+
+    tasks = {"slow": ((), slow), "bad": ((), bad), "after": (("slow",), after)}
+    with pytest.raises(RuntimeError, match="task failed"):
+        pipeline._run_dag(spark, tasks)
+    assert started == []
+
+
 def test_quality_log_matches_flagged_records(spark, e2e):
     """The audit sink reconciles with the staging quality scores: each
     failed rule costs 10 points (floor 0 never hit on this fixture), so
@@ -164,3 +292,40 @@ def test_idempotent_rerun(spark, tmp_path):
     assert second["staging.stg_students"] == first["staging.stg_students"] == 30
     assert second["warehouse.fact_student_progress"] == 50
     assert second["warehouse.dim_students"] == 30
+    # append-only tables report the prior rows plus the appended ones
+    assert second["raw.student_progress"] == 2 * first["raw.student_progress"]
+    assert second["metadata.pipeline_runs"] == 2
+
+
+def test_invalid_input_fails_before_any_write(spark, tmp_path):
+    """Every input is validated before the first write: a tickets file
+    without a required column fails the run with nothing written."""
+    input_dir = str(tmp_path / "input")
+    wh_dir = str(tmp_path / "warehouse")
+    write_fixture_csvs(input_dir)
+    tickets = os.path.join(input_dir, "support_tickets.csv")
+    with open(tickets) as f:
+        lines = f.read().splitlines()
+    with open(tickets, "w") as f:  # drop the `priority` column
+        f.write("\n".join(",".join(l.split(",")[:4] + l.split(",")[5:]) for l in lines))
+    with pytest.raises(FileValidationError, match="priority"):
+        pipeline.run_batch_pipeline(spark, input_dir, wh_dir)
+    assert not os.path.exists(os.path.join(wh_dir, "raw"))
+    assert not os.path.exists(os.path.join(wh_dir, "metadata", "pipeline_runs"))
+
+
+def test_failed_write_raises_and_records_no_run(spark, tmp_path, monkeypatch):
+    """A write that fails while others run concurrently fails the call
+    with its own error, and no SUCCESS row is recorded."""
+    from edu_data_pipeline_spark.operators import warehouse
+
+    def broken(*args, **kwargs):
+        raise RuntimeError("dim_date failed")
+
+    monkeypatch.setattr(warehouse, "build_dim_date", broken)
+    input_dir = str(tmp_path / "input")
+    wh_dir = str(tmp_path / "warehouse")
+    write_fixture_csvs(input_dir)
+    with pytest.raises(RuntimeError, match="dim_date failed"):
+        pipeline.run_batch_pipeline(spark, input_dir, wh_dir)
+    assert not os.path.exists(os.path.join(wh_dir, "metadata", "pipeline_runs"))

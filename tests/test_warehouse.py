@@ -604,3 +604,24 @@ def test_kmeans_lloyd_objective_decreases(spark):
     )
     a2 = assign(c1)
     assert inertia(a2) <= inertia(a1) + 1e-9
+
+
+def test_bootstrap_merge_reuses_the_dedup_exchange(spark):
+    """merge_upsert without a target partitions its window on the key
+    columns, so after dedup_last_wins on the same key it adds no shuffle
+    (a window on struct(keys) re-shuffled every row)."""
+    from edu_data_pipeline_spark.operators.cleaning import dedup_last_wins
+    from edu_data_pipeline_spark.operators.warehouse import merge_upsert
+
+    df = spark.createDataFrame(
+        [("a", 1, 1), ("a", 2, 2), (None, 3, 3), (None, 4, 4)], "k string, v int, o int"
+    )
+    deduped = dedup_last_wins(df, "k", "o")
+    merged = merge_upsert(None, deduped, ["k"])
+
+    def exchanges(d):
+        return d._jdf.queryExecution().executedPlan().toString().count("Exchange ")
+
+    assert exchanges(deduped) == 1
+    assert exchanges(merged) == 1
+    assert {tuple(r) for r in merged.collect()} == {("a", 2, 2), (None, 4, 4)}
