@@ -12,7 +12,8 @@ round, Pregel-style driver loop):
 - ``min_label``: every vertex takes the minimum label in its closed
   neighborhood each round. Converges in O(diameter) rounds — fine for
   near-dup graphs (tiny, dense clusters; diameter 2-3), but a worst-case
-  CHAIN of length L needs L rounds (measured: scripts/scale_smoke.py).
+  CHAIN of length L needs L rounds (measured: SCALE.md, connected
+  components).
 - ``pointer_jump`` (default): the same neighborhood-min step followed by
   one label-through-label join (label(v) <- label(label(v))). The label
   chain contracts exponentially, so rounds are O(log diameter) — the

@@ -1,9 +1,9 @@
 """Aggregates & enrichment (reference A1-A10) as DataFrame operators.
 
-Citations map to ``dags/utils/transformations.py``,
-``agents/langgraph_workflow.py`` and ``kafka/streaming.py``. Every
-aggregate is a plain hash aggregate (map-side partials for free); "now"
-is injectable for determinism.
+Citations map to ``dags/utils/transformations.py`` and
+``agents/langgraph_workflow.py``; the stream's A7/A8 metrics live in
+``streaming/jobs.py``. Every aggregate is a plain hash aggregate
+(map-side partials for free); "now" is injectable for determinism.
 """
 
 from __future__ import annotations
@@ -75,15 +75,6 @@ def quality_summary(df: DataFrame) -> DataFrame:
     )
 
 
-def duplicate_rate(df: DataFrame) -> DataFrame:
-    """D3 (operators/data_cleaning.py:65-67): duplicates/total gauge."""
-    return df.agg(
-        F.avg(F.col("is_duplicate").cast("int")).alias("duplicate_rate"),
-        F.sum(F.col("is_duplicate").cast("int")).alias("duplicate_count"),
-        F.count(F.lit(1)).alias("total_records"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # AI enrichment (deterministic stubs — agents/langgraph_workflow.py)
 # ---------------------------------------------------------------------------
@@ -136,27 +127,3 @@ def constant_enrichment_stub() -> tuple[Column, Column]:
     """The DAG-level fallback stub (dags/data_transformation_pipeline.py:77-81):
     every student gets ai_risk_score=42.0, ai_risk_category='Medium'."""
     return F.lit(42.0), F.lit("Medium")
-
-
-# ---------------------------------------------------------------------------
-# Streaming-shared metrics (A7/A8)
-# ---------------------------------------------------------------------------
-
-
-def per_student_rolling_metrics(events: DataFrame) -> DataFrame:
-    """A7 (kafka/streaming.py:52-75): running count/duration/errors per student."""
-    return events.groupBy("student_id").agg(
-        F.count(F.lit(1)).alias("count"),
-        F.sum(F.coalesce(F.col("duration_seconds").cast("long"), F.lit(0))).alias(
-            "duration"
-        ),
-        F.sum((~F.coalesce(F.col("is_valid"), F.lit(True))).cast("int")).alias("errors"),
-    )
-
-
-def detect_anomaly(metrics: DataFrame) -> DataFrame:
-    """A8 (kafka/streaming.py:129-131): error_rate > 0.2 per student."""
-    return metrics.withColumn(
-        "anomaly",
-        (F.col("errors") / F.greatest(F.col("count"), F.lit(1))) > 0.2,
-    )

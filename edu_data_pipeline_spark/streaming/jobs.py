@@ -1,5 +1,12 @@
 """Structured Streaming jobs (reference kafka/streaming.py + docx Part 2).
 
+This module is the EduFlow event path and nothing else: the event
+sources, the shared cleaning, DLQ routing, the per-student windows and
+running metrics (A7/A8), the upsert and fan-out sinks, dedup across
+restarts, and the enrichment and stream-join steps. It imports no query
+registry (``suite``) code; ``tests/test_module_reachability.py`` checks
+that.
+
 The reference's hand-rolled consumer loop becomes one
 ``readStream -> shared cleaning expressions -> watermark + windows ->
 routed sinks`` query. Key wins over the reference:
@@ -479,568 +486,4 @@ def stream_stream_attribution(
     ).select(
         "student_id", "completion_event_id", "completion_ts",
         "watch_event_id", "watch_ts",
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming near-dup screening: incoming documents vs the standing corpus
-# dedup index (the streaming twin of suite.scale_suite.docs_incremental_dedup)
-# ---------------------------------------------------------------------------
-
-DOC_STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ]
-)
-
-
-def read_doc_stream_json(
-    spark: SparkSession, path: str, max_files_per_trigger: int = 10
-) -> DataFrame:
-    """Document ingest stream (file-replay stand-in for the ingest topic)."""
-    return (
-        spark.readStream.schema(DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(path)
-    )
-
-
-def streaming_shingle_rows(docs: DataFrame) -> DataFrame:
-    """(doc_id, s) word-3-gram rows — the SAME shuffle-free explode+slice
-    builder the batch pipeline uses (suite.scale_suite.gram_rows), which
-    is also streaming-append-safe: no window, no state."""
-    from ..suite.scale_suite import gram_rows
-
-    return gram_rows(docs, 3)
-
-
-def corpus_shingle_index(corpus_docs: DataFrame) -> DataFrame:
-    """The standing dedup index: the corpus's DISTINCTIVE (df-capped)
-    shingles with owning doc ids — exactly the candidate-generation side
-    of the batch near-dup pipeline, materialized once per index build.
-    Columns: (corpus_doc_id, s)."""
-    from ..suite.scale_suite import _stop_filtered_shingles
-
-    return _stop_filtered_shingles(corpus_docs).select(
-        F.col("doc_id").alias("corpus_doc_id"), "s"
-    )
-
-
-def screen_docs_stream(doc_stream: DataFrame, index: DataFrame) -> DataFrame:
-    """Near-dup collision stream: one row per (incoming doc, corpus doc,
-    shared distinctive shingle). Stream-static equi-join on the shingle —
-    stateless, append-mode, each micro-batch a hash join against the
-    index; parallelism follows the shingle hash partitioning at any
-    corpus size. Roll up to doc granularity in the sink's foreachBatch
-    (aggregations are unrestricted there), e.g. with
-    ``collision_rollup``."""
-    return streaming_shingle_rows(doc_stream).join(index, "s").select(
-        "doc_id", "corpus_doc_id", "s"
-    )
-
-
-def collision_rollup(hits: DataFrame) -> DataFrame:
-    """Per incoming doc: distinct corpus docs collided with (run inside
-    foreachBatch on each micro-batch, or on the screened parquet)."""
-    return hits.groupBy("doc_id").agg(
-        F.count_distinct("corpus_doc_id").alias("n_corpus_matches")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming drift monitor: windowed value-bucket shares vs a static
-# baseline distribution (the stream twin of suite.events_value_psi —
-# bucket width / epsilon / alarm threshold are IMPORTED from it so the
-# two can never desynchronize).
-# ---------------------------------------------------------------------------
-
-
-def _psi_constants():
-    from ..suite.scale_suite import PSI_ALARM, PSI_BUCKET_WIDTH, PSI_EPS
-
-    return PSI_BUCKET_WIDTH, float(PSI_EPS), PSI_ALARM
-
-
-def baseline_value_shares(history: DataFrame) -> DataFrame:
-    """Static per-(event_type, bucket) share table from a history batch —
-    the reference distribution the live stream is compared against.
-    Columns: event_type, bucket, p_base."""
-    width, _, _ = _psi_constants()
-    b = history.select(
-        "event_type",
-        F.floor(F.col("value") / width).cast("long").alias("bucket"),
-    )
-    counts = b.groupBy("event_type", "bucket").count()
-    from pyspark.sql import Window as W
-
-    total = W.partitionBy("event_type")
-    return counts.select(
-        "event_type",
-        "bucket",
-        (F.col("count") * 1.0 / F.sum("count").over(total)).alias("p_base"),
-    )
-
-
-def windowed_bucket_counts(
-    events: DataFrame,
-    window: str = "10 minutes",
-    watermark: str = "20 minutes",
-) -> DataFrame:
-    """Per-(window, event_type, bucket) counts over the value stream —
-    a plain watermarked streaming aggregation (bounded state: bucket
-    domain x type domain x live windows)."""
-    width, _, _ = _psi_constants()
-    return (
-        events.withWatermark("event_timestamp", watermark)
-        .groupBy(
-            F.window("event_timestamp", window).alias("w"),
-            "event_type",
-            F.floor(F.col("value") / width).cast("long").alias("bucket"),
-        )
-        .count()
-    )
-
-
-def psi_against_baseline(window_counts: DataFrame, baseline: DataFrame) -> DataFrame:
-    """Per-(window, event_type) PSI vs the static baseline. Run inside
-    foreachBatch (or on the materialized window counts): the per-window
-    share needs a second aggregation, which streaming append mode cannot
-    chain — and batch context is exactly where the alarm decision (and
-    alert-sink routing) lives anyway."""
-    from pyspark.sql import Window as W
-
-    _, eps, alarm = _psi_constants()
-    total = W.partitionBy("w", "event_type")
-    shares = window_counts.select(
-        "w",
-        "event_type",
-        "bucket",
-        (F.col("count") * 1.0 / F.sum("count").over(total)).alias("p_live"),
-    )
-    # Every live (window, type) must contribute a term for EVERY baseline
-    # bucket, including the ones that window never saw (mass that
-    # vanished is exactly the drift signal): build the full
-    # (window, type) x baseline-bucket grid first, then full-join the
-    # live shares so novel live buckets survive too. A bare
-    # shares-to-baseline join silently drops baseline buckets missing
-    # from a window and underestimates PSI.
-    windows = window_counts.select("w", "event_type").distinct()
-    grid = windows.join(baseline, "event_type")
-    joined = grid.join(shares, ["w", "event_type", "bucket"], "full")
-    p_live = F.coalesce(F.col("p_live"), F.lit(0.0))
-    p_base = F.coalesce(F.col("p_base"), F.lit(0.0))
-    term = (p_live - p_base) * F.log((p_live + eps) / (p_base + eps))
-    return (
-        joined.select("w", "event_type", term.alias("term"))
-        .groupBy("w", "event_type")
-        .agg(F.sum("term").alias("psi"))
-        .withColumn("drift_alarm", F.col("psi") > alarm)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming Bloom decontamination: quarantine incoming documents whose
-# shingles hit the eval-set Bloom bitmap. The bitmap builder, hash
-# family, and m/k constants are IMPORTED from the batch screen
-# (suite.curation_suite.docs_bloom_screen), so the stream router and
-# the batch query can never desynchronize — the same shared-constants
-# contract the PSI drift monitor follows.
-# ---------------------------------------------------------------------------
-
-
-def bloom_doc_verdicts(
-    docs: DataFrame, bloom: DataFrame, max_hits: int = 0
-) -> DataFrame:
-    """Per-document Bloom verdicts over a BATCH of (doc_id, text) rows:
-    distinct-gram count, Bloom-positive count, and the quarantine flag
-    (> max_hits positives). Bloom has no false negatives, so a clean
-    verdict here is definitive; positives are a superset of true eval
-    overlaps and go to quarantine for the (rarer, more expensive) exact
-    recheck. Runs inside foreachBatch — identical code screens a static
-    corpus."""
-    from ..suite.curation_suite import bloom_gram_flags
-
-    grams = streaming_shingle_rows(docs).distinct()
-    flags = bloom_gram_flags(grams, bloom)
-    return (
-        flags.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_grams"),
-            F.count(F.when(F.col("bloom_pos"), 1)).alias("n_bloom_hits"),
-        )
-        .withColumn("quarantine", F.col("n_bloom_hits") > max_hits)
-    )
-
-
-def _assert_batch_partitioned_layout(*paths: str) -> None:
-    """Fail fast when a batch_id-partitioned dynamic-overwrite sink is
-    pointed at a directory written by the pre-r5 APPEND layout (where
-    stream_batch_id was a plain data column): resuming would mix flat
-    parquet files with ``stream_batch_id=N/`` partition dirs, and reads
-    of the mixed tree mishandle the column (long data column vs
-    partition-inferred int — ADVICE r5). A local sink dir must be empty
-    or already partition-laid-out; non-local URIs are skipped (listing
-    policy belongs to the object store, and the layout contract is in
-    each writer's docstring)."""
-    import os
-
-    for path in paths:
-        if "://" in path:
-            continue
-        try:
-            entries = os.listdir(path)
-        except (FileNotFoundError, NotADirectoryError):
-            continue
-        bad = [
-            e
-            for e in entries
-            if not e.startswith(("stream_batch_id=", "_", "."))
-        ]
-        if bad:
-            raise ValueError(
-                f"sink {path!r} contains non-batch-partitioned output "
-                f"{sorted(bad)[:3]} — written by the old append layout; "
-                "point the stream at a fresh directory or migrate the "
-                "old files into stream_batch_id=N/ partitions first"
-            )
-
-
-def foreach_batch_bloom_quarantine(
-    bloom: DataFrame,
-    clean_path: str,
-    quarantine_path: str,
-    max_hits: int = 0,
-):
-    """Micro-batch router: score each doc against the broadcast bitmap,
-    write contaminated docs (with their hit counts) to the quarantine
-    sink and the rest to the clean sink. One source read per batch, two
-    consistent sinks — the foreach_batch_fanout pattern. Docs too short
-    to produce a shingle carry zero hits and route clean.
-
-    Replay-idempotent (ADVICE r4): both sinks are partitioned by
-    stream_batch_id and written with dynamic partition overwrite — the
-    foreach_batch_cms_delta scheme — so a checkpoint-replayed batch
-    REPLACES its own output instead of double-appending, and a crash
-    between the two sink writes heals on the retry. Layout contract:
-    sinks must be empty or already stream_batch_id-partitioned
-    (checked at wiring time for local paths — the pre-r5 append layout
-    is not resumable under this scheme)."""
-    _assert_batch_partitioned_layout(clean_path, quarantine_path)
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch_df = batch_df.persist()
-        try:
-            verdicts = bloom_doc_verdicts(batch_df, bloom, max_hits)
-            routed = (
-                batch_df.join(
-                    verdicts.select("doc_id", "n_bloom_hits", "quarantine"),
-                    "doc_id",
-                    "left",
-                )
-                .withColumn(
-                    "n_bloom_hits", F.coalesce(F.col("n_bloom_hits"), F.lit(0))
-                )
-                .withColumn(
-                    "quarantine", F.coalesce(F.col("quarantine"), F.lit(False))
-                )
-                .withColumn("stream_batch_id", F.lit(batch_id))
-            )
-            for frame, path in (
-                (routed.where(F.col("quarantine")), quarantine_path),
-                (routed.where(~F.col("quarantine")), clean_path),
-            ):
-                (
-                    frame.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("stream_batch_id")
-                    .parquet(path)
-                )
-        finally:
-            batch_df.unpersist()
-
-    return _write
-
-
-def start_bloom_quarantine_stream(
-    doc_stream: DataFrame,
-    bloom: DataFrame,
-    clean_path: str,
-    quarantine_path: str,
-    checkpoint: str,
-):
-    """Wire the Bloom router to a document stream (AvailableNow for
-    replay/backfill; remove the trigger for continuous ingest)."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            foreach_batch_bloom_quarantine(bloom, clean_path, quarantine_path)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming heavy-hitters monitor: a Count-Min sketch folded across
-# micro-batches. CMS counters are mergeable by summing on (row_j,
-# bucket), so each micro-batch writes only its DELTA sketch into a
-# batch_id-keyed partition (idempotent under checkpoint replay) and the
-# current corpus sketch is the sum-on-read of all deltas — constant
-# state per batch, no per-term state store. Constants and builders are
-# imported from suite.curation_suite.docs_cms_term_freq's core.
-# ---------------------------------------------------------------------------
-
-
-def doc_token_rows(docs: DataFrame) -> DataFrame:
-    """(t) token rows from a (doc_id, text) frame — the CMS insertion
-    stream."""
-    return docs.select(
-        F.explode(F.split(F.trim(F.col("text")), " ")).alias("t")
-    )
-
-
-def foreach_batch_cms_delta(sketch_path: str):
-    """Micro-batch sink: build this batch's CMS delta and write it to
-    ``sketch_path/stream_batch_id=N`` (dynamic partition overwrite, so a
-    replayed batch REPLACES its own delta instead of double-counting).
-    Layout contract: see :func:`_assert_batch_partitioned_layout`."""
-    from ..suite.curation_suite import cms_sketch
-
-    _assert_batch_partitioned_layout(sketch_path)
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        delta = cms_sketch(doc_token_rows(batch_df)).withColumn(
-            "stream_batch_id", F.lit(batch_id)
-        )
-        (
-            delta.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("stream_batch_id")
-            .parquet(sketch_path)
-        )
-
-    return _write
-
-
-def read_cms(spark: SparkSession, sketch_path: str) -> DataFrame:
-    """The current corpus sketch: sum the per-batch deltas on read.
-    (A compaction job can fold old deltas into one partition at any
-    time — same merge, fewer files.)"""
-    return (
-        spark.read.parquet(sketch_path)
-        .groupBy("row_j", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
-def start_cms_monitor_stream(doc_stream: DataFrame, sketch_path: str, checkpoint: str):
-    """Wire the CMS delta sink to a document stream (AvailableNow for
-    replay; drop the trigger for continuous ingest)."""
-    return (
-        doc_stream.writeStream.foreachBatch(foreach_batch_cms_delta(sketch_path))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming semantic (embedding) near-dup screen: incoming vectors are
-# bucketed with the SAME hyperplane family as the batch ANN stack
-# (suite.scale_suite.lsh_bucket_rows) and screened against a standing
-# corpus index — bucket join for candidates, exact cosine for the
-# verdict — then routed novel/duplicate. The embedding twin of the
-# MinHash ingest screen (screen_docs_stream).
-# ---------------------------------------------------------------------------
-
-
-def read_vec_stream_json(spark: SparkSession, path: str) -> DataFrame:
-    """File-replay embedding stream: {"vec_id": ..., "embedding": [...]}"""
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    return spark.readStream.schema(schema).json(path)
-
-
-def embedding_index(
-    corpus: DataFrame, dim: int, bits: int | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """The standing ANN index: (bucket rows, vectors) for a corpus
-    embedding frame — build once per index refresh, both sides small
-    enough to broadcast per bucket at screen time. ``bits`` pins the
-    hyperplane family (default N_LSH_BITS); pass `_lsh_bits(corpus
-    count)` for a large corpus. The chosen width is stamped on the
-    bucket column's metadata so the screen DERIVES it from the index —
-    index and probe widths must match or buckets are incomparable
-    (ADVICE r10: a caller widening the index but probing at the default
-    would silently collapse candidate generation to noise)."""
-    from ..suite.scale_suite import N_LSH_BITS, lsh_bucket_rows
-
-    b = N_LSH_BITS if bits is None else bits
-    e = corpus.select(
-        F.col("vec_id").alias("corpus_vec_id"),
-        F.col("embedding").cast("array<double>").alias("emb"),
-    )
-    buckets = lsh_bucket_rows(
-        e.select(F.col("corpus_vec_id").alias("vec_id"), "emb"), dim, b
-    ).select(
-        F.col("vec_id").alias("corpus_vec_id"),
-        "table_idx",
-        F.col("bucket").alias("bucket", metadata={"lsh_bits": b}),
-    )
-    return buckets, e
-
-
-def _index_lsh_bits(index_buckets: DataFrame) -> int | None:
-    """The hyperplane width an embedding_index was built with, read from
-    the bucket column's schema metadata (None if the index predates the
-    stamp or was built by hand)."""
-    try:
-        meta = index_buckets.schema["bucket"].metadata or {}
-    except KeyError:
-        return None
-    b = meta.get("lsh_bits")
-    return int(b) if b is not None else None
-
-
-def semantic_screen_batch(
-    batch: DataFrame,
-    index_buckets: DataFrame,
-    index_vecs: DataFrame,
-    dim: int,
-    tau: float,
-    bits: int | None = None,
-) -> DataFrame:
-    """Per-incoming-vector verdict over a BATCH: bucket-join candidates
-    against the index, verify by exact cosine, keep the best corpus
-    match at cosine >= tau. Columns: vec_id, matched_corpus_vec (null =
-    novel), best_cosine. ``bits=None`` (the default) derives the probe
-    width from the index's own metadata stamp, so index and probe can
-    never drift; an explicit ``bits`` that contradicts the stamp raises
-    instead of silently probing an incomparable bucket space (ADVICE
-    r10)."""
-    from ..suite import dround
-    from ..suite.scale_suite import N_LSH_BITS, _dot, lsh_bucket_rows
-
-    idx_bits = _index_lsh_bits(index_buckets)
-    if bits is None:
-        bits = idx_bits if idx_bits is not None else N_LSH_BITS
-    elif idx_bits is not None and bits != idx_bits:
-        raise ValueError(
-            f"probe bits={bits} != index bits={idx_bits}: the index was "
-            "built with a different hyperplane width — rebuild the index "
-            "or probe with the same bits (see embedding_index)"
-        )
-
-    # norms once per vector on both sides (identical doubles, fewer folds)
-    e = batch.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    ).withColumn("nrm", F.sqrt(_dot(F.col("emb"), F.col("emb"))))
-    idx = index_vecs.select(
-        "corpus_vec_id", F.col("emb").alias("cemb")
-    ).withColumn("cnrm", F.sqrt(_dot(F.col("cemb"), F.col("cemb"))))
-    in_buckets = lsh_bucket_rows(e.select("vec_id", "emb"), dim, bits)
-    cand = (
-        in_buckets.join(index_buckets, ["table_idx", "bucket"])
-        .select("vec_id", "corpus_vec_id")
-        .distinct()
-    )
-    scored = (
-        cand.join(e, "vec_id")
-        .join(idx, "corpus_vec_id")
-        .withColumn(
-            "cos",
-            _dot(F.col("emb"), F.col("cemb")) / (F.col("nrm") * F.col("cnrm")),
-        )
-        .where(dround(F.col("cos"), 6) >= tau)
-    )
-    # deterministic best match: highest cosine, lowest corpus id on ties
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("corpus_vec_id"))
-    best = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            "vec_id",
-            F.col("corpus_vec_id").alias("matched_corpus_vec"),
-            dround(F.col("cos"), 6).alias("best_cosine"),
-        )
-    )
-    return batch.select("vec_id").join(best, "vec_id", "left")
-
-
-def foreach_batch_semantic_screen(
-    index_buckets: DataFrame,
-    index_vecs: DataFrame,
-    dim: int,
-    novel_path: str,
-    dup_path: str,
-    tau: float = 0.32,
-    bits: int | None = None,
-):
-    """Micro-batch router: verified semantic duplicates (with their
-    matched corpus vector and cosine) to the duplicate sink, the rest to
-    the novel sink.
-
-    Replay-idempotent (ADVICE r4): batch_id-partitioned dynamic
-    overwrite on both sinks, same scheme as the Bloom router and the
-    CMS delta writer — replayed batches replace their own output.
-    Layout contract: see :func:`_assert_batch_partitioned_layout`."""
-    _assert_batch_partitioned_layout(novel_path, dup_path)
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch_df = batch_df.persist()
-        try:
-            verdicts = semantic_screen_batch(
-                batch_df, index_buckets, index_vecs, dim, tau, bits=bits
-            ).withColumn("stream_batch_id", F.lit(batch_id))
-            dup = verdicts.where(F.col("matched_corpus_vec").isNotNull())
-            novel = verdicts.where(F.col("matched_corpus_vec").isNull()).select(
-                "vec_id", "stream_batch_id"
-            )
-            for frame, path in ((dup, dup_path), (novel, novel_path)):
-                (
-                    frame.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("stream_batch_id")
-                    .parquet(path)
-                )
-        finally:
-            batch_df.unpersist()
-
-    return _write
-
-
-def start_semantic_screen_stream(
-    vec_stream: DataFrame,
-    index_buckets: DataFrame,
-    index_vecs: DataFrame,
-    dim: int,
-    novel_path: str,
-    dup_path: str,
-    checkpoint: str,
-    tau: float = 0.32,
-    bits: int | None = None,
-):
-    return (
-        vec_stream.writeStream.foreachBatch(
-            foreach_batch_semantic_screen(
-                index_buckets, index_vecs, dim, novel_path, dup_path, tau,
-                bits=bits,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )

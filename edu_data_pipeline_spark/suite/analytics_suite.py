@@ -1013,8 +1013,8 @@ def events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def range_join_core(e: DataFrame) -> DataFrame:
     """The bucketed range-join core over any events-shaped DataFrame
-    (shared with scripts/scale_smoke.py so measured scaling numbers
-    describe the shipped plan)."""
+    (the scaling figures in SCALE.md's linearity smoke measured this
+    plan)."""
     # exact integer bucketing (div, not double division) so the
     # two-bucket pigeonhole is provably lossless at any epoch
     bucket = F.expr(f"unix_micros(ts) div {RANGE_WINDOW_US}")

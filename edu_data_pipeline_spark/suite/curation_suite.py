@@ -204,7 +204,7 @@ SEMDEDUP_TAU = 0.32  # cosine threshold for "semantic duplicate"
 # 4096), so expected cluster population stays ~64 and candidate volume
 # stays ~32·n until the K cap, then n²/4096 — vs the previous fixed
 # 6-table × 4-bit hyperplane-LSH whose candidates measured a CONSTANT
-# 32.47% of ALL pairs at BOTH sf0.01 and sf0.1 (scripts/capacity_plan.py
+# 32.47% of ALL pairs at BOTH sf0.01 and sf0.1 (SCALE.md capacity plan,
 # exponent alpha = 1.82: sign-LSH cannot prune at tau = 0.32, the
 # retained-pair fraction is set by the angle, not the corpus). Both
 # sides use integer arithmetic only, so Spark (Python) and DuckDB (SQL
@@ -255,7 +255,7 @@ def embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarser clusters). Replaces the r4–r5 hyperplane-LSH candidate
     generator, whose retained-pair fraction at tau = 0.32 measured a
     constant 32.47% of ALL pairs at both sf scales (alpha = 1.82 in
-    scripts/capacity_plan.py — sign-LSH prunes by angle, and 71° keeps
+    SCALE.md's capacity plan — sign-LSH prunes by angle, and 71° keeps
     a third of the sphere regardless of corpus size). Worst-case skew
     (one giant k-means cluster) is the recipe's known limitation and
     is bounded here by the keep-lowest-id semantics requiring only
@@ -568,9 +568,8 @@ _MASK = "shiftleft(CAST(1 AS BIGINT), CAST(pos % 32 AS INT))"
 
 def bloom_bitmap(grams: DataFrame, *, m_bits: int = BLOOM_M_BITS) -> DataFrame:
     """(word_idx, word) Bloom bitmap over a gram frame's ``s`` column —
-    the map-side-combinable build shared by the batch screen query and
-    the streaming quarantine router (same constants, so the two can
-    never desynchronize). Probe with the SAME ``m_bits``."""
+    the map-side-combinable build shared by the Bloom screen queries.
+    Probe with the SAME ``m_bits``."""
     return (
         _bloom_positions(grams, m_bits=m_bits)
         .select(F.expr(_WORD_IDX).alias("word_idx"), F.expr(_MASK).alias("mask"))
@@ -742,10 +741,8 @@ _SQL_CMS_TOP_BUCKETS = "\n      UNION ALL\n".join(
 
 def cms_sketch(toks: DataFrame) -> DataFrame:
     """(row_j, bucket, cnt) Count-Min counters over a token frame's
-    ``t`` column — the mergeable build shared by the batch query and
-    the streaming heavy-hitters monitor (two sketches merge by summing
-    counters on (row_j, bucket); same constants, so batch and stream
-    can never desynchronize)."""
+    ``t`` column — a mergeable build (two sketches merge by summing
+    counters on (row_j, bucket))."""
     m = F.md5(F.col("t"))
     halves = toks.select(
         F.conv(F.substring(m, 1, 8), 16, 10).cast("long").alias("h1"),
@@ -765,37 +762,6 @@ def cms_sketch(toks: DataFrame) -> DataFrame:
         ).alias("rb")
     ).select("rb.row_j", "rb.bucket")
     return buckets.groupBy("row_j", "bucket").agg(F.count(F.lit(1)).alias("cnt"))
-
-
-def cms_lookup(sketch: DataFrame, terms: DataFrame) -> DataFrame:
-    """Point-query the sketch: for each row of ``terms`` (column ``t``),
-    the CMS estimate = min over rows of the term's bucket counters.
-    Terms absent from every insertion still get their collision mass —
-    the CMS overestimate guarantee, never an undercount."""
-    m = F.md5(F.col("t"))
-    keyed = terms.select(
-        "t",
-        F.conv(F.substring(m, 1, 8), 16, 10).cast("long").alias("h1"),
-        F.conv(F.substring(m, 9, 8), 16, 10).cast("long").alias("h2"),
-    ).select(
-        "t",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("row_j"),
-                        ((F.col("h1") + j * F.col("h2")) % CMS_W).alias("bucket"),
-                    )
-                    for j in range(CMS_D)
-                ]
-            )
-        ).alias("rb"),
-    ).select("t", "rb.row_j", "rb.bucket")
-    return (
-        keyed.join(F.broadcast(sketch), ["row_j", "bucket"], "left")
-        .groupBy("t")
-        .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).alias("cms_estimate"))
-    )
 
 
 @register(

@@ -731,42 +731,6 @@ STOP_DF_FLOOR = 5  # never drop shingles seen in <= 5 docs
 # (integer division so both engines compute the identical cutoff)
 
 
-def _stop_filtered_shingles(d: DataFrame) -> DataFrame:
-    """Distinct (doc_id, s) STRING rows with >1%-document-frequency
-    shingles removed — the string-currency form consumed by the
-    streaming dedup index (`streaming.jobs.corpus_shingle_index`, whose
-    stream side joins on the shingle text).
-
-    r8c: rows explode from the map-side per-doc distinct arrays (zero
-    shuffle — the old shape paid a gram-volume distinct exchange) and
-    the stop set is df > threshold over the vocabulary-bounded
-    fingerprint count, the same transform the stopfiltered query path
-    uses; the anti-join derives the fingerprint map-side. The build's
-    only exchange is the vocab-bounded df count."""
-    kdf = (
-        _distinct_sk_rows(d)
-        .groupBy("sk")
-        .agg(F.count(F.lit(1)).alias("df_docs"))
-    )
-    total = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    stop = (
-        kdf.crossJoin(F.broadcast(total))
-        .where(
-            F.col("df_docs")
-            > F.greatest(F.lit(STOP_DF_FLOOR), F.expr("n_docs div 100"))
-        )
-        .select("sk")
-    )
-    rows = _doc_distinct_gram_arrays(d, lambda g: g).select(
-        "doc_id", F.explode("arr").alias("s")
-    )
-    return (
-        rows.withColumn("sk", _gram_key64(F.col("s")))
-        .join(F.broadcast(stop), "sk", "left_anti")
-        .drop("sk")
-    )
-
-
 def _sk_from_halves() -> Column:
     """The 60-bit gram key derived arithmetically from the Carter-Wegman
     halves: md5 hex chars 1-15 = h1's 32 bits then h2's top 28, i.e.
@@ -778,8 +742,7 @@ def _sk_from_halves() -> Column:
 def _stop_filtered_halves(d: DataFrame) -> DataFrame:
     """(doc_id, h1, h2) rows (dups kept — the min-agg consumer is
     set-invariant) with >1%-document-frequency shingles removed — the
-    fingerprint-currency twin of ``_stop_filtered_shingles`` that the
-    stopfiltered QUERY path uses. Two structural cuts (r8c): document
+    form the stopfiltered QUERY path uses. Two structural cuts (r8c): document
     frequency is a plain count(*) over the zero-shuffle per-doc
     distinct rows — map-side partial sums make that exchange
     VOCABULARY-bounded (the string shape paid a gram-volume distinct
@@ -988,7 +951,8 @@ def docs_jaccard_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared by k docs can no longer contribute k² join rows on a
     templated corpus (VERDICT r2 #1). r8: the cap is now ABSOLUTE
     (df <= least(1% of docs, PAIR_DF_CAP=32)). The capacity plan
-    measures alpha 1.19 here; scripts/jaccard_cap_probe.py shows the
+    measures alpha 1.19 here; the pinned-threshold probe recorded in
+    SCALE.md (capacity-plan section) shows the
     cause is the testdata's non-sf-invariant df distribution (mean df
     grows ~linearly with corpus size — candidates 11k → 1.13M for 10x
     docs), not the plan: under the absolute cap, worst-case candidates
@@ -1172,8 +1136,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pointer-jumping label propagation (operators/graph.py): each round is
     a neighborhood-min plus a label-through-label contraction, so rounds
     are O(log diameter) — a pathological chain topology converges in
-    ~log2(L) rounds instead of L (probed in scripts/scale_smoke.py,
-    recorded in SCALE.md). The DuckDB oracle computes the same fixpoint
+    ~log2(L) rounds instead of L (probe figures recorded in SCALE.md). The DuckDB oracle computes the same fixpoint
     via a recursive-CTE transitive closure — tractable at oracle scale,
     while the Spark path scales to corpus size. The giant-component
     guard is ON (r6): a boilerplate-heavy crawl's near-dup megacluster
@@ -2044,13 +2007,10 @@ def lsh_bucket_rows(
 ) -> DataFrame:
     """(vec_id, [label,] table_idx, bucket) hyperplane-LSH rows for any
     frame with an ``emb`` array<double> column and a known dimension —
-    the map-side core shared by the suite query and the streaming ANN
-    screen (which cannot run the dim probe on an unbounded stream and
-    passes the index's dimension instead). ``bits`` selects the
-    hyperplane family (plane id p = t*bits + b): index build and stream
-    probe must pass the SAME value or their buckets are incomparable —
-    the suite query derives it from the corpus footer count
-    (`_lsh_bits`); the streaming screen pins it at index-build time."""
+    the map-side core of the suite's ANN queries. ``bits`` selects the
+    hyperplane family (plane id p = t*bits + b): two sides must pass the
+    SAME value or their buckets are incomparable — the suite query
+    derives it from the corpus footer count (`_lsh_bits`)."""
     carry = [c for c in ("vec_id", "label") if c in e.columns]
     tables = [
         e.select(
@@ -2863,7 +2823,7 @@ def kmeans_assignments(e: DataFrame, k: int) -> DataFrame:
     combine reduces each vector to ONE row before the exchange — the
     assign shuffle is n rows, independent of K. (The first cut shuffled
     the per-(vec, cid) distance partials — n·K rows, quadratic once K
-    scales with n: measured alpha 1.79 in scripts/capacity_plan.py;
+    scales with n: measured alpha 1.79, SCALE.md capacity plan;
     this shape brings the exponent below 1.) The n·K·d distance
     arithmetic itself is irreducible Lloyd work, embarrassingly
     parallel and shuffle-free. The centroid-update shuffle is
@@ -3381,7 +3341,7 @@ def _dup_bloom_plan(n_docs: int) -> tuple[int, int]:
 #
 # The threshold is RE-DERIVED FROM MEASUREMENT in r10 (the r9 value of
 # 100k came from broadcast-capacity arithmetic that underestimated the
-# real broadcast limit). scripts/dup_span_organic.py runs both paths
+# real broadcast limit). The SCALE.md r10c record ran both paths
 # organically on a 150k/600k-doc df-stationary corpus that is
 # duplication-HEAVY (~9.5 dup keys/doc — the adverse case, since dup
 # density pushes the crossover EARLIER). Measured (SCALE.md r10c):
@@ -3561,7 +3521,7 @@ def _dup_span_sides(
 # 8-token gram text; LZ4 shrinks text but the keys still dominated the
 # wire. Keying on the first 15 hex chars of md5 (< 2^60, fits a signed
 # long on BOTH engines — no unsigned overflow) measured 15.4 → 5.6 MB
-# shuffle at sf0.1 (2.75×; scripts/capacity_plan.py protocol). The
+# shuffle at sf0.1 (2.75×; SCALE.md capacity-plan protocol). The
 # oracle applies the IDENTICAL transform, so engine parity is exact
 # even if fingerprints collide; the collision effect on the SIGNAL is a
 # false df-merge at ~n_grams²/2^61 — ~4e-7 of grams at 10¹² — the
@@ -4827,7 +4787,6 @@ def events_pit_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 PSI_CUTOFF = "2024-01-16 00:00:00"
 PSI_BUCKET_WIDTH = 100
 PSI_EPS = "0.0005"  # Laplace-style floor so empty buckets don't blow up ln
-PSI_ALARM = 0.2  # investigate above this (industry convention)
 
 
 @register(

@@ -183,7 +183,8 @@ def parse_args(argv: list[str] | None = None):
 
 def main() -> None:
     args = parse_args()
-    # 64g heap like dup_span_organic: the post-gate capacity fit runs
+    # 64g heap (the SCALE.md r10c organic dup-span record used the same):
+    # the post-gate capacity fit runs
     # the REAL verify join over ~10^8-10^9 candidate pairs; the default
     # 1g local JVM OOMs in the pair-distinct hash aggregate.
     spark = get_spark(

@@ -100,48 +100,6 @@ def _write_corpus(path: pathlib.Path, n: int, dim: int) -> None:
             )
 
 
-def test_index_lsh_bits_stamp_survives_parquet_roundtrip(spark, tmp_path):
-    """VERDICT r11 #4: a standing ANN index is MATERIALIZED — built once,
-    written to parquet, reloaded by later screen jobs (the durable-index
-    cost model). The lsh_bits stamp lives in
-    the bucket column's schema metadata (streaming/jobs.py
-    embedding_index), so it must survive write.parquet/read.parquet for
-    a reloaded index to still self-describe its probe width. Asserts:
-    the stamp reads back, a default-bits screen against the RELOADED
-    index derives the non-default width (total self-retrieval — the
-    failure mode of a lost stamp is candidates collapsing to noise past
-    table 0), and an explicit contradicting ``bits`` still raises."""
-    from pyspark.sql import functions as F
-
-    from edu_data_pipeline_spark.streaming import jobs
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    buckets, vecs = jobs.embedding_index(emb, dim=64, bits=7)
-    assert jobs._index_lsh_bits(buckets) == 7
-
-    bpath = str(tmp_path / "index_buckets")
-    vpath = str(tmp_path / "index_vecs")
-    buckets.write.parquet(bpath)
-    vecs.write.parquet(vpath)
-
-    rbuckets = spark.read.parquet(bpath)
-    rvecs = spark.read.parquet(vpath)
-    # the reloaded index self-describes its hyperplane width
-    assert jobs._index_lsh_bits(rbuckets) == 7
-
-    # default-bits probe derives 7 from the reloaded stamp: self-retrieval
-    # of the corpus must be total (with a lost stamp the default 4-bit
-    # probe finds only table-0 collisions and leaves misses)
-    out = jobs.semantic_screen_batch(emb, rbuckets, rvecs, 64, tau=0.32)
-    assert out.where(F.col("matched_corpus_vec").isNull()).count() == 0
-
-    # the mismatch guard survives the round-trip too
-    with pytest.raises(ValueError, match="probe bits"):
-        jobs.semantic_screen_batch(emb, rbuckets, rvecs, 64, tau=0.32, bits=4)
-
-
 def test_lsh_buckets_parity_at_organic_activation(spark, tmp_path):
     """Bucket assignment Spark == DuckDB on a corpus PAST the gate —
     the footer count alone flips the width to 8 bits (100k / 512 ->

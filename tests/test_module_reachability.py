@@ -6,7 +6,13 @@ engine's entry points: the batch pipeline, the query registry and its four
 suite modules, the stream jobs, the parity checker, the session factory and
 the cache registry. A module the walk never reaches has no production
 caller; it must be wired in, deleted, or listed in ``KEPT_UNREACHED`` with
-the reason it stays. No Spark session is needed.
+the reason it stays.
+
+The same walk then goes one level down, into the top-level functions of
+the reached ``streaming`` and ``operators`` modules: a function no package
+module (outside its own body) and no ``perfbench`` module names must be
+listed in ``KEPT_UNREFERENCED`` with the reason it stays. No Spark session
+is needed.
 """
 
 from __future__ import annotations
@@ -41,6 +47,30 @@ KEPT_UNREACHED = {
     "schemas": "reference DDL for the schema conformance check",
     "plans.inspect": "plan-assertion helper the tests use",
 }
+
+# Top-level functions of reached streaming/ and operators/ modules that no
+# package or perfbench code references, one line of reason each.
+KEPT_UNREFERENCED = {
+    "streaming.jobs.simulated_event_stream": "S6 reference rate producer, tested",
+    "streaming.jobs.foreach_batch_upsert": "S7 reference upsert sink, tested",
+    "streaming.jobs.foreach_batch_fanout": "S8/S9 one-read clean, DLQ and alert sinks, tested",
+    "streaming.jobs.rolling_student_metrics": "A7/A8 reference running metrics and anomaly flag, tested",
+    "streaming.jobs.count_bounded_metrics": "A7 reference count-bounded window, exact, tested",
+    "streaming.jobs.active_students_window": "docx active-students window, tested",
+    "streaming.jobs.session_metrics_stream": "docx per-student session windows, tested",
+    "streaming.jobs.dedup_event_stream": "event-id dedup that survives a restart, tested",
+    "streaming.jobs.run_available_now": "scheduled drain of the stream backlog, tested",
+    "streaming.jobs.enrich_stream_with_dim": "stream-static student enrichment, tested",
+    "streaming.jobs.stream_stream_attribution": "watch-to-completion interval join, tested",
+    "operators.transform.course_summary": "A2 reference course aggregate, tested",
+    "operators.metrics.observe_cleaning": "observed cleaning gauges for the run record, tested",
+    "operators.bpe.segment_words": "applies learn_bpe's merges; round-trip tested",
+    "operators.multimodal.resize_media": "media resize stage beside extract_features, tested",
+    "operators.multimodal.sample_frames": "video frame sampling stage, tested",
+}
+
+
+PERFBENCH_DIR = PKG_DIR.parent / "perfbench"
 
 
 def _all_modules() -> dict[str, pathlib.Path]:
@@ -97,10 +127,10 @@ def _imports(name: str, path: pathlib.Path, modules: dict) -> set[str]:
     return {m for m in found if m is not None and m in modules}
 
 
-def _reached() -> set[str]:
+def _reached(roots=ROOTS) -> set[str]:
     modules = _all_modules()
     seen: set[str] = set()
-    todo = [m for root in ROOTS for m in _with_parents(root)]
+    todo = [m for root in roots for m in _with_parents(root)]
     while todo:
         name = todo.pop()
         if name in seen:
@@ -139,3 +169,73 @@ def test_kept_modules_are_really_unreached():
         "KEPT_UNREACHED names modules an entry point does import (drop "
         "them from the set): " + ", ".join(stale)
     )
+
+
+def _names(tree: ast.AST, skip: ast.AST | None = None) -> set[str]:
+    """Every name a tree refers to (variables, attributes, imported
+    names), leaving out the subtree ``skip``."""
+    out: set[str] = set()
+    todo = [tree]
+    while todo:
+        node = todo.pop()
+        if node is skip:
+            continue
+        if isinstance(node, ast.Name):
+            out.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            out.add(node.attr)
+        elif isinstance(node, ast.alias):
+            out.add(node.name.rsplit(".", 1)[-1])
+        todo.extend(ast.iter_child_nodes(node))
+    return out
+
+
+def _unreferenced_functions() -> set[str]:
+    """``module.function`` for each top-level function of a reached
+    ``streaming``/``operators`` module that no package module (outside the
+    function's own body) and no perfbench module names."""
+    modules = _all_modules()
+    trees = {
+        path: ast.parse(path.read_text(), filename=str(path))
+        for path in (*modules.values(), *PERFBENCH_DIR.rglob("*.py"))
+    }
+    seen = {path: _names(tree) for path, tree in trees.items()}
+    out = set()
+    for name in _reached():
+        if not name.startswith(("streaming.", "operators.")):
+            continue
+        path = modules[name]
+        for fn in trees[path].body:
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            if fn.name in _names(trees[path], skip=fn) or any(
+                fn.name in names for p, names in seen.items() if p != path
+            ):
+                continue
+            out.add(f"{name}.{fn.name}")
+    return out
+
+
+def test_every_function_is_referenced_or_kept():
+    orphans = sorted(_unreferenced_functions() - set(KEPT_UNREFERENCED))
+    assert not orphans, (
+        "functions no package or perfbench code references (wire in, "
+        "delete, or add to KEPT_UNREFERENCED with a reason): "
+        + ", ".join(orphans)
+    )
+
+
+def test_kept_functions_are_really_unreferenced():
+    stale = sorted(set(KEPT_UNREFERENCED) - _unreferenced_functions())
+    assert not stale, (
+        "KEPT_UNREFERENCED names functions that are referenced or no "
+        "longer exist (drop them from the set): " + ", ".join(stale)
+    )
+
+
+def test_stream_jobs_do_not_import_the_registry():
+    suite = sorted(
+        m for m in _reached(("streaming.jobs",))
+        if m == "suite" or m.startswith("suite.")
+    )
+    assert not suite, f"streaming.jobs reaches the query registry: {suite}"

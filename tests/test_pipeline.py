@@ -329,3 +329,38 @@ def test_failed_write_raises_and_records_no_run(spark, tmp_path, monkeypatch):
     with pytest.raises(RuntimeError, match="dim_date failed"):
         pipeline.run_batch_pipeline(spark, input_dir, wh_dir)
     assert not os.path.exists(os.path.join(wh_dir, "metadata", "pipeline_runs"))
+
+
+@pytest.mark.xfail(strict=True, reason="ROADMAP direction 1")
+def test_incremental_batch_newest_wins(spark, tmp_path):
+    """A second batch updates a student loaded by the first: its values
+    must win in staging and the warehouse, and only the rows it carries
+    are stamped with its batch id. b2 is b1's input with a one-row
+    students file that moves STU005 (file row 5 in b1, row 1 in b2)."""
+    wh_dir = str(tmp_path / "warehouse")
+    b1, b2 = str(tmp_path / "b1"), str(tmp_path / "b2")
+    write_fixture_csvs(b1)
+    write_fixture_csvs(b2)
+    with open(os.path.join(b1, "students_enrollment.csv")) as f:
+        header, *rows = f.read().splitlines()
+    (old,) = [r for r in rows if r.startswith("STU_005,")]
+    fields = old.split(",")
+    fields[1], fields[6] = "Asha Verma", "Mumbai"
+    assert fields[6] != old.split(",")[6]
+    with open(os.path.join(b2, "students_enrollment.csv"), "w") as f:
+        f.write(header + "\n" + ",".join(fields) + "\n")
+
+    pipeline.run_batch_pipeline(spark, b1, wh_dir, batch_id="b1")
+    pipeline.run_batch_pipeline(spark, b2, wh_dir, batch_id="b2")
+
+    def stu005(layer, name):
+        t = spark.read.parquet(os.path.join(wh_dir, layer, name))
+        (row,) = t.where(t.student_id == "STU005").collect()
+        return row
+
+    for layer, name in (("staging", "stg_students"), ("warehouse", "dim_students")):
+        row = stu005(layer, name)
+        assert (row["full_name"], row["city"]) == ("Asha Verma", "Mumbai"), name
+    stg = spark.read.parquet(os.path.join(wh_dir, "staging", "stg_students"))
+    stamped = {r["student_id"] for r in stg.where(stg.batch_id == "b2").collect()}
+    assert stamped == {"STU005"}

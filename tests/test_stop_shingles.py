@@ -62,17 +62,17 @@ def test_jaccard_candidate_volume_capped(spark):
     from edu_data_pipeline_spark.sources.testdata import table
     from edu_data_pipeline_spark.suite.scale_suite import (
         _distinct_shingles,
-        _stop_filtered_shingles,
+        _pair_shingle_keys,
     )
 
     d = table(spark, SF_REDUCTION, "documents")
 
-    def pair_count(ex):
+    def pair_count(ex, key):
         a, b = ex.alias("a"), ex.alias("b")
         return (
             a.join(
                 b,
-                (F.col("a.s") == F.col("b.s"))
+                (F.col(f"a.{key}") == F.col(f"b.{key}"))
                 & (F.col("a.doc_id") < F.col("b.doc_id")),
             )
             .select("a.doc_id", "b.doc_id")
@@ -80,8 +80,9 @@ def test_jaccard_candidate_volume_capped(spark):
             .count()
         )
 
-    uncapped = pair_count(_distinct_shingles(d))
-    capped = pair_count(_stop_filtered_shingles(d))
+    uncapped = pair_count(_distinct_shingles(d), "s")
+    # the df-capped shingle keys the query's candidate self-join runs on
+    capped = pair_count(_pair_shingle_keys(d), "sk")
     assert capped < uncapped, (capped, uncapped)
 
     # recall: every verified near-dup pair is still a capped candidate

@@ -106,6 +106,52 @@ def test_stream_windowed_metrics(spark, tmp_path):
     assert (r3["count"], r3.errors) == (1, 1)
 
 
+def test_rolling_student_metrics(spark, tmp_path):
+    """A7/A8: un-windowed running per-student count/duration/errors and
+    the errors/count > 0.2 anomaly flag, updated across two batches."""
+
+    def ev(i, student, score):
+        return {"event_id": f"evt-r{i}", "student_id": student,
+                "course_id": "CRS001", "event_type": "quiz_completed",
+                "event_timestamp": "2024-02-01T10:20:00",
+                "duration_seconds": "10", "score": score,
+                "module_id": "MOD001", "completion_percentage": "50.0"}
+
+    extra = [ev(0, "STU004", "bad"), ev(1, "STU004", "200.0")]  # all invalid
+    # STU005: 1 error in 5 events -> rate exactly 0.2, not anomalous
+    extra += [ev(2 + i, "STU005", "bad" if i == 0 else "60.0") for i in range(5)]
+    src = str(tmp_path / "events")
+    write_events(src, EVENTS_BATCH_1, "b1.json")
+    stream = jobs.read_event_stream_json(spark, src)
+    cleaned = jobs.clean_event_stream(stream, ref_ts=ref_ts())
+    q = (
+        jobs.rolling_student_metrics(cleaned)
+        .writeStream.format("memory")
+        .queryName("rolling_sink")
+        .outputMode("update")
+        .start()
+    )
+    q.processAllAvailable()
+    write_events(src, EVENTS_BATCH_2 + extra, "b2.json")
+    q.processAllAvailable()
+    q.stop()
+    latest = {}
+    for r in spark.sql("SELECT * FROM rolling_sink").collect():
+        latest[r.student_id] = r  # update mode: last emit per student wins
+    got = {
+        s: (r["count"], r.duration, r.errors, bool(r.anomaly))
+        for s, r in latest.items()
+    }
+    assert got == {
+        # evt-001 twice (no dedup here), evt-003's "x" duration counts 0
+        "STU001": (3, 1500, 1, True),
+        "STU002": (1, 300, 1, True),
+        "STU003": (1, 100, 0, False),
+        "STU004": (2, 20, 2, True),
+        "STU005": (5, 50, 1, False),
+    }
+
+
 def test_stream_active_students(spark, tmp_path):
     """Docx "active students in last 5 min": global sliding-window distinct
     count (HLL; exact at these cardinalities)."""
@@ -495,428 +541,3 @@ def test_stream_stream_left_outer_emits_unmatched(spark, tmp_path):
     rows = {r.completion_event_id: r for r in spark.table("so_sink").collect()}
     assert "done-1" in rows
     assert rows["done-1"].watch_event_id is None  # unmatched, NULL-joined
-
-
-def test_stream_incremental_dedup_screen(spark, tmp_path):
-    """Streaming twin of docs_incremental_dedup: an incoming doc that
-    shares a distinctive 3-gram with the corpus must produce collision
-    rows; a novel doc must not. Doc-level rollup happens per micro-batch
-    in foreachBatch."""
-    import json as _json
-
-    corpus = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta epsilon zeta"),
-            (2, "one two three four five six seven"),
-        ],
-        "doc_id long, text string",
-    )
-    index = jobs.corpus_shingle_index(corpus)
-
-    src = tmp_path / "docs"
-    src.mkdir()
-    rows = [
-        {"doc_id": 100, "text": "alpha beta gamma delta NEW TAIL HERE"},  # dup of 1
-        {"doc_id": 101, "text": "totally novel words with no overlap at all"},
-    ]
-    (src / "batch0.json").write_text("\n".join(_json.dumps(r) for r in rows))
-
-    stream = jobs.read_doc_stream_json(spark, str(src))
-    hits = jobs.screen_docs_stream(stream, index)
-
-    rollups = []
-    q = (
-        hits.writeStream.foreachBatch(
-            lambda b, _id: rollups.extend(jobs.collision_rollup(b).collect())
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    by_doc = {r["doc_id"]: r["n_corpus_matches"] for r in rollups}
-    assert by_doc.get(100) == 1, by_doc  # collided with corpus doc 1 only
-    assert 101 not in by_doc  # novel doc produced no collision rows
-
-
-def test_streaming_shingles_match_batch(spark):
-    """The streaming (explode+slice) shingler must produce the same
-    (doc_id, shingle) multiset as the batch (window+lead) one."""
-    from edu_data_pipeline_spark.suite.scale_suite import _shingle_rows
-
-    docs = spark.createDataFrame(
-        [(1, "a b c d e"), (2, "x y"), (3, "p q r")],
-        "doc_id long, text string",
-    )
-    a = sorted(map(tuple, jobs.streaming_shingle_rows(docs).collect()))
-    b = sorted(map(tuple, _shingle_rows(docs).collect()))
-    assert a == b
-
-
-def test_streaming_drift_monitor(spark, tmp_path):
-    """Stream twin of events_value_psi: a live window whose value
-    distribution matches the baseline stays quiet; a shifted window
-    raises the drift alarm."""
-    import json as _json
-
-    baseline_rows = [("click", float(v)) for v in range(0, 400, 4)]
-    baseline = jobs.baseline_value_shares(
-        spark.createDataFrame(baseline_rows, "event_type string, value double")
-    )
-
-    src = tmp_path / "drift_events"
-    src.mkdir()
-
-    def ev(i, ts, value):
-        return {
-            "event_id": f"evt-{i}", "student_id": "STU001", "course_id": "C1",
-            "event_type": "click", "event_timestamp": ts,
-            "duration_seconds": "1", "score": "50", "module_id": "M1",
-            "completion_percentage": str(value),
-        }
-
-    # window A (10:00): same uniform 0..400 distribution as baseline
-    rows = [ev(i, "2024-01-01T10:00:05", 0) for i in range(50)]
-    # window B (11:00): all mass in one far bucket -> drift
-    rows += [ev(100 + i, "2024-01-01T11:00:05", 0) for i in range(50)]
-    (src / "b.json").write_text("\n".join(_json.dumps(r) for r in rows))
-
-    stream = jobs.read_event_stream_json(spark, str(src)).select(
-        F.col("event_type"),
-        F.to_timestamp("event_timestamp").alias("event_timestamp"),
-        # window A values mirror the baseline (derived from the event id,
-        # stream-legal and deterministic); window B sits at 900+
-        F.when(
-            F.hour(F.to_timestamp("event_timestamp")) == 10,
-            (
-                F.regexp_extract("event_id", r"evt-(\d+)", 1).cast("long") % 50
-            ) * 8.0,
-        ).otherwise(F.lit(950.0)).alias("value"),
-    )
-    counts = jobs.windowed_bucket_counts(stream)
-    out = []
-    q = (
-        counts.writeStream.outputMode("append")
-        .foreachBatch(
-            lambda b, _id: out.extend(
-                jobs.psi_against_baseline(b, baseline).collect()
-            )
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    # append mode only emits CLOSED windows; the watermark from the max
-    # event (11:00) closes window A but keeps B open -> drive a second
-    # batch far in the future to flush B
-    (src / "c.json").write_text(_json.dumps(ev(999, "2024-01-02T00:00:00", 0)))
-    q2 = (
-        counts.writeStream.outputMode("append")
-        .foreachBatch(
-            lambda b, _id: out.extend(
-                jobs.psi_against_baseline(b, baseline).collect()
-            )
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(180)
-    alarms = {r["w"]["start"].hour: r["drift_alarm"] for r in out}
-    assert alarms.get(10) is False, alarms  # matches baseline -> quiet
-    assert alarms.get(11) is True, alarms   # shifted mass -> alarm
-
-
-def test_psi_counts_vanished_buckets(spark):
-    """Regression: a window that LOSES half the baseline's buckets (mass
-    vanished, no novel buckets) must still alarm — the baseline buckets
-    missing from the live window contribute (0 - p_base)*ln terms."""
-    import datetime
-
-    baseline = spark.createDataFrame(
-        [("click", b, 0.1) for b in range(10)],
-        "event_type string, bucket long, p_base double",
-    )
-    w = (datetime.datetime(2024, 1, 1, 10, 0), datetime.datetime(2024, 1, 1, 10, 10))
-    live = spark.createDataFrame(
-        [(w, "click", b, 20) for b in range(5)],  # buckets 5..9 vanished
-        "w struct<start:timestamp,end:timestamp>, event_type string, bucket long, count long",
-    )
-    out = jobs.psi_against_baseline(live, baseline).collect()
-    assert len(out) == 1
-    assert out[0]["psi"] > 0.2 and out[0]["drift_alarm"] is True, out
-
-
-def test_stream_bloom_quarantine_routes(spark, tmp_path):
-    """Streaming twin of docs_bloom_screen: a doc sharing a shingle with
-    the eval set must land in quarantine with its hit count; a novel doc
-    (and one too short to shingle) must land clean. No false negatives:
-    the clean sink can never contain a true eval overlap."""
-    import json as _json
-
-    from edu_data_pipeline_spark.suite.curation_suite import bloom_bitmap
-    from edu_data_pipeline_spark.suite.scale_suite import _distinct_shingles
-
-    eval_docs = spark.createDataFrame(
-        [(0, "secret eval answer tokens here now")],
-        "doc_id long, text string",
-    )
-    bloom = bloom_bitmap(_distinct_shingles(eval_docs))
-
-    src = tmp_path / "docs"
-    src.mkdir()
-    rows = [
-        {"doc_id": 10, "text": "leading words then secret eval answer copied"},
-        {"doc_id": 11, "text": "completely unrelated clean document words"},
-        {"doc_id": 12, "text": "too short"},
-    ]
-    (src / "b0.json").write_text("\n".join(_json.dumps(r) for r in rows))
-
-    clean_p = str(tmp_path / "clean")
-    quar_p = str(tmp_path / "quarantine")
-    q = jobs.start_bloom_quarantine_stream(
-        jobs.read_doc_stream_json(spark, str(src)),
-        bloom,
-        clean_p,
-        quar_p,
-        str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(120)
-
-    quar = {r["doc_id"]: r for r in spark.read.parquet(quar_p).collect()}
-    clean = {r["doc_id"]: r for r in spark.read.parquet(clean_p).collect()}
-    assert set(quar) == {10} and set(clean) == {11, 12}
-    assert quar[10]["n_bloom_hits"] >= 1
-    assert clean[12]["n_bloom_hits"] == 0  # shingle-less doc routes clean
-
-
-def test_router_sinks_idempotent_under_batch_replay(spark, tmp_path):
-    """ADVICE r4: a checkpoint-replayed micro-batch must REPLACE its own
-    sink output, not double-append — both routers write batch_id-keyed
-    dynamic partition overwrites. Re-invoking the foreachBatch body with
-    the same batch_id (what a post-crash replay does) leaves exactly one
-    copy of every row."""
-    from edu_data_pipeline_spark.suite.curation_suite import bloom_bitmap
-    from edu_data_pipeline_spark.suite.scale_suite import _distinct_shingles
-
-    eval_docs = spark.createDataFrame(
-        [(0, "secret eval answer tokens here now")], "doc_id long, text string"
-    )
-    bloom = bloom_bitmap(_distinct_shingles(eval_docs))
-    batch = spark.createDataFrame(
-        [
-            (10, "leading words then secret eval answer copied"),
-            (11, "completely unrelated clean document words"),
-        ],
-        "doc_id long, text string",
-    )
-    clean_p = str(tmp_path / "clean")
-    quar_p = str(tmp_path / "quarantine")
-    writer = jobs.foreach_batch_bloom_quarantine(bloom, clean_p, quar_p)
-    writer(batch, 7)
-    writer(batch, 7)  # replay of the SAME batch
-    assert spark.read.parquet(quar_p).count() == 1
-    assert spark.read.parquet(clean_p).count() == 1
-
-    # semantic screen router: replay the same vector batch
-    corpus = spark.createDataFrame(
-        [(1, [1.0] * 8 + [0.0] * 56)], "vec_id long, embedding array<double>"
-    )
-    buckets, vecs = jobs.embedding_index(corpus, 64)
-    vbatch = spark.createDataFrame(
-        [(100, [1.0] * 8 + [0.0] * 56), (101, [0.0] * 56 + [1.0] * 8)],
-        "vec_id long, embedding array<double>",
-    )
-    novel_p = str(tmp_path / "novel")
-    dup_p = str(tmp_path / "dup")
-    swriter = jobs.foreach_batch_semantic_screen(buckets, vecs, 64, novel_p, dup_p)
-    swriter(vbatch, 3)
-    swriter(vbatch, 3)
-    assert spark.read.parquet(dup_p).count() == 1
-    assert spark.read.parquet(novel_p).count() == 1
-
-
-def test_bloom_verdicts_match_batch_screen(spark):
-    """The streaming router's verdict core must agree with the batch
-    suite query on the same corpus: per-doc bloom-hit counts identical."""
-    from edu_data_pipeline_spark.sources.testdata import table
-    from edu_data_pipeline_spark.suite import load_all
-    from edu_data_pipeline_spark.suite.curation_suite import bloom_bitmap
-    from edu_data_pipeline_spark.suite.scale_suite import (
-        DECON_EVAL_SOURCE,
-        _distinct_shingles,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    d = table(spark, sf, "documents")
-    eval_docs = d.where(F.col("source") == DECON_EVAL_SOURCE)
-    train_docs = d.where(F.col("source") != DECON_EVAL_SOURCE)
-    bloom = bloom_bitmap(_distinct_shingles(eval_docs))
-    stream_side = {
-        r["doc_id"]: (r["n_grams"], r["n_bloom_hits"])
-        for r in jobs.bloom_doc_verdicts(train_docs, bloom).collect()
-    }
-    batch_side = {
-        r["doc_id"]: (r["n_grams"], r["n_bloom_hits"])
-        for r in load_all()["docs_bloom_screen"].fn(spark, sf).collect()
-    }
-    assert stream_side == batch_side
-
-
-def test_stream_cms_merges_to_batch_sketch(spark, tmp_path):
-    """CMS mergeability across micro-batches: streaming the corpus in
-    two files and summing the per-batch deltas must yield EXACTLY the
-    sketch a single batch build produces over the union — and point
-    estimates through the merged sketch still never undercount."""
-    import json as _json
-
-    from edu_data_pipeline_spark.suite.curation_suite import (
-        cms_lookup,
-        cms_sketch,
-    )
-
-    docs_a = [{"doc_id": 1, "text": "x x x y z common words"}]
-    docs_b = [{"doc_id": 2, "text": "x y y q r common words"}]
-    src = tmp_path / "docs"
-    src.mkdir()
-    (src / "a.json").write_text("\n".join(_json.dumps(r) for r in docs_a))
-    (src / "b.json").write_text("\n".join(_json.dumps(r) for r in docs_b))
-
-    sketch_p = str(tmp_path / "sketch")
-    q = jobs.start_cms_monitor_stream(
-        jobs.read_doc_stream_json(spark, str(src)),
-        sketch_p,
-        str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(120)
-
-    merged = {
-        (r["row_j"], r["bucket"]): r["cnt"]
-        for r in jobs.read_cms(spark, sketch_p).collect()
-    }
-    all_docs = spark.createDataFrame(
-        [(1, docs_a[0]["text"]), (2, docs_b[0]["text"])],
-        "doc_id long, text string",
-    )
-    batch = {
-        (r["row_j"], r["bucket"]): r["cnt"]
-        for r in cms_sketch(jobs.doc_token_rows(all_docs)).collect()
-    }
-    assert merged == batch
-
-    terms = spark.createDataFrame([("x",), ("y",), ("absent",)], "t string")
-    est = {
-        r["t"]: r["cms_estimate"]
-        for r in cms_lookup(jobs.read_cms(spark, sketch_p), terms).collect()
-    }
-    assert est["x"] >= 4 and est["y"] >= 3  # true counts: 4, 3
-    assert est["absent"] >= 0
-
-
-def test_stream_semantic_screen_routes(spark, tmp_path):
-    """Streaming embedding screen: an incoming vector identical to a
-    corpus vector is routed duplicate with cosine 1.0 against that
-    vector; an opposite-direction vector shares no sign bucket and
-    routes novel."""
-    import json as _json
-
-    base = [1.0, 0.5, -0.25, 2.0] * 16
-    other = [0.1 * ((i % 7) - 3) for i in range(64)]
-    corpus = spark.createDataFrame(
-        [(100, base), (101, other)], "vec_id long, embedding array<double>"
-    )
-    buckets, vecs = jobs.embedding_index(corpus, dim=64)
-
-    src = tmp_path / "vecs"
-    src.mkdir()
-    rows = [
-        {"vec_id": 1, "embedding": base},                 # dup of 100
-        {"vec_id": 2, "embedding": [-v for v in base]},   # novel (cos -1)
-    ]
-    (src / "b0.json").write_text("\n".join(_json.dumps(r) for r in rows))
-
-    novel_p, dup_p = str(tmp_path / "novel"), str(tmp_path / "dup")
-    q = jobs.start_semantic_screen_stream(
-        jobs.read_vec_stream_json(spark, str(src)),
-        buckets, vecs, 64, novel_p, dup_p, str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(120)
-
-    dup = {r["vec_id"]: r for r in spark.read.parquet(dup_p).collect()}
-    novel = {r["vec_id"] for r in spark.read.parquet(novel_p).collect()}
-    assert set(dup) == {1} and novel == {2}
-    assert dup[1]["matched_corpus_vec"] == 100
-    assert dup[1]["best_cosine"] == 1.0
-
-
-def test_semantic_screen_self_retrieval(spark):
-    """ANN-index sanity: screening the corpus against its own index must
-    find every vector (identical vectors share all sign buckets), with
-    best cosine 1.0 and the match id <= own id (exact-duplicate ties
-    break to the lowest corpus id)."""
-    from pyspark.sql import functions as SF
-
-    sf = "/root/testdata/sf0.001"
-    emb = spark.read.parquet(sf + "/embeddings.parquet").select(
-        "vec_id", SF.col("embedding").cast("array<double>").alias("embedding")
-    )
-    buckets, vecs = jobs.embedding_index(emb, dim=64)
-    out = jobs.semantic_screen_batch(emb, buckets, vecs, 64, tau=0.32).collect()
-    assert len(out) == emb.count()
-    for r in out:
-        assert r["matched_corpus_vec"] is not None
-        assert r["best_cosine"] == 1.0
-        assert r["matched_corpus_vec"] <= r["vec_id"]
-
-
-def test_semantic_screen_derives_index_bits(spark):
-    """ADVICE r10: an index built at a non-default hyperplane width must
-    be probed at that SAME width even when the caller passes nothing —
-    the screen derives bits from the index's metadata stamp. Before the
-    fix, a wide index probed at the default N_LSH_BITS=4 collapsed
-    candidate generation (bucket p = t*bits+b vs t*4+b never lines up
-    past table 0) and streamed near-duplicates to the novel sink."""
-    import pytest as _pytest
-    from pyspark.sql import functions as SF
-
-    sf = "/root/testdata/sf0.001"
-    emb = spark.read.parquet(sf + "/embeddings.parquet").select(
-        "vec_id", SF.col("embedding").cast("array<double>").alias("embedding")
-    )
-    buckets, vecs = jobs.embedding_index(emb, dim=64, bits=7)
-    # default call: derives 7 from the stamp; self-retrieval must be total
-    out = jobs.semantic_screen_batch(emb, buckets, vecs, 64, tau=0.32)
-    assert out.where(SF.col("matched_corpus_vec").isNull()).count() == 0
-    # explicit matching bits: accepted
-    jobs.semantic_screen_batch(emb, buckets, vecs, 64, tau=0.32, bits=7)
-    # explicit contradicting bits: hard error, not silent noise
-    with _pytest.raises(ValueError, match="probe bits"):
-        jobs.semantic_screen_batch(emb, buckets, vecs, 64, tau=0.32, bits=4)
-
-
-def test_batch_partitioned_sink_layout_guard(spark, tmp_path):
-    """Pointing a batch_id-partitioned router at a directory holding the
-    old APPEND layout (flat files, stream_batch_id as a data column)
-    must fail at wiring time, not corrupt reads later; empty and
-    already-partitioned directories are accepted."""
-    import pytest as _pytest
-
-    from edu_data_pipeline_spark.suite.curation_suite import bloom_bitmap
-    from edu_data_pipeline_spark.suite.scale_suite import _distinct_shingles
-
-    docs = spark.createDataFrame([(0, "a b c d e f g h i j")],
-                                 "doc_id long, text string")
-    bloom = bloom_bitmap(_distinct_shingles(docs))
-
-    old_layout = str(tmp_path / "old_sink")
-    spark.createDataFrame([(1, 0)], "doc_id long, stream_batch_id long")\
-        .write.parquet(old_layout)
-    with _pytest.raises(ValueError, match="append layout"):
-        jobs.foreach_batch_bloom_quarantine(bloom, old_layout,
-                                            str(tmp_path / "q1"))
-    with _pytest.raises(ValueError, match="append layout"):
-        jobs.foreach_batch_cms_delta(old_layout)
-    # fresh + missing dirs pass; a partitioned dir written by the writer
-    # itself passes on re-wiring (resume)
-    clean_p, quar_p = str(tmp_path / "clean"), str(tmp_path / "quar")
-    writer = jobs.foreach_batch_bloom_quarantine(bloom, clean_p, quar_p)
-    writer(docs, 0)
-    jobs.foreach_batch_bloom_quarantine(bloom, clean_p, quar_p)  # resume ok
