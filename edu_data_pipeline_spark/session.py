@@ -1,9 +1,10 @@
 """SparkSession factory with scale-oriented defaults.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32 threads),
-but every setting here is chosen so the same logical plans survive a
-1000-executor cluster: AQE handles runtime re-planning / skew, shuffle
-partitions are sized for the local box but overridable, session timezone
+Local runs use ``local[$SPARK_GRAFT_CPUS]``, or one thread per core of
+the box when that is unset. Every setting here is chosen so the same
+logical plans survive a 1000-executor cluster: AQE handles runtime
+re-planning / skew, shuffle partitions default to the local thread count
+(32 on a cluster master) but are overridable, session timezone
 is pinned to UTC so timestamp semantics are environment-independent, and
 ANSI mode is off so casts return NULL on failure (the reference engine's
 cleaning semantics — see dags/utils/cleaning_rules.py:179-208 — treat
@@ -13,9 +14,16 @@ unparseable values as NULL/flagged, never as job failures).
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
+# Static shuffle width for non-local masters. A local[N] master gets N
+# instead: AQE coalesces batch shuffles either way, but streaming runs
+# with AQE off, so a stateful query's state-partition count is exactly
+# this value — every micro-batch runs that many state tasks and commits
+# that many state-store versions. 32 on a 4-core box cost the paced
+# event stream a 2.6 s state commit per batch (4 partitions: 0.36 s).
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 # Heap per local executor thread (r14 optimization, guide §5). Spark's
@@ -33,21 +41,14 @@ _LOCAL_HEAP_MB_PER_CORE = 256
 _LOCAL_HEAP_MIN_MB = 2048
 
 
-def _local_heap_mb(master: str) -> int | None:
-    """Default driver-JVM heap for a local[N] master, or None to leave
-    Spark's default alone (non-local masters; unparseable strings).
-    Overridable via $SPARK_GRAFT_DRIVER_MEM (passed through verbatim) —
-    the override, like the default it replaces, applies ONLY in local
-    mode (ADVICE r14): for non-local masters this factory never touches
-    spark.driver.memory, so the env var is deliberately ignored there
-    (cluster sizing belongs to the deployment)."""
-    import re
-
-    m = re.fullmatch(r"local\[([0-9]+|\*)\]", master.strip())
+def _local_cores(master: str) -> int | None:
+    """Thread count of a ``local[N]`` / ``local[*]`` master (``*`` is
+    ``os.cpu_count()``), or None for any other master string — cluster
+    masters and unparseable ones alike."""
+    m = re.fullmatch(r"local\[([1-9][0-9]*|\*)\]", master.strip())
     if not m:
         return None
-    n = os.cpu_count() or 1 if m.group(1) == "*" else int(m.group(1))
-    return max(_LOCAL_HEAP_MIN_MB, _LOCAL_HEAP_MB_PER_CORE * n)
+    return (os.cpu_count() or 1) if m.group(1) == "*" else int(m.group(1))
 
 
 def get_spark(
@@ -62,9 +63,16 @@ def get_spark(
     count at runtime, so the static ``spark.sql.shuffle.partitions``
     value only needs to be an upper bound; skew-join splitting is on so
     hot keys in big joins/aggregations re-plan instead of straggling.
+    With no ``master`` the session runs ``local[$SPARK_GRAFT_CPUS]``, or
+    one thread per core when that is unset. With no
+    ``shuffle_partitions`` a local master gets one shuffle partition per
+    thread and any other master ``DEFAULT_SHUFFLE_PARTITIONS``. A
+    streaming query keeps the partition count it started its checkpoint
+    with, whatever the session says on restart.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1
     resolved_master = master or f"local[{cpus}]"
+    cores = _local_cores(resolved_master)
     builder = (
         SparkSession.builder.master(resolved_master)
         .appName(app_name)
@@ -74,7 +82,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cores or DEFAULT_SHUFFLE_PARTITIONS),
         )
         # Broadcast threshold: dims in this engine are small (city
         # master ≤ 21 rows, dim_courses ~10s, nation/region 25/5);
@@ -96,11 +104,13 @@ def get_spark(
         # source layer (sources/testdata.py).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
-    # Local-mode heap sizing (see _local_heap_mb). Only effective when
-    # this call actually launches the JVM; an explicit caller conf or
-    # $SPARK_GRAFT_DRIVER_MEM wins.
-    heap_mb = _local_heap_mb(resolved_master)
-    if heap_mb is not None and "spark.driver.memory" not in (extra_conf or {}):
+    # Local-mode heap sizing. Only effective when this call actually
+    # launches the JVM; an explicit caller conf or $SPARK_GRAFT_DRIVER_MEM
+    # (passed through verbatim) wins. A non-local master never gets
+    # spark.driver.memory from this factory, so the env var is ignored
+    # there (ADVICE r14: cluster sizing belongs to the deployment).
+    if cores and "spark.driver.memory" not in (extra_conf or {}):
+        heap_mb = max(_LOCAL_HEAP_MIN_MB, _LOCAL_HEAP_MB_PER_CORE * cores)
         mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{heap_mb}m")
         builder = builder.config("spark.driver.memory", mem)
     # Throughput GC for the batch-executor JVM (r14): G1's pause-time
@@ -110,7 +120,7 @@ def get_spark(
     # Same reasoning applies to cluster executors (pause-insensitive
     # batch work); only set here when the caller didn't pass their own
     # JVM options.
-    if heap_mb is not None and "spark.driver.extraJavaOptions" not in (
+    if cores and "spark.driver.extraJavaOptions" not in (
         extra_conf or {}
     ):
         builder = builder.config(

@@ -51,15 +51,12 @@ from .scale_suite import (
     _SQL_COS_AB,
     _SQL_GRAM_KEY64,
     _SQL_SHINGLES,
-    _cosine,
-    _distinct_shingles,
     _distinct_shingles_with_source,
     _distinct_sk_rows,
     _gram_key64,
     _sql_key64,
     _n_tokens,
     _tokens,
-    gram_rows,
     sql_kmeans_chain,
 )
 

@@ -131,16 +131,13 @@ def test_minhash_partitioning_invariance(spark):
     assert base == repartitioned
 
 
-def test_exact2_decimal_cast_matches_duckdb_above_2_19():
+def test_exact2_decimal_cast_matches_duckdb_above_2_19(spark):
     """Regression for the exact2 fast path: cents values above 2^19
     diverge between engines at scale 10 (524288.07 case) but must agree
     at the shipped scale 2 — checked across the magnitude range."""
     import duckdb
     from pyspark.sql import functions as F
 
-    from edu_data_pipeline_spark.session import get_spark
-
-    spark = get_spark()
     con = duckdb.connect()
     cases = [0.01, 99.99, 524287.99, 524288.07, 524289.13, 999999.99,
              8388608.33, 4398046511103.97]  # last is ~2^42

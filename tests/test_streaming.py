@@ -493,6 +493,69 @@ def test_dedup_state_survives_restart(spark, tmp_path):
     assert out.where(out.event_id == "evt-001").count() == 1
 
 
+def test_window_state_keeps_checkpoint_partitions_on_restart(spark, tmp_path):
+    """A stateful stream's partition count belongs to its checkpoint: a
+    windowed query started under 8 shuffle partitions and restarted
+    under 4 (the session default follows the cores) reads and
+    updates its 8 state partitions, and its output still equals a batch
+    recompute over every file."""
+    src = str(tmp_path / "parts_in")
+    ckpt = str(tmp_path / "parts_ckpt")
+    out: dict[tuple, tuple] = {}
+
+    def sink(df, _batch_id):
+        for r in df.collect():
+            out[(r.window_start, r.student_id)] = (r["count"], r.duration, r.errors)
+
+    def run_once():
+        metrics = jobs.windowed_student_metrics(
+            jobs.clean_event_stream(
+                jobs.read_event_stream_json(spark, src), ref_ts=ref_ts()
+            )
+        )
+        q = (
+            metrics.writeStream.foreachBatch(sink)
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return q
+
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "8")
+        write_events(src, EVENTS_BATCH_1, "b1.jsonl")
+        run_once()
+        spark.conf.set(key, "4")
+        # evt-005 lands in STU001's open 10:00 windows, so the restart
+        # must update state written under 8 partitions, not start afresh
+        evt_005 = {**EVENTS_BATCH_1[0], "event_id": "evt-005",
+                   "event_timestamp": "2024-02-01T10:04:00"}
+        write_events(src, EVENTS_BATCH_2 + [evt_005], "b2.jsonl")
+        q = run_once()
+    finally:
+        spark.conf.set(key, saved)
+
+    state0 = os.path.join(ckpt, "state", "0")
+    assert {d for d in os.listdir(state0) if d.isdigit()} == {str(i) for i in range(8)}
+    assert {
+        op["numShufflePartitions"]
+        for p in q.recentProgress for op in p["stateOperators"]
+    } == {8}
+    batch = jobs.windowed_student_metrics(
+        jobs.clean_event_stream(
+            spark.read.schema(jobs.PROGRESS_EVENT_SCHEMA).json(src), ref_ts=ref_ts()
+        )
+    ).collect()
+    assert out == {
+        (r.window_start, r.student_id): (r["count"], r.duration, r.errors)
+        for r in batch
+    }
+
+
 def test_stream_stream_left_outer_emits_unmatched(spark, tmp_path):
     """left_outer interval join: a completion with no qualifying watch is
     emitted with NULL watch columns — but only after the watermark
