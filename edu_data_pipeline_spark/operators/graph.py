@@ -6,38 +6,19 @@ no graph machinery (its dedup is exact-key only, dags/data_cleaning_pipeline.py:
 this operator exists for the near-dup (MinHash/SimHash) families, where
 "duplicate-of" is a graph reachability question.
 
-Two iteration schemes, both pure DataFrame ops (one shuffle family per
-round, Pregel-style driver loop):
-
-- ``min_label``: every vertex takes the minimum label in its closed
-  neighborhood each round. Converges in O(diameter) rounds — fine for
-  near-dup graphs (tiny, dense clusters; diameter 2-3), but a worst-case
-  CHAIN of length L needs L rounds (measured: SCALE.md, connected
-  components).
-- ``pointer_jump`` (default): the same neighborhood-min step followed by
-  one label-through-label join (label(v) <- label(label(v))). The label
-  chain contracts exponentially, so rounds are O(log diameter) — the
-  classic pointer-doubling trick (Shiloach-Vishkin lineage; same round
-  complexity class as the large-star/small-star MapReduce scheme of
-  Kiveris et al., "Connected Components in MapReduce and Beyond").
+One iteration scheme, pure DataFrame ops (a Pregel-style driver loop):
+each round every vertex takes the minimum label in its closed
+neighborhood, then follows one label-through-label join
+(label(v) <- label(label(v))). The label chain contracts exponentially,
+so rounds are O(log diameter) — the classic pointer-doubling trick
+(Shiloach-Vishkin lineage; same round complexity class as the
+large-star/small-star MapReduce scheme of Kiveris et al., "Connected
+Components in MapReduce and Beyond").
 
 Scale notes: each round is two equi-join shuffles plus a count; lineage
-is cut per round with localCheckpoint so plans stay O(1) deep. Both
-per-round joins shuffle on keys a GIANT component makes hot (a
-boilerplate-heavy crawl's near-dup megacluster): the neighbor lookup on
-``dst`` (hub degree) and the jump join on the component id (after a few
-rounds every member of a megacluster carries the same label). Pass
-``skew_threshold`` to split each join into a hot tier and a cold tier:
-the right side of both joins is UNIQUE per key, so the hot slice of the
-right side has at most one row per hot key (≤ |keys|/threshold rows) —
-it broadcasts, turning the hot tier into a map-side hash join that never
-shuffles the hot rows at all, while cold keys keep the ordinary
-shuffled join. Hot ``dst`` keys are detected once from the static edge
-list; hot component ids are re-detected every round from the current
-labels (the megacluster label only emerges as rounds coalesce), which
-costs one extra localCheckpoint materialization per round — the price
-of exact per-round hotness. Labels are bit-identical with the feature
-on or off.
+is cut per round with localCheckpoint so plans stay O(1) deep. A giant
+component makes both joins' keys hot; the session's AQE skew-join
+splitting (``session.py``) splits those partitions.
 """
 
 from __future__ import annotations
@@ -62,55 +43,13 @@ def symmetrize_edges(edges: DataFrame, src: str = "doc_a", dst: str = "doc_b") -
     )
 
 
-def _hot_keys(df: DataFrame, key: str, threshold: int) -> DataFrame:
-    """Key values of ``df[key]`` with multiplicity > threshold, as a
-    1-column frame ``hot_key``. The count is a map-side-combinable hash
-    aggregate (skew-immune itself); the output is bounded by
-    rows/threshold, small enough to broadcast by construction."""
-    return (
-        df.groupBy(F.col(key).alias("hot_key"))
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .where(F.col("_n") > threshold)
-        .select("hot_key")
-    )
-
-
-def _skew_split_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_key: str,
-    right_key: str,
-    hot: DataFrame,
-    how: str = "inner",
-) -> DataFrame:
-    """Join ``left`` with ``right`` on ``left_key == right_key`` (column
-    names must be disjoint across the two sides) where ``right`` is
-    UNIQUE per key, split by the hot-key frame: hot left rows probe a
-    BROADCAST of right's (one-row-per-hot-key, hence tiny) hot slice —
-    no shuffle ever sees a hot key — cold rows take the ordinary join.
-    Produces exactly the same rows as the plain join for any ``how``
-    that partitions by left row (inner/left)."""
-    cond = F.col(left_key) == F.col(right_key)
-    on_hot = F.col(left_key) == F.col("hot_key")
-    right_hot = right.join(
-        F.broadcast(hot), F.col(right_key) == F.col("hot_key"), "left_semi"
-    )
-    left_hot = left.join(F.broadcast(hot), on_hot, "left_semi")
-    left_cold = left.join(F.broadcast(hot), on_hot, "left_anti")
-    return left_hot.join(F.broadcast(right_hot), cond, how).unionByName(
-        left_cold.join(right, cond, how)
-    )
-
-
 def connected_components(
     vertices: DataFrame,
     sym_edges: DataFrame,
     *,
     vertex_col: str = "doc_id",
     max_rounds: int = 64,
-    pointer_jump: bool = True,
     strict: bool = False,
-    skew_threshold: int | None = None,
 ) -> tuple[DataFrame, int]:
     """Label every vertex with min(vertex id) of its component.
 
@@ -127,8 +66,8 @@ def connected_components(
     as their own singleton rather than vanishing).
 
     If the loop exhausts ``max_rounds`` while labels are still changing
-    (possible for the plain min-label scheme on chains longer than the
-    cap), the labels are NOT a fixpoint: a
+    (a chain whose diameter needs more than the cap's log2 rounds), the
+    labels are NOT a fixpoint: a
     :class:`NonConvergedComponentsWarning` is emitted, or with
     ``strict=True`` a ``RuntimeError`` is raised — never a silent wrong
     answer (ADVICE r3).
@@ -137,20 +76,12 @@ def connected_components(
     own component and only ever decreases, so the fixpoint (no change
     across a round) is exactly the per-component minimum: at fixpoint
     every edge (u,v) has label(u) <= label(v) and vice versa.
-
-    ``skew_threshold``: when set, keys hotter than the threshold (vertex
-    degree for the neighbor lookup; component population for the jump
-    join) are routed through a broadcast hot tier instead of the
-    shuffled join (see module docstring) — the giant-component guard.
-    Labels are bit-identical either way; pick a threshold above the
-    per-task row count you can sort/join comfortably (e.g. 2**21).
     """
     # Checkpoint lifecycle (VERDICT r7 #2): every localCheckpoint here is
-    # a handle-owning tracked checkpoint. The static ones (edge list and
-    # its hot/cold split; the edge list is instead deferred to the
-    # global registry when the NULL-edge rescue branch reads it from the
-    # returned frame) are freed when the loop ends; each round's
-    # checkpoint is freed as soon as the NEXT round's is materialized
+    # a handle-owning tracked checkpoint. The static edge list is freed
+    # when the loop ends (or deferred to the global registry when the
+    # NULL-edge rescue branch reads it from the returned frame); each
+    # round's checkpoint is freed as soon as the NEXT round's is materialized
     # (eager) and the convergence count has consumed the old labels — so
     # live per-round checkpoints never exceed 2 regardless of round
     # count (proven by tests/test_cache_lifecycle.py's storage probe).
@@ -175,7 +106,6 @@ def connected_components(
     # the r14 EXPLAIN regeneration: +20 document scans).
     raw, h_raw = local_checkpoint(sym_edges)
     sym = raw.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    static_handles = []
     verts = vertices.select(F.col(vertex_col).alias("doc_id"))
     # The dropped NULL-endpoint edges may still MENTION identified
     # vertices (ADVICE r13): a vertex whose only edges are NULL-endpoint
@@ -200,8 +130,6 @@ def connected_components(
         # keeps rescued ids that ALSO have real edges out of the
         # isolated branch.
         verts = verts.unionByName(rescued.join(verts, "doc_id", "left_anti"))
-    else:
-        static_handles.append(h_raw)
     # Only edge-touching vertices can ever change labels; at corpus scale
     # the overwhelming majority of documents are in NO near-dup pair, so
     # looping over all of them would pay |V| join rows per round for
@@ -212,18 +140,6 @@ def connected_components(
     )
     isolated = verts.join(active, "doc_id", "left_anti")
     labels = active.select("doc_id", F.col("doc_id").alias("component"))
-    # Hot dst keys (hub degree) are a property of the static edge list —
-    # detect once, pre-split the edge list once.
-    if skew_threshold is not None:
-        hot_dst, h_hot = local_checkpoint(_hot_keys(sym, "dst", skew_threshold))
-        on_hot = F.col("dst") == F.col("hot_key")
-        sym_hot, h_sh = local_checkpoint(
-            sym.join(F.broadcast(hot_dst), on_hot, "left_semi")
-        )
-        sym_cold, h_sc = local_checkpoint(
-            sym.join(F.broadcast(hot_dst), on_hot, "left_anti")
-        )
-        static_handles += [h_hot, h_sh, h_sc]
     live_handle = None  # backs the current `labels` frame
     rounds = 0
     changed = 0
@@ -232,17 +148,7 @@ def connected_components(
         lbl = labels.select(
             F.col("doc_id").alias("l_id"), F.col("component").alias("l_comp")
         )
-        if skew_threshold is None:
-            touched = sym.join(lbl, F.col("dst") == F.col("l_id"))
-        else:
-            # hot tier: labels' hot slice is ≤ one row per hot dst —
-            # broadcast it so a hub's edge rows never shuffle.
-            lbl_hot = lbl.join(
-                F.broadcast(hot_dst), F.col("l_id") == F.col("hot_key"), "left_semi"
-            )
-            touched = sym_hot.join(
-                F.broadcast(lbl_hot), F.col("dst") == F.col("l_id")
-            ).unionByName(sym_cold.join(lbl, F.col("dst") == F.col("l_id")))
+        touched = sym.join(lbl, F.col("dst") == F.col("l_id"))
         neighbor_min = touched.groupBy(F.col("src").alias("doc_id")).agg(
             F.min("l_comp").alias("nbr_component")
         )
@@ -253,38 +159,20 @@ def connected_components(
                 F.coalesce(F.col("nbr_component"), F.col("component")),
             ).alias("component"),
         )
-        h_mid = None
-        if pointer_jump:
-            # label(v) <- label(label(v)): labels are vertex ids, so the
-            # lookup is a self-join; composing the contraction with the
-            # 1-hop propagation doubles the reach per round.
-            if skew_threshold is not None:
-                # Materialize before hotness detection so the extra
-                # aggregate reads the computed frame, not a recompute of
-                # the whole round; hot components must be re-detected
-                # every round (the megacluster label emerges as rounds
-                # coalesce — static detection would miss it and the
-                # first skewed round is the one that OOMs).
-                updated, h_mid = local_checkpoint(updated)
-            jump = updated.select(
-                F.col("doc_id").alias("j_id"), F.col("component").alias("j_comp")
-            )
-            if skew_threshold is None:
-                updated = updated.join(jump, updated.component == jump.j_id, "left")
-            else:
-                hot_comp = _hot_keys(updated, "component", skew_threshold)
-                updated = _skew_split_join(
-                    updated, jump, "component", "j_id", hot_comp, "left"
-                )
-            updated = updated.select(
-                "doc_id",
-                F.coalesce(F.col("j_comp"), F.col("component")).alias("component"),
-            )
-        # Cut per-round lineage growth; eager, so once this returns the
-        # mid-round checkpoint is superseded and freed immediately.
+        # label(v) <- label(label(v)): labels are vertex ids, so the
+        # lookup is a self-join; composing the contraction with the
+        # 1-hop propagation doubles the reach per round.
+        jump = updated.select(
+            F.col("doc_id").alias("j_id"), F.col("component").alias("j_comp")
+        )
+        updated = updated.join(
+            jump, updated.component == jump.j_id, "left"
+        ).select(
+            "doc_id",
+            F.coalesce(F.col("j_comp"), F.col("component")).alias("component"),
+        )
+        # Cut per-round lineage growth (eager).
         updated, h_new = local_checkpoint(updated)
-        if h_mid is not None:
-            h_mid.release()
         changed = (
             updated.alias("u")
             .join(labels.alias("l"), "doc_id")
@@ -299,9 +187,8 @@ def connected_components(
         labels = updated
         if changed == 0:
             break
-    for h in static_handles:
-        h.release()  # loop-only statics (hot split; edge list unless
-        # the NULL-edge rescue needs it) — labels are frozen
+    if not rescue_needed:
+        h_raw.release()  # the loop was its last reader — labels are frozen
     if changed != 0:
         msg = (
             f"connected_components exhausted max_rounds={max_rounds} with "

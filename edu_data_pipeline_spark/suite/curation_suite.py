@@ -529,15 +529,8 @@ def _bloom_halves(grams: DataFrame) -> Column:
     )
 
 
-def _bloom_positions(
-    grams: DataFrame, *carry: str, m_bits: int = BLOOM_M_BITS
-) -> DataFrame:
-    """(carry..., pos) rows: each gram's BLOOM_K bit positions.
-
-    ``m_bits`` sizes the bitmap (keyword-only; default is the eval-set
-    screen's 2^17). Build and probe must pass the SAME value — the
-    dup-span pre-filter (scale_suite) uses a larger bitmap because its
-    key set is the corpus's dup vocabulary, not a fixed eval set."""
+def _bloom_positions(grams: DataFrame, *carry: str) -> DataFrame:
+    """(carry..., pos) rows: each gram's BLOOM_K bit positions."""
     sk = _bloom_halves(grams)
     halves = grams.select(
         *carry,
@@ -549,7 +542,7 @@ def _bloom_positions(
         F.explode(
             F.array(
                 *[
-                    ((F.col("h1") + j * F.col("h2")) % m_bits)
+                    ((F.col("h1") + j * F.col("h2")) % BLOOM_M_BITS)
                     for j in range(BLOOM_K)
                 ]
             )
@@ -563,32 +556,28 @@ _WORD_IDX = "pos div 32"
 _MASK = "shiftleft(CAST(1 AS BIGINT), CAST(pos % 32 AS INT))"
 
 
-def bloom_bitmap(grams: DataFrame, *, m_bits: int = BLOOM_M_BITS) -> DataFrame:
+def bloom_bitmap(grams: DataFrame) -> DataFrame:
     """(word_idx, word) Bloom bitmap over a gram frame's ``s`` column —
-    the map-side-combinable build shared by the Bloom screen queries.
-    Probe with the SAME ``m_bits``."""
+    the map-side-combinable build shared by the Bloom screen queries."""
     return (
-        _bloom_positions(grams, m_bits=m_bits)
+        _bloom_positions(grams)
         .select(F.expr(_WORD_IDX).alias("word_idx"), F.expr(_MASK).alias("mask"))
         .groupBy("word_idx")
         .agg(F.bit_or("mask").alias("word"))
     )
 
 
-def bloom_gram_flags(
-    grams: DataFrame, bloom: DataFrame, *, m_bits: int = BLOOM_M_BITS
-) -> DataFrame:
+def bloom_gram_flags(grams: DataFrame, bloom: DataFrame) -> DataFrame:
     """The input gram frame plus a ``bloom_pos`` membership flag:
     probe each gram's BLOOM_K positions against the BROADCAST bitmap;
     positive iff every bit is set.
 
     r8: entirely map-side — one broadcast hash join per hash function
-    (BLOOM_K joins against the m_bits/32-row bitmap) instead of the old
+    (BLOOM_K joins against the BLOOM_M_BITS/32-row bitmap) instead of the old
     explode(K) + groupBy(doc_id, gram) re-aggregation, which shuffled
     the whole gram stream once more just to AND three bits together.
     Output granularity equals input (instance streams are fine — each
-    row gets its own flag); pass the ``m_bits`` the bitmap was built
-    with."""
+    row gets its own flag)."""
     sk = _bloom_halves(grams)
     sel = grams.withColumn("_h1", F.shiftright(sk, 28)).withColumn(
         "_h2", sk.bitwiseAND(F.lit(_BLOOM_H2_MOD - 1))
@@ -596,7 +585,7 @@ def bloom_gram_flags(
     flag = None
     for j in range(BLOOM_K):
         sel = sel.withColumn(
-            f"_pos{j}", (F.col("_h1") + j * F.col("_h2")) % m_bits
+            f"_pos{j}", (F.col("_h1") + j * F.col("_h2")) % BLOOM_M_BITS
         )
         # SQL shiftleft accepts a column shift; the PySpark wrapper only
         # takes a literal int — same reason _MASK is an expr string

@@ -23,12 +23,11 @@ Scale design notes:
 from __future__ import annotations
 
 import functools as _functools
-import math as _math
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.testdata import metadata_row_count, table
+from ..sources.testdata import table
 from . import (
     davg,
     dround,
@@ -384,11 +383,6 @@ def _shingle_rows(d: DataFrame) -> DataFrame:
     return gram_rows(d, 3)
 
 
-def _distinct_shingles(d: DataFrame) -> DataFrame:
-    """Distinct (doc_id, shingle) pairs for set semantics."""
-    return _shingle_rows(d).distinct()
-
-
 def _doc_distinct_gram_arrays(
     d: DataFrame, elem, carry: tuple[str, ...] = (), k: int = 3
 ) -> DataFrame:
@@ -553,7 +547,7 @@ def _overlap_jaccard() -> Column:
 def _distinct_shingles_with_source(d: DataFrame) -> DataFrame:
     """Distinct (doc_id, source, shingle) rows — ``source`` rides the
     gram explode (r8): functionally dependent on doc_id, so the distinct
-    cardinality is identical to ``_distinct_shingles``, while the old
+    cardinality is that of the (doc_id, shingle) pairs, while the old
     ``join(documents, doc_id)`` shuffled every gram row a second time
     just to fetch one per-document attribute."""
     return gram_rows(d, 3, out="s", carry=("source",)).distinct()
@@ -789,35 +783,13 @@ def _stop_filtered_halves(d: DataFrame) -> DataFrame:
 PAIR_DF_CAP = 32
 
 
-def _pair_shingles(d: DataFrame) -> DataFrame:
-    """Distinct (doc_id, s) restricted to pair-generation shingles:
-    df <= least(greatest(5, 1% of docs), PAIR_DF_CAP). Like the stop
-    list, the VIOLATOR set broadcasts (shingles repeated across >32
-    docs — Zipf-bounded, a vanishing fraction of the vocabulary) and
-    the big side anti-joins shuffle-free."""
-    ex = _distinct_shingles(d)
-    dfreq = ex.groupBy("s").agg(F.count(F.lit(1)).alias("df_docs"))
-    total = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    stop = (
-        dfreq.crossJoin(F.broadcast(total))
-        .where(
-            F.col("df_docs")
-            > F.least(
-                F.greatest(F.lit(STOP_DF_FLOOR), F.expr("n_docs div 100")),
-                F.lit(PAIR_DF_CAP),
-            )
-        )
-        .select("s")
-    )
-    return ex.join(F.broadcast(stop), "s", "left_anti")
-
-
 def _pair_shingle_keys(d: DataFrame) -> DataFrame:
     """Distinct (doc_id, sk) restricted to pair-generation fingerprints
     (df <= least(greatest(5, 1% of docs), PAIR_DF_CAP)) — the 8-byte
-    currency the candidate SELF-JOIN runs on (r8b twin of
-    ``_pair_shingles``; that string form remains the readable exhibit
-    and the unit-test surface). The self-join is the widest exchange in
+    currency the candidate SELF-JOIN runs on. Like the stop list, the
+    VIOLATOR set broadcasts (fingerprints repeated across >32 docs —
+    Zipf-bounded, a vanishing fraction of the vocabulary) and the big
+    side anti-joins shuffle-free. The self-join is the widest exchange in
     docs_jaccard_top_pairs, so its key and payload shrink from ~20-byte
     shingle strings to 60-bit longs; df is a vocabulary-bounded
     count(*) over the map-side per-doc-distinct array rows
@@ -958,7 +930,7 @@ def docs_jaccard_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs), not the plan: under the absolute cap, worst-case candidates
     are 512 per shingle at ANY df drift, linear in vocabulary; a
     relative-only cap would re-admit the quadratic as 1% of n grows.
-    See _pair_shingles for the recall trade. The Jaccard itself is
+    See PAIR_DF_CAP for the recall trade. The Jaccard itself is
     then computed EXACTLY over the FULL shingle sets, but only for the
     candidate pairs — verify cost is |candidates|-bounded, the same
     shape as minhash_verified_pairs. Pairs whose overlap is pure
@@ -1138,21 +1110,12 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     are O(log diameter) — a pathological chain topology converges in
     ~log2(L) rounds instead of L (probe figures recorded in SCALE.md). The DuckDB oracle computes the same fixpoint
     via a recursive-CTE transitive closure — tractable at oracle scale,
-    while the Spark path scales to corpus size. The giant-component
-    guard is ON (r6): a boilerplate-heavy crawl's near-dup megacluster
-    would hot-key both per-round joins; keys over the threshold route
-    through a broadcast tier instead (labels bit-identical, crafted
-    megacluster pytest in tests/test_rebalance_and_graph.py)."""
+    while the Spark path scales to corpus size."""
     from ..operators.graph import connected_components, symmetrize_edges
 
     d = table(spark, sf_dir, "documents").select("doc_id")
     edges = minhash_verified_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    # 2^21 rows ≈ the per-key row count a single task can join/sort
-    # comfortably; far above any local component, so the local plan's hot
-    # tiers are empty (zero extra rows) while a 100 TB megacluster splits.
-    labels, _ = connected_components(
-        d, symmetrize_edges(edges), skew_threshold=2**21
-    )
+    labels, _ = connected_components(d, symmetrize_edges(edges))
     return labels.select(
         "doc_id", "component", (F.col("doc_id") == F.col("component")).alias("is_representative")
     )
@@ -1214,11 +1177,11 @@ def _simhash_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc 64-bit SimHash as four 16-bit words (w_0..w_3).
 
     Shape choice is a MEASURED trade (r9): a zero-exchange map-side
-    variant exists (:func:`_simhash_words_mapside` — the per-bit sums
-    as one ``aggregate`` over the token array) and was equivalence-
-    pinned and benchmarked, but higher-order-function lambdas evaluate
-    INTERPRETED while this exploded shape's per-token hashing and the
-    hash-aggregate partials run inside whole-stage codegen: measured at
+    variant (the per-bit sums as one ``aggregate`` over the token
+    array) was equivalence-pinned and benchmarked, but higher-order-
+    function lambdas evaluate INTERPRETED while this exploded shape's
+    per-token hashing and the hash-aggregate partials run inside
+    whole-stage codegen: measured at
     sf0.1, the map-side variant cut shuffle 1.62 -> 0.01 of input yet
     cost 1.96x wall on docs_simhash and 2.7x on simhash_near_pairs
     (which evaluates the words subtree twice). The exchange this shape
@@ -1227,8 +1190,7 @@ def _simhash_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     average ~120 B; at production document sizes it is <= 0.25 of
     input, ~5 TB per 100 TB), while SimHash's dominant cost at every
     scale is the per-token CPU — so codegen wins the operator. The
-    map-side variant stays in-tree, equivalence-tested, as the
-    documented negative result (SCALE.md r9a).
+    map-side variant is recorded as a negative result (SCALE.md r9a).
 
     The 64 per-bit sum aggregates and the 64-term word recombination
     are built as parsed SQL strings (selectExpr / expr), not nested
@@ -1238,14 +1200,7 @@ def _simhash_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~1.3 s to ~0.1 s (VERDICT r1 #5). Scale-independent either way —
     this is fixed latency, not per-row work.
     """
-    return _simhash_words_df(table(spark, sf_dir, "documents"))
-
-
-def _simhash_words_df(d: DataFrame) -> DataFrame:
-    """DataFrame-level body of :func:`_simhash_words` (split out so the
-    crafted-corpus equivalence test can run both shapes on synthetic
-    docs): exploded tokens -> codegen per-token hashing -> 64 partial
-    +1/-1 sums through one doc_id exchange -> word recombination."""
+    d = table(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.explode(_tokens(F.col("text"))).alias("t"))
     hashed = toks.selectExpr(
         "doc_id",
@@ -1271,67 +1226,6 @@ def _simhash_words_df(d: DataFrame) -> DataFrame:
             "CAST("
             + " + ".join(
                 f"(CASE WHEN s_{j}_{i} > 0 THEN {1 << i} ELSE 0 END)"
-                for i in range(SIMHASH_WORD_BITS)
-            )
-            + f" AS BIGINT) AS w_{j}"
-            for j in range(SIMHASH_WORDS)
-        ],
-    )
-
-
-def _simhash_words_mapside(d: DataFrame) -> DataFrame:
-    """Zero-exchange SimHash variant — kept as a MEASURED NEGATIVE
-    RESULT, not the registry path (see :func:`_simhash_words` for the
-    numbers). Per-bit ONES counts fold over the token array (one md5 +
-    4 conv per token, 64 zip_with adds); the sign test 2*ones - n is
-    the +1/-1 sum algebraically. ``explode(array(...))`` binds the
-    ones array once (Generate barrier — projection collapse would
-    otherwise re-inline the fold into all 64 word-bit references, the
-    gram_rows trap at _doc_distinct_gram_arrays). Equivalence is
-    pinned word-for-word vs the grouped shape, sign ties included
-    (tests/test_doc_gram_arrays.py)."""
-    toks = d.select("doc_id", _tokens(F.col("text")).alias("toks"))
-    # per-token 4-word hash values: ONE md5 per token, bound by its own
-    # transform so the 4 conv()s read the same hex (no re-hash per word)
-    hvals = F.transform(
-        F.transform(F.col("toks"), lambda t: F.substring(F.md5(t), 1, 16)),
-        lambda hx: F.array(
-            *[
-                F.conv(F.substring(hx, 1 + 4 * j, 4), 16, 10).cast("long")
-                for j in range(SIMHASH_WORDS)
-            ]
-        ),
-    )
-    # ones[16j+i+1] = count of token instances with bit i of word j set
-    ones = F.aggregate(
-        hvals,
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, hs: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.shiftright(F.element_at(hs, j + 1), i).bitwiseAND(
-                        F.lit(1)
-                    )
-                    for j in range(SIMHASH_WORDS)
-                    for i in range(SIMHASH_WORD_BITS)
-                ]
-            ),
-            lambda x, y: x + y,
-        ),
-    )
-    bound = toks.select(
-        "doc_id",
-        F.size("toks").alias("n_toks"),
-        F.explode(F.array(ones)).alias("ones"),
-    )
-    return bound.selectExpr(
-        "doc_id",
-        *[
-            "CAST("
-            + " + ".join(
-                f"(CASE WHEN 2 * element_at(ones, {16 * j + i + 1})"
-                f" - n_toks > 0 THEN {1 << i} ELSE 0 END)"
                 for i in range(SIMHASH_WORD_BITS)
             )
             + f" AS BIGINT) AS w_{j}"
@@ -1823,55 +1717,6 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_LSH_TABLES = 6   # independent hash tables (union of candidates)
 N_LSH_BITS = 4     # sign bits per table -> 16 buckets each
 
-# Adaptive bucket width (r10 — the capacity extension measured
-# embedding_verified_topk at alpha 1.82). With bits FIXED, sign-LSH
-# candidate volume is a constant FRACTION of all pairs: each table
-# splits the corpus into 2^bits buckets whatever n is, so expected
-# bucket occupancy grows ~n and per-table candidates ~n^2/2^(bits+1) —
-# the same constant-fraction quadratic embedding_semantic_dedup had
-# before its r6 cluster-first fix, and exactly what the docstring's
-# "production corpora run 12-16 bits" remark hand-waved. Encoded with
-# the footer-gate pattern of DUP_BLOOM_MIN_DOCS: below
-# LSH_ADAPT_MIN_VECS the width is EXACTLY N_LSH_BITS with the same
-# hyperplane family (p = t*bits + b = t*4 + b, bit-identical buckets,
-# so every recorded result below the gate is unchanged); past the gate
-# bits targets LSH_TARGET_BUCKET expected vectors per bucket
-# (ceil(log2(n / 512)), capped at LSH_MAX_BITS so the bucket id stays
-# a small INT), which pins occupancy ~constant and candidate volume
-# ~linear in n. The oracle computes the identical width from count(*)
-# in SQL; log2 of an integer ratio sits safely off integer boundaries
-# except at exact powers of two, where IEEE doubles make it exact in
-# both engines — cross-pinned value-by-value in
-# tests/test_lsh_adaptive.py::test_lsh_bits_formula_matches_oracle.
-LSH_ADAPT_MIN_VECS = 100_000
-LSH_TARGET_BUCKET = 512
-LSH_MAX_BITS = 24
-
-
-def _lsh_bits(n_vecs: int) -> int:
-    """Hyperplane count per LSH table for an ``n_vecs``-vector corpus."""
-    if n_vecs < LSH_ADAPT_MIN_VECS:
-        return N_LSH_BITS
-    return min(
-        LSH_MAX_BITS,
-        max(
-            N_LSH_BITS,
-            _math.ceil(_math.log2(n_vecs / LSH_TARGET_BUCKET)),
-        ),
-    )
-
-
-# The same width, derivable by DuckDB from the corpus row count —
-# interpolated into both LSH oracles so engine and oracle can never
-# disagree on the bucket family at any scale.
-_SQL_LSH_BITS = (
-    f"CASE WHEN count(*) < {LSH_ADAPT_MIN_VECS} THEN {N_LSH_BITS} "
-    f"ELSE LEAST({LSH_MAX_BITS}, GREATEST({N_LSH_BITS}, "
-    f"CAST(ceil(log2(CAST(count(*) AS DOUBLE) / {LSH_TARGET_BUCKET})) "
-    "AS INT))) END"
-)
-
-
 def _hp_values(p: int, dim: int) -> list[float]:
     """Uniform[-1,1) hyperplane component for plane ``p``, derived from the
     first 32 bits of ``md5("{d}_{p}")``: ``(u / 2^32) * 2 - 1``.
@@ -1890,11 +1735,9 @@ def _hp_values(p: int, dim: int) -> list[float]:
     ]
 
 
-def _hyperplane_bits(
-    table_idx: int, dim: int, bits: int = N_LSH_BITS
-) -> Column:
-    """``bits``-bit sign signature under deterministic md5-derived
-    hyperplanes (plane id p = table_idx * bits + b, mirrored by the
+def _hyperplane_bits(table_idx: int, dim: int) -> Column:
+    """N_LSH_BITS-bit sign signature under deterministic md5-derived
+    hyperplanes (plane id p = table_idx * N_LSH_BITS + b, mirrored by the
     oracle SQL).
 
     Built as ONE SQL expression string per table: the previous
@@ -1905,16 +1748,16 @@ def _hyperplane_bits(
     (repr() round-trips exactly and `D`-suffixed literals parse as
     doubles, not decimals), so results and oracles are unchanged —
     locked by the existing bucket-assignment parity row."""
-    return F.expr(_hyperplane_bits_sql(table_idx, dim, bits))
+    return F.expr(_hyperplane_bits_sql(table_idx, dim))
 
 
 @_functools.lru_cache(maxsize=None)
-def _hyperplane_bits_sql(table_idx: int, dim: int, bits: int) -> str:
+def _hyperplane_bits_sql(table_idx: int, dim: int) -> str:
     """Memoized: the string (md5-per-coefficient in Python + f-string
     assembly) is identical for every query in a session."""
     terms = []
-    for b in range(bits):
-        p = table_idx * bits + b
+    for b in range(N_LSH_BITS):
+        p = table_idx * N_LSH_BITS + b
         arr = ", ".join(f"{v!r}D" for v in _hp_values(p, dim))
         dot = (
             f"aggregate(zip_with(emb, array({arr}), (x, h) -> x * h), "
@@ -1936,20 +1779,15 @@ def _sql_hplane(p_sql: str) -> str:
     )
 
 
-# Shared bucket-assignment CTE chain: bits from count(*) (adaptive
-# width, _SQL_LSH_BITS), a (table, bit) grid bounded by it, one sign
-# bit per grid row against plane p = t*bits + b, summed per (vec,
-# table). Below LSH_ADAPT_MIN_VECS this reduces to the original fixed
-# 4-bit family (same p, same planes, same buckets).
-_SQL_LSH_BUCKETS_CTES = f"""bb AS (SELECT {_SQL_LSH_BITS} AS bits FROM embeddings),
-    grid AS (SELECT t.range AS t, b.range AS b
-             FROM range({N_LSH_TABLES}) t, range({LSH_MAX_BITS}) b, bb
-             WHERE b.range < bb.bits),
+# Shared bucket-assignment CTE chain: a (table, bit) grid, one sign bit
+# per grid row against plane p = t*N_LSH_BITS + b, summed per (vec, table).
+_SQL_LSH_BUCKETS_CTES = f"""grid AS (SELECT t.range AS t, b.range AS b
+             FROM range({N_LSH_TABLES}) t, range({N_LSH_BITS}) b),
     bitvals AS (
       SELECT e.vec_id, e.label, g.t AS table_idx,
-             CASE WHEN list_dot_product(emb, {_sql_hplane('g.t * bb.bits + g.b')}) > 0
+             CASE WHEN list_dot_product(emb, {_sql_hplane(f'g.t * {N_LSH_BITS} + g.b')}) > 0
                   THEN (1 << g.b) ELSE 0 END AS bv
-      FROM e CROSS JOIN grid g CROSS JOIN bb
+      FROM e CROSS JOIN grid g
     ),
     lsh_buckets AS (
       SELECT vec_id, label, CAST(table_idx AS INT) AS table_idx,
@@ -1969,11 +1807,8 @@ def embedding_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-table sign-bit LSH: 6 independent tables of md5-derived
     hyperplane bits. Near-duplicate candidate generation joins on
     (table_idx, bucket) — the embedding analog of MinHash banding; more
-    tables raise recall, more bits shrink buckets. Bits per table are
-    ADAPTIVE to the corpus (footer row count, `_lsh_bits` — exactly
-    N_LSH_BITS below LSH_ADAPT_MIN_VECS, occupancy-targeted past it so
-    candidate volume stays ~linear in n); the oracle derives the same
-    width from count(*). Recall vs the brute-force top pairs is locked
+    tables raise recall, more bits shrink buckets. Recall vs the
+    brute-force top pairs is locked
     by pytest; bucket assignment itself hash-matches the DuckDB oracle
     (md5 + list_dot_product are bit-identical across engines).
     """
@@ -1999,24 +1834,19 @@ def embedding_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(0).cast("int").alias("bucket"),
             ).limit(0)
         )
-    return lsh_bucket_rows(e, dim, _lsh_bits(metadata_row_count(sf_dir, "embeddings")))
+    return lsh_bucket_rows(e, dim)
 
 
-def lsh_bucket_rows(
-    e: DataFrame, dim: int, bits: int = N_LSH_BITS
-) -> DataFrame:
+def lsh_bucket_rows(e: DataFrame, dim: int) -> DataFrame:
     """(vec_id, [label,] table_idx, bucket) hyperplane-LSH rows for any
     frame with an ``emb`` array<double> column and a known dimension —
-    the map-side core of the suite's ANN queries. ``bits`` selects the
-    hyperplane family (plane id p = t*bits + b): two sides must pass the
-    SAME value or their buckets are incomparable — the suite query
-    derives it from the corpus footer count (`_lsh_bits`)."""
+    the map-side core of the suite's ANN queries."""
     carry = [c for c in ("vec_id", "label") if c in e.columns]
     tables = [
         e.select(
             *carry,
             F.lit(t).alias("table_idx"),
-            _hyperplane_bits(t, dim, bits).alias("bucket"),
+            _hyperplane_bits(t, dim).alias("bucket"),
         )
         for t in range(N_LSH_TABLES)
     ]
@@ -2055,18 +1885,11 @@ _SQL_COS_AB = (
 def embedding_verified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The embedding analog of minhash_verified_pairs: hyperplane-LSH
     buckets generate candidate pairs, an exact cosine pass ranks them and
-    keeps the top 20. Candidate volume is set by bucket width, which is
-    ADAPTIVE since r10 (`_lsh_bits`, footer-gated like the dup-span
-    Bloom): below LSH_ADAPT_MIN_VECS the fixed 4-bit width is kept for
-    recall on this weak-neighbor corpus (cos ~0.4) and candidates are a
-    constant fraction of pairs — the capacity probe measured alpha 1.82
-    there, the documented small-corpus exhibit regime; past the gate,
-    occupancy-targeted width pins expected bucket size at
-    ~LSH_TARGET_BUCKET so candidate volume grows ~linearly (the
-    "production corpora run 12-16 bits" remark, now encoded — 1e9
-    vectors plan 21 bits). The oracle derives the identical width from
-    count(*). embedding_top_pairs (brute force over a vec_id%4 sample)
-    is the ground-truth twin next to this."""
+    keeps the top 20. Candidate volume is set by bucket width: the fixed
+    N_LSH_BITS width keeps recall on this weak-neighbor corpus (cos ~0.4),
+    and candidates are a constant fraction of pairs (the capacity probe
+    measured alpha 1.82, SCALE.md). embedding_top_pairs (brute force
+    over a vec_id%4 sample) is the ground-truth twin next to this."""
     # norms once per vector, not per pair — identical doubles (same
     # fold), 3x fewer array folds in the verify
     e = table(spark, sf_dir, "embeddings").select(
@@ -3276,170 +3099,6 @@ def docs_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DUP_SPAN_K = 8  # tokens per gram
 
-# Bloom PRE-FILTER sizing for the dup-span family (r9, VERDICT r8
-# next-round #1; activation-scale saturation found in r9 self-review;
-# SHARDED in r10 — VERDICT r9 next-round #4 + ADVICE r9).
-# The key set is the corpus's DUPLICATED gram vocabulary (df >= 2) —
-# it grows with the corpus, so a FIXED bitmap saturates exactly when
-# the filter matters (a first cut pinned m = 2^20: at the 1M-doc
-# activation scale that is ~0.2 bits per dup key, fill ~ 1.0, FP ~
-# 100% — the filter would keep everything and be pure overhead). Total
-# bits are therefore derived from the same parquet footer row count the
-# activation gate reads: DUP_BLOOM_BITS_PER_DOC = 64 bits/doc gives
-# ~13 bits per dup key under the conservative density assumption of
-# ~5 dup keys/doc (10% duplication x ~50 grams/doc) -> FP ~ 1% with
-# k=3, and still a ~68% cut at 5x heavier duplication. Floor 2^20
-# (128 KiB — the always-cheap regime).
-#
-# Past DUP_BLOOM_SHARD_M_BITS the screen SHARDS instead of capping:
-# the fingerprint domain is partitioned by pmod(sk, S), each shard
-# gets its own footer-sized bitmap, and each shard's instance slice is
-# probed map-side against ONLY its shard's bitmap, branches unioned.
-# Two problems the r9 single-bitmap 2^33 cap had, both fixed by the
-# per-shard bound (ADVICE r9): (a) the probe position (h1 + j*h2) %
-# m with h1 = sk>>28 < 2^32, h2 < 2^28 only reaches every residue for
-# m <= 2^32 — at m = 2^33 ~46% of the bitmap was unaddressable and the
-# effective FP rate doubled; per-shard m <= 2^28 is 16x inside that
-# range. (b) a 2^33-bit bitmap is a 268M-row force-broadcast — far
-# past practical driver/executor limits; per-shard the broadcast is
-# <= 2^28/32 = 8.4M sparse words (~130 MB) at ANY corpus size. The
-# cost of shard s is one more pass over the gram source (each branch
-# re-scans the pruned (doc_id, text) columns — no exchange anywhere),
-# so S multiplies scan volume, not shuffle: at 64 bits/doc one shard
-# covers ~4.2M docs, and a 1e9-doc corpus wants S ~ 239 — at that
-# scale the honest engineering choice is fewer bits/key (the filter
-# degrades gracefully; the exact semi-join rescreens every survivor,
-# so correctness NEVER depends on FP) or a single bucketed exchange of
-# the instance stream; the measured trade lives in SCALE.md. Shard
-# sizing keeps bits/key constant, so FP ~ 1% holds at every S.
-DUP_BLOOM_BITS_PER_DOC = 64
-DUP_BLOOM_MIN_M_BITS = 1 << 20
-DUP_BLOOM_SHARD_M_BITS = 1 << 28
-
-
-def _dup_bloom_plan(n_docs: int) -> tuple[int, int]:
-    """Footer-derived (n_shards, per-shard m_bits): 64 bits/doc total,
-    floor 2^20, split into the fewest shards that keep every shard at
-    or under DUP_BLOOM_SHARD_M_BITS (addressable + broadcast-bounded),
-    each 32-aligned. n_shards * m_shard >= the designed total, so
-    bits-per-key (and the ~1% FP design point) is scale-invariant."""
-    m_total = max(DUP_BLOOM_MIN_M_BITS, DUP_BLOOM_BITS_PER_DOC * n_docs)
-    n_shards = -(-m_total // DUP_BLOOM_SHARD_M_BITS)
-    m_shard = -(-m_total // n_shards)
-    return n_shards, (m_shard + 31) & ~31
-
-
-# Activation crossover for the pre-filter, decided from the parquet
-# footer row count (metadata-only, zero Spark jobs — the adaptive-width
-# pattern of docs_epoch_order). The filter pays exactly when the df>=2
-# key set outgrows a broadcast: below that AQE broadcasts the
-# semi-join's dup side and the gram-instance stream NEVER shuffles —
-# the filter would only add its own costs (bitmap build job + BLOOM_K
-# broadcast materializations + two cache writes). Above it the
-# semi-join goes sort-merge and the un-filtered left side becomes a
-# gram-volume exchange (the r8 774 TB row).
-#
-# The threshold is RE-DERIVED FROM MEASUREMENT in r10 (the r9 value of
-# 100k came from broadcast-capacity arithmetic that underestimated the
-# real broadcast limit). The SCALE.md r10c record ran both paths
-# organically on a 150k/600k-doc df-stationary corpus that is
-# duplication-HEAVY (~9.5 dup keys/doc — the adverse case, since dup
-# density pushes the crossover EARLIER). Measured (SCALE.md r10c):
-# at 150k docs the plain path still wins on BOTH currencies (bytes
-# 171 vs 209 MB, wall 11.3 vs 23.4 s — the dup side still broadcasts
-# and the filter's ~linear-in-n costs are pure overhead); by 600k the
-# plain semi-join has dropped to sort-merge and its exchange explodes
-# (sh/in 2.78 -> 6.32, alpha ~1.6) while the Bloom path holds sh/in
-# flat at 3.4 (alpha 1.00 organic). The shuffle-byte crossover
-# log-interpolates to ~240k docs on that adverse corpus; dup-LIGHT
-# corpora cross later (fewer dup keys broadcast longer), so 250k is
-# the measured floor. Early activation on a dup-light corpus past the
-# gate costs only the filter's bounded build (and deletes more of the
-# stream, so the filter is cheapest exactly where it's premature);
-# late activation below it is impossible by the measurement above.
-# Both paths return byte-identical rows (no-false-negative property +
-# the exact semi-join), pinned by tests/test_doc_gram_arrays.py on the
-# filter itself and on the registry conditional end-to-end, and the
-# oracles are hash-green at an organically-activating 150k docs.
-DUP_BLOOM_MIN_DOCS = 250_000
-
-
-def _dup_gram_prefilter(
-    grams: DataFrame,
-    dup_keys: DataFrame,
-    m_bits: int = DUP_BLOOM_MIN_M_BITS,
-    n_shards: int = 1,
-) -> DataFrame:
-    """MAP-SIDE Bloom screen over a gram-INSTANCE stream: keep only
-    instances whose fingerprint is plausibly in ``dup_keys`` (the
-    df >= 2 set), so the dup-span family's semi-join exchange carries
-    only plausibly-duplicated instances plus Bloom false positives
-    instead of the whole gram volume — on a mostly-unique corpus that
-    deletes the exchange's bulk. No false negatives (Bloom property +
-    identical sk-derived Carter-Wegman halves on build and probe,
-    pinned by tests/test_doc_gram_arrays.py), so the downstream EXACT
-    semi-join returns byte-identical rows; the oracle needs no twin of
-    this filter.
-
-    Probe shape: BLOOM_K broadcast hash joins of the instance stream
-    against the SPARSE (word_idx, word) bitmap — bloom_gram_flags'
-    codegen path — with the bitmap tracked-persisted so its bounded
-    aggregation (<= m_bits/32 rows through bit_or partials: 32,768 at
-    the 2^20 floor, <= 8.4M at the 2^28 per-shard bound) runs
-    ONCE even though the three per-hash broadcast subtrees differ by
-    alias and ReuseExchange therefore never unifies them (measured:
-    un-persisted, the aggregate ran BLOOM_K times, +1.3 MB shuffle at
-    sf0.1). A densified-array variant — the whole bitmap as one m/32-
-    long array row, crossJoin broadcast, pure element_at probe — was
-    also built and MEASURED 30x SLOWER (65.6 s vs 2.1 s at sf0.1):
-    Catalyst map lookup is a linear scan, so map_from_arrays + m/32
-    element_at densification is quadratic in the bitmap, and the
-    giant array column rides every probe row through the join. Sparse
-    + hash joins is the shape that stays codegen end-to-end. Nothing
-    here shuffles gram volume: the probe side is map-side broadcast,
-    sized ~13 bits per expected dup fingerprint with the per-shard
-    bitmap bounded at 2^28 bits = 8.4M sparse words regardless of
-    corpus size (r10 sharding — the r9 2^33 single bitmap was both
-    past the probe's 2^32 addressable range and past any practical
-    broadcast; see the DUP_BLOOM constants' comment).
-
-    ``n_shards > 1`` partitions the FINGERPRINT domain by
-    ``pmod(gk, n_shards)``: shard s builds its bitmap from only its
-    dup keys and probes only its slice of the instance stream, all
-    branches unioned. Same-key build/probe land in the same shard by
-    construction, so the no-false-negative property is untouched; the
-    per-shard (h1, h2) halves still span their full ranges (pmod
-    constrains sk, h1 = sk>>28 varies freely within a shard), so the
-    FP design point is preserved. Each branch is its own map-side
-    pass over the gram source — S multiplies SCAN volume (pruned
-    columns, no exchange), never shuffle."""
-    from .curation_suite import bloom_bitmap, bloom_gram_flags
-
-    def branch(keys: DataFrame, probe: DataFrame) -> DataFrame:
-        bitmap = persist_tracked(
-            bloom_bitmap(keys.select(F.col("gk").alias("sk")), m_bits=m_bits)
-        )
-        flagged = bloom_gram_flags(
-            probe.withColumnRenamed("gk", "sk"), bitmap, m_bits=m_bits
-        )
-        return (
-            flagged.where(F.col("bloom_pos"))
-            .drop("bloom_pos")
-            .withColumnRenamed("sk", "gk")
-        )
-
-    if n_shards <= 1:
-        return branch(dup_keys, grams)
-    shard = F.pmod(F.col("gk"), F.lit(n_shards))
-    out = None
-    for s in range(n_shards):
-        part = branch(
-            dup_keys.where(shard == s), grams.where(shard == s)
-        )
-        out = part if out is None else out.union(part)
-    return out
-
-
 def _dup_span_garr(d: DataFrame, k: int) -> DataFrame:
     """(doc_id, garr) — each document's per-POSITION 60-bit gram
     fingerprints as ONE order-preserving array row (r15, VERDICT r14
@@ -3484,36 +3143,6 @@ def _dup_span_distinct_sk(ga: DataFrame) -> DataFrame:
         "explode(filter(sarr, (x, i) -> i = 0 OR x != element_at(sarr, i)))"
         " AS sk"
     )
-
-
-def _dup_span_sides(
-    sf_dir: str, grams: DataFrame, gdf: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """(left, dup_keys) for the dup-span family's exact semi-join —
-    the ONE place the Bloom activation gate lives, so docs_dup_spans
-    and docs_dup_span_ranges can never drift (r9 self-review).
-
-    Past the broadcast crossover (footer row count, zero jobs —
-    DUP_BLOOM_MIN_DOCS) the instance stream is Bloom-pre-filtered with
-    shard count and per-shard bitmap SIZED from the same count
-    (_dup_bloom_plan), and dup_keys is tracked-persisted because it
-    feeds multiple consumers (per-shard bitmap builds + semi-join
-    right side; ReuseExchange does not fire across the broadcast-stage
-    boundary — un-cached, the vocabulary df aggregation ran twice and
-    sh/in doubled). Below the crossover AQE broadcasts the dup side
-    and the left never shuffles, so the plain stream skips the
-    filter's fixed costs (measured +2.1 s/run at sf0.1). All paths
-    return byte-identical rows downstream."""
-    n_docs = metadata_row_count(sf_dir, "documents")
-    dup_keys = gdf.where(F.col("df") >= 2).select(F.col("sk").alias("gk"))
-    if n_docs < DUP_BLOOM_MIN_DOCS:
-        return grams, dup_keys
-    dup_keys = persist_tracked(dup_keys)
-    n_shards, m_bits = _dup_bloom_plan(n_docs)
-    left = _dup_gram_prefilter(
-        grams, dup_keys, m_bits=m_bits, n_shards=n_shards
-    )
-    return left, dup_keys
 
 
 # 60-bit gram fingerprint: the two gram-keyed exchanges of the dup-span
@@ -3577,15 +3206,12 @@ def docs_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("sk")
         .agg(F.count(F.lit(1)).alias("df"))
     )
-    # r9: Bloom pre-filter past the broadcast crossover, plain stream
-    # below it — gate, sizing, and the dup_keys cache live in ONE
-    # helper shared with docs_dup_span_ranges (_dup_span_sides)
-    left, dup_keys = _dup_span_sides(sf_dir, grams, gdf)
+    dup_keys = gdf.where(F.col("df") >= 2).select(F.col("sk").alias("gk"))
     # n_grams = size(garr) — identical to size(tokens) - (K-1) on the
     # >= K-token docs the garr frame keeps; no gram rows shuffled
     n_grams = ga.select("doc_id", F.size("garr").alias("n_grams"))
     dup_counts = (
-        left.join(dup_keys, "gk", "semi")
+        grams.join(dup_keys, "gk", "semi")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_dup_grams"))
     )
@@ -3684,10 +3310,8 @@ def docs_dup_span_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("sk")
         .agg(F.count(F.lit(1)).alias("df"))
     )
-    # r9: Bloom pre-filter past the broadcast crossover, plain stream
-    # below it — gate, sizing, and cache shared via _dup_span_sides
-    left, dup_keys = _dup_span_sides(sf_dir, grams, gdf)
-    dup_pos = left.join(dup_keys, "gk", "semi").select("doc_id", "pos")
+    dup_keys = gdf.where(F.col("df") >= 2).select(F.col("sk").alias("gk"))
+    dup_pos = grams.join(dup_keys, "gk", "semi").select("doc_id", "pos")
     w = Window.partitionBy("doc_id").orderBy("pos")
     flagged = dup_pos.withColumn(
         "new_island",

@@ -17,7 +17,8 @@ import pathlib
 import sys
 import time
 
-sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
+REPO_ROOT = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO_ROOT))
 
 from edu_data_pipeline_spark.parity import compare_query, duck_connection
 from edu_data_pipeline_spark.session import get_spark
@@ -69,7 +70,12 @@ def main() -> None:
     if unknown:
         print(f"unknown query name(s): {unknown}", file=sys.stderr)
         sys.exit(2)
-    spark = get_spark(app_name="parity-sweep")
+    # Python-UDF queries import the package in the Spark Python workers,
+    # which do not inherit the driver's sys.path: hand them the repo root.
+    spark = get_spark(
+        app_name="parity-sweep",
+        extra_conf={"spark.executorEnv.PYTHONPATH": str(REPO_ROOT)},
+    )
     spark.sparkContext.setLogLevel("ERROR")
     con = duck_connection(sf_dir)
     failures = []

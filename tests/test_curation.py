@@ -250,10 +250,10 @@ def test_source_overlap_agrees_with_exact_on_real(spark):
     est = {(r["src_a"], r["src_b"]): r["est_jaccard"]
            for r in REG["source_minhash_overlap"].fn(spark, SF).collect()}
     from edu_data_pipeline_spark.sources.testdata import table
-    from edu_data_pipeline_spark.suite.scale_suite import _distinct_shingles
+    from edu_data_pipeline_spark.suite.scale_suite import gram_rows
 
     d = table(spark, SF, "documents")
-    sh = _distinct_shingles(d).join(d.select("doc_id", "source"), "doc_id")
+    sh = gram_rows(d, 3).distinct().join(d.select("doc_id", "source"), "doc_id")
     src_sets: dict[str, set] = {}
     for r in sh.select("source", "s").distinct().collect():
         src_sets.setdefault(r["source"], set()).add(r["s"])

@@ -16,7 +16,7 @@ import random
 
 from pyspark.sql import functions as F
 
-from edu_data_pipeline_spark.suite import load_all, release_caches
+from edu_data_pipeline_spark.suite import load_all
 from edu_data_pipeline_spark.suite.scale_suite import (
     CDC_MODULUS,
     _doc_distinct_gram_arrays,
@@ -231,292 +231,3 @@ def _cdc_on_frame(spark, d):
     sf_dir = tempfile.mkdtemp(prefix="cdcfuzz")
     d.write.mode("overwrite").parquet(f"{sf_dir}/documents.parquet")
     return REGISTRY["docs_cdc_chunks"].fn(spark, sf_dir)
-
-
-# ---------------------------------------------------------------------------
-# r9: map-side SimHash words vs the r1-r8 exploded/grouped reference shape
-# ---------------------------------------------------------------------------
-
-
-def test_simhash_mapside_matches_grouped(spark):
-    """The zero-exchange SimHash variant (aggregate over the token
-    array, sign test 2*ones - n) equals the registry's exploded/grouped
-    +1/-1 sum shape word-for-word — including sign ties (even token
-    counts where the bit sum is exactly 0), within-doc repetition, and
-    1-token docs. The variant is a measured NEGATIVE result (kept off
-    the registry path: interpreted lambdas cost ~2x wall vs codegen,
-    see _simhash_words' docstring / SCALE.md r9a); this pin is what
-    makes the recorded measurement a comparison of equals."""
-    from edu_data_pipeline_spark.suite.scale_suite import (
-        _simhash_words_df,
-        _simhash_words_mapside,
-    )
-
-    rng = random.Random(909)
-    vocab = ["a", "b", "cc", "ddd", "the", "zz", "q1", "w2"]
-    fuzz = [
-        " ".join(rng.choice(vocab) for _ in range(rng.randrange(1, 40)))
-        for _ in range(150)
-    ]
-    # tie-prone docs: even counts of identical tokens force bit sums of 0
-    crafted = ["a a", "a a a a", "a b a b", "", "x", " padded "]
-    d = _docs(spark, CRAFTED + crafted + fuzz)
-    got = {tuple(r) for r in _simhash_words_mapside(d).collect()}
-    want = {tuple(r) for r in _simhash_words_df(d).collect()}
-    assert got == want
-
-
-def test_simhash_mapside_plan_has_no_exchange(spark):
-    """The variant's defining property — per-document expressions, no
-    Exchange anywhere in the executed plan (what it buys; its wall cost
-    is why it is not the registry path)."""
-    from edu_data_pipeline_spark.suite.scale_suite import (
-        _simhash_words_mapside,
-    )
-
-    d = _docs(spark, CRAFTED)
-    plan = (
-        _simhash_words_mapside(d)._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan
-
-
-# ---------------------------------------------------------------------------
-# r9: dup-fingerprint Bloom pre-filter (docs_dup_spans / _ranges)
-# ---------------------------------------------------------------------------
-
-
-def test_dup_gram_prefilter_no_false_negatives(spark):
-    """The Bloom pre-filter may only DROP non-duplicated instances:
-    after the exact semi-join, per-doc dup counts must equal the
-    unfiltered reference exactly — on a corpus with real cross-doc
-    dup spans, unique docs, and short docs."""
-    from edu_data_pipeline_spark.suite.scale_suite import (
-        DUP_SPAN_K,
-        _distinct_sk_rows,
-        _dup_gram_prefilter,
-    )
-
-    rng = random.Random(911)
-    vocab = [f"t{i}" for i in range(60)]
-    shared = " ".join(vocab[i % 60] for i in range(12))  # a 12-token span
-    texts = []
-    for i in range(40):
-        salt = " ".join(f"u{i}x{k}" for k in range(rng.randrange(6, 20)))
-        # half the docs embed the shared span -> its 8-grams have df >= 2
-        texts.append(f"{shared} {salt}" if i % 2 == 0 else salt)
-    texts += ["a b c", ""]  # too short for 8-grams
-    d = _docs(spark, texts)
-
-    grams = gram_rows(d, DUP_SPAN_K, out="g").select(
-        "doc_id", _gram_key64(F.col("g")).alias("gk")
-    )
-    gdf = (
-        _distinct_sk_rows(d, k=DUP_SPAN_K)
-        .groupBy("sk")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    dup_keys = gdf.where(F.col("df") >= 2).select(F.col("sk").alias("gk"))
-
-    def counts(left):
-        return {
-            r["doc_id"]: r["n"]
-            for r in left.join(dup_keys, "gk", "semi")
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-
-    filtered = _dup_gram_prefilter(grams, dup_keys)
-    got = counts(filtered)
-    want = counts(grams)
-    assert want  # the crafted corpus must actually contain dup spans
-    assert got == want
-    # and the filter genuinely cuts: the surviving instance stream must
-    # be smaller than the full gram stream (salted docs are unique)
-    assert filtered.count() < grams.count()
-    # the prefilter tracked-persists its bitmap — release it so this
-    # test's caches never squeeze later tests in the shared session
-    release_caches()
-
-
-def test_dup_span_bloom_path_equals_plain_path(spark, tmp_path, monkeypatch):
-    """The DUP_BLOOM_MIN_DOCS conditional must be invisible in results:
-    forcing the Bloom path (threshold 0) and forcing the plain path
-    (threshold infinity) on the same corpus yields identical rows for
-    both registry queries — the end-to-end pin of the activation
-    wiring, complementing the filter-level no-false-negative test."""
-    from edu_data_pipeline_spark.suite import scale_suite
-
-    rng = random.Random(913)
-    vocab = [f"t{i}" for i in range(40)]
-    shared = " ".join(vocab[i % 40] for i in range(15))
-    texts = []
-    for i in range(30):
-        salt = " ".join(f"u{i}x{k}" for k in range(rng.randrange(8, 24)))
-        texts.append(f"{salt} {shared}" if i % 3 == 0 else salt)
-    d = _docs(spark, texts)
-    sf_dir = str(tmp_path / "dupcond")
-    d.write.mode("overwrite").parquet(f"{sf_dir}/documents.parquet")
-
-    out = {}
-    for tag, threshold in (("bloom", 0), ("plain", 1 << 60)):
-        monkeypatch.setattr(scale_suite, "DUP_BLOOM_MIN_DOCS", threshold)
-        out[tag] = {
-            name: sorted(
-                map(tuple, REGISTRY[name].fn(spark, sf_dir).collect())
-            )
-            for name in ("docs_dup_spans", "docs_dup_span_ranges")
-        }
-    assert out["bloom"] == out["plain"]
-    assert out["bloom"]["docs_dup_spans"]  # corpus actually has dup spans
-    # the bloom-path runs tracked-persisted dup_keys + bitmaps — release
-    # them so this test's caches never squeeze later tests
-    release_caches()
-
-
-def test_dup_bloom_plan_sizing():
-    """The screen is sized from the activation gate's own row count —
-    the r9 self-review found a fixed 2^20 bitmap saturated (FP ~ 100%)
-    at every corpus size that activates the filter, and r10 sharding
-    (ADVICE r9) bounds EVERY shard's bitmap inside the probe's 2^32
-    addressable hash range AND practical broadcast size. Pin the
-    floor, the per-shard bound, 32-alignment, that total designed bits
-    are always delivered (bits/key scale-invariant), and that at the
-    activation threshold the fill stays in the useful regime under the
-    documented density assumption (~5 dup keys/doc)."""
-    import math
-
-    from edu_data_pipeline_spark.suite.scale_suite import (
-        DUP_BLOOM_BITS_PER_DOC,
-        DUP_BLOOM_MIN_DOCS,
-        DUP_BLOOM_MIN_M_BITS,
-        DUP_BLOOM_SHARD_M_BITS,
-        _dup_bloom_plan,
-    )
-
-    assert _dup_bloom_plan(0) == (1, DUP_BLOOM_MIN_M_BITS)
-    for n in (1, 999, 10**5, 10**6, 10**8, 10**10, 10**12):
-        shards, m = _dup_bloom_plan(n)
-        assert m % 32 == 0
-        # every shard addressable by (h1 + j*h2) % m (h1 spans 2^32)
-        # and broadcast-bounded — the two ADVICE r9 defects
-        assert m <= DUP_BLOOM_SHARD_M_BITS < 1 << 32
-        # designed total bits always delivered (no capped saturation)
-        assert shards * m >= DUP_BLOOM_BITS_PER_DOC * n
-    # single shard through the organic activation regime (no scan
-    # multiplication until ~4.2M docs)
-    assert _dup_bloom_plan(DUP_BLOOM_MIN_DOCS)[0] == 1
-    assert _dup_bloom_plan(4_000_000)[0] == 1
-    assert _dup_bloom_plan(10**9)[0] > 1
-    # at the activation threshold: ~5 dup keys/doc, k=3 hash functions
-    shards, m = _dup_bloom_plan(DUP_BLOOM_MIN_DOCS)
-    keys = 5 * DUP_BLOOM_MIN_DOCS / shards
-    fill = 1.0 - math.exp(-3.0 * keys / m)
-    assert fill < 0.35 and fill**3 < 0.05, (m, fill)
-    # ... and the SAME fill bound holds at 1e9 docs, where the r9
-    # capped bitmap had saturated: sharding keeps bits/key constant
-    shards, m = _dup_bloom_plan(10**9)
-    fill = 1.0 - math.exp(-3.0 * (5 * 10**9 / shards) / m)
-    assert fill < 0.35 and fill**3 < 0.05, (shards, m, fill)
-
-
-def test_dup_gram_prefilter_sharded_equals_single(spark):
-    """Forced-shard equivalence (VERDICT r9 next-round #4): the
-    sharded screen must keep EXACTLY the rows the single-bitmap screen
-    keeps after the exact semi-join — and, because sharding partitions
-    the fingerprint domain, the pre-semi-join survivor sets must agree
-    up to (shard-local) Bloom false positives, never dropping a true
-    dup instance."""
-    from edu_data_pipeline_spark.suite.scale_suite import (
-        DUP_SPAN_K,
-        _distinct_sk_rows,
-        _dup_gram_prefilter,
-    )
-
-    rng = random.Random(917)
-    vocab = [f"t{i}" for i in range(50)]
-    shared = " ".join(vocab[i % 50] for i in range(14))
-    texts = []
-    for i in range(36):
-        salt = " ".join(f"u{i}x{k}" for k in range(rng.randrange(6, 18)))
-        texts.append(f"{shared} {salt}" if i % 2 == 0 else salt)
-    d = _docs(spark, texts)
-
-    grams = gram_rows(d, DUP_SPAN_K, out="g").select(
-        "doc_id", _gram_key64(F.col("g")).alias("gk")
-    )
-    gdf = (
-        _distinct_sk_rows(d, k=DUP_SPAN_K)
-        .groupBy("sk")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    dup_keys = gdf.where(F.col("df") >= 2).select(F.col("sk").alias("gk"))
-
-    def semi_counts(left):
-        return {
-            r["doc_id"]: r["n"]
-            for r in left.join(dup_keys, "gk", "semi")
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-
-    single = _dup_gram_prefilter(grams, dup_keys, m_bits=1 << 12)
-    sharded = _dup_gram_prefilter(
-        grams, dup_keys, m_bits=1 << 12, n_shards=4
-    )
-    want = semi_counts(grams)
-    assert want  # the crafted corpus must actually contain dup spans
-    assert semi_counts(single) == want
-    assert semi_counts(sharded) == want
-    # both screens genuinely cut the instance stream
-    n_all = grams.count()
-    assert sharded.count() < n_all and single.count() < n_all
-    release_caches()
-
-
-def test_dup_span_sharded_path_end_to_end(spark, tmp_path, monkeypatch):
-    """Force the registry queries through a MULTI-shard Bloom path
-    (threshold 0 + a tiny per-shard bound so _dup_bloom_plan yields
-    n_shards > 1) and pin byte-identical results vs the plain path —
-    the end-to-end pin that the sharding wiring, not just the filter
-    in isolation, is invisible in results."""
-    from edu_data_pipeline_spark.suite import scale_suite
-
-    rng = random.Random(919)
-    vocab = [f"t{i}" for i in range(40)]
-    shared = " ".join(vocab[i % 40] for i in range(15))
-    texts = []
-    for i in range(30):
-        salt = " ".join(f"u{i}x{k}" for k in range(rng.randrange(8, 24)))
-        texts.append(f"{salt} {shared}" if i % 3 == 0 else salt)
-    d = _docs(spark, texts)
-    sf_dir = str(tmp_path / "dupshard")
-    d.write.mode("overwrite").parquet(f"{sf_dir}/documents.parquet")
-
-    out = {}
-    for tag, threshold, floor_m, shard_m in (
-        ("sharded", 0, 1 << 12, 1 << 10),
-        (
-            "plain",
-            1 << 60,
-            scale_suite.DUP_BLOOM_MIN_M_BITS,
-            scale_suite.DUP_BLOOM_SHARD_M_BITS,
-        ),
-    ):
-        monkeypatch.setattr(scale_suite, "DUP_BLOOM_MIN_DOCS", threshold)
-        monkeypatch.setattr(scale_suite, "DUP_BLOOM_MIN_M_BITS", floor_m)
-        monkeypatch.setattr(scale_suite, "DUP_BLOOM_SHARD_M_BITS", shard_m)
-        if tag == "sharded":
-            # the tiny floor/bound must actually force multiple shards
-            assert scale_suite._dup_bloom_plan(d.count())[0] == 4
-        out[tag] = {
-            name: sorted(
-                map(tuple, REGISTRY[name].fn(spark, sf_dir).collect())
-            )
-            for name in ("docs_dup_spans", "docs_dup_span_ranges")
-        }
-    assert out["sharded"] == out["plain"]
-    assert out["sharded"]["docs_dup_spans"]
-    release_caches()

@@ -2,12 +2,12 @@
 
 The CC loop's semantics live in graph shapes example tests under-sample:
 self-loops, duplicate/parallel edges, NULL ids, long chains (round-count
-pressure for the plain min-label scheme), and giant star components (the
-skew-split tiers). These properties drive ``connected_components``
-against a pure-Python union-find oracle, with many independent generated
-graphs MULTIPLEXED into one Spark job per example (vertex ids are
-namespaced per feed — the same one-job trick as the CDC property in
-test_warehouse_properties.py, since the vertex id is a single column).
+pressure) and giant star components (hot join keys). These properties
+drive ``connected_components`` against a pure-Python union-find oracle,
+with many independent generated graphs MULTIPLEXED into one Spark job
+per example (vertex ids are namespaced per feed — the same one-job
+trick as the CDC property in test_warehouse_properties.py, since the
+vertex id is a single column).
 
 The NULL-id contract (defined by this fuzz, r13; extended ADVICE r13):
 an edge with a NULL endpoint asserts no connection and is dropped; a
@@ -43,7 +43,7 @@ IDS = st.sampled_from([0, 1, 2, 3, 4, 5, 6, 7, None])
 
 # one feed: (extra isolated/NULL vertices, edge list incl. dups+loops,
 # chain length 0-12, star fan 0-12). The chain stresses round count;
-# the star is the giant-component shape the skew tiers exist for.
+# the star is the giant-component (hot join key) shape.
 feed = st.tuples(
     st.lists(IDS, max_size=4),
     st.lists(st.tuples(IDS, IDS), max_size=12),
@@ -124,12 +124,12 @@ def _oracle_components(v_rows: list, e_rows: list) -> set[frozenset]:
     return {frozenset(g) for g in groups.values()}
 
 
-def _run_and_partition(spark, v_rows, e_rows, **kw):
+def _run_and_partition(spark, v_rows, e_rows):
     vs = spark.createDataFrame(v_rows, V_SCHEMA)
     es = spark.createDataFrame(e_rows, E_SCHEMA) if e_rows else spark.createDataFrame(
         [], E_SCHEMA
     )
-    labels, _ = connected_components(vs, symmetrize_edges(es), **kw)
+    labels, _ = connected_components(vs, symmetrize_edges(es))
     rows = [(r.doc_id, r.component) for r in labels.collect()]
     groups: dict = {}
     null_rows = []
@@ -142,8 +142,8 @@ def _run_and_partition(spark, v_rows, e_rows, **kw):
 
 
 @SETTLE
-@given(st.lists(feed, min_size=1, max_size=4), st.booleans())
-def test_components_match_union_find(spark, feeds, pointer_jump):
+@given(st.lists(feed, min_size=1, max_size=4))
+def test_components_match_union_find(spark, feeds):
     v_rows, e_rows = [], []
     n_null_verts = 0
     for fid, f in enumerate(feeds):
@@ -157,9 +157,7 @@ def test_components_match_union_find(spark, feeds, pointer_jump):
         v_rows = [(0,)]  # operator contract: vertices frame is the doc table
     want = _oracle_components(v_rows, e_rows)
 
-    rows, groups, null_rows = _run_and_partition(
-        spark, v_rows, e_rows, pointer_jump=pointer_jump
-    )
+    rows, groups, null_rows = _run_and_partition(spark, v_rows, e_rows)
     # partition structure == union-find partition
     assert {frozenset(g) for g in groups.values()} == want
     # documented invariant: the label IS the component minimum
@@ -169,22 +167,3 @@ def test_components_match_union_find(spark, feeds, pointer_jump):
     # one output row per distinct mentioned non-NULL vertex (no double
     # emission, no vanishing — incl. rescued NULL-edge endpoints)
     assert len(rows) == sum(len(g) for g in want) + n_null_verts
-
-
-@SETTLE
-@given(st.lists(feed, min_size=1, max_size=3))
-def test_skew_split_labels_bit_identical(spark, feeds):
-    """The skew-threshold hot/cold tiers must be a pure execution-strategy
-    choice: labels bit-identical to the plain path, including NULLs and
-    giant stars (threshold 2 routes essentially every hub through the
-    broadcast tier)."""
-    v_rows, e_rows = [], []
-    for fid, f in enumerate(feeds):
-        fv, fe = _materialize_feed(fid, f)
-        v_rows += fv
-        e_rows += fe
-    if not v_rows:
-        v_rows = [(0,)]
-    plain, _, _ = _run_and_partition(spark, v_rows, e_rows)
-    skewed, _, _ = _run_and_partition(spark, v_rows, e_rows, skew_threshold=2)
-    assert sorted(plain, key=str) == sorted(skewed, key=str)

@@ -11,7 +11,15 @@ the reason it stays.
 The same walk then goes one level down, into the top-level functions of
 the reached ``streaming`` and ``operators`` modules: a function no package
 module (outside its own body) and no ``perfbench`` module names must be
-listed in ``KEPT_UNREFERENCED`` with the reason it stays. No Spark session
+listed in ``KEPT_UNREFERENCED`` with the reason it stays.
+
+The ``suite`` modules get the same check, by reachability rather than by
+mention: a top-level suite function must be reached from a ``@register``ed
+query, from a name the suite modules use at module level (the oracle
+strings, constants, decorators), or from a non-suite package module or a
+``perfbench`` module, following the names each reached function's body
+uses. Helpers only other unreached helpers (or tests) call are flagged;
+``KEPT_UNREACHED_SUITE`` lists the ones kept on purpose. No Spark session
 is needed.
 """
 
@@ -68,6 +76,11 @@ KEPT_UNREFERENCED = {
     "operators.multimodal.resize_media": "media resize stage beside extract_features, tested",
     "operators.multimodal.sample_frames": "video frame sampling stage, tested",
 }
+
+# Top-level functions of suite modules that no registered query, suite
+# module-level code, non-suite package module or perfbench module reaches,
+# one line of reason each.
+KEPT_UNREACHED_SUITE: dict[str, str] = {}
 
 
 PERFBENCH_DIR = PKG_DIR.parent / "perfbench"
@@ -239,3 +252,74 @@ def test_stream_jobs_do_not_import_the_registry():
         if m == "suite" or m.startswith("suite.")
     )
     assert not suite, f"streaming.jobs reaches the query registry: {suite}"
+
+
+def _is_register(dec: ast.expr) -> bool:
+    target = dec.func if isinstance(dec, ast.Call) else dec
+    name = target.attr if isinstance(target, ast.Attribute) else getattr(
+        target, "id", None
+    )
+    return name == "register"
+
+
+def _unreached_suite_functions() -> set[str]:
+    """``module.function`` for each top-level function of a ``suite``
+    module that the registry, suite module-level code, non-suite package
+    code and perfbench do not reach, directly or through the bodies of
+    reached suite functions."""
+    modules = _all_modules()
+    suite = {
+        name: ast.parse(path.read_text(), filename=str(path))
+        for name, path in modules.items()
+        if name == "suite" or name.startswith("suite.")
+    }
+    funcs: dict[str, list[tuple[str, ast.AST]]] = {}
+    roots: set[str] = set()
+    for name, tree in suite.items():
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                funcs.setdefault(node.name, []).append((name, node))
+                # decorators and defaults run at import, like module code
+                for part in (*node.decorator_list, node.args):
+                    roots |= _names(part)
+                if any(_is_register(d) for d in node.decorator_list):
+                    roots.add(node.name)
+            else:
+                roots |= _names(node)
+    others = [
+        path for name, path in modules.items() if name not in suite
+    ] + list(PERFBENCH_DIR.rglob("*.py"))
+    for path in others:
+        roots |= _names(ast.parse(path.read_text(), filename=str(path)))
+    reached: set[str] = set()
+    todo = [n for n in roots if n in funcs]
+    while todo:
+        fn = todo.pop()
+        if fn in reached:
+            continue
+        reached.add(fn)
+        for _, node in funcs[fn]:
+            todo.extend(n for n in _names(node) if n in funcs)
+    return {
+        f"{mod}.{fn}"
+        for fn, defs in funcs.items()
+        if fn not in reached
+        for mod, _ in defs
+    }
+
+
+def test_every_suite_function_is_reached_or_kept():
+    orphans = sorted(_unreached_suite_functions() - set(KEPT_UNREACHED_SUITE))
+    assert not orphans, (
+        "suite functions no registered query, suite module-level code, "
+        "package or perfbench code reaches (wire in, delete, or add to "
+        "KEPT_UNREACHED_SUITE with a reason): " + ", ".join(orphans)
+    )
+
+
+def test_kept_suite_functions_are_really_unreached():
+    stale = sorted(set(KEPT_UNREACHED_SUITE) - _unreached_suite_functions())
+    assert not stale, (
+        "KEPT_UNREACHED_SUITE names suite functions that are reached or no "
+        "longer exist (drop them from the set): " + ", ".join(stale)
+    )

@@ -10,6 +10,7 @@ directory exits 2 with a named error — all without starting Spark.
 
 from __future__ import annotations
 
+import os
 import pathlib
 import subprocess
 import sys
@@ -68,3 +69,17 @@ def test_flag_shaped_sf_dir_rejected():
     with pytest.raises(SystemExit) as exc:
         parity_sweep.parse_args(["--", "--sf-dir"])
     assert exc.value.code == 2
+
+
+def test_python_udf_query_runs_from_another_directory(tmp_path):
+    # The Spark Python workers do not inherit the driver's sys.path: run
+    # from outside the repository, a Python-UDF query used to fail with
+    # ModuleNotFoundError in the worker.
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, str(SCRIPT), "/root/testdata/sf0.001",
+         "multimodal_features"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-2000:]
+    assert "0 failures" in proc.stdout

@@ -281,6 +281,40 @@ def test_quality_log_matches_flagged_records(spark, e2e):
     assert log.where(~F.col("is_valid") & F.col("error_message").isNull()).count() == 0
 
 
+def test_fixed_mode_keeps_staged_quality_and_derives_status(spark, tmp_path):
+    """``replicate_quirks=False``: dim_students keeps each student's staged
+    quality score and email flag instead of the reference's 100/True
+    overwrite, derives the enrollment status from activity instead of the
+    ACTIVE/PENDING collapse, and scores risk instead of the constant
+    42.0/'Medium' stub."""
+    from pyspark.sql import functions as F
+
+    input_dir = str(tmp_path / "input")
+    wh_dir = str(tmp_path / "warehouse")
+    write_fixture_csvs(input_dir)
+    pipeline.run_batch_pipeline(spark, input_dir, wh_dir, replicate_quirks=False)
+    stg = spark.read.parquet(os.path.join(wh_dir, "staging", "stg_students"))
+    dim = spark.read.parquet(os.path.join(wh_dir, "warehouse", "dim_students"))
+
+    staged = {
+        r["student_id"]: (r["quality_score"], r["is_email_valid"])
+        for r in stg.collect()
+    }
+    kept = {
+        r["student_id"]: (r["quality_score"], r["is_email_valid"])
+        for r in dim.collect()
+    }
+    assert kept == staged
+    assert sum(q < 100 for q, _ in kept.values()) == 25
+
+    def tally(col):
+        return {r[col]: r["count"] for r in dim.groupBy(col).count().collect()}
+
+    assert tally("enrollment_status") == {"CHURNED": 24, "INACTIVE": 3, "PENDING": 3}
+    assert tally("ai_risk_category") == {"High": 9, "Low": 6, "Medium": 15}
+    assert dim.where(F.col("ai_risk_score") != 42.0).count() > 0
+
+
 def test_idempotent_rerun(spark, tmp_path):
     input_dir = str(tmp_path / "input")
     wh_dir = str(tmp_path / "warehouse")

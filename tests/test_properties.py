@@ -196,25 +196,3 @@ def test_minhash_signature_set_invariance(spark, docs):
         map(tuple, _sigs_from_shingle_rows(sh.unionByName(sh).repartition(7)).collect())
     )
     assert base == doubled
-
-
-@SETTLE
-@given(st.lists(st.tuples(st.integers(0, 14), st.integers(0, 14)), max_size=12))
-def test_cc_pointer_jump_equals_plain(spark, edge_list):
-    """Pointer-jumping and plain min-label propagation must reach the
-    identical component labeling on arbitrary graphs."""
-    from pyspark.sql import functions as F2
-
-    from edu_data_pipeline_spark.operators.graph import (
-        connected_components, symmetrize_edges,
-    )
-
-    verts = spark.range(15).select(F2.col("id").alias("doc_id"))
-    edges = spark.createDataFrame(
-        [(a, b) for a, b in edge_list if a != b] or [(0, 0)],
-        "doc_a long, doc_b long",
-    ).where("doc_a != doc_b")
-    sym = symmetrize_edges(edges)
-    jump, _ = connected_components(verts, sym, pointer_jump=True)
-    plain, _ = connected_components(verts, sym, pointer_jump=False, max_rounds=64)
-    assert sorted(map(tuple, jump.collect())) == sorted(map(tuple, plain.collect()))

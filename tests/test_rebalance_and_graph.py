@@ -49,8 +49,8 @@ def test_lang_rebalance_cap(spark, tmp_path):
 
 
 def test_cc_warns_when_round_cap_exhausted(spark):
-    """Plain min-label on a chain longer than max_rounds: warn, or raise
-    under strict=True — never a silent wrong answer."""
+    """A 12-node chain needs more than 2 pointer-jumping rounds: a cap of
+    2 warns, or raises under strict=True — never a silent wrong answer."""
     n = 12
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
@@ -59,21 +59,17 @@ def test_cc_warns_when_round_cap_exhausted(spark):
     sym = symmetrize_edges(edges)
 
     with pytest.warns(NonConvergedComponentsWarning):
-        _, rounds = connected_components(
-            verts, sym, pointer_jump=False, max_rounds=3
-        )
-    assert rounds == 3
+        _, rounds = connected_components(verts, sym, max_rounds=2)
+    assert rounds == 2
 
-    with pytest.raises(RuntimeError, match="max_rounds=3"):
-        connected_components(
-            verts, sym, pointer_jump=False, max_rounds=3, strict=True
-        )
+    with pytest.raises(RuntimeError, match="max_rounds=2"):
+        connected_components(verts, sym, max_rounds=2, strict=True)
 
-    # pointer-jumping converges on the same chain well inside the default
-    # cap — and a converged run must NOT warn
+    # the same chain converges well inside the default cap — and a
+    # converged run must NOT warn
     with warnings.catch_warnings():
         warnings.simplefilter("error", NonConvergedComponentsWarning)
-        labels, _ = connected_components(verts, sym, pointer_jump=True)
+        labels, _ = connected_components(verts, sym)
     assert {r["component"] for r in labels.collect()} == {0}
 
 
@@ -83,10 +79,9 @@ def _labels_dict(labels):
 
 def test_cc_skew_threshold_megacluster_bit_identical(spark):
     """Crafted megacluster (star hub + 400 leaves, a boilerplate-heavy
-    crawl's near-dup blowup) plus a chain and an isolated pair: with a
-    threshold small enough that BOTH hot tiers engage (hub degree and
-    the emergent giant-component label), labels must be bit-identical
-    to the unsalted run and to ground truth."""
+    crawl's near-dup blowup) plus a chain and an isolated pair: the hub's
+    degree and the emergent giant-component label make both per-round
+    join keys hot, and the labels must still match ground truth."""
     star = [(0, i) for i in range(1, 401)]            # hub 0, degree 400
     chain = [(1000 + i, 1001 + i) for i in range(6)]  # 1000..1006
     pair = [(2000, 2001)]
@@ -97,34 +92,13 @@ def test_cc_skew_threshold_megacluster_bit_identical(spark):
         .union(spark.range(2000, 2002))
         .select(F.col("id").alias("doc_id"))
     )
-    sym = symmetrize_edges(edges)
-
-    plain, _ = connected_components(verts, sym)
-    salted, _ = connected_components(verts, sym, skew_threshold=5)
-    got_plain, got_salted = _labels_dict(plain), _labels_dict(salted)
-    assert got_plain == got_salted
+    labels, _ = connected_components(verts, symmetrize_edges(edges))
+    got = _labels_dict(labels)
     for v in range(401):
-        assert got_salted[v] == 0
+        assert got[v] == 0
     for v in range(1000, 1007):
-        assert got_salted[v] == 1000
-    assert got_salted[2000] == got_salted[2001] == 2000
-
-
-def test_cc_skew_threshold_chain_and_no_hot_keys(spark):
-    """A long chain under pointer-jumping with the skew guard on: no key
-    is ever hot at threshold 10^6 (the empty-hot-tier path), and at
-    threshold 2 the cold/hot split still converges to the same labels."""
-    n = 40
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
-    )
-    verts = spark.range(0, n).select(F.col("id").alias("doc_id"))
-    sym = symmetrize_edges(edges)
-    base, _ = connected_components(verts, sym)
-    for thr in (2, 1_000_000):
-        got, _ = connected_components(verts, sym, skew_threshold=thr)
-        assert _labels_dict(got) == _labels_dict(base)
-        assert set(_labels_dict(got).values()) == {0}
+        assert got[v] == 1000
+    assert got[2000] == got[2001] == 2000
 
 
 def test_cc_null_ids_single_emission(spark):
@@ -150,12 +124,11 @@ def test_cc_null_ids_single_emission(spark):
             ]
         ),
     )
-    for kw in ({}, {"skew_threshold": 1}):
-        labels, _ = connected_components(vs, symmetrize_edges(es), **kw)
-        got = sorted(((r.doc_id, r.component) for r in labels.collect()), key=str)
-        # vertex 3's only edges had NULL endpoints -> isolated singleton;
-        # the NULL vertex appears ONCE, component NULL
-        assert got == [(1, 1), (2, 1), (3, 3), (None, None)]
+    labels, _ = connected_components(vs, symmetrize_edges(es))
+    got = sorted(((r.doc_id, r.component) for r in labels.collect()), key=str)
+    # vertex 3's only edges had NULL endpoints -> isolated singleton;
+    # the NULL vertex appears ONCE, component NULL
+    assert got == [(1, 1), (2, 1), (3, 3), (None, None)]
 
 
 def test_cc_null_edge_only_vertex_rescued(spark):
@@ -179,9 +152,8 @@ def test_cc_null_edge_only_vertex_rescued(spark):
             ]
         ),
     )
-    for kw in ({}, {"skew_threshold": 1}):
-        labels, _ = connected_components(vs, symmetrize_edges(es), **kw)
-        got = sorted(((r.doc_id, r.component) for r in labels.collect()), key=str)
-        # 3 is rescued exactly once; 2 has a real edge so the rescue
-        # must not re-emit it alongside its loop label
-        assert got == [(1, 1), (2, 1), (3, 3)]
+    labels, _ = connected_components(vs, symmetrize_edges(es))
+    got = sorted(((r.doc_id, r.component) for r in labels.collect()), key=str)
+    # 3 is rescued exactly once; 2 has a real edge so the rescue
+    # must not re-emit it alongside its loop label
+    assert got == [(1, 1), (2, 1), (3, 3)]

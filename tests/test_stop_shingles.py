@@ -61,8 +61,8 @@ def test_jaccard_candidate_volume_capped(spark):
 
     from edu_data_pipeline_spark.sources.testdata import table
     from edu_data_pipeline_spark.suite.scale_suite import (
-        _distinct_shingles,
         _pair_shingle_keys,
+        gram_rows,
     )
 
     d = table(spark, SF_REDUCTION, "documents")
@@ -80,7 +80,7 @@ def test_jaccard_candidate_volume_capped(spark):
             .count()
         )
 
-    uncapped = pair_count(_distinct_shingles(d), "s")
+    uncapped = pair_count(gram_rows(d, 3).distinct(), "s")
     # the df-capped shingle keys the query's candidate self-join runs on
     capped = pair_count(_pair_shingle_keys(d), "sk")
     assert capped < uncapped, (capped, uncapped)
@@ -114,18 +114,21 @@ def test_stop_threshold_is_integer_exact(spark):
 
 
 def test_pair_df_cap_is_absolute(spark):
-    """_pair_shingles (r8, capacity-plan finding: alpha 1.19 under the
-    relative-only cap): pair generation must ALSO drop shingles with
+    """_pair_shingle_keys (r8, capacity-plan finding: alpha 1.19 under
+    the relative-only cap): pair generation must ALSO drop shingles with
     df > PAIR_DF_CAP even when the relative 1% threshold would admit
     them — a relative cap re-admits the quadratic as the corpus grows.
     Crafted corpus: 10,000 docs so the 1% threshold (100) far exceeds
     the absolute cap; a 40-doc shared shingle (under 1%, over the cap)
-    must vanish from pair shingles while a 10-doc shingle survives."""
+    must vanish from the pair fingerprints while a 10-doc shingle
+    survives."""
+    import hashlib
+
     from pyspark.sql import functions as F
 
     from edu_data_pipeline_spark.suite.scale_suite import (
         PAIR_DF_CAP,
-        _pair_shingles,
+        _pair_shingle_keys,
     )
 
     n = 10_000
@@ -136,18 +139,7 @@ def test_pair_df_cap_is_absolute(spark):
         .otherwise(F.concat(F.lit("unique text row "), F.col("id")))
         .alias("text"),
     )
-    kept = {r["s"] for r in _pair_shingles(docs).select("s").distinct().collect()}
     assert 40 > PAIR_DF_CAP >= 10
-    assert "shared forty times" not in kept, (
-        "df-40 shingle (1% threshold would admit it) must be cut by the "
-        "absolute cap"
-    )
-    assert "shared ten times" in kept
-
-    # the QUERY path (r8b) runs on 60-bit fingerprints — same cap bite
-    import hashlib
-
-    from edu_data_pipeline_spark.suite.scale_suite import _pair_shingle_keys
 
     def sk(s: str) -> int:
         return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
