@@ -348,10 +348,10 @@ def standardize_gender(col: Column | str) -> RuleColumns:
 
 # ---------------------------------------------------------------------------
 # C8/C9 — city & state normalization (cleaning_rules.py:156-176)
-# city fuzzy-matching itself is a join — see operators/cleaning.py
+# the city-master match itself is operators/cleaning.with_city_cleaned
 # ---------------------------------------------------------------------------
 
-DEFAULT_CITY_MASTER = [
+DEFAULT_CITY_MASTER = (
     "Mumbai",
     "Bangalore",
     "Delhi",
@@ -362,7 +362,7 @@ DEFAULT_CITY_MASTER = [
     "Ahmedabad",
     "Jaipur",
     "Lucknow",
-]
+)
 
 # Hardcoded corrections applied BEFORE master matching (cleaning_rules.py:160)
 CITY_CORRECTIONS = {"Mumabi": "Mumbai", "Banglore": "Bangalore", "Pune": "Pune"}

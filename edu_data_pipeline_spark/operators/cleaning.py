@@ -1,114 +1,62 @@
-"""Staging-layer cleaning operators: fused selects + dedup + fuzzy city join.
+"""Staging-layer cleaning operators: fused selects + dedup + city match.
 
 Mirrors the reference's record-composition wrappers
 (``dags/utils/cleaners.py:8-112``) and the cleaning DAG
 (``dags/data_cleaning_pipeline.py``), re-expressed as single fused
 ``select()`` statements so Catalyst collapses each dataset's cleaning
-into one codegen'd stage. The only join is the tiny broadcast
-city-master fuzzy match (C8, ``cleaning_rules.py:156-169``).
-
-Scale notes: the fuzzy match joins *distinct dirty city values* (small,
-bounded by vocabulary, not data size) against a <=dozens-row master —
-a broadcast nested-loop on purpose; the per-row path is then a
-broadcast hash join on the normalized city string. Dedup windows
-partition by the natural key, so they shuffle once on the same key the
-downstream MERGE uses.
+into one codegen'd stage. The city-master match (C8,
+``cleaning_rules.py:156-169``) is per-row projections too, with the
+master's cities as literals: no join, no shuffle, no Python worker (its
+higher-order ``transform`` runs interpreted, outside codegen).
+Dedup windows partition by the natural key, so they shuffle once on the
+same key the downstream MERGE uses.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import rules
 
 
-# Per-session cache of the tiny master frame (r14): createDataFrame of
-# the 21-row master measured 269 ms per call (driver-side conversion +
-# analysis), paid by every city-cleaning query invocation. The cached
-# object is a local-relation plan over literal rows — no data source,
-# nothing persisted; keyed by applicationId so a new SparkContext never
-# sees a stale session's plan, and entries from other (dead)
-# applications are evicted on every miss (r15, VERDICT r14 #7) so a
-# long-lived multi-session process holds at most one application's
-# frames.
-_MASTER_CACHE: dict[tuple[str, tuple[str, ...]], DataFrame] = {}
-
-
-def city_master_df(spark: SparkSession, cities: list[str] | None = None) -> DataFrame:
-    """Master city list with match-priority index (first-max-wins tie-break
-    replicates the reference's ``_closest`` scan order, cleaning_rules.py:223-231)."""
-    cities = cities or rules.DEFAULT_CITY_MASTER
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, tuple(cities))
-    df = _MASTER_CACHE.get(key)
-    if df is None:
-        for stale in [k for k in _MASTER_CACHE if k[0] != app_id]:
-            del _MASTER_CACHE[stale]
-        df = spark.createDataFrame(
-            [(c, i) for i, c in enumerate(cities)],
-            "master_city string, master_idx int",
-        )
-        _MASTER_CACHE[key] = df
-    return df
-
-
-def match_cities(dirty_cities: DataFrame, master: DataFrame) -> DataFrame:
-    """Nearest-neighbor over the city master via positional similarity.
-
-    Input: one column ``city_norm`` (already normalized+corrected, distinct).
-    Output: ``city_norm, city_value, city_valid, city_note``.
-
-    Exact master hit -> matched; else best similarity >= 0.8 -> fuzzy
-    corrected; else keep with invalid flag. crossJoin is intentional:
-    |distinct cities| x |master| is vocabulary-sized, and Spark broadcasts
-    the master side.
-    """
-    sim = rules.positional_similarity(F.col("city_norm"), F.col("master_city"))
-    scored = (
-        dirty_cities.crossJoin(F.broadcast(master))
-        .withColumn("sim", sim)
-        .withColumn("exact", F.col("city_norm") == F.col("master_city"))
-    )
-    w = Window.partitionBy("city_norm").orderBy(
-        F.desc("exact"), F.desc("sim"), F.asc("master_idx")
-    )
-    best = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "city_norm",
-            F.when(F.col("exact") | (F.col("sim") >= 0.8), F.col("master_city"))
-            .otherwise(F.col("city_norm"))
-            .alias("city_value"),
-            (F.col("exact") | (F.col("sim") >= 0.8)).alias("city_valid"),
-            F.when(F.col("exact"), F.lit("matched"))
-            .when(F.col("sim") >= 0.8, F.format_string("fuzzy-%.2f", F.col("sim")))
-            .otherwise(F.lit("unmatched"))
-            .alias("city_note"),
-        )
-    )
-    return best
-
-
 def with_city_cleaned(
-    df: DataFrame, city_col: str, master: DataFrame
+    df: DataFrame, city_col: str, cities: tuple[str, ...] = rules.DEFAULT_CITY_MASTER
 ) -> DataFrame:
-    """Attach ``city_value/city_valid/city_note`` for ``city_col`` (C8)."""
-    norm = rules.normalize_city(city_col)
-    with_norm = df.withColumn("city_norm", norm)
-    distinct = with_norm.select("city_norm").where(F.col("city_norm").isNotNull()).distinct()
-    matched = match_cities(distinct, master)
-    joined = with_norm.join(F.broadcast(matched), "city_norm", "left")
+    """Attach ``city_value/city_valid/city_note`` for ``city_col`` (C8).
+
+    Row by row, as the reference does: an exact hit in ``cities`` is
+    ``matched``; any other city takes the most positionally similar one,
+    the first of equals winning (``_closest``, cleaning_rules.py:223-231),
+    and is ``fuzzy-%.2f`` at similarity >= 0.8, else ``unmatched``. A NULL
+    city is ``missing``. The best candidate is one projected column, so the
+    plan holds one ``array_max`` however many outputs read its fields.
+    """
+    norm = F.col("__city_norm")
+    exact = norm.isin(*cities)
+    scored = F.transform(
+        F.array(*[F.lit(c) for c in cities]),
+        lambda m, i: F.struct(
+            rules.positional_similarity(norm, m).alias("sim"),
+            (-i).alias("neg_idx"),
+            m.alias("city"),
+        ),
+    )
+    best = F.col("__city_best")
+    fuzzy = best["sim"] >= 0.8
     return (
-        joined.withColumn(
-            "city_valid", F.coalesce(F.col("city_valid"), F.lit(False))
-        )
+        df.withColumn("__city_norm", rules.normalize_city(city_col))
+        .withColumn("__city_best", F.when(~exact, F.array_max(scored)))
+        .withColumn("city_value", F.when(fuzzy, best["city"]).otherwise(norm))
+        .withColumn("city_valid", F.coalesce(exact | fuzzy, F.lit(False)))
         .withColumn(
             "city_note",
-            F.when(F.col(city_col).isNull(), "missing").otherwise(F.col("city_note")),
+            F.when(F.col(city_col).isNull(), "missing")
+            .when(exact, "matched")
+            .when(fuzzy, F.format_string("fuzzy-%.2f", best["sim"]))
+            .otherwise("unmatched"),
         )
-        .drop("city_norm")
+        .drop("__city_norm", "__city_best")
     )
 
 
@@ -132,7 +80,7 @@ def dedup_last_wins(df: DataFrame, key: str, order_col: str) -> DataFrame:
 
 def clean_students(
     df: DataFrame,
-    master: DataFrame,
+    cities: tuple[str, ...] = rules.DEFAULT_CITY_MASTER,
     ref_date: Column | None = None,
     batch_id: str | None = None,
     passthrough: tuple[str, ...] = (),
@@ -154,7 +102,7 @@ def clean_students(
     enroll = rules.parse_date("enrollment_date", ref_date=ref_date)
     fee = rules.clean_numeric("fee_paid")
 
-    with_city = with_city_cleaned(df, "city", master)
+    with_city = with_city_cleaned(df, "city", cities)
 
     quality = rules.quality_score(
         sid.is_valid,

@@ -211,19 +211,3 @@ def compare_query(spark, con, entry, sf_dir: str, limit_detail: int = 5) -> Pari
         )
         res.problems.extend(dtype_notes)
     return res
-
-
-def run_parity(spark, sf_dir: str, names: list[str] | None = None) -> list[ParityResult]:
-    from .suite import load_all
-
-    registry = load_all()
-    con = duck_connection(sf_dir)
-    results = []
-    for name, entry in registry.items():
-        if names and name not in names:
-            continue
-        try:
-            results.append(compare_query(spark, con, entry, sf_dir))
-        except Exception as exc:  # surface, don't die
-            results.append(ParityResult(name, False, -1, -1, [f"exception: {exc}"]))
-    return results

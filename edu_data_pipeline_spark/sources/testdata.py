@@ -119,13 +119,3 @@ def metadata_row_count(sf_dir: str, name: str) -> int:
 
     path = f"{sf_dir}/{name}.parquet"
     return ds.dataset(path, format="parquet").count_rows()
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for spark.sql() queries."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

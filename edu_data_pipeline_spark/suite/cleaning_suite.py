@@ -380,7 +380,7 @@ def clean_gender_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# C8/C8a — city normalization + fuzzy master match (broadcast NN join)
+# C8/C8a — city normalization + per-row city-master match
 # ---------------------------------------------------------------------------
 
 _CITY_VARIANTS = [
@@ -439,8 +439,7 @@ def clean_cities(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey",
         F.element_at(options, (k % len(_CITY_VARIANTS) + 1).cast("int")).alias("dirty_city"),
     )
-    master = cleaning.city_master_df(spark)
-    out = cleaning.with_city_cleaned(df, "dirty_city", master)
+    out = cleaning.with_city_cleaned(df, "dirty_city")
     return out.select(
         "c_custkey",
         F.col("city_value").alias("city"),

@@ -1,4 +1,4 @@
-"""Staging-layer pipeline tests: fused cleaning, fuzzy city join, dedup."""
+"""Staging-layer pipeline tests: fused cleaning, city-master match, dedup."""
 
 from __future__ import annotations
 
@@ -41,8 +41,7 @@ def make_students(spark):
 
 
 def test_clean_students_golden(spark):
-    master = cleaning.city_master_df(spark)
-    out = cleaning.clean_students(make_students(spark), master, ref_date=ref_date())
+    out = cleaning.clean_students(make_students(spark), ref_date=ref_date())
     rows = {r.full_name: r for r in out.collect()}
     assert out.count() == 5
 
@@ -76,11 +75,10 @@ def test_clean_students_golden(spark):
 
 
 def test_city_fuzzy_note(spark):
-    master = cleaning.city_master_df(spark)
     df = spark.createDataFrame(
         [("Mumbay",), ("Mumbai",), ("Bhopal",), (None,)], "city string"
     )
-    out = cleaning.with_city_cleaned(df, "city", master).select(
+    out = cleaning.with_city_cleaned(df, "city").select(
         "city_value", "city_valid", "city_note"
     )
     got = {(r.city_value, r.city_valid, r.city_note) for r in out.collect()}

@@ -70,9 +70,7 @@ def test_quality_log_population(spark):
         "gender string, city string, state string, enrollment_date string, "
         "program_id string, fee_paid string, payment_status string",
     )
-    master = cleaning.city_master_df(spark)
-    stg = cleaning.clean_students(raw, master,
-                                  ref_date=F.lit("2026-08-13").cast("date"),
+    stg = cleaning.clean_students(raw, ref_date=F.lit("2026-08-13").cast("date"),
                                   batch_id="b1")
     log = cleaning.quality_log(stg, "stg_students", "student_id")
     rows = {r.rule_applied: r for r in log.collect()}

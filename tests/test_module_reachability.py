@@ -9,9 +9,11 @@ caller; it must be wired in, deleted, or listed in ``KEPT_UNREACHED`` with
 the reason it stays.
 
 The same walk then goes one level down, into the top-level functions of
-the reached ``streaming`` and ``operators`` modules: a function no package
-module (outside its own body) and no ``perfbench`` module names must be
-listed in ``KEPT_UNREFERENCED`` with the reason it stays.
+the reached ``streaming``, ``operators``, ``functions`` and ``sources``
+modules and of the top-level ``parity``, ``caches``, ``session`` and
+``pipeline`` modules: a function no package module (outside its own body)
+and no ``perfbench`` module names must be listed in ``KEPT_UNREFERENCED``
+with the reason it stays.
 
 The ``suite`` modules get the same check, by reachability rather than by
 mention: a top-level suite function must be reached from a ``@register``ed
@@ -56,8 +58,8 @@ KEPT_UNREACHED = {
     "plans.inspect": "plan-assertion helper the tests use",
 }
 
-# Top-level functions of reached streaming/ and operators/ modules that no
-# package or perfbench code references, one line of reason each.
+# Top-level functions of the FUNCTION_SCOPE_* modules that no package or
+# perfbench code references, one line of reason each.
 KEPT_UNREFERENCED = {
     "streaming.jobs.simulated_event_stream": "S6 reference rate producer, tested",
     "streaming.jobs.foreach_batch_upsert": "S7 reference upsert sink, tested",
@@ -75,6 +77,9 @@ KEPT_UNREFERENCED = {
     "operators.bpe.segment_words": "applies learn_bpe's merges; round-trip tested",
     "operators.multimodal.resize_media": "media resize stage beside extract_features, tested",
     "operators.multimodal.sample_frames": "video frame sampling stage, tested",
+    "sources.csv_ingest.detect_new_files": "S1 reference new-file sensor, tested",
+    "sources.csv_ingest.read_with_corrupt_routing": "S2 malformed-row quarantine read, tested",
+    "caches.live_checkpoints": "live checkpoint count the cache-release tests assert on",
 }
 
 # Top-level functions of suite modules that no registered query, suite
@@ -84,6 +89,11 @@ KEPT_UNREACHED_SUITE: dict[str, str] = {}
 
 
 PERFBENCH_DIR = PKG_DIR.parent / "perfbench"
+
+# Reached modules whose top-level functions must each have a reference:
+# every module of these packages, and these top-level modules.
+FUNCTION_SCOPE_PACKAGES = ("streaming.", "operators.", "functions.", "sources.")
+FUNCTION_SCOPE_MODULES = ("parity", "caches", "session", "pipeline")
 
 
 def _all_modules() -> dict[str, pathlib.Path]:
@@ -204,9 +214,9 @@ def _names(tree: ast.AST, skip: ast.AST | None = None) -> set[str]:
 
 
 def _unreferenced_functions() -> set[str]:
-    """``module.function`` for each top-level function of a reached
-    ``streaming``/``operators`` module that no package module (outside the
-    function's own body) and no perfbench module names."""
+    """``module.function`` for each top-level function of a reached module
+    in the function scope that no package module (outside the function's
+    own body) and no perfbench module names."""
     modules = _all_modules()
     trees = {
         path: ast.parse(path.read_text(), filename=str(path))
@@ -215,7 +225,8 @@ def _unreferenced_functions() -> set[str]:
     seen = {path: _names(tree) for path, tree in trees.items()}
     out = set()
     for name in _reached():
-        if not name.startswith(("streaming.", "operators.")):
+        if not (name.startswith(FUNCTION_SCOPE_PACKAGES)
+                or name in FUNCTION_SCOPE_MODULES):
             continue
         path = modules[name]
         for fn in trees[path].body:

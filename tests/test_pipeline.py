@@ -348,6 +348,67 @@ def test_invalid_input_fails_before_any_write(spark, tmp_path):
     assert not os.path.exists(os.path.join(wh_dir, "metadata", "pipeline_runs"))
 
 
+def write_city_master(path: str) -> None:
+    """A master shaped like the reference's ``city_master.csv``: a header,
+    a quoted comma-joined misspellings column and a blank line."""
+    with open(path, "w") as f:
+        f.write(
+            "city_name,state_name,state_code,common_misspellings\n"
+            'Mumbai,Maharashtra,MH,"Mumabi,Bombay,mumbai,MUMBAI"\n'
+            "\n"
+            'Bhopal,Madhya Pradesh,MP,"Bhopaal,bhopal"\n'
+            "Pune,Maharashtra,MH,Poona\n"
+        )
+
+
+def test_city_master_file_column_zero(spark, tmp_path):
+    """Only column 0 is read, the header is dropped, and a city the default
+    master lacks matches exactly."""
+    from pyspark.sql import functions as F
+
+    master = str(tmp_path / "city_master.csv")
+    write_city_master(master)
+    assert pipeline._load_city_master(master) == ("Mumbai", "Bhopal", "Pune")
+
+    input_dir = str(tmp_path / "input")
+    wh_dir = str(tmp_path / "warehouse")
+    write_fixture_csvs(input_dir)
+    pipeline.run_batch_pipeline(spark, input_dir, wh_dir, city_master_path=master)
+    stg = spark.read.parquet(os.path.join(wh_dir, "staging", "stg_students"))
+    note = F.get_json_object("cleaning_notes", "$.city")
+    got = {(r["city"], r["note"]) for r in stg.select("city", note.alias("note")).collect()}
+    assert ("Bhopal", "matched") in got
+    assert ("Delhi", "unmatched") in got  # in the default master only
+    assert ("Mumbai", "matched") in got
+
+
+def test_missing_city_master_fails_before_any_write(spark, tmp_path):
+    """An explicit master path that does not exist fails the pre-flight
+    instead of falling back to the default master."""
+    input_dir = str(tmp_path / "input")
+    wh_dir = str(tmp_path / "warehouse")
+    write_fixture_csvs(input_dir)
+    missing = str(tmp_path / "no_such_master.csv")
+    with pytest.raises(FileValidationError, match="no_such_master.csv"):
+        pipeline.run_batch_pipeline(spark, input_dir, wh_dir, city_master_path=missing)
+    assert not os.path.exists(wh_dir)
+
+
+def test_batch_load_starts_no_python_worker(spark, tmp_path, monkeypatch):
+    """No table of the load comes from local Python rows, the only source
+    here that would start a Python worker."""
+    from pyspark.sql import SparkSession
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("createDataFrame called during the batch load")
+
+    input_dir = str(tmp_path / "input")
+    write_fixture_csvs(input_dir)
+    monkeypatch.setattr(SparkSession, "createDataFrame", refuse)
+    counts = pipeline.run_batch_pipeline(spark, input_dir, str(tmp_path / "warehouse"))
+    assert counts["metadata.pipeline_runs"] == 1
+
+
 def test_failed_write_raises_and_records_no_run(spark, tmp_path, monkeypatch):
     """A write that fails while others run concurrently fails the call
     with its own error, and no SUCCESS row is recorded."""

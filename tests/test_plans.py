@@ -34,6 +34,36 @@ def test_no_python_in_hot_paths(spark):
         assert not inspect.has_python_eval(df), f"{name} must stay JVM-side"
 
 
+def _city_match_plan_counts(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return {
+        "joins": plan.count("Join"),
+        "rdd_scans": plan.count("ExistingRDD"),
+        "array_max": plan.count("array_max("),
+        "exchanges": plan.count("Exchange"),
+    }
+
+
+def test_city_match_is_projections_only(spark, tmp_path):
+    """The city-master match (C8) adds no join, no local-rows scan (a
+    Python worker) and no shuffle; its best candidate is computed once per
+    row, not once per output that reads it. clean_students keeps the one
+    exchange of its duplicate-flag window."""
+    from edu_data_pipeline_spark.operators import cleaning
+    from edu_data_pipeline_spark.sources import csv_ingest
+
+    cities = REGISTRY["clean_cities"].fn(spark, SF_DIR)
+    assert _city_match_plan_counts(cities) == {
+        "joins": 0, "rdd_scans": 0, "array_max": 1, "exchanges": 0}
+
+    cols = csv_ingest.REQUIRED_COLUMNS["students_enrollment"]
+    path = tmp_path / "students.csv"
+    path.write_text(",".join(cols) + "\n" + ",".join(["x"] * len(cols)) + "\n")
+    students = cleaning.clean_students(csv_ingest.read_raw_csv(spark, str(path), cols))
+    assert _city_match_plan_counts(students) == {
+        "joins": 0, "rdd_scans": 0, "array_max": 1, "exchanges": 1}
+
+
 def test_multimodal_is_the_only_python_path(spark):
     df = REGISTRY["multimodal_features"].fn(spark, SF_DIR)
     assert inspect.has_python_eval(df)  # by design: Arrow-batched mapInPandas

@@ -32,11 +32,13 @@ from __future__ import annotations
 import random
 import re
 from datetime import date, datetime, timezone
-from decimal import ROUND_HALF_EVEN, Decimal
+from decimal import ROUND_HALF_EVEN, ROUND_HALF_UP, Decimal
 
+import pytest
 from pyspark.sql import functions as F
 
 from edu_data_pipeline_spark.functions import rules
+from edu_data_pipeline_spark.operators import cleaning
 
 SEED = 20260814
 N = 10_000
@@ -457,6 +459,99 @@ def test_fuzz_city(spark):
     cases = gen_cases("c8", build)
     got = run_columns(spark, cases, {"v": rules.normalize_city("raw")})
     assert_agree(cases, got, [twin_city(c) for c in cases], "C8-city")
+
+
+# C8 whole match (cleaning_rules.py:156-169, _closest :223-231): exact hit
+# first, else the first most positionally similar master city at >= 0.8.
+CRAFTED_MASTER = ("Mumbai", "Mumbay", "DELHI", "Delhi", "Pune", "Puna",
+                  "Navi Mumbai", "Bhopal", "Kochi", "Kochin")
+
+
+def similarity(a: str, b: str) -> float:
+    a, b = a.lower(), b.lower()
+    return sum(x == y for x, y in zip(a, b)) / max(len(a), len(b), 1)
+
+
+def twin_city_match(raw, master):
+    if raw is None:
+        return (None, False, "missing")
+    (city,) = twin_city(raw)
+    if city in master:
+        return (city, True, "matched")
+    best, best_sim = None, -1.0
+    for m in master:  # strict > : the first of equals wins
+        sim = similarity(city, m)
+        if sim > best_sim:
+            best, best_sim = m, sim
+    if best_sim >= 0.8:
+        # format_string rounds the shortest decimal form half-up (Java)
+        note = Decimal(repr(best_sim)).quantize(Decimal("0.01"), ROUND_HALF_UP)
+        return (best, True, f"fuzzy-{note}")
+    return (city, False, "unmatched")
+
+
+def mutate(rng: random.Random, s: str) -> str:
+    """One to two character edits: substitute, delete, insert or append."""
+    for _ in range(rng.randrange(1, 3)):
+        i = rng.randrange(len(s) + 1)
+        c = rng.choice("aeiouybcdhkmnrxAEIOU ")
+        op = rng.randrange(4)
+        if op == 0 and i < len(s):
+            s = s[:i] + c + s[i + 1:]
+        elif op == 1 and i < len(s) and len(s) > 1:
+            s = s[:i] + s[i + 1:]
+        elif op == 2:
+            s = s[:i] + c + s[i:]
+        else:
+            s = s + c
+    return s
+
+
+def run_city_match(spark, cases, master):
+    df = spark.createDataFrame(
+        [(i, s) for i, s in enumerate(cases)], "i long, raw string"
+    )
+    rows = (
+        cleaning.with_city_cleaned(df, "raw", master)
+        .select("i", "city_value", "city_valid", "city_note")
+        .orderBy("i")
+        .collect()
+    )
+    return [(r.city_value, r.city_valid, r.city_note) for r in rows]
+
+
+@pytest.mark.parametrize("master", [rules.DEFAULT_CITY_MASTER, CRAFTED_MASTER],
+                         ids=["default", "crafted"])
+def test_fuzz_city_match(spark, master):
+    vocab = [*master, *CITY_VOCAB, "Bhopal", "Mumbay", "Delhx", "Indore"]
+
+    def build(rng):
+        city = rng.choice(vocab)
+        if rng.random() < 0.6:
+            city = mutate(rng, city)
+        return maybe_dirty(rng, city)
+
+    cases = gen_cases(f"c8-match:{len(master)}", build)
+    got = run_city_match(spark, cases, master)
+    expected = [twin_city_match(c, master) for c in cases]
+    assert_agree(cases, got, expected, "C8-match")
+    notes = {e[2].split("-")[0] for e in expected}
+    assert notes == {"missing", "matched", "fuzzy", "unmatched"}
+
+
+@pytest.mark.parametrize("master, raw, expected", [
+    (("Mumbai", "Mumbay"), "Mumbax", ("Mumbai", True, "fuzzy-0.83")),
+    (("DELHI", "Delhi"), "delhi", ("Delhi", True, "matched")),
+    (("DELHI",), "delhi", ("DELHI", True, "fuzzy-1.00")),
+    (rules.DEFAULT_CITY_MASTER, "Delhx", ("Delhi", True, "fuzzy-0.80")),
+    (rules.DEFAULT_CITY_MASTER, "", ("", False, "unmatched")),
+    (rules.DEFAULT_CITY_MASTER, None, (None, False, "missing")),
+])
+def test_city_match_vectors(spark, master, raw, expected):
+    """Ties go to the first city; an exact hit beats an earlier similarity
+    of 1.0; 0.8 is fuzzy; a blank city is kept, a NULL one is missing."""
+    assert twin_city_match(raw, master) == expected
+    assert run_city_match(spark, [raw], master) == [expected]
 
 
 def test_fuzz_state(spark):

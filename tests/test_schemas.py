@@ -14,9 +14,8 @@ def test_staging_schemas_conform(spark):
           "Mumbai", "MH", "2024-01-15", "P1", "100", "paid")],
         ", ".join(f"{c} string" for c in schemas.REQUIRED_COLUMNS["students_enrollment"]),
     )
-    master = cleaning.city_master_df(spark)
     stg = cleaning.clean_students(
-        students_raw, master, ref_date=F.lit("2026-08-13").cast("date"), batch_id="b"
+        students_raw, ref_date=F.lit("2026-08-13").cast("date"), batch_id="b"
     )
     assert schemas.conforms(stg.schema, schemas.STG_STUDENTS) == []
 
