@@ -134,12 +134,3 @@ def learn_bpe(docs: DataFrame, n_merges: int) -> list[dict]:
     if handle is not None:
         handle.release()
     return out
-
-
-def segment_words(types: DataFrame, merges: list[dict]) -> DataFrame:
-    """Apply a learned merge list to a word-type table (in rank order) —
-    the 'tokenize with the learned vocab' half of BPE."""
-    syms = F.col("syms")
-    for m in sorted(merges, key=lambda m: m["rank"]):
-        syms = apply_merge(syms, m["left"], m["right"])
-    return types.select("word", "n", syms.alias("syms"))

@@ -1,15 +1,9 @@
-"""Pipeline metrics instrumentation (reference §2.9: Prometheus counters
-around cleaning, LLM calls, and streaming — operators/data_cleaning.py:31-34,
-kafka/streaming.py:20-22).
+"""Pipeline metrics instrumentation (reference §2.9: counters around
+cleaning — operators/data_cleaning.py:31-34).
 
-Spark-first equivalents:
-- Batch: ``df.observe()`` named metrics — collected on the driver when the
-  action completes, zero extra passes over the data. ``write_counted`` is
-  how the batch pipeline counts every table it writes.
-- Streaming: a ``StreamingQueryListener`` exposing per-batch row counts
-  (the consumer-lag-style metrics the docx asks for).
-Export to Prometheus is a driver-side concern (prometheus_client, not
-bundled); these helpers produce the numbers.
+Spark-first equivalent: ``df.observe()`` named metrics, collected on the
+driver when the action completes, with zero extra passes over the data.
+``write_counted`` is how the batch pipeline counts every table it writes.
 """
 
 from __future__ import annotations
@@ -57,60 +51,3 @@ def observe_cleaning(df: DataFrame, quality_col: str = "quality_score",
     )
     return CleaningObservation(obs, observed)
 
-
-class BatchProgressListener:
-    """StreamingQueryListener collecting per-batch input row counts.
-
-    Import-guarded so environments without the listener API degrade softly.
-    """
-
-    def __init__(self):
-        self.batches: list[dict] = []
-        try:
-            from pyspark.sql.streaming import StreamingQueryListener
-        except ImportError:  # pragma: no cover
-            self.listener = None
-            return
-
-        outer = self
-
-        class _Listener(StreamingQueryListener):
-            def onQueryStarted(self, event):
-                pass
-
-            def onQueryProgress(self, event):
-                p = event.progress
-                try:
-                    duration = (p.durationMs or {}).get("triggerExecution")
-                except Exception:
-                    duration = None
-                outer.batches.append(
-                    {
-                        "batch_id": p.batchId,
-                        "num_input_rows": p.numInputRows,
-                        "sink": str(p.sink.description) if p.sink else None,
-                        "batch_duration_seconds": (
-                            duration / 1000.0 if duration is not None else None
-                        ),
-                    }
-                )
-
-            def onQueryIdle(self, event):
-                pass
-
-            def onQueryTerminated(self, event):
-                pass
-
-        self.listener = _Listener()
-
-    def attach(self, spark) -> None:
-        if self.listener is not None:
-            spark.streams.addListener(self.listener)
-
-    def detach(self, spark) -> None:
-        if self.listener is not None:
-            spark.streams.removeListener(self.listener)
-
-    @property
-    def total_rows(self) -> int:
-        return sum(b["num_input_rows"] for b in self.batches)

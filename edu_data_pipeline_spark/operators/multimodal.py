@@ -7,13 +7,12 @@ video alongside text (BASELINE north star). Design:
   struct (media_type, width/height, n_frames, sample_rate, n_bytes) —
   Parquet stores the bytes column-oriented, Spark never interprets them
   JVM-side.
-- decode / feature-extract / resize / frame-sample run as Arrow-batched
-  ``mapInPandas`` stages: the Spark-side plumbing (schemas, batch
-  iteration, partitioning) is real and tested. The actual codec work is
-  STUBBED: the image/audio libraries are not in this container, so
-  ``_decode_real`` raises ``NotImplementedError`` and the deterministic
-  byte-level fake (``_decode_fake``) stands in. Swapping in PIL/ffmpeg
-  touches only those two functions.
+- decode + feature extraction run as one Arrow-batched ``mapInPandas``
+  stage: the Spark-side plumbing (schemas, batch iteration,
+  partitioning) is real and tested. The codec work is STUBBED: no
+  image/audio library is installed, so the deterministic byte-level
+  fake (``_decode_fake``) decodes. A real codec replaces that one
+  function.
 
 Scale: feature extraction is embarrassingly parallel (mapInPandas, no
 shuffle); batch size is bounded by
@@ -84,18 +83,6 @@ def attach_fake_media(docs: DataFrame) -> DataFrame:
     )
 
 
-def _decode_real(payload: bytes, media_type: str):
-    """Real codec hook — intentionally unimplemented in this container.
-
-    A deployment with PIL/torchaudio/ffmpeg installed implements this and
-    ``extract_features`` picks it up automatically.
-    """
-    raise NotImplementedError(
-        "media codecs are not available in this environment; "
-        "extract_features uses the deterministic byte-level fake"
-    )
-
-
 def _decode_fake(payload: bytes) -> list[float]:
     """Deterministic stand-in decode: 16-bin byte histogram, L1-normalized."""
     counts = [0] * N_FEATURE_BINS
@@ -105,18 +92,12 @@ def _decode_fake(payload: bytes) -> list[float]:
     return [c / total for c in counts]
 
 
-def extract_features(media: DataFrame, use_real_codec: bool = False) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary payload column."""
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = []
-            for payload, mtype in zip(pdf["payload"], pdf["media_type"]):
-                raw = bytes(payload)
-                if use_real_codec:
-                    feats.append(_decode_real(raw, mtype))  # pragma: no cover
-                else:
-                    feats.append(_decode_fake(raw))
+            feats = [_decode_fake(bytes(p)) for p in pdf["payload"]]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
@@ -128,32 +109,3 @@ def extract_features(media: DataFrame, use_real_codec: bool = False) -> DataFram
 
     return media.mapInPandas(_extract, FEATURE_SCHEMA)
 
-
-def resize_media(media: DataFrame, max_bytes: int = 1024) -> DataFrame:
-    """Payload 'resize' (truncate stand-in for a real rescale): native
-    expressions only — no Python in the hot path for byte slicing."""
-    clipped = F.expr(f"substring(payload, 1, {max_bytes})")
-    return media.select(
-        "doc_id",
-        "media_type",
-        clipped.alias("payload"),
-        F.col("meta").withField("n_bytes", F.least(F.col("meta.n_bytes"), F.lit(max_bytes))).alias("meta"),
-    )
-
-
-def sample_frames(media: DataFrame, every_nth: int = 10) -> DataFrame:
-    """Frame sampling for video payloads: one row per sampled frame index,
-    frame payload sliced from the blob (fake frames = fixed-width byte
-    strides). Native explode — the shuffle-free fan-out pattern a real
-    frame sampler would use."""
-    frames = F.sequence(F.lit(0), F.col("meta.n_frames") - 1, F.lit(every_nth))
-    frame_width = 64
-    exploded = (
-        media.where(F.col("media_type") == "video")
-        .select("doc_id", "meta", F.explode(frames).alias("frame_idx"))
-    )
-    return exploded.select(
-        "doc_id",
-        "frame_idx",
-        F.lit(frame_width).alias("frame_bytes"),
-    )

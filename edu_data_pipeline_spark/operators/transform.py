@@ -49,32 +49,6 @@ def student_progress_summary(
     return progress.agg(*aggs)
 
 
-def course_summary(progress: DataFrame, per_course: bool = True) -> DataFrame:
-    """A2 (transformations.py:103-126): enrollments / completion / score."""
-    student_present = F.col("student_id").isNotNull() & (F.col("student_id") != "")
-    aggs = [
-        F.count_distinct(F.when(student_present, F.col("student_id"))).alias(
-            "total_enrollments"
-        ),
-        F.avg(
-            F.coalesce(F.col("completion_percentage").cast("double"), F.lit(0.0))
-        ).alias("avg_completion_rate"),
-        F.avg(F.col("score").cast("double")).alias("avg_score"),
-    ]
-    if per_course:
-        return progress.groupBy("course_id").agg(*aggs)
-    return progress.agg(*aggs)
-
-
-def quality_summary(df: DataFrame) -> DataFrame:
-    """A3 (dags/data_cleaning_pipeline.py:28-37): flagged vs total counts."""
-    return df.agg(
-        F.count(F.when(F.col("quality_score") < 100, 1)).alias("records_with_issues"),
-        F.count(F.lit(1)).alias("total_records"),
-        F.avg(F.col("quality_score").cast("double")).alias("avg_quality_score"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # AI enrichment (deterministic stubs — agents/langgraph_workflow.py)
 # ---------------------------------------------------------------------------

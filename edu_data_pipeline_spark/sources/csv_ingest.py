@@ -1,4 +1,4 @@
-"""CSV ingestion sources/sinks (reference S1-S5, SURVEY §2.1).
+"""CSV ingestion sources/sinks (reference S2-S4, SURVEY §2.1).
 
 The raw layer is stringly typed on purpose (init_schema.sql:26-101):
 every CSV column is read as a string and typing happens during cleaning.
@@ -11,6 +11,7 @@ replicating ``dags/file_ingestion_pipeline.py:88-92``.
 
 from __future__ import annotations
 
+import csv
 import os
 import uuid
 from dataclasses import dataclass, field
@@ -54,19 +55,6 @@ class ValidationResult:
     problems: list[str] = field(default_factory=list)
 
 
-def detect_new_files(input_dir: str, fallback_dir: str | None = None) -> list[str]:
-    """S1 (dags/file_ingestion_pipeline.py:26-43): probe the fixed dataset
-    list in input_dir (with a fallback dir), return found CSV paths."""
-    found = []
-    for name in REQUIRED_COLUMNS:
-        for base in filter(None, [input_dir, fallback_dir]):
-            path = os.path.join(base, f"{name}.csv")
-            if os.path.exists(path):
-                found.append(path)
-                break
-    return found
-
-
 def validate_file(
     path: str,
     required_columns: list[str],
@@ -83,13 +71,14 @@ def validate_file(
     if size_mb > max_size_mb:
         res.ok = False
         res.problems.append(f"file-too-large:{size_mb:.1f}MB>{max_size_mb}MB")
-    with open(path, newline="") as f:
-        header_line = f.readline().strip()
-    if not header_line:
+    # a CSV parse of the first line, as Spark's reader sees it: quoted
+    # names, and a UTF-8 byte-order mark that is not part of the first name
+    with open(path, newline="", encoding="utf-8-sig", errors="replace") as f:
+        header = [h.strip() for h in next(csv.reader(f), [])]
+    if not any(header):
         res.ok = False
         res.problems.append("empty-header")
         return res
-    header = [h.strip() for h in header_line.split(",")]
     missing = [c for c in required_columns if c not in header]
     if missing:
         res.ok = False
@@ -150,47 +139,3 @@ def append_raw(df: DataFrame, path: str) -> None:
     INSERT-only raw tables, db.py:32-42)."""
     df.write.mode("append").parquet(path)
 
-
-def read_with_corrupt_routing(
-    spark: SparkSession,
-    path: str,
-    required_columns: list[str],
-) -> tuple[DataFrame, DataFrame]:
-    """PERMISSIVE read with malformed rows routed to a DLQ frame.
-
-    The reference drops records whose cleaning function raises and counts
-    them (operators/data_cleaning.py:61-64); the Spark-first analog
-    captures unparseable CSV rows in ``_corrupt_record`` at scan time and
-    routes them out instead of failing the job. Returns (good, corrupt).
-
-    Cache-lifecycle convention: both returned frames share ONE cached
-    parse enrolled in the process-global tracked registry
-    (``edu_data_pipeline_spark.caches``). The harnesses (bench, parity
-    sweep, pipeline) call ``release_caches()`` after consuming each
-    query's output; an AD-HOC caller owns that call itself — consume
-    BOTH branches, then ``caches.release_caches()`` — and must not hold
-    the frames across someone else's ``release_caches()`` (a later
-    global flush unpersists this cache too; results stay correct but
-    the full PERMISSIVE parse silently recomputes per branch).
-    """
-    schema = T.StructType(
-        [T.StructField(c, T.StringType()) for c in required_columns]
-        + [T.StructField("_corrupt_record", T.StringType())]
-    )
-    from ..caches import persist_tracked
-
-    df = persist_tracked(  # required: corrupt-record column cannot be
-        # filtered per-query without materializing the parse (Spark
-        # constraint); tracked so release_caches() frees it after the
-        # caller consumes both branches
-        spark.read.option("header", True)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .schema(schema)
-        .csv(path)
-    )
-    good = df.where(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
-    corrupt = df.where(F.col("_corrupt_record").isNotNull()).select(
-        F.col("_corrupt_record").alias("raw_line")
-    )
-    return good, corrupt

@@ -369,25 +369,6 @@ def dedup_event_stream(cleaned: DataFrame, watermark: str = "1 hour") -> DataFra
     )
 
 
-def enrich_event_stream(cleaned: DataFrame) -> DataFrame:
-    """Per-event AI-enrichment stub for the ``processed.enriched.events``
-    topic (reference publishes enriched events between cleaning and
-    alerting). Deterministic A9 risk columns — streaming events are by
-    definition recent activity, and events carry no payment state, so the
-    score reduces to the completion term; the full rule stays shared with
-    the batch enricher (operators/transform.risk_score)."""
-    from ..operators.transform import risk_score
-
-    score, bucket = risk_score(
-        F.lit(True),
-        F.col("completion_percentage").cast("double"),
-        F.lit("completed"),
-    )
-    return cleaned.withColumn("ai_risk_score", score.cast("double")).withColumn(
-        "ai_risk_category", bucket
-    )
-
-
 def enrich_stream_with_dim(
     cleaned: DataFrame, dim: DataFrame, key: str = "student_id"
 ) -> DataFrame:

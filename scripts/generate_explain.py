@@ -9,7 +9,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from edu_data_pipeline_spark.session import get_spark
 from edu_data_pipeline_spark.suite import load_all
-from edu_data_pipeline_spark.plans import inspect
 
 QUERIES = [
     "pricing_summary", "region_revenue", "top_customer_per_nation",
@@ -50,7 +49,10 @@ def main():
         df = reg[name].fn(spark, "/root/testdata/sf0.01")
         out.append(f"## {name}\n")
         out.append("```")
-        out.append(inspect.formatted_plan(df).strip())
+        plan = spark.sparkContext._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        out.append(plan.strip())
         out.append("```\n")
     with open("EXPLAIN.md", "w") as f:
         f.write("\n".join(out))

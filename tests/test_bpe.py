@@ -1,5 +1,4 @@
-"""BPE merge learning: golden hand-computed merges, fold semantics,
-segmentation round trip."""
+"""BPE merge learning: golden hand-computed merges, fold semantics."""
 
 from __future__ import annotations
 
@@ -8,7 +7,6 @@ from pyspark.sql import functions as F
 from edu_data_pipeline_spark.operators.bpe import (
     apply_merge,
     learn_bpe,
-    segment_words,
     top_pair,
     word_types,
 )
@@ -57,15 +55,6 @@ def test_learn_bpe_golden(spark):
         ("low", "</w>", 5),
         ("e", "r", 2),
     ]
-
-
-def test_segment_words_roundtrip(spark):
-    docs = _docs(spark, ["low low low low low", "lower lower"])
-    merges = learn_bpe(docs, 4)
-    seg = {r["word"]: r["syms"] for r in
-           segment_words(word_types(docs), merges).collect()}
-    assert seg["low"] == ["low</w>"]
-    assert seg["lower"] == ["low", "er", "</w>"]
 
 
 def test_registry_entry_runs(spark):

@@ -7,7 +7,7 @@ merge application) were previously pinned only by a golden example test
 plus the merge-1 oracle row ``docs_bpe_pair_stats``. The r12/r13 fuzz
 precedent (4 real bugs in two rounds, all in exactly such "composite
 with an under-sampled input space" operators) says this is where bugs
-hide. These properties drive ``learn_bpe`` + ``segment_words`` against
+hide. These properties drive ``learn_bpe`` + ``apply_merge`` against
 a literal pure-Python Sennrich twin (arXiv:1508.07909, the reference
 learn_bpe algorithm) over generated corpora stressing the classes the
 golden test under-samples:
@@ -38,11 +38,12 @@ from collections import Counter
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from edu_data_pipeline_spark.operators.bpe import (
     END_OF_WORD,
+    apply_merge,
     learn_bpe,
-    segment_words,
     word_types,
 )
 
@@ -118,9 +119,13 @@ def _run(spark, texts: list[str], n_merges: int):
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
     merges = learn_bpe(docs, n_merges)
+    # re-apply the learned list, in rank order, to the raw word types
+    syms = F.col("syms")
+    for m in merges:
+        syms = apply_merge(syms, m["left"], m["right"])
     seg = {
         r["word"]: (r["n"], tuple(r["syms"]))
-        for r in segment_words(word_types(docs), merges).collect()
+        for r in word_types(docs).select("word", "n", syms.alias("syms")).collect()
     }
     return merges, seg
 
@@ -131,7 +136,7 @@ def test_learn_bpe_matches_sennrich_twin(spark, texts, n_merges):
     want_merges, want_wc, want_syms = _twin_learn(texts, n_merges)
     got_merges, got_seg = _run(spark, texts, n_merges)
     assert got_merges == want_merges
-    # segment_words re-applies the learned list from raw word types, so
+    # _run re-applies the learned list from raw word types, so
     # this also pins the fold-based apply path against the scan twin
     assert got_seg == {
         w: (want_wc[w], want_syms[w]) for w in want_wc

@@ -15,13 +15,26 @@ stu-002,jane smith,jane@email,9876543211,15/05/1999,F,mumbai,MH,2024-01-16,prog0
 def test_detect_and_validate(tmp_path):
     path = tmp_path / "students_enrollment.csv"
     path.write_text(STUDENTS_CSV)
-    found = csv_ingest.detect_new_files(str(tmp_path))
-    assert [p.endswith("students_enrollment.csv") for p in found] == [True]
-
-    res = csv_ingest.validate_file(
-        str(path), csv_ingest.REQUIRED_COLUMNS["students_enrollment"]
-    )
+    required = csv_ingest.REQUIRED_COLUMNS["students_enrollment"]
+    res = csv_ingest.validate_file(str(path), required)
     assert res.ok
+
+    # a UTF-8 byte-order mark and quoted names are still the same header
+    bom = tmp_path / "bom.csv"
+    bom.write_text(STUDENTS_CSV, encoding="utf-8-sig")
+    assert csv_ingest.validate_file(str(bom), required).ok
+    quoted = tmp_path / "quoted.csv"
+    header, body = STUDENTS_CSV.split("\n", 1)
+    quoted.write_text(",".join(f'"{c}"' for c in header.split(",")) + "\n" + body)
+    assert csv_ingest.validate_file(str(quoted), required).ok
+    short = tmp_path / "short.csv"
+    short.write_text(STUDENTS_CSV.replace("email,", "", 1), encoding="utf-8-sig")
+    res_short = csv_ingest.validate_file(str(short), required)
+    assert not res_short.ok and res_short.problems == ["missing-columns:['email']"]
+    # a non-UTF-8 byte in a row is Spark's to read, not a pre-flight crash
+    latin = tmp_path / "latin.csv"
+    latin.write_bytes(STUDENTS_CSV.replace("JOHN", "JOS\xc9").encode("latin-1"))
+    assert csv_ingest.validate_file(str(latin), required).ok
 
     bad = tmp_path / "student_progress.csv"
     bad.write_text("event_id,student_id\nx,y\n")
@@ -49,6 +62,14 @@ def test_read_raw_all_strings_with_lineage(spark, tmp_path):
     assert rows[0].file_name == "students_enrollment.csv"
     assert rows[0].batch_id == "b1"
     assert rows[1].fee_paid == "50,000"  # quoted comma preserved as raw text
+
+    # a byte-order mark changes nothing Spark reads
+    bom = tmp_path / "bom.csv"
+    bom.write_text(STUDENTS_CSV, encoding="utf-8-sig")
+    bom_df = csv_ingest.read_raw_csv(
+        spark, str(bom), csv_ingest.REQUIRED_COLUMNS["students_enrollment"]
+    )
+    assert sorted(bom_df.collect()) == sorted(df.collect())
 
 
 def test_read_raw_rejects_invalid(spark, tmp_path):

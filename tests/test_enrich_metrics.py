@@ -1,51 +1,10 @@
-"""Enrichment fallback, observe() metrics, quality log, fuzzy duplicates."""
+"""observe() metrics, quality log, fuzzy duplicates."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from edu_data_pipeline_spark.operators import cleaning, enrich, metrics
-
-
-def students(spark):
-    return spark.createDataFrame(
-        [
-            ("STU001", True, 80.0, "completed"),
-            ("STU002", False, 10.0, "pending"),
-        ],
-        "student_id string, recent boolean, completion double, payment string",
-    )
-
-
-def test_enrich_native(spark):
-    out = enrich.enrich_students_native(
-        students(spark), F.col("recent"), F.col("completion"), F.col("payment")
-    )
-    rows = {r.student_id: r for r in out.collect()}
-    assert rows["STU001"].ai_risk_score == 0.0
-    assert rows["STU002"].ai_risk_score == 60.0
-    assert rows["STU002"].ai_risk_category == "High"
-
-
-def test_enrich_external_success_and_fallback(spark):
-    df = students(spark)
-
-    def good_fn(pdf):
-        pdf["ai_risk_score"] = pdf["completion"] * 2
-        pdf["ai_risk_category"] = "External"
-        return pdf
-
-    out = {r.student_id: r for r in enrich.enrich_students_external(df, good_fn).collect()}
-    assert out["STU001"].ai_risk_score == 160.0
-    assert out["STU001"].ai_risk_category == "External"
-
-    def bad_fn(pdf):
-        raise RuntimeError("endpoint down")
-
-    fb = {r.student_id: r for r in enrich.enrich_students_external(df, bad_fn).collect()}
-    # per-batch degrade to the reference's constant stub values
-    assert fb["STU001"].ai_risk_score == 42.0
-    assert fb["STU001"].ai_risk_category == "Medium"
+from edu_data_pipeline_spark.operators import cleaning, metrics
 
 
 def test_observe_cleaning_metrics(spark):
@@ -101,34 +60,3 @@ def test_fuzzy_duplicates(spark):
     assert not out["C"].is_email_dup  # NULL emails never match each other
     assert out["E"].is_fuzzy_duplicate is False
 
-
-def test_streaming_listener(spark, tmp_path):
-    import json, os
-    from edu_data_pipeline_spark.streaming import jobs
-
-    src = str(tmp_path / "ev")
-    os.makedirs(src)
-    with open(os.path.join(src, "b.json"), "w") as f:
-        for i in range(5):
-            f.write(json.dumps({"event_id": f"e{i}", "student_id": "STU001",
-                                "course_id": "C1", "event_type": "x",
-                                "event_timestamp": "2024-02-01T10:00:00",
-                                "duration_seconds": "1", "score": "50",
-                                "module_id": "M", "completion_percentage": "10"}) + "\n")
-    listener = metrics.BatchProgressListener()
-    listener.attach(spark)
-    try:
-        stream = jobs.read_event_stream_json(spark, src)
-        q = (stream.writeStream.format("memory").queryName("mx").outputMode("append").start())
-        q.processAllAvailable()
-        q.stop()
-        spark.streams.resetTerminated()
-        import time
-
-        for _ in range(40):  # listener bus delivers asynchronously
-            if listener.total_rows >= 5:
-                break
-            time.sleep(0.25)
-        assert listener.total_rows >= 5
-    finally:
-        listener.detach(spark)

@@ -8,12 +8,13 @@ the cache registry. A module the walk never reaches has no production
 caller; it must be wired in, deleted, or listed in ``KEPT_UNREACHED`` with
 the reason it stays.
 
-The same walk then goes one level down, into the top-level functions of
-the reached ``streaming``, ``operators``, ``functions`` and ``sources``
-modules and of the top-level ``parity``, ``caches``, ``session`` and
-``pipeline`` modules: a function no package module (outside its own body)
-and no ``perfbench`` module names must be listed in ``KEPT_UNREFERENCED``
-with the reason it stays.
+The same walk then goes one level down, into the top-level functions and
+classes of the reached ``streaming``, ``operators``, ``functions`` and
+``sources`` modules and of the top-level ``parity``, ``caches``,
+``session`` and ``pipeline`` modules: one that no package module (outside
+its own body) and no ``perfbench`` module names must be listed in
+``KEPT_UNREFERENCED`` with the reason it stays. A function's parameter of
+the same name is not a mention.
 
 The ``suite`` modules get the same check, by reachability rather than by
 mention: a top-level suite function must be reached from a ``@register``ed
@@ -49,17 +50,10 @@ ROOTS = (
 )
 
 # Unreached on purpose, one line of reason each.
-KEPT_UNREACHED = {
-    "operators.prometheus": "Prometheus text registry; to be fed by engine stage spans",
-    "streaming.kafka_io": "the reference's Kafka topics as stream source and sink",
-    "operators.enrich": "stubbed AI enrichment of the reference",
-    "operators.reports": "the reference's summary report",
-    "schemas": "reference DDL for the schema conformance check",
-    "plans.inspect": "plan-assertion helper the tests use",
-}
+KEPT_UNREACHED: dict[str, str] = {}
 
-# Top-level functions of the FUNCTION_SCOPE_* modules that no package or
-# perfbench code references, one line of reason each.
+# Top-level functions and classes of the FUNCTION_SCOPE_* modules that no
+# package or perfbench code references, one line of reason each.
 KEPT_UNREFERENCED = {
     "streaming.jobs.simulated_event_stream": "S6 reference rate producer, tested",
     "streaming.jobs.foreach_batch_upsert": "S7 reference upsert sink, tested",
@@ -72,13 +66,7 @@ KEPT_UNREFERENCED = {
     "streaming.jobs.run_available_now": "scheduled drain of the stream backlog, tested",
     "streaming.jobs.enrich_stream_with_dim": "stream-static student enrichment, tested",
     "streaming.jobs.stream_stream_attribution": "watch-to-completion interval join, tested",
-    "operators.transform.course_summary": "A2 reference course aggregate, tested",
     "operators.metrics.observe_cleaning": "observed cleaning gauges for the run record, tested",
-    "operators.bpe.segment_words": "applies learn_bpe's merges; round-trip tested",
-    "operators.multimodal.resize_media": "media resize stage beside extract_features, tested",
-    "operators.multimodal.sample_frames": "video frame sampling stage, tested",
-    "sources.csv_ingest.detect_new_files": "S1 reference new-file sensor, tested",
-    "sources.csv_ingest.read_with_corrupt_routing": "S2 malformed-row quarantine read, tested",
     "caches.live_checkpoints": "live checkpoint count the cache-release tests assert on",
 }
 
@@ -90,8 +78,8 @@ KEPT_UNREACHED_SUITE: dict[str, str] = {}
 
 PERFBENCH_DIR = PKG_DIR.parent / "perfbench"
 
-# Reached modules whose top-level functions must each have a reference:
-# every module of these packages, and these top-level modules.
+# Reached modules whose top-level functions and classes must each have a
+# reference: every module of these packages, and these top-level modules.
 FUNCTION_SCOPE_PACKAGES = ("streaming.", "operators.", "functions.", "sources.")
 FUNCTION_SCOPE_MODULES = ("parity", "caches", "session", "pipeline")
 
@@ -196,27 +184,39 @@ def test_kept_modules_are_really_unreached():
 
 def _names(tree: ast.AST, skip: ast.AST | None = None) -> set[str]:
     """Every name a tree refers to (variables, attributes, imported
-    names), leaving out the subtree ``skip``."""
+    names), leaving out the subtree ``skip``. Inside a function or lambda
+    a bare name that is one of its parameters is that parameter, not a
+    reference; its decorators, defaults and annotations are read in the
+    enclosing scope."""
     out: set[str] = set()
-    todo = [tree]
+    todo: list[tuple[ast.AST, frozenset]] = [(tree, frozenset())]
     while todo:
-        node = todo.pop()
+        node, params = todo.pop()
         if node is skip:
             continue
         if isinstance(node, ast.Name):
-            out.add(node.id)
+            if node.id not in params:
+                out.add(node.id)
         elif isinstance(node, ast.Attribute):
             out.add(node.attr)
         elif isinstance(node, ast.alias):
             out.add(node.name.rsplit(".", 1)[-1])
-        todo.extend(ast.iter_child_nodes(node))
+        children = list(ast.iter_child_nodes(node))
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            a = node.args
+            args = (*a.posonlyargs, *a.args, *a.kwonlyargs, a.vararg, a.kwarg)
+            inner = params | {arg.arg for arg in args if arg is not None}
+            body = node.body if isinstance(node.body, list) else [node.body]
+            todo.extend((child, inner) for child in body)
+            children = [c for c in children if not any(c is b for b in body)]
+        todo.extend((child, params) for child in children)
     return out
 
 
 def _unreferenced_functions() -> set[str]:
-    """``module.function`` for each top-level function of a reached module
-    in the function scope that no package module (outside the function's
-    own body) and no perfbench module names."""
+    """``module.name`` for each top-level function or class of a reached
+    module in the function scope that no package module (outside its own
+    body) and no perfbench module names."""
     modules = _all_modules()
     trees = {
         path: ast.parse(path.read_text(), filename=str(path))
@@ -230,7 +230,9 @@ def _unreferenced_functions() -> set[str]:
             continue
         path = modules[name]
         for fn in trees[path].body:
-            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            if not isinstance(
+                fn, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
                 continue
             if fn.name in _names(trees[path], skip=fn) or any(
                 fn.name in names for p, names in seen.items() if p != path

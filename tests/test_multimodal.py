@@ -2,9 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from edu_data_pipeline_spark.operators import multimodal
 
 
@@ -37,26 +34,6 @@ def test_extract_features_deterministic(spark):
     assert len(by_id[0].features) == multimodal.N_FEATURE_BINS
     assert abs(sum(by_id[0].features) - 1.0) < 1e-9  # L1-normalized histogram
     assert by_id[0].n_bytes == 18
-
-
-def test_real_codec_is_stubbed(spark):
-    media = multimodal.attach_fake_media(make_docs(spark))
-    with pytest.raises(Exception) as err:
-        multimodal.extract_features(media, use_real_codec=True).collect()
-    assert "NotImplementedError" in str(err.value) or "media codecs" in str(err.value)
-
-
-def test_resize_and_frame_sampling(spark):
-    media = multimodal.attach_fake_media(make_docs(spark))
-    resized = multimodal.resize_media(media, max_bytes=10)
-    for r in resized.collect():
-        assert len(bytes(r.payload)) <= 10
-        assert r.meta.n_bytes <= 10
-    frames = multimodal.sample_frames(media, every_nth=1)
-    got = {(r.doc_id, r.frame_idx) for r in frames.collect()}
-    # doc 2 is video with n_frames = 2 % 30 + 1 = 3 -> frames 0,1,2
-    assert {(2, 0), (2, 1), (2, 2)} <= got
-    assert all(doc_id % 3 == 2 for doc_id, _ in got)  # only video rows
 
 
 def test_features_shuffle_invariant(spark):

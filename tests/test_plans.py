@@ -4,18 +4,43 @@ from __future__ import annotations
 
 import pytest
 
-from edu_data_pipeline_spark.plans import inspect
 from edu_data_pipeline_spark.suite import load_all
 
 SF_DIR = "/root/testdata/sf0.001"
 REGISTRY = load_all()
 
 
+def formatted_plan(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def has_broadcast_join(df) -> bool:
+    plan = formatted_plan(df)
+    return "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+
+
+def has_python_eval(df) -> bool:
+    plan = formatted_plan(df)
+    return any(
+        node in plan for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas")
+    )
+
+
+def plan_lines(df, marker: str) -> list[str]:
+    """Formatted-plan lines naming ``marker`` (``PushedFilters`` shows
+    predicate pushdown into the scan, ``ReadSchema`` column pruning)."""
+    return [
+        line.strip() for line in formatted_plan(df).splitlines() if marker in line
+    ]
+
+
 def test_filters_and_pruning_reach_scan(spark):
     df = REGISTRY["pricing_summary"].fn(spark, SF_DIR)
-    pushed = "\n".join(inspect.pushed_filters(df))
+    pushed = "\n".join(plan_lines(df, "PushedFilters"))
     assert "l_shipdate" in pushed  # predicate pushdown into parquet
-    schema = "\n".join(inspect.scan_columns(df))
+    schema = "\n".join(plan_lines(df, "ReadSchema"))
     assert "l_orderkey" not in schema  # column pruning: unused columns absent
     assert "l_quantity" in schema
 
@@ -23,7 +48,7 @@ def test_filters_and_pruning_reach_scan(spark):
 def test_dim_joins_broadcast(spark):
     for name in ["region_revenue", "top_orders", "customer_360", "top_customer_per_nation"]:
         df = REGISTRY[name].fn(spark, SF_DIR)
-        assert inspect.has_broadcast_join(df), f"{name} should broadcast its dims"
+        assert has_broadcast_join(df), f"{name} should broadcast its dims"
 
 
 def test_no_python_in_hot_paths(spark):
@@ -31,7 +56,7 @@ def test_no_python_in_hot_paths(spark):
                  "clean_cities", "minhash_lsh_pairs", "docs_simhash",
                  "knn_bruteforce"]:
         df = REGISTRY[name].fn(spark, SF_DIR)
-        assert not inspect.has_python_eval(df), f"{name} must stay JVM-side"
+        assert not has_python_eval(df), f"{name} must stay JVM-side"
 
 
 def _city_match_plan_counts(df):
@@ -66,7 +91,7 @@ def test_city_match_is_projections_only(spark, tmp_path):
 
 def test_multimodal_is_the_only_python_path(spark):
     df = REGISTRY["multimodal_features"].fn(spark, SF_DIR)
-    assert inspect.has_python_eval(df)  # by design: Arrow-batched mapInPandas
+    assert has_python_eval(df)  # by design: Arrow-batched mapInPandas
 
 
 def test_bucketed_join_avoids_shuffle(spark, tmp_path):
@@ -93,7 +118,7 @@ def test_bucketed_join_avoids_shuffle(spark, tmp_path):
     # disable broadcast so the co-located SMJ path is what's being tested
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        plan = inspect.formatted_plan(joined)
+        plan = formatted_plan(joined)
         assert "Exchange" not in plan, plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -113,7 +138,7 @@ def test_partitioned_write_prunes(spark, tmp_path):
     )
     e.write.partitionBy("date_key").mode("overwrite").parquet(path)
     one_day = spark.read.parquet(path).where(F.col("date_key") == 20240105)
-    plan = inspect.formatted_plan(one_day)
+    plan = formatted_plan(one_day)
     assert "PartitionFilters" in plan
     assert "20240105" in plan  # the filter reached partition pruning
     n_total = spark.read.parquet(path).count()
@@ -127,7 +152,7 @@ def test_range_join_is_bucketed_equi_join(spark):
     from edu_data_pipeline_spark.suite import load_all
 
     df = load_all()["events_range_join"].fn(spark, SF_DIR)
-    plan = inspect.formatted_plan(df)
+    plan = formatted_plan(df)
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
 
@@ -167,7 +192,7 @@ def test_basket_lift_single_lineitem_pass(spark):
     contain InMemoryTableScan nodes and at most one lineitem parquet scan
     (r3 VERDICT: uncached 4x reuse of the biggest join in the query)."""
     df = REGISTRY["brand_basket_lift"].fn(spark, SF_DIR)
-    plan = inspect.formatted_plan(df)
+    plan = formatted_plan(df)
     assert "InMemoryTableScan" in plan, plan
     lineitem_scans = [
         line for line in plan.splitlines()

@@ -307,26 +307,6 @@ def test_stream_session_windows(spark, tmp_path):
     assert s2.avg_score == 90.0
 
 
-def test_stream_enrichment_columns(spark, tmp_path):
-    src = str(tmp_path / "events")
-    write_events(src, EVENTS_BATCH_1, "b1.json")
-    stream = jobs.read_event_stream_json(spark, src)
-    cleaned = jobs.clean_event_stream(stream, ref_ts=ref_ts())
-    enriched = jobs.enrich_event_stream(cleaned)
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName("enr_sink")
-        .outputMode("append")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = {r.event_id: r for r in spark.sql("SELECT * FROM enr_sink").collect()}
-    # evt-001: completion 50 -> risk 0/Low; evt-003: completion 10 -> +25 Medium
-    assert (rows["evt-001"].ai_risk_score, rows["evt-001"].ai_risk_category) == (0.0, "Low")
-    assert (rows["evt-003"].ai_risk_score, rows["evt-003"].ai_risk_category) == (25.0, "Medium")
-
-
 def test_stream_stream_attribution(spark, tmp_path):
     """Stream-stream interval join: completions attribute to same-student
     watches within the preceding 30 min; outside-window and cross-student

@@ -177,14 +177,6 @@ def test_progress_and_course_summaries(spark):
     glob = transform.student_progress_summary(progress, now, per_student=False).collect()[0]
     assert glob.total_courses_enrolled == 2 and glob.total_modules_completed == 2
 
-    courses = {
-        r.course_id: r for r in transform.course_summary(progress).collect()
-    }
-    assert courses["CRS001"].total_enrollments == 2
-    assert courses["CRS001"].avg_completion_rate == 100.0
-    assert courses["CRS001"].avg_score == 75.0
-    assert courses[None].avg_completion_rate == 0.0  # null completion -> 0
-
 
 def test_approx_sketches_accuracy(spark):
     """HLL distinct within 5% of exact; approx median within p40-p60 band."""
