@@ -451,7 +451,7 @@ def clean_numeric(col: Column | str) -> RuleColumns:
     raw = _s(col)
     empty = raw.isNull() | (_strip(raw) == "")
     stripped = F.regexp_replace(raw, "[^0-9.\\-]", "")
-    number = stripped.cast("double")  # ANSI off: unparseable -> NULL
+    number = stripped.try_cast("double")  # unparseable -> NULL, ANSI on or off
     value = (
         F.when(empty, F.lit(0.0))
         .when(number.isNotNull(), F.abs(number))
@@ -475,7 +475,7 @@ def clean_numeric(col: Column | str) -> RuleColumns:
 def validate_score(col: Column | str) -> RuleColumns:
     """Cast, cap to [0,100] with flag, banker's-round to 2 (Python round())."""
     raw = _s(col)
-    number = _strip(raw).cast("double")
+    number = _strip(raw).try_cast("double")
     capped = F.least(F.greatest(number, F.lit(0.0)), F.lit(100.0))
     value = F.when(number.isNotNull(), F.bround(capped, 2))
     in_range = (number >= 0) & (number <= 100)

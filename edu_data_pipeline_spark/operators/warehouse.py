@@ -135,14 +135,16 @@ def merge_upsert(
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-    # SINGLE-EXCHANGE union fold (r15, VERDICT r14 #4; see apply_cdc for
-    # the full rationale): the r14 shape consumed the deduped feed twice
+    # SINGLE-EXCHANGE union fold (r15, VERDICT r14 #4), shared with
+    # cdc.apply_cdc: the r14 shape consumed the deduped feed twice
     # (anti-join probe + survivor union) with divergent column pruning,
-    # so the updates subtree was evaluated and shuffled twice. Target
-    # rows sort below every update row (cc descending first), so per
-    # key the row_number-1 row is the winning update when one exists
-    # and the per-key max(cc) marker says whether target rows survive —
-    # duplicate-key targets keep ALL rows, exactly like the anti-join.
+    # so ReuseExchange never unified the copies and the updates subtree
+    # was evaluated and shuffled twice. Target rows sort below every
+    # update row (cc descending first), so per key the row_number-1 row
+    # is the winning update when one exists and the per-key max(cc)
+    # marker says whether target rows survive — duplicate-key targets
+    # keep ALL rows, exactly like the anti-join. One exchange, one scan
+    # of each input.
     tagged = updates
     if order_col is None:
         tagged = tagged.withColumn(oc, F.monotonically_increasing_id())

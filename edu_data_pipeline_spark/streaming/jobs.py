@@ -1,38 +1,45 @@
 """Structured Streaming jobs (reference kafka/streaming.py + docx Part 2).
 
-This module is the EduFlow event path and nothing else: the event
-sources, the shared cleaning, DLQ routing, the per-student windows and
-running metrics (A7/A8), the upsert and fan-out sinks, dedup across
-restarts, and the enrichment and stream-join steps. It imports no query
-registry (``suite``) code; ``tests/test_module_reachability.py`` checks
-that.
+This module is the EduFlow event path and nothing else. Its entry point,
+``start_event_stream``, runs the reference's one-consumer, four-output
+topology (SURVEY §3 E3b) as two queries on one cleaned source:
 
-The reference's hand-rolled consumer loop becomes one
-``readStream -> shared cleaning expressions -> watermark + windows ->
-routed sinks`` query. Key wins over the reference:
+- the events query upserts the valid events into ``staging.stg_progress``
+  (S7) and writes the invalid ones to a DLQ (S8);
+- the metrics query keeps the per-student sliding windows with their
+  anomaly flag (A7/A8), upserts them into ``stream/student_metrics`` and
+  writes the anomalous rows to an alerts sink (S9).
+
+The parts it is built from are public: the JSON file source
+(``read_event_stream_json``), the shared cleaning
+(``clean_event_stream``), the DLQ split (``route_streams``) and the
+windows (``windowed_student_metrics``). It imports no query registry
+(``suite``) code; ``tests/test_module_reachability.py`` checks that.
+Key wins over the reference:
 
 - The SAME Column expressions clean batch and stream (the reference
-  duplicates cleaning logic between operators and the Kafka consumer).
+  duplicates cleaning logic between operators and the Kafka consumer),
+  and the stream upserts into the batch load's own table.
 - The count-bounded "window" placeholder (kafka/streaming.py:72-75)
-  becomes real event-time tumbling/sliding windows with a watermark —
-  the docx-specified 1-min/5-min windows.
+  becomes real event-time sliding windows with a watermark — the
+  docx-specified 1-min/5-min windows.
 - Late-data policy (the reference has none): events later than the
-  watermark are dropped by Spark; the watermark is a constructor
-  parameter and documented per-job.
-- DLQ/alerts are filtered side-outputs of the one cleaned stream, not
-  separate consumer branches.
+  watermark are dropped by Spark; the watermark is a parameter of
+  ``windowed_student_metrics``.
 
-Scale: streaming state is keyed by (student_id[, window]) — partitioned
-state in the state store, no driver-side dicts; ``foreachBatch`` upserts
-go through the same merge writer as batch (exactly-once per checkpoint +
-idempotent MERGE).
+Scale: window state is keyed by (window, student_id) in the state store,
+with no driver-side dicts; both upserts go through the batch load's
+merge writer.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.cleaning import clean_progress
 from ..operators.warehouse import ParquetMergeWriter
@@ -64,39 +71,6 @@ def read_event_stream_json(
     )
 
 
-def simulated_event_stream(spark: SparkSession, rows_per_second: int = 10) -> DataFrame:
-    """Rate-source producer mirroring EventSimulatorProducer
-    (kafka/streaming.py:25-49): synthesizes progress events at
-    ``rows_per_second`` with an event_time stamp and source tag."""
-    rate = spark.readStream.format("rate").option(
-        "rowsPerSecond", rows_per_second
-    ).load()
-    v = F.col("value")
-    return rate.select(
-        F.concat(F.lit("evt-"), v.cast("string")).alias("event_id"),
-        F.concat(F.lit("STU"), F.lpad((v % 50).cast("string"), 3, "0")).alias(
-            "student_id"
-        ),
-        F.concat(F.lit("CRS"), F.lpad((v % 10).cast("string"), 3, "0")).alias(
-            "course_id"
-        ),
-        F.element_at(
-            F.array(F.lit("video_watched"), F.lit("quiz_completed"), F.lit("assignment_submitted")),
-            (v % 3 + 1).cast("int"),
-        ).alias("event_type"),
-        F.date_format("timestamp", "yyyy-MM-dd'T'HH:mm:ss").alias("event_timestamp"),
-        ((v % 100) * 60).cast("string").alias("duration_seconds"),
-        # every ~6th event carries an invalid score to light up the DLQ path
-        F.when(v % 6 == 0, F.lit("not-a-score")).otherwise(
-            ((v % 150)).cast("string")
-        ).alias("score"),
-        F.concat(F.lit("MOD"), F.lpad((v % 5).cast("string"), 3, "0")).alias("module_id"),
-        (v % 110).cast("string").alias("completion_percentage"),
-        F.col("timestamp").alias("ingest_time"),
-        F.lit("rate-simulator").alias("source"),
-    )
-
-
 def clean_event_stream(events: DataFrame, ref_ts: Column | None = None) -> DataFrame:
     """Shared-rules cleaning on the stream (S7's cleaning half).
 
@@ -104,11 +78,15 @@ def clean_event_stream(events: DataFrame, ref_ts: Column | None = None) -> DataF
     SURVEY §2.8 calls out. ``is_valid`` mirrors the reference's per-event
     flag (score parse failure -> invalid, kafka/streaming.py:119-127).
     """
-    # default missing event ids like the reference's streaming writer
-    # (event_id or f"stream-{uuid4()}" — kafka/streaming.py:176)
+    # default a missing event id like the reference's streaming writer
+    # (event_id or f"stream-{uuid4()}" — kafka/streaming.py:176), but
+    # derived from the event itself, so a replayed micro-batch gets the
+    # same ids. Two identical id-less events therefore share one id and
+    # the keyed upsert keeps one row of them.
+    raw = F.to_json(F.struct(*[F.col(c) for c in events.columns]))
     with_ids = events.withColumn(
         "event_id",
-        F.coalesce(F.col("event_id"), F.concat(F.lit("stream-"), F.expr("uuid()"))),
+        F.coalesce(F.col("event_id"), F.concat(F.lit("stream-"), F.sha2(raw, 256))),
     )
     cleaned = clean_progress(with_ids, ref_ts=ref_ts, mark_dupes=False)
     return cleaned.withColumn(
@@ -194,277 +172,76 @@ def active_students_window(
     )
 
 
-def rolling_student_metrics(cleaned: DataFrame) -> DataFrame:
-    """Un-windowed running per-student totals (parity with the reference's
-    StreamAggregator dict, kafka/streaming.py:52-70); update output mode."""
-    return cleaned.groupBy("student_id").agg(
-        F.count(F.lit(1)).alias("count"),
-        F.sum(F.coalesce(F.col("duration_seconds"), F.lit(0))).alias("duration"),
-        F.sum((~F.col("is_valid")).cast("int")).alias("errors"),
-    ).withColumn(
-        "anomaly",
-        (F.col("errors") / F.greatest(F.col("count"), F.lit(1))) > 0.2,
+def start_event_stream(
+    spark: SparkSession, source_dir: str, warehouse_dir: str, checkpoint_dir: str
+) -> list[StreamingQuery]:
+    """Start the event stream (SURVEY §3 E3b) on the JSON files in
+    ``source_dir`` and return its two running queries.
+
+    A stateful window cannot run inside ``foreachBatch``, so the topology
+    is two queries on the one cleaned source, each with its own checkpoint
+    under ``checkpoint_dir``:
+
+    - ``events``: each micro-batch is persisted once; its valid rows are
+      upserted on ``event_id`` into ``<warehouse_dir>/staging/stg_progress``
+      (S7) with the batch load's columns, so batch loads and the stream
+      merge into the one table in either order; its invalid rows, with
+      their ``error``, overwrite ``<warehouse_dir>/stream/dlq/batch_id=N``
+      (S8).
+    - ``metrics``: ``windowed_student_metrics`` in update mode; each
+      micro-batch upserts its updated rows on (``window_start``,
+      ``student_id``) into ``<warehouse_dir>/stream/student_metrics`` (A7)
+      and writes the rows whose ``anomaly`` flag is set (A8:
+      ``errors / count > 0.2``) to ``<warehouse_dir>/stream/alerts/batch_id=N``
+      (S9). An alert is one emission: a window still anomalous after a
+      later micro-batch updates it is alerted again, with its new figures.
+
+    ``foreachBatch`` is at-least-once. Every write is keyed or per batch
+    id, and the cleaning's default event id is derived from the event, so
+    a replayed micro-batch leaves every output as it was.
+    """
+    cleaned = clean_event_stream(read_event_stream_json(spark, source_dir))
+    stg_progress = ParquetMergeWriter(
+        spark, os.path.join(warehouse_dir, "staging", "stg_progress"), ["event_id"]
+    )
+    student_metrics = ParquetMergeWriter(
+        spark, os.path.join(warehouse_dir, "stream", "student_metrics"),
+        ["window_start", "student_id"],
     )
 
+    def per_batch(sink: str, batch_id: int) -> str:
+        return os.path.join(warehouse_dir, "stream", sink, f"batch_id={batch_id}")
 
-def foreach_batch_upsert(writer: ParquetMergeWriter, order_col: str = "event_timestamp"):
-    """S7: stream -> staging upsert on event_id via foreachBatch MERGE.
-
-    Idempotent per batch (keyed merge), so checkpoint replays are safe —
-    the Structured-Streaming equivalent of the reference's
-    INSERT .. ON CONFLICT (event_id) DO UPDATE (kafka/streaming.py:200).
-    """
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        writer.merge(batch_df.withColumn("stream_batch_id", F.lit(batch_id)), order_col=order_col)
-
-    return _write
-
-
-def foreach_batch_fanout(
-    good_path: str,
-    dlq_path: str,
-    alert_path: str,
-    error_rate_threshold: float = 0.2,
-):
-    """One-source/multi-sink batch function: each micro-batch is
-    persisted once, routed to the cleaned sink, the DLQ, and the anomaly
-    alert sink, then unpersisted. Running three writeStream queries
-    would re-read (and re-clean) the source three times and let the
-    sinks drift to different offsets; foreachBatch fan-out costs one
-    source read and keeps all three sinks consistent per batch (the
-    reference consumer also fans a single poll out to its three topics,
-    ``kafka/streaming.py:97-117``)."""
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
+    def write_events(batch: DataFrame, batch_id: int) -> None:
+        batch.persist()
         try:
-            good, dlq = route_streams(batch_df)
-            good.write.mode("append").parquet(good_path)
-            dlq.write.mode("append").parquet(dlq_path)
-            alerts = (
-                good.groupBy("student_id")
-                .agg(
-                    F.count(F.lit(1)).alias("n_events"),
-                    F.sum(
-                        F.when(F.col("event_type") == "error_occurred", 1).otherwise(0)
-                    ).alias("n_errors"),
-                )
-                .where(
-                    F.col("n_errors") / F.col("n_events") > error_rate_threshold
-                )
-                .withColumn("batch_id", F.lit(batch_id))
-            )
-            alerts.write.mode("append").parquet(alert_path)
+            good, dlq = route_streams(batch)
+            stg_progress.merge(good.drop("is_valid"), order_col="event_timestamp")
+            dlq.write.mode("overwrite").parquet(per_batch("dlq", batch_id))
         finally:
-            batch_df.unpersist()
+            batch.unpersist()
 
-    return _write
+    def write_metrics(batch: DataFrame, batch_id: int) -> None:
+        batch.persist()
+        try:
+            student_metrics.merge(batch)
+            alerts = batch.where(F.col("anomaly"))
+            alerts.write.mode("overwrite").parquet(per_batch("alerts", batch_id))
+        finally:
+            batch.unpersist()
 
-
-def run_available_now(
-    stream_df: DataFrame,
-    sink_path: str,
-    checkpoint_path: str,
-) -> None:
-    """Process the source's full current backlog, then stop
-    (``Trigger.AvailableNow``): batch-incremental execution with
-    streaming exactly-once bookkeeping. Each invocation picks up only
-    data that arrived since the last run — the standard way to run a
-    "streaming" pipeline as a scheduled job on a cluster (pay for
-    executors only while the backlog drains)."""
-    q = (
-        stream_df.writeStream.format("parquet")
-        .option("path", sink_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def count_bounded_metrics(cleaned: DataFrame, max_events: int = 1000) -> DataFrame:
-    """EXACT replication of the reference's count-bounded rolling window
-    (StreamAggregator keeps the last ``max_events`` events per student —
-    kafka/streaming.py:52-75) as a custom stateful operator via
-    ``applyInPandasWithState``.
-
-    The time-windowed variant (windowed_student_metrics) is the
-    recommended path per the docx spec; this operator exists for strict
-    behavior parity and as the template for arbitrary custom streaming
-    state. State per student: (n_seen, duration_sum, error_count) over a
-    bounded deque of event weights — O(1) memory per key here because the
-    metrics are additive; a true bounded buffer would store the tail.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            T.StructField("student_id", T.StringType()),
-            T.StructField("count", T.LongType()),
-            T.StructField("duration", T.LongType()),
-            T.StructField("errors", T.LongType()),
-            T.StructField("anomaly", T.BooleanType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("count", T.LongType()),
-            T.StructField("duration", T.LongType()),
-            T.StructField("errors", T.LongType()),
-        ]
-    )
-
-    def _update(key, pdfs, state: GroupState):
-        count, duration, errors = state.get if state.exists else (0, 0, 0)
-        for pdf in pdfs:
-            count += len(pdf)
-            duration += int(pdf["duration_seconds"].fillna(0).sum())
-            errors += int((~pdf["is_valid"].fillna(True)).sum())
-        # count-bounded trim (the reference's placeholder semantics):
-        # metrics describe at most the last max_events events
-        if count > max_events:
-            scale = max_events / count
-            duration = int(duration * scale)
-            errors = int(errors * scale)
-            count = max_events
-        state.update((count, duration, errors))
-        yield pd.DataFrame(
-            {
-                "student_id": [key[0]],
-                "count": [count],
-                "duration": [duration],
-                "errors": [errors],
-                "anomaly": [errors / max(count, 1) > 0.2],
-            }
+    def start(frame: DataFrame, write, name: str, mode: str) -> StreamingQuery:
+        return (
+            frame.writeStream.foreachBatch(write)
+            .outputMode(mode)
+            .option("checkpointLocation", os.path.join(checkpoint_dir, name))
+            .start()
         )
 
-    return (
-        cleaned.select("student_id", "duration_seconds", "is_valid")
-        .groupBy("student_id")
-        .applyInPandasWithState(
-            _update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def dedup_event_stream(cleaned: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming exactly-once-per-key dedup: dropDuplicates on event_id
-    within the watermark horizon (state expires after ``watermark``).
-
-    The streaming twin of D2 — the batch window dedup cannot run on a
-    stream; Spark keeps seen-key state per event_id instead.
-    """
-    return cleaned.withWatermark("event_timestamp", watermark).dropDuplicates(
-        ["event_id"]
-    )
-
-
-def enrich_stream_with_dim(
-    cleaned: DataFrame, dim: DataFrame, key: str = "student_id"
-) -> DataFrame:
-    """Stream-static enrichment join: decorate each streaming event with
-    dimension attributes (the reference enriches consumed events with
-    student context before publishing, ``kafka/streaming.py:97-108``).
-
-    The static side is explicitly broadcast — a stream-static join must
-    not shuffle the stream, and with the dim broadcast each micro-batch
-    is a map-side hash join with zero state; Spark re-resolves the
-    static side per micro-batch, so a dim backed by a refreshable table
-    picks up updates between batches. Left join: an event with no dim
-    row still flows (nulls), matching the batch SK-lookup policy."""
-    prefixed = dim.select(
-        F.col(key).alias(f"_dim_{key}"),
-        *[F.col(c) for c in dim.columns if c != key],
-    )
-    return cleaned.join(
-        F.broadcast(prefixed),
-        cleaned[key] == prefixed[f"_dim_{key}"],
-        "left",
-    ).drop(f"_dim_{key}")
-
-
-def session_metrics_stream(
-    cleaned: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming sessionization: per-student gap-based sessions via
-    ``session_window`` — the streaming twin of the batch ``user_sessions``
-    query (same 30-minute gap rule). State is one open session per
-    student in the state store; the watermark closes sessions once event
-    time passes ``gap`` beyond their last event, so append-mode sinks see
-    each session exactly once."""
-    win = F.session_window("event_timestamp", gap)
-    return (
-        cleaned.withWatermark("event_timestamp", watermark)
-        .groupBy(win.alias("session"), F.col("student_id"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.coalesce(F.col("duration_seconds"), F.lit(0))).alias("duration"),
-            F.avg("score").alias("avg_score"),
-        )
-        .select(
-            F.col("session.start").alias("session_start"),
-            F.col("session.end").alias("session_end"),
-            "student_id",
-            "n_events",
-            "duration",
-            "avg_score",
-        )
-    )
-
-
-def stream_stream_attribution(
-    watched: DataFrame,
-    completed: DataFrame,
-    window: str = "30 minutes",
-    watermark: str = "1 hour",
-    how: str = "inner",
-) -> DataFrame:
-    """Watermarked stream-stream interval join: attribute each completion
-    event to the SAME student's watch events in the preceding ``window``
-    (the streaming twin of the batch events_range_join /
-    asof_purchase_attribution pair).
-
-    Both sides carry a watermark and the join condition bounds event time
-    on both ends, so Spark can expire join state — without the interval
-    bound the state store would grow forever. Scale: state is keyed by
-    (student, time-range); each side buffers only ``watermark`` worth of
-    events. ``how="left_outer"`` additionally emits completions with NO
-    qualifying watch (NULL watch columns) once the watermark passes the
-    join window — the unmatched rows cannot be emitted earlier because a
-    match might still arrive; this is the watermark's second job beyond
-    state expiry."""
-    w = (
-        watched.withWatermark("event_timestamp", watermark)
-        .select(
-            F.col("student_id").alias("w_student"),
-            F.col("event_id").alias("watch_event_id"),
-            F.col("event_timestamp").alias("watch_ts"),
-        )
-    )
-    c = completed.withWatermark("event_timestamp", watermark).select(
-        "student_id",
-        F.col("event_id").alias("completion_event_id"),
-        F.col("event_timestamp").alias("completion_ts"),
-    )
-    return c.join(
-        w,
-        (F.col("student_id") == F.col("w_student"))
-        & (F.col("watch_ts") >= F.col("completion_ts") - F.expr(f"INTERVAL {window}"))
-        & (F.col("watch_ts") < F.col("completion_ts")),
-        how,
-    ).select(
-        "student_id", "completion_event_id", "completion_ts",
-        "watch_event_id", "watch_ts",
-    )
+    events = start(cleaned, write_events, "events", "append")
+    try:
+        metrics = start(windowed_student_metrics(cleaned), write_metrics, "metrics", "update")
+    except BaseException:
+        events.stop()  # leave no half-started topology running
+        raise
+    return [events, metrics]

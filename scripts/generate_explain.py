@@ -1,11 +1,20 @@
 """Regenerate EXPLAIN.md: formatted physical plans of the headline queries.
 
 Run: python scripts/generate_explain.py  (writes EXPLAIN.md at repo root)
+     python scripts/generate_explain.py --check
+
+``--check`` writes nothing: it regenerates the plans in memory and exits
+1, naming each query whose plan differs from EXPLAIN.md's. Expression ids
+(``#12``) and ``plan_id=N`` are masked first, since they number whatever
+the session built before.
 """
 import os
+import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+EXPLAIN_MD = os.path.join(REPO, "EXPLAIN.md")
 
 from edu_data_pipeline_spark.session import get_spark
 from edu_data_pipeline_spark.suite import load_all
@@ -32,10 +41,11 @@ QUERIES = [
     "cdc_snapshot_fold", "scd2_dim_history",
 ]
 
-def main():
-    spark = get_spark(app_name="explain-gen", master="local[8]", shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    reg = load_all()
+SECTION = re.compile(r"^## (\S+)\n\n```\n(.*?)\n```$", re.M | re.S)
+IDS = re.compile(r"#\d+|plan_id=\d+")
+
+
+def render(plans: dict[str, str]) -> str:
     out = [
         "# EXPLAIN — formatted physical plans of representative queries",
         "",
@@ -45,18 +55,50 @@ def main():
         "nodes outside the multimodal path.",
         "",
     ]
+    for name, plan in plans.items():
+        out += [f"## {name}\n", "```", plan, "```\n"]
+    return "\n".join(out)
+
+
+def plans() -> dict[str, str]:
+    """Query name -> its formatted physical plan at sf0.01."""
+    spark = get_spark(app_name="explain-gen", master="local[8]", shuffle_partitions=8)
+    spark.sparkContext.setLogLevel("ERROR")
+    reg = load_all()
+    out = {}
     for name in QUERIES:
         df = reg[name].fn(spark, "/root/testdata/sf0.01")
-        out.append(f"## {name}\n")
-        out.append("```")
-        plan = spark.sparkContext._jvm.PythonSQLUtils.explainString(
+        out[name] = spark.sparkContext._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
-        )
-        out.append(plan.strip())
-        out.append("```\n")
-    with open("EXPLAIN.md", "w") as f:
-        f.write("\n".join(out))
+        ).strip()
     spark.stop()
+    return out
+
+
+def drifted(plans: dict[str, str], doc: str) -> list[str]:
+    """Names of the queries whose masked plan differs from ``doc``'s (or
+    that ``doc`` lacks or has in excess)."""
+    recorded = {name: IDS.sub("#", plan) for name, plan in SECTION.findall(doc)}
+    fresh = {name: IDS.sub("#", plan) for name, plan in plans.items()}
+    return sorted(
+        name for name in fresh.keys() | recorded.keys()
+        if fresh.get(name) != recorded.get(name)
+    )
+
+
+def main(argv: list[str]) -> int:
+    fresh = plans()
+    if "--check" in argv:
+        with open(EXPLAIN_MD) as f:
+            stale = drifted(fresh, f.read())
+        for name in stale:
+            print(f"EXPLAIN.md plan drifted: {name}")
+        print(f"[explain] {len(fresh) - len(stale)}/{len(fresh)} plans current")
+        return 1 if stale else 0
+    with open(EXPLAIN_MD, "w") as f:
+        f.write(render(fresh))
+    return 0
+
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main(sys.argv[1:]))

@@ -12,6 +12,9 @@ Usage:
     python scripts/verify_gates.py [--runs N] [--sf SF_DIR] [--skip-sweep]
     python scripts/verify_gates.py --quick
 
+The full gate also runs ``generate_explain.py --check``, so EXPLAIN.md
+cannot drift from the plans the code builds.
+
 Exit status is non-zero if ANY pytest run or the sweep fails, so the
 script doubles as a pre-commit / pre-round check.
 
@@ -88,6 +91,27 @@ def run_sweep(sf_dir: str) -> dict:
     }
 
 
+def run_explain_check() -> dict:
+    """``generate_explain.py --check``: EXPLAIN.md's plans against the
+    code's. It needs a Spark session, so ``--quick`` cannot run it."""
+    start = time.time()
+    proc = subprocess.run(
+        [sys.executable, "scripts/generate_explain.py", "--check"],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+    )
+    drifted = [
+        ln.rsplit(": ", 1)[1] for ln in proc.stdout.splitlines()
+        if ln.startswith("EXPLAIN.md plan drifted")
+    ]
+    return {
+        "rc": proc.returncode,
+        "drifted": drifted,
+        "wall_s": round(time.time() - start, 1),
+    }
+
+
 def git_rev() -> str:
     try:
         return subprocess.run(
@@ -145,6 +169,11 @@ def main() -> int:
         ok = ok and res["rc"] == 0 and res["failed"] == 0
         print(f"[gates] pytest run {i}/{args.runs}: {res['summary']} "
               f"(rc={res['rc']}, {res['wall_s']}s)")
+    res = run_explain_check()
+    record["explain"] = res
+    ok = ok and res["rc"] == 0
+    print(f"[gates] EXPLAIN.md check: drifted={res['drifted']} "
+          f"(rc={res['rc']}, {res['wall_s']}s)")
     if not args.skip_sweep:
         res = run_sweep(args.sf)
         record["sweep"] = res

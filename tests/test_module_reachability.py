@@ -55,17 +55,8 @@ KEPT_UNREACHED: dict[str, str] = {}
 # Top-level functions and classes of the FUNCTION_SCOPE_* modules that no
 # package or perfbench code references, one line of reason each.
 KEPT_UNREFERENCED = {
-    "streaming.jobs.simulated_event_stream": "S6 reference rate producer, tested",
-    "streaming.jobs.foreach_batch_upsert": "S7 reference upsert sink, tested",
-    "streaming.jobs.foreach_batch_fanout": "S8/S9 one-read clean, DLQ and alert sinks, tested",
-    "streaming.jobs.rolling_student_metrics": "A7/A8 reference running metrics and anomaly flag, tested",
-    "streaming.jobs.count_bounded_metrics": "A7 reference count-bounded window, exact, tested",
-    "streaming.jobs.active_students_window": "docx active-students window, tested",
-    "streaming.jobs.session_metrics_stream": "docx per-student session windows, tested",
-    "streaming.jobs.dedup_event_stream": "event-id dedup that survives a restart, tested",
-    "streaming.jobs.run_available_now": "scheduled drain of the stream backlog, tested",
-    "streaming.jobs.enrich_stream_with_dim": "stream-static student enrichment, tested",
-    "streaming.jobs.stream_stream_attribution": "watch-to-completion interval join, tested",
+    "streaming.jobs.start_event_stream": "E3b entry point; perfbench `serve` adopts it in a benchmark change",
+    "streaming.jobs.active_students_window": "docx active-students window, tested; a third query would read the source a third time per trigger",
     "operators.metrics.observe_cleaning": "observed cleaning gauges for the run record, tested",
     "caches.live_checkpoints": "live checkpoint count the cache-release tests assert on",
 }

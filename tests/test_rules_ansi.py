@@ -34,3 +34,63 @@ def test_city_corrections_never_cascade():
             f"correction {k!r} -> {v!r} cascades; normalize_city's map "
             "lookup is single-step — collapse the chain"
         )
+
+
+def test_cleaning_is_the_same_under_ansi(spark, tmp_path):
+    """The shared cleaning returns the same rows with ANSI on as with it
+    off: the stream cleaning over the dirty stream fixtures, and the
+    students, progress and tickets cleaning over the FIXTURES.md-shaped
+    corpus. An unparseable number must become a flag, not an error."""
+    from edu_data_pipeline_spark.operators import cleaning
+    from edu_data_pipeline_spark.sources import csv_ingest
+    from edu_data_pipeline_spark.streaming import jobs
+    from tests.test_cleaning import make_students
+    from tests.test_pipeline import write_fixture_csvs
+    from tests.test_streaming import (
+        EVENTS_BATCH_1, EVENTS_BATCH_2, EVENTS_EXTRA, write_events,
+    )
+
+    src, input_dir = str(tmp_path / "events"), str(tmp_path / "input")
+    write_events(src, EVENTS_BATCH_1 + EVENTS_BATCH_2 + EVENTS_EXTRA, "b1.json")
+    write_fixture_csvs(input_dir)
+    ref_date = F.lit("2026-08-13").cast("date")
+    ref_ts = F.lit("2026-08-13 00:00:00").cast("timestamp")
+
+    def raw(name):
+        return csv_ingest.read_raw_csv(
+            spark, f"{input_dir}/{name}.csv",
+            csv_ingest.REQUIRED_COLUMNS[name], validate=False,
+        )
+
+    cleaned = {
+        "stream": lambda: jobs.clean_event_stream(
+            spark.read.schema(jobs.PROGRESS_EVENT_SCHEMA).json(src), ref_ts=ref_ts
+        ),
+        "students": lambda: cleaning.clean_students(
+            raw("students_enrollment").unionByName(make_students(spark)),
+            ref_date=ref_date,
+        ),
+        "progress": lambda: cleaning.clean_progress(
+            raw("student_progress"), ref_ts=ref_ts
+        ),
+        "tickets": lambda: cleaning.clean_tickets(
+            raw("support_tickets"), ref_date=ref_date
+        ),
+    }
+
+    def run(ansi: str) -> dict[str, list]:
+        saved = spark.conf.get("spark.sql.ansi.enabled")
+        try:
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            return {
+                name: sorted(build().collect(), key=repr)
+                for name, build in cleaned.items()
+            }
+        finally:
+            spark.conf.set("spark.sql.ansi.enabled", saved)
+
+    off = run("false")
+    assert all(off.values())
+    on = run("true")
+    for name in cleaned:
+        assert on[name] == off[name], name

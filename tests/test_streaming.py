@@ -1,15 +1,20 @@
-"""Structured Streaming tests: shared cleaning, windows, DLQ routing,
-foreachBatch upsert. Uses a JSON file source + memory sinks."""
+"""Structured Streaming tests: shared cleaning, windows, DLQ routing and
+the event-stream entry point. Uses JSON file sources with memory,
+``foreachBatch`` and warehouse sinks."""
 
 from __future__ import annotations
 
 import json
 import os
 
+import pytest
+
 from pyspark.sql import functions as F
 
-from edu_data_pipeline_spark.operators.warehouse import ParquetMergeWriter
+from edu_data_pipeline_spark import pipeline
+from edu_data_pipeline_spark.operators import cleaning
 from edu_data_pipeline_spark.streaming import jobs
+from tests.test_pipeline import write_fixture_csvs
 
 EVENTS_BATCH_1 = [
     {"event_id": "evt-001", "student_id": "STU001", "course_id": "CRS001",
@@ -39,6 +44,28 @@ EVENTS_BATCH_2 = [
 ]
 
 
+def _event(eid, student, ts, score="60.0"):
+    e = {"event_id": eid, "student_id": student, "course_id": "CRS001",
+         "event_type": "quiz_completed", "event_timestamp": ts,
+         "duration_seconds": "10", "score": score, "module_id": "MOD001",
+         "completion_percentage": "50.0"}
+    if eid is None:
+        del e["event_id"]
+    return e
+
+
+# Beside the two batches: STU004 only fails validation (anomalous),
+# STU005 fails 1 of 5 (rate exactly 0.2, not anomalous), and two identical
+# events without an id share their derived id.
+EVENTS_EXTRA = (
+    [_event("evt-r0", "STU004", "2024-02-01T10:20:00", "bad"),
+     _event("evt-r1", "STU004", "2024-02-01T10:20:00", "200.0")]
+    + [_event(f"evt-r{2 + i}", "STU005", "2024-02-01T10:20:00",
+              "bad" if i == 0 else "60.0") for i in range(5)]
+    + [_event(None, "STU006", "2024-02-01T10:21:00")] * 2
+)
+
+
 def write_events(path: str, events: list[dict], name: str) -> None:
     os.makedirs(path, exist_ok=True)
     with open(os.path.join(path, name), "w") as f:
@@ -48,6 +75,35 @@ def write_events(path: str, events: list[dict], name: str) -> None:
 
 def ref_ts():
     return F.lit("2026-08-13 00:00:00").cast("timestamp")
+
+
+def drain(queries) -> None:
+    for q in queries:
+        q.processAllAvailable()
+
+
+def stop(queries) -> None:
+    for q in queries:
+        q.stop()
+
+
+def stg_dir(wh: str) -> str:
+    return os.path.join(wh, "staging", "stg_progress")
+
+
+def outputs(spark, wh: str) -> dict[str, list]:
+    """The four outputs of ``start_event_stream`` under ``wh``, each as
+    its sorted rows."""
+    paths = {
+        "stg_progress": stg_dir(wh),
+        "dlq": os.path.join(wh, "stream", "dlq"),
+        "student_metrics": os.path.join(wh, "stream", "student_metrics"),
+        "alerts": os.path.join(wh, "stream", "alerts"),
+    }
+    return {
+        name: sorted(spark.read.parquet(path).collect(), key=repr)
+        for name, path in paths.items()
+    }
 
 
 def test_stream_clean_and_route(spark, tmp_path):
@@ -106,52 +162,6 @@ def test_stream_windowed_metrics(spark, tmp_path):
     assert (r3["count"], r3.errors) == (1, 1)
 
 
-def test_rolling_student_metrics(spark, tmp_path):
-    """A7/A8: un-windowed running per-student count/duration/errors and
-    the errors/count > 0.2 anomaly flag, updated across two batches."""
-
-    def ev(i, student, score):
-        return {"event_id": f"evt-r{i}", "student_id": student,
-                "course_id": "CRS001", "event_type": "quiz_completed",
-                "event_timestamp": "2024-02-01T10:20:00",
-                "duration_seconds": "10", "score": score,
-                "module_id": "MOD001", "completion_percentage": "50.0"}
-
-    extra = [ev(0, "STU004", "bad"), ev(1, "STU004", "200.0")]  # all invalid
-    # STU005: 1 error in 5 events -> rate exactly 0.2, not anomalous
-    extra += [ev(2 + i, "STU005", "bad" if i == 0 else "60.0") for i in range(5)]
-    src = str(tmp_path / "events")
-    write_events(src, EVENTS_BATCH_1, "b1.json")
-    stream = jobs.read_event_stream_json(spark, src)
-    cleaned = jobs.clean_event_stream(stream, ref_ts=ref_ts())
-    q = (
-        jobs.rolling_student_metrics(cleaned)
-        .writeStream.format("memory")
-        .queryName("rolling_sink")
-        .outputMode("update")
-        .start()
-    )
-    q.processAllAvailable()
-    write_events(src, EVENTS_BATCH_2 + extra, "b2.json")
-    q.processAllAvailable()
-    q.stop()
-    latest = {}
-    for r in spark.sql("SELECT * FROM rolling_sink").collect():
-        latest[r.student_id] = r  # update mode: last emit per student wins
-    got = {
-        s: (r["count"], r.duration, r.errors, bool(r.anomaly))
-        for s, r in latest.items()
-    }
-    assert got == {
-        # evt-001 twice (no dedup here), evt-003's "x" duration counts 0
-        "STU001": (3, 1500, 1, True),
-        "STU002": (1, 300, 1, True),
-        "STU003": (1, 100, 0, False),
-        "STU004": (2, 20, 2, True),
-        "STU005": (5, 50, 1, False),
-    }
-
-
 def test_stream_active_students(spark, tmp_path):
     """Docx "active students in last 5 min": global sliding-window distinct
     count (HLL; exact at these cardinalities)."""
@@ -179,65 +189,24 @@ def test_stream_active_students(spark, tmp_path):
 
 
 def test_stream_foreach_batch_upsert(spark, tmp_path):
-    src = str(tmp_path / "events")
-    target = str(tmp_path / "stg_progress")
-    ckpt = str(tmp_path / "ckpt")
+    """S7: the events query upserts each micro-batch's valid rows into
+    stg_progress on event_id, so a later batch's evt-001 replaces the
+    first one's."""
+    src, wh, ckpt = (str(tmp_path / d) for d in ("events", "wh", "ckpt"))
     write_events(src, EVENTS_BATCH_1, "b1.json")
+    queries = jobs.start_event_stream(spark, src, wh, ckpt)
+    try:
+        drain(queries)
+        write_events(src, EVENTS_BATCH_2, "b2.json")
+        drain(queries)
+    finally:
+        stop(queries)
 
-    writer = ParquetMergeWriter(spark, target, keys=["event_id"])
-    stream = jobs.read_event_stream_json(spark, src)
-    cleaned = jobs.clean_event_stream(stream, ref_ts=ref_ts())
-    q = (
-        cleaned.writeStream.foreachBatch(jobs.foreach_batch_upsert(writer))
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.processAllAvailable()
-    write_events(src, EVENTS_BATCH_2, "b2.json")
-    q.processAllAvailable()
-    q.stop()
-
-    final = {r.event_id: r for r in spark.read.parquet(target).collect()}
-    assert set(final) == {"evt-001", "evt-002", "evt-003", "evt-004"}
-    # evt-001 overwritten by batch 2 (upsert on event_id)
+    final = {r.event_id: r for r in spark.read.parquet(stg_dir(wh)).collect()}
+    # evt-002 and evt-003 fail validation and go to the DLQ instead
+    assert set(final) == {"evt-001", "evt-004"}
     assert final["evt-001"].duration_seconds == 900
     assert float(final["evt-001"].score) == 90.0
-
-
-def test_simulated_stream_shape(spark):
-    stream = jobs.simulated_event_stream(spark, rows_per_second=5)
-    assert stream.isStreaming
-    assert set(jobs.PROGRESS_EVENT_SCHEMA.fieldNames()) <= set(stream.columns)
-
-
-def test_count_bounded_stateful_metrics(spark, tmp_path):
-    src = str(tmp_path / "events_state")
-    write_events(src, EVENTS_BATCH_1, "b1.json")
-    stream = jobs.read_event_stream_json(spark, src)
-    cleaned = jobs.clean_event_stream(stream, ref_ts=ref_ts())
-    metrics = jobs.count_bounded_metrics(cleaned, max_events=1000)
-    q = (
-        metrics.writeStream.format("memory")
-        .queryName("state_sink")
-        .outputMode("update")
-        .start()
-    )
-    q.processAllAvailable()
-    # second batch updates existing state
-    write_events(src, EVENTS_BATCH_2, "b2.json")
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("SELECT * FROM state_sink").collect()
-    latest = {}
-    for r in rows:  # update mode: last emit per student wins
-        latest[r.student_id] = r
-    s1 = latest["STU001"]
-    # batch1: evt-001 (valid) + evt-003 (invalid); batch2: evt-001b valid
-    assert s1["count"] == 3
-    assert s1.errors == 1
-    assert bool(s1.anomaly) is True  # 1/3 > 0.2
-    s2 = latest["STU002"]
-    assert (s2["count"], s2.errors) == (1, 1)
 
 
 def test_late_data_dropped_by_watermark(spark, tmp_path):
@@ -276,201 +245,6 @@ def test_late_data_dropped_by_watermark(spark, tmp_path):
     ).collect()
     assert len(rows) == 1  # the 10:00 window emitted exactly once
     assert rows[0]["count"] == 2  # e4 (late) was dropped, not merged
-
-
-def test_stream_session_windows(spark, tmp_path):
-    """Gap-based streaming sessions (session_window): events 2-3 min apart
-    coalesce into one session per student; the 10-min-later event opens a
-    second session only if beyond the gap (here gap=5 min splits 10:00-03
-    from 10:10-11)."""
-    src = str(tmp_path / "events")
-    write_events(src, EVENTS_BATCH_1 + EVENTS_BATCH_2, "all.json")
-    stream = jobs.read_event_stream_json(spark, src)
-    cleaned = jobs.clean_event_stream(stream, ref_ts=ref_ts())
-    sessions = jobs.session_metrics_stream(cleaned, gap="5 minutes")
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("sess_sink")
-        .outputMode("complete")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("SELECT * FROM sess_sink").collect()
-    by_key = {(r.student_id, str(r.session_start)): r for r in rows}
-    # STU001: 10:00 + 10:03 merge (3-min gap < 5), 10:10 is a new session
-    s1 = by_key[("STU001", "2024-02-01 10:00:00")]
-    assert s1.n_events == 2
-    assert str(s1.session_end) == "2024-02-01 10:08:00"  # last event + gap
-    s2 = by_key[("STU001", "2024-02-01 10:10:00")]
-    assert s2.n_events == 1
-    assert s2.avg_score == 90.0
-
-
-def test_stream_stream_attribution(spark, tmp_path):
-    """Stream-stream interval join: completions attribute to same-student
-    watches within the preceding 30 min; outside-window and cross-student
-    watches do not match."""
-    src = str(tmp_path / "events")
-
-    def ev(eid, sid, etype, ts):
-        return {"event_id": eid, "student_id": sid, "course_id": "C1",
-                "event_type": etype, "event_timestamp": ts,
-                "duration_seconds": "60", "score": "50", "module_id": "M",
-                "completion_percentage": "10"}
-
-    write_events(src, [
-        ev("w1", "STU001", "video_watched", "2024-02-01T10:00:00"),
-        ev("w2", "STU001", "video_watched", "2024-02-01T09:00:00"),  # > 30 min before
-        ev("w3", "STU002", "video_watched", "2024-02-01T10:05:00"),  # other student
-        ev("q1", "STU001", "quiz_completed", "2024-02-01T10:10:00"),
-    ], "b1.json")
-    stream = jobs.read_event_stream_json(spark, src)
-    cleaned = jobs.clean_event_stream(stream, ref_ts=ref_ts())
-    watched = cleaned.where("event_type = 'video_watched'")
-    completed = cleaned.where("event_type = 'quiz_completed'")
-    joined = jobs.stream_stream_attribution(watched, completed)
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("attr_sink")
-        .outputMode("append")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("SELECT * FROM attr_sink").collect()
-    assert [(r.completion_event_id, r.watch_event_id) for r in rows] == [("q1", "w1")]
-
-
-def test_stream_static_dim_enrichment(spark, tmp_path):
-    src = str(tmp_path / "events_in")
-    write_events(src, EVENTS_BATCH_1, "b1.jsonl")
-    events = jobs.read_event_stream_json(spark, src)
-    cleaned = jobs.clean_event_stream(events, ref_ts=ref_ts())
-    dim = spark.createDataFrame(
-        [("STU001", "Mumbai", "gold"), ("STU002", "Delhi", "silver")],
-        ["student_id", "city", "tier"],
-    )
-    enriched = jobs.enrich_stream_with_dim(cleaned, dim)
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName("dim_enriched_sink")
-        .outputMode("append")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = {
-        r.event_id: (r.city, r.tier)
-        for r in spark.table("dim_enriched_sink").collect()
-    }
-    # STU001 events decorated; the cleaned stu-2 -> STU002 row matches the
-    # dim (shared cleaning normalizes the key before the join)
-    assert rows["evt-001"] == ("Mumbai", "gold")
-    assert rows["evt-003"] == ("Mumbai", "gold")
-    assert rows["evt-002"] == ("Delhi", "silver")
-
-
-def test_available_now_incremental_runs(spark, tmp_path):
-    src = str(tmp_path / "backlog_in")
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    write_events(src, EVENTS_BATCH_1, "b1.jsonl")
-    events = jobs.read_event_stream_json(spark, src)
-    cleaned = jobs.clean_event_stream(events, ref_ts=ref_ts())
-    jobs.run_available_now(cleaned, sink, ckpt)
-    assert spark.read.parquet(sink).count() == 3
-    # second run with no new data: no-op (checkpoint remembers the files)
-    jobs.run_available_now(
-        jobs.clean_event_stream(
-            jobs.read_event_stream_json(spark, src), ref_ts=ref_ts()
-        ),
-        sink,
-        ckpt,
-    )
-    assert spark.read.parquet(sink).count() == 3
-    # new backlog file: only its rows are appended
-    write_events(src, EVENTS_BATCH_2, "b2.jsonl")
-    jobs.run_available_now(
-        jobs.clean_event_stream(
-            jobs.read_event_stream_json(spark, src), ref_ts=ref_ts()
-        ),
-        sink,
-        ckpt,
-    )
-    assert spark.read.parquet(sink).count() == 5
-
-
-def test_foreach_batch_fanout_three_sinks(spark, tmp_path):
-    src = str(tmp_path / "fan_in")
-    good_p, dlq_p, alert_p = (
-        str(tmp_path / d) for d in ("fan_good", "fan_dlq", "fan_alerts")
-    )
-    errors = [
-        {"event_id": f"err-{i}", "student_id": "STU009", "course_id": "CRS001",
-         "event_type": "error_occurred", "event_timestamp": f"2024-02-01T11:0{i}:00",
-         "duration_seconds": "10", "score": "50.0", "module_id": "MOD001",
-         "completion_percentage": "10.0"}
-        for i in range(3)
-    ]
-    write_events(src, EVENTS_BATCH_1 + errors, "b1.jsonl")
-    events = jobs.read_event_stream_json(spark, src)
-    cleaned = jobs.clean_event_stream(events, ref_ts=ref_ts())
-    q = (
-        cleaned.writeStream.foreachBatch(
-            jobs.foreach_batch_fanout(good_p, dlq_p, alert_p)
-        )
-        .option("checkpointLocation", str(tmp_path / "fan_ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    good = spark.read.parquet(good_p)
-    # evt-002 (capped score) and evt-003 (unparseable score) -> DLQ
-    assert good.count() == 4
-    assert spark.read.parquet(dlq_p).count() == 2
-    alerts = spark.read.parquet(alert_p).collect()
-    # STU009 is 100% errors -> alerted; others below threshold
-    assert [r.student_id for r in alerts] == ["STU009"]
-    assert alerts[0].n_errors == 3
-
-
-def test_dedup_state_survives_restart(spark, tmp_path):
-    """The dedup state store is part of the checkpoint: a NEW query
-    started from the same checkpoint must still suppress an event_id
-    seen before the restart (exactly-once across restarts, not just
-    within one query lifetime)."""
-    src = str(tmp_path / "restart_in")
-    sink = str(tmp_path / "restart_sink")
-    ckpt = str(tmp_path / "restart_ckpt")
-    write_events(src, EVENTS_BATCH_1, "b1.jsonl")
-
-    def start_query():
-        cleaned = jobs.clean_event_stream(
-            jobs.read_event_stream_json(spark, src), ref_ts=ref_ts()
-        )
-        deduped = jobs.dedup_event_stream(cleaned)
-        return (
-            deduped.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .start()
-        )
-
-    q = start_query()
-    q.processAllAvailable()
-    q.stop()
-    assert spark.read.parquet(sink).count() == 3
-
-    # restart: replay evt-001 (dup, different payload) + one new event
-    write_events(src, EVENTS_BATCH_2, "b2.jsonl")
-    q = start_query()
-    q.processAllAvailable()
-    q.stop()
-    out = spark.read.parquet(sink)
-    assert out.count() == 4  # only evt-004 got through
-    assert out.where(out.event_id == "evt-001").count() == 1
 
 
 def test_window_state_keeps_checkpoint_partitions_on_restart(spark, tmp_path):
@@ -536,51 +310,132 @@ def test_window_state_keeps_checkpoint_partitions_on_restart(spark, tmp_path):
     }
 
 
-def test_stream_stream_left_outer_emits_unmatched(spark, tmp_path):
-    """left_outer interval join: a completion with no qualifying watch is
-    emitted with NULL watch columns — but only after the watermark
-    passes, which a later batch must advance."""
-    watch_dir = str(tmp_path / "so_watch")
-    done_dir = str(tmp_path / "so_done")
-    # batch 1: a completion with NO prior watch for that student
-    write_events(done_dir, [
-        {"event_id": "done-1", "student_id": "STU077", "course_id": "C1",
-         "event_type": "quiz_completed", "event_timestamp": "2024-02-01T10:00:00",
-         "duration_seconds": "60", "score": "90", "module_id": "M1",
-         "completion_percentage": "100"}], "b1.jsonl")
-    write_events(watch_dir, [
-        {"event_id": "watch-x", "student_id": "STU001", "course_id": "C1",
-         "event_type": "video_watched", "event_timestamp": "2024-02-01T09:50:00",
-         "duration_seconds": "60", "score": "10", "module_id": "M1",
-         "completion_percentage": "5"}], "b1.jsonl")
+def test_event_stream_full_run_matches_batch_recompute(spark, tmp_path):
+    """One run over every stream fixture: stg_progress holds each valid
+    event once with its cleaned values, the DLQ exactly the invalid rows,
+    and the metrics and alerts equal a batch recompute of the same files."""
+    src, wh, ckpt = (str(tmp_path / d) for d in ("events", "wh", "ckpt"))
+    write_events(src, EVENTS_BATCH_1, "b1.json")
+    write_events(src, EVENTS_BATCH_2 + EVENTS_EXTRA, "b2.json")
+    queries = jobs.start_event_stream(spark, src, wh, ckpt)
+    try:
+        drain(queries)
+    finally:
+        stop(queries)
+    got = outputs(spark, wh)
 
-    def cleaned(path):
-        return jobs.clean_event_stream(
-            jobs.read_event_stream_json(spark, path), ref_ts=ref_ts()
-        )
+    raw = spark.read.schema(jobs.PROGRESS_EVENT_SCHEMA).json(src)
+    cleaned = jobs.clean_event_stream(raw).collect()
+    latest = {}
+    for r in sorted((r for r in cleaned if r.is_valid),
+                    key=lambda r: r.event_timestamp):
+        latest[r.event_id] = r.asDict()
+    for r in latest.values():
+        del r["is_valid"]
+    stg = {r.event_id: r.asDict() for r in got["stg_progress"]}
+    assert len(got["stg_progress"]) == len(stg)  # each event_id once
+    assert stg == latest
+    assert stg["evt-001"]["duration_seconds"] == 900  # the later evt-001
+    ids = [i for i in stg if i.startswith("stream-")]
+    assert len(ids) == 1 and len(ids[0]) == len("stream-") + 64
+    # the stream writes the batch load's columns, in its order
+    assert spark.read.parquet(stg_dir(wh)).columns == cleaning.clean_progress(raw).columns
 
-    joined = jobs.stream_stream_attribution(
-        cleaned(watch_dir), cleaned(done_dir),
-        window="30 minutes", watermark="10 minutes", how="left_outer",
+    dlq = {r.event_id for r in got["dlq"]}
+    assert dlq == {r.event_id for r in cleaned if not r.is_valid}
+    assert dlq == {"evt-002", "evt-003", "evt-r0", "evt-r1", "evt-r2"}
+    assert {r.error for r in got["dlq"]} == {"failed-validation"}
+
+    recompute = jobs.windowed_student_metrics(jobs.clean_event_stream(raw)).collect()
+    assert sorted(map(tuple, got["student_metrics"]), key=repr) == sorted(
+        map(tuple, recompute), key=repr
     )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("so_sink")
-        .outputMode("append")
-        .start()
+    alerts = sorted((tuple(r)[:-1] for r in got["alerts"]), key=repr)  # drop batch_id
+    assert alerts == sorted((tuple(r) for r in recompute if r.anomaly), key=repr)
+    assert {r.student_id for r in got["alerts"]} == {"STU001", "STU002", "STU004"}
+
+
+def test_event_stream_restart_matches_uninterrupted_run(spark, tmp_path):
+    """Stopping after the first file and restarting from the same
+    checkpoints leaves all four outputs as one uninterrupted run fed the
+    same files leaves them; evt-001, seen before the restart, is still
+    held once."""
+
+    def run(name: str, restart: bool) -> dict[str, list]:
+        src, wh, ckpt = (str(tmp_path / name / d) for d in ("events", "wh", "ckpt"))
+        write_events(src, EVENTS_BATCH_1, "b1.json")
+        queries = jobs.start_event_stream(spark, src, wh, ckpt)
+        try:
+            drain(queries)
+            if restart:
+                stop(queries)
+                queries = jobs.start_event_stream(spark, src, wh, ckpt)
+            write_events(src, EVENTS_BATCH_2 + EVENTS_EXTRA, "b2.json")
+            drain(queries)
+        finally:
+            stop(queries)
+        return outputs(spark, wh)
+
+    restarted = run("restarted", restart=True)
+    assert restarted == run("uninterrupted", restart=False)
+    assert [r.event_id for r in restarted["stg_progress"]].count("evt-001") == 1
+
+
+def test_event_stream_replayed_batch_changes_nothing(spark, tmp_path):
+    """foreachBatch is at-least-once: a micro-batch whose sinks were
+    written but whose commit was lost runs again on restart. The replay
+    must leave every output as it was, id-less events included."""
+    src, wh, ckpt = (str(tmp_path / d) for d in ("events", "wh", "ckpt"))
+    write_events(src, EVENTS_BATCH_1 + EVENTS_EXTRA, "b1.json")
+    queries = jobs.start_event_stream(spark, src, wh, ckpt)
+    try:
+        drain(queries)
+    finally:
+        stop(queries)
+    before = outputs(spark, wh)
+
+    last = {}
+    for name in ("events", "metrics"):  # lose each query's last commit
+        commits = os.path.join(ckpt, name, "commits")
+        last[name] = max(int(f) for f in os.listdir(commits) if f.isdigit())
+        for f in (str(last[name]), f".{last[name]}.crc"):
+            os.remove(os.path.join(commits, f))
+    queries = jobs.start_event_stream(spark, src, wh, ckpt)
+    try:
+        drain(queries)
+    finally:
+        stop(queries)
+    for q, name in zip(queries, ("events", "metrics")):
+        assert last[name] in {p["batchId"] for p in q.recentProgress}
+    assert queries[0].recentProgress[0]["numInputRows"] == len(EVENTS_BATCH_1 + EVENTS_EXTRA)
+    assert outputs(spark, wh) == before
+
+
+@pytest.mark.parametrize("stream_first", [False, True], ids=["batch_first", "stream_first"])
+def test_batch_load_and_event_stream_share_stg_progress(spark, tmp_path, stream_first):
+    """The batch load and the stream merge into the one stg_progress in
+    either order; the later writer's evt-001 and evt-004 win."""
+    input_dir, src, wh, ckpt = (
+        str(tmp_path / d) for d in ("input", "events", "wh", "ckpt")
     )
-    q.processAllAvailable()
-    # advance the watermark far past done-1's window on BOTH sides
-    late = {"event_id": "late", "student_id": "STU099", "course_id": "C1",
-            "event_type": "video_watched", "event_timestamp": "2024-02-01T13:00:00",
-            "duration_seconds": "1", "score": "1", "module_id": "M1",
-            "completion_percentage": "1"}
-    write_events(watch_dir, [late], "b2.jsonl")
-    write_events(done_dir, [dict(late, event_id="late-d",
-                                 event_type="quiz_completed")], "b2.jsonl")
-    q.processAllAvailable()
-    q.processAllAvailable()
-    q.stop()
-    rows = {r.completion_event_id: r for r in spark.table("so_sink").collect()}
-    assert "done-1" in rows
-    assert rows["done-1"].watch_event_id is None  # unmatched, NULL-joined
+    write_fixture_csvs(input_dir)
+    write_events(src, EVENTS_BATCH_1 + EVENTS_BATCH_2, "b1.json")
+
+    def stream():
+        queries = jobs.start_event_stream(spark, src, wh, ckpt)
+        try:
+            drain(queries)
+        finally:
+            stop(queries)
+
+    if stream_first:
+        stream()
+    counts = pipeline.run_batch_pipeline(spark, input_dir, wh)
+    if not stream_first:
+        stream()
+    stg = {r.event_id: r for r in spark.read.parquet(stg_dir(wh)).collect()}
+    # the batch's 50 events already include evt-001 and evt-004
+    assert len(stg) == counts["staging.stg_progress"] == 50
+    stream_won = stg["evt-004"].duration_seconds == 100
+    assert stream_won is not stream_first
+    assert (stg["evt-001"].duration_seconds == 900) is not stream_first
