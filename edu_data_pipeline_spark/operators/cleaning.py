@@ -60,6 +60,18 @@ def with_city_cleaned(
     )
 
 
+def _fit(rule: rules.RuleColumns, dtype: str) -> rules.RuleColumns:
+    """``rule`` with its value cast to the staging type ``dtype``. A value
+    that does not fit becomes NULL and fails the rule, on both ANSI
+    settings: a plain cast raises CAST_OVERFLOW with ANSI on, and
+    saturates an int (or nulls a decimal) with it off."""
+    value = rule.value.try_cast(dtype)
+    fits = rule.value.isNull() | value.isNotNull()
+    return rules.RuleColumns(
+        value, rule.is_valid & fits, F.when(fits, rule.note).otherwise("overflow")
+    )
+
+
 def mark_duplicates(df: DataFrame, key: str) -> DataFrame:
     """D1 (cleaning_rules.py:211-220 via dags/data_cleaning_pipeline.py:40-48):
     EVERY copy of a duplicated key is flagged, including the first."""
@@ -100,7 +112,7 @@ def clean_students(
     gender = rules.standardize_gender("gender")
     state = rules.clean_state("state")
     enroll = rules.parse_date("enrollment_date", ref_date=ref_date)
-    fee = rules.clean_numeric("fee_paid")
+    fee = _fit(rules.clean_numeric("fee_paid"), "decimal(15,2)")
 
     with_city = with_city_cleaned(df, "city", cities)
 
@@ -143,7 +155,7 @@ def clean_students(
         state.value.alias("state"),
         enroll.value.alias("enrollment_date"),
         rules.normalize_program_id("program_id").alias("program_id"),
-        fee.value.cast("decimal(15,2)").alias("fee_paid"),
+        fee.value.alias("fee_paid"),
         rules.payment_status_raw("payment_status").alias("payment_status"),
         email.is_valid.alias("is_email_valid"),
         phone.is_valid.alias("is_phone_valid"),
@@ -172,7 +184,7 @@ def clean_progress(
     sid = rules.standardize_student_id("student_id")
     score = rules.validate_score("score")
     completion = rules.validate_score("completion_percentage")
-    duration = rules.clean_numeric("duration_seconds")
+    duration = _fit(rules.clean_numeric("duration_seconds"), "int")
     ts = rules.parse_date_time("event_timestamp", ref_ts=ref_ts)
     quality = rules.quality_score(
         sid.is_valid, score.is_valid, completion.is_valid, duration.is_valid, ts.is_valid
@@ -183,7 +195,7 @@ def clean_progress(
         F.col("course_id").cast("string").alias("course_id"),
         F.col("event_type").cast("string").alias("event_type"),
         ts.value.alias("event_timestamp"),
-        duration.value.cast("int").alias("duration_seconds"),
+        duration.value.alias("duration_seconds"),
         score.value.cast("decimal(5,2)").alias("score"),
         F.col("module_id").cast("string").alias("module_id"),
         completion.value.cast("decimal(5,2)").alias("completion_percentage"),

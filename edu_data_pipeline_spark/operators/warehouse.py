@@ -10,8 +10,7 @@ the transformation DAG (dags/data_transformation_pipeline.py), Spark-first:
   what actually populates the warehouse, so it is canonical (SURVEY §2.7).
 - Surrogate keys: the reference uses Postgres SERIAL. At 100 TB a global
   ``row_number()`` is a single-partition bottleneck, so the default SK is
-  ``xxhash64(natural key)`` (deterministic, shuffle-free, join-colocatable);
-  ``dense=True`` gives contiguous SKs for small-dim parity tests.
+  ``xxhash64(natural key)`` (deterministic, shuffle-free, join-colocatable).
 - Upserts: the reference's ``INSERT .. ON CONFLICT DO UPDATE``
   (db.py:45-65) becomes a key-based merge: target and updates are unioned
   and one key-partitioned window keeps the last update per key, or the
@@ -60,35 +59,21 @@ def build_dim_date(
     )
 
 
-def with_surrogate_key(
-    df: DataFrame, natural_key: str, sk_name: str, dense: bool = False
-) -> DataFrame:
-    """Assign a surrogate key for ``natural_key``.
-
-    Default: ``xxhash64`` of the natural key — deterministic and fully
-    parallel (the scale path). ``dense=True``: ``row_number()`` ordered by
-    the natural key — contiguous like SERIAL, but serializes one window
-    (fine for dimension tables, wrong for facts).
-    """
-    if dense:
-        w = Window.orderBy(natural_key)
-        return df.withColumn(sk_name, F.row_number().over(w).cast("long"))
+def with_surrogate_key(df: DataFrame, natural_key: str, sk_name: str) -> DataFrame:
+    """Assign a surrogate key for ``natural_key``: ``xxhash64`` of the
+    natural key — deterministic and fully parallel (the scale path)."""
     return df.withColumn(sk_name, F.xxhash64(F.col(natural_key)))
-
-
-def sk_lookup(dim: DataFrame, natural_key: str, sk_name: str) -> DataFrame:
-    """J1/J2 (dags/data_transformation_pipeline.py:132-139): broadcastable
-    ``{natural_key -> sk}`` mapping."""
-    return dim.select(natural_key, sk_name)
 
 
 def attach_sk(
     fact: DataFrame, dim: DataFrame, natural_key: str, sk_name: str
 ) -> DataFrame:
-    """Left broadcast join replicating the reference's dict ``.get()``
-    (miss -> NULL sk)."""
+    """Left broadcast join on the dimension's broadcastable
+    ``{natural_key -> sk}`` mapping (J1/J2,
+    dags/data_transformation_pipeline.py:132-139), replicating the
+    reference's dict ``.get()`` (miss -> NULL sk)."""
     return fact.join(
-        F.broadcast(sk_lookup(dim, natural_key, sk_name)), natural_key, "left"
+        F.broadcast(dim.select(natural_key, sk_name)), natural_key, "left"
     )
 
 

@@ -14,7 +14,9 @@ with the quality log). Each write runs on its own Python thread, which
 inherits the caller's job group, description and scheduler pool. Row
 counts come from an ``observe()`` metric of each write action, so no
 table is read back to be counted; a table later layers consume is read
-once, with the schema just written (no inference job).
+once, with the schema just written (no inference job). Staging reads
+only this batch's raw rows, so an incremental batch merges into the
+existing tables instead of re-cleaning the raw history.
 ``metadata.pipeline_runs`` gets its SUCCESS row only after every other
 write succeeded.
 
@@ -231,11 +233,13 @@ def run_batch_pipeline(
 
         def task():
             df = csv_ingest.with_lineage(
-                csv_ingest.read_raw_csv(spark, paths[source], required[source], validate=False),
+                csv_ingest.read_raw_csv(spark, paths[source], required[source]),
                 batch_id=batch_id,
             )
             rows = append(df, table_dir(name), csv_ingest.append_raw)
-            return rows, spark.read.schema(df.schema).parquet(table_dir(name))
+            # staging cleans this batch's rows only, not the raw history
+            raw = spark.read.schema(df.schema).parquet(table_dir(name))
+            return rows, raw.where(F.col("batch_id") == batch_id)
         tasks[name] = ((), task)
 
     def merge(name: str, deps: tuple[str, ...], keys: list[str], build: Callable) -> None:

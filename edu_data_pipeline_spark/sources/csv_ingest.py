@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import csv
 import os
-import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -87,17 +86,11 @@ def validate_file(
 
 
 def read_raw_csv(
-    spark: SparkSession,
-    path: str,
-    required_columns: list[str],
-    validate: bool = True,
+    spark: SparkSession, path: str, required_columns: list[str]
 ) -> DataFrame:
     """S2 (dags/file_ingestion_pipeline.py:46-57): all-string schema-on-read
-    with header; the raw layer keeps every value as text."""
-    if validate:
-        res = validate_file(path, required_columns)
-        if not res.ok:
-            raise FileValidationError(f"{path}: {res.problems}")
+    with header; the raw layer keeps every value as text. The file's
+    pre-flight is :func:`validate_file`, run before this."""
     schema = T.StructType(
         [T.StructField(c, T.StringType()) for c in required_columns]
     )
@@ -109,7 +102,7 @@ def read_raw_csv(
     )
 
 
-def with_lineage(df: DataFrame, batch_id: str | None = None) -> DataFrame:
+def with_lineage(df: DataFrame, batch_id: str) -> DataFrame:
     """S4 lineage stamping (dags/file_ingestion_pipeline.py:88-92):
     file_name, file_row_number (1-based within the source file), batch_id.
 
@@ -117,19 +110,13 @@ def with_lineage(df: DataFrame, batch_id: str | None = None) -> DataFrame:
     order — at scale each file's window is independent, so skew is bounded
     by the 25 MB file cap, not dataset size.
     """
-    batch = batch_id or uuid.uuid4().hex
-    # honor a pre-captured file_name (sources that cache the scan must
-    # capture input_file_name() before materialization, e.g. jsonl_ingest)
-    if "file_name" in df.columns:
-        with_file = df
-    else:
-        with_file = df.withColumn(
-            "file_name", F.element_at(F.split(F.input_file_name(), "/"), -1)
-        )
+    with_file = df.withColumn(
+        "file_name", F.element_at(F.split(F.input_file_name(), "/"), -1)
+    )
     w = Window.partitionBy("file_name").orderBy(F.monotonically_increasing_id())
     return (
         with_file.withColumn("file_row_number", F.row_number().over(w))
-        .withColumn("batch_id", F.lit(batch))
+        .withColumn("batch_id", F.lit(batch_id))
         .withColumn("ingested_at", F.current_timestamp())
     )
 

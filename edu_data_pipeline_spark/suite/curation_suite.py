@@ -50,13 +50,13 @@ from .scale_suite import (
     STOPWORDS,
     _SQL_COS_AB,
     _SQL_GRAM_KEY64,
-    _SQL_SHINGLES,
-    _distinct_shingles_with_source,
+    _SQL_GRAMS,
     _distinct_sk_rows,
     _gram_key64,
     _sql_key64,
     _n_tokens,
     _tokens,
+    gram_rows,
     sql_kmeans_chain,
 )
 
@@ -87,11 +87,7 @@ _SQL_SIG_MATCHES = " + ".join(
 
 @register(
     "source_minhash_overlap",
-    oracle=f"""
-    WITH sh AS ({_SQL_SHINGLES}),
-    exploded AS (
-      SELECT doc_id, unnest(shingles) AS s FROM sh
-    ), halves AS ({_SQL_SRC_HALVES}),
+    oracle=f"""{_SQL_GRAMS}, halves AS ({_SQL_SRC_HALVES}),
     sigs AS (
       SELECT source,
 {_SQL_SRC_MINHASH_AGGS}
@@ -118,7 +114,11 @@ def source_minhash_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (combiner-friendly), the join is trivially broadcast.
     """
     d = table(spark, sf_dir, "documents")
-    sh = _distinct_shingles_with_source(d)  # source rides the explode (r8)
+    # shingle rows WITH duplicates: the min-aggregate is set-invariant, so
+    # no distinct is needed (Catalyst's RemoveRedundantAggregates dropped
+    # the old .distinct() under the min anyway); ``source`` rides the
+    # explode (r8)
+    sh = gram_rows(d, 3, carry=("source",))
     m = F.md5(F.col("s"))
     halves = sh.select(
         "source",
@@ -609,11 +609,7 @@ def bloom_gram_flags(grams: DataFrame, bloom: DataFrame) -> DataFrame:
 
 @register(
     "docs_bloom_screen",
-    oracle=f"""
-    WITH sh AS ({_SQL_SHINGLES}),
-    exploded AS (
-      SELECT doc_id, unnest(shingles) AS s FROM sh
-    ), tagged AS (
+    oracle=f"""{_SQL_GRAMS}, tagged AS (
       SELECT DISTINCT e.doc_id, d.source, {_sql_key64('e.s')} AS sk FROM exploded e
       JOIN documents d ON d.doc_id = e.doc_id
     ), halves AS ({_SQL_BLOOM_HALVES}),

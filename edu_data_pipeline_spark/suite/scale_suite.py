@@ -378,48 +378,75 @@ def _gram_key64_sql(expr: str) -> str:
     return f"cast(conv(substring(md5({expr}), 1, 15), 16, 10) as bigint)"
 
 
-def _shingle_rows(d: DataFrame) -> DataFrame:
-    """(doc_id, shingle) rows of word-3-grams, WITH duplicates."""
-    return gram_rows(d, 3)
+def _token_rows(d: DataFrame, k: int, carry: tuple[str, ...] = ()) -> DataFrame:
+    """(doc_id, *carry, toks) for the documents of at least ``k`` tokens:
+    the array builders' token barrier. explode(array(...)) binds the
+    split array behind a Generate, so Catalyst's projection collapse can
+    never re-inline the split per element above it (the gram_rows trap).
+    ``size >= k`` also drops NULL text on both ANSI settings (size(NULL)
+    is -1 with ANSI off, NULL with it on)."""
+    return d.selectExpr(
+        "doc_id", *carry, "explode(array(split(trim(text), ' '))) AS toks"
+    ).where(F.expr(f"size(toks) >= {k}"))
+
+
+def _sql_gram_array(k: int, elem) -> str:
+    """Spark-SQL array of a bound ``toks`` row's k-grams, in position
+    order, each mapped through ``elem`` (a gram-SQL-string ->
+    element-SQL-string function that must not bind a lambda ``i``; r14 —
+    the Column-callback form cost ~145 ms of py4j round trips per plan
+    build)."""
+    gram = elem(f"array_join(slice(toks, i, {k}), ' ')")
+    return f"transform(sequence(1, size(toks) - {k - 1}), i -> {gram})"
+
+
+def _gram_key_arrays(d: DataFrame, k: int) -> DataFrame:
+    """(doc_id, garr) — each document's per-POSITION 60-bit k-gram keys
+    as ONE order-preserving array row: tokenize and md5 the corpus once,
+    then persist_tracked() it and derive every leg map-side (posexplode
+    -> gram instances; _distinct_sk_rows -> per-doc-distinct df rows;
+    size(garr) -> gram count). The row is 8 B per token position —
+    smaller than the text it replaces — so the cache is bounded by the
+    input the legs would otherwise each re-scan (r15, VERDICT r14 #3)."""
+    return _token_rows(d, k).selectExpr(
+        "doc_id", f"explode(array({_sql_gram_array(k, _gram_key64_sql)})) AS garr"
+    )
 
 
 def _doc_distinct_gram_arrays(
-    d: DataFrame, elem, carry: tuple[str, ...] = (), k: int = 3
+    d: DataFrame, elem=_gram_key64_sql, carry: tuple[str, ...] = (), k: int = 3
 ) -> DataFrame:
-    """(doc_id, arr) — each document's word-3-grams mapped through
-    ``elem`` (a gram-SQL-string -> element-SQL-string function; r14 —
-    the Column-callback form cost ~145 ms of py4j round trips per plan
-    build; ``elem`` must not introduce a lambda variable named ``i``),
-    SORTED and DEDUPED, built entirely MAP-SIDE (r8c).
+    """(doc_id, *carry, arr) — each document's k-grams mapped through
+    ``elem`` (default: the 60-bit key), SORTED and DEDUPED, built
+    entirely MAP-SIDE (r8c). ``d`` is the documents frame or a
+    _gram_key_arrays frame, whose bound ``garr`` keys are sorted in
+    place (no second tokenize or md5; ``elem`` and ``k`` are its own).
 
-    Why this exists: a document's grams are generated from its own row,
-    so per-doc dedup needs no exchange at all — but the DataFrame
-    spellings all pay one (``.distinct()`` / ``collect_set`` shuffle
-    the full gram volume). This builds the distinct set as an array
-    expression instead. Two Generate barriers keep it linear: explode
-    binds the token array, then binds the transformed+sorted gram
-    array, so Catalyst's projection collapse can never re-inline the
-    split per element (the gram_rows trap); dedup is then an adjacent-
-    inequality filter over the BOUND sorted array — O(g log g) CPU per
+    A document's grams come from its own row, so per-doc dedup needs no
+    exchange; the DataFrame spellings (``.distinct()`` / ``collect_set``)
+    all shuffle the full gram volume. Two Generate barriers keep this
+    linear: the token barrier, then the sorted gram array, so the
+    adjacent-inequality filter reads a BOUND array — O(g log g) CPU per
     doc, zero shuffle. array_distinct (O(g²) per row) stays banned.
 
-    Consumers: _doc_fp_sets (verify arrays), _stop_filtered_halves and
-    _pair_shingle_keys (df counting: exploding these arrays yields
-    per-doc-distinct rows, so document frequency is a plain count(*)
-    with map-side partial sums — a vocabulary-bounded exchange instead
-    of a gram-volume count_distinct), docs_decontamination-family
-    screens (rows are already per-doc distinct; no exchange before the
-    broadcast probe)."""
-    toks = d.selectExpr(
-        "doc_id", *carry, "explode(array(split(trim(text), ' '))) AS toks"
-    ).where(F.expr(f"size(toks) >= {k}"))
-    gram = elem(f"array_join(slice(toks, i, {k}), ' ')")
-    built = toks.selectExpr(
-        "doc_id",
-        *carry,
-        "explode(array(array_sort(transform("
-        f"sequence(1, size(toks) - {k - 1}), i -> {gram})))) AS arr",
-    )
+    The key arrays are the exact-Jaccard verify currency
+    (_verify_pair_overlap); exploded (_distinct_sk_rows) they are the
+    per-doc-distinct rows df counts and gram screens run on. n_sh and
+    n_common are fingerprint-distinct on BOTH engines (the oracles apply
+    the identical _sql_key64 transform, the dup-span trade, ~n²/2^61
+    folds). One array row per document replaces the exploded (doc_id,
+    sk) frame's distinct exchange, two verify equi-joins and a sizes
+    aggregate: 2.9x less shuffle on minhash_verified_pairs (r8b)."""
+    if "garr" in d.columns:
+        built = d.selectExpr(
+            "doc_id", *carry, "explode(array(array_sort(garr))) AS arr"
+        )
+    else:
+        built = _token_rows(d, k, carry).selectExpr(
+            "doc_id",
+            *carry,
+            f"explode(array(array_sort({_sql_gram_array(k, elem)}))) AS arr",
+        )
     return built.selectExpr(
         "doc_id",
         *carry,
@@ -440,27 +467,22 @@ def _doc_elem_counts(
     Column-callback form cost ~207 ms of py4j round trips per plan
     build; ``build`` may use its own lambda variables, the enclosing
     expressions introduce ``i``/``s``/``e``/``x`` only in disjoint
-    scopes) to the (unsorted) element array — bound first behind a
-    Generate barrier so Catalyst's projection collapse can never
-    re-inline the split per element (the gram_rows trap). The element
-    array is then sorted behind its own barrier and run-length encoded:
-    run starts are an adjacent-inequality filter over positions, run
-    lengths are positional differences to the next start. O(g log g)
-    CPU per document, ZERO exchange — the per-(doc, elem) hash
-    aggregate the naive explode+groupBy shape pays is gone, and
-    downstream corpus-level aggregates (df, Σtf) see per-doc-distinct
-    rows, so they are plain counts/sums with map-side partials (a
-    vocabulary-bounded exchange).
+    scopes) to the (unsorted) element array. The element array is
+    sorted behind its own barrier and run-length encoded: run starts
+    are an adjacent-inequality filter over positions, run lengths are
+    positional differences to the next start. O(g log g) CPU per
+    document, ZERO exchange — the per-(doc, elem) hash aggregate the
+    naive explode+groupBy shape pays is gone, and downstream
+    corpus-level aggregates (df, Σtf) see per-doc-distinct rows, so they
+    are plain counts/sums with map-side partials (a vocabulary-bounded
+    exchange).
 
     ``min_toks`` guards builders that need a minimum token count (k-gram
     builders produce an EMPTY array below k tokens, and
     sequence(0, -1) would descend, not return empty)."""
-    toks = d.selectExpr(
-        "doc_id", "explode(array(split(trim(text), ' '))) AS _dtoks"
-    ).where(F.expr(f"_dtoks IS NOT NULL AND size(_dtoks) >= {min_toks}"))
-    arrs = toks.selectExpr(
+    arrs = _token_rows(d, min_toks).selectExpr(
         "doc_id",
-        f"explode(array(array_sort({build('_dtoks')}))) AS _arr",
+        f"explode(array(array_sort({build('toks')}))) AS _arr",
     )
     runs = arrs.selectExpr(
         "doc_id",
@@ -481,50 +503,27 @@ def _doc_elem_counts(
 def _distinct_sk_rows(
     d: DataFrame, carry: tuple[str, ...] = (), k: int = 3
 ) -> DataFrame:
-    """Per-doc-distinct (doc_id, *carry, sk) 60-bit fingerprint rows
-    with ZERO shuffle (r8c): explode of the map-side per-doc distinct
-    arrays. Drop-in replacement for the gram_rows(...).distinct() shape
-    wherever distinctness is only needed per document — which is every
-    (doc_id, sk)-grained consumer, since the pair is the grain."""
-    return _doc_distinct_gram_arrays(d, _gram_key64_sql, carry=carry, k=k).select(
+    """Per-doc-distinct (doc_id, *carry, sk) 60-bit key rows with ZERO
+    shuffle (r8c): the exploded _doc_distinct_gram_arrays, from the
+    documents frame or a persisted _gram_key_arrays frame. Drop-in for
+    gram_rows(...).distinct() wherever distinctness is only needed per
+    document — every (doc_id, sk)-grained consumer, since the pair is
+    the grain."""
+    return _doc_distinct_gram_arrays(d, carry=carry, k=k).select(
         "doc_id", *carry, F.explode("arr").alias("sk")
-    )
-
-
-def _doc_fp_sets(d: DataFrame) -> DataFrame:
-    """(doc_id, sks) — each document's DISTINCT 60-bit shingle
-    fingerprints as ONE array row: the exact-Jaccard verify currency
-    (r8b, superseding the r8 exploded-fingerprint shape). n_sh and
-    n_common stay fingerprint-distinct on BOTH engines (the oracle
-    applies the identical _sql_key64 transform, so parity is exact even
-    under collisions — the dup-span trade, ~n^2/2^61 folds).
-    Shuffling one array row per document replaces three full
-    passes of the exploded (doc_id, sk) frame (the distinct exchange,
-    two verify equi-joins, and the pair-keyed count that followed), and
-    n_sh becomes size(sks) — no separate sizes aggregate or join-back.
-    Measured on minhash_verified_pairs: 2.9x less shuffle at both
-    sf0.01 and sf0.1 (0.81→0.28 MB / 7.77→2.68 MB), alpha unchanged.
-    A document's array is 8 B per distinct gram, bounded by its own
-    token count, so the row fits wherever the document itself fit.
-    r8c: the array is built MAP-SIDE (_doc_distinct_gram_arrays) — the
-    collect_set exchange this first shipped the gram volume through is
-    gone; the verify family's only exchanges are now the candidate
-    joins themselves."""
-    return _doc_distinct_gram_arrays(d, _gram_key64_sql).select(
-        "doc_id", F.col("arr").alias("sks")
     )
 
 
 def _verify_pair_overlap(cand: DataFrame, fp: DataFrame) -> DataFrame:
     """Annotate candidate (doc_a, doc_b, ...) pairs with n_common /
     n_a / n_b, the exact set-overlap counts, via two equi-joins against
-    the per-doc fingerprint arrays and a map-side array_intersect — no
-    exchange after the joins. Zero-overlap candidates KEEP a row with
-    n_common = 0 (the exploded shape's inner join dropped them);
-    callers replicate the oracle's drop with .where(n_common > 0) or a
-    Jaccard threshold."""
-    a = fp.select(F.col("doc_id").alias("doc_a"), F.col("sks").alias("sks_a"))
-    b = fp.select(F.col("doc_id").alias("doc_b"), F.col("sks").alias("sks_b"))
+    the per-doc key arrays (_doc_distinct_gram_arrays) and a map-side
+    array_intersect — no exchange after the joins. Zero-overlap
+    candidates KEEP a row with n_common = 0 (the exploded shape's inner
+    join dropped them); callers replicate the oracle's drop with
+    .where(n_common > 0) or a Jaccard threshold."""
+    a = fp.select(F.col("doc_id").alias("doc_a"), F.col("arr").alias("sks_a"))
+    b = fp.select(F.col("doc_id").alias("doc_b"), F.col("arr").alias("sks_b"))
     return (
         cand.join(a, "doc_a")
         .join(b, "doc_b")
@@ -542,15 +541,6 @@ def _overlap_jaccard() -> Column:
     return F.col("n_common") * 1.0 / (
         F.col("n_a") + F.col("n_b") - F.col("n_common")
     )
-
-
-def _distinct_shingles_with_source(d: DataFrame) -> DataFrame:
-    """Distinct (doc_id, source, shingle) rows — ``source`` rides the
-    gram explode (r8): functionally dependent on doc_id, so the distinct
-    cardinality is that of the (doc_id, shingle) pairs, while the old
-    ``join(documents, doc_id)`` shuffled every gram row a second time
-    just to fetch one per-document attribute."""
-    return gram_rows(d, 3, out="s", carry=("source",)).distinct()
 
 
 # ---------------------------------------------------------------------------
@@ -579,17 +569,30 @@ _SQL_MINHASH_AGGS = ",\n".join(
     f"             min(h1 + {i} * h2) AS sig_{i}" for i in range(N_HASHES)
 )
 
-
-@register(
-    "minhash_signatures",
-    oracle=f"""
+# The near-dup oracles' shared CTE chains, each typed once: the word-3-
+# gram rows (sh -> exploded), their halves, the per-doc signature
+# aggregate, and the whole sh -> exploded -> halves -> sigs prefix.
+_SQL_GRAMS = f"""
     WITH sh AS ({_SQL_SHINGLES}),
     exploded AS (
       SELECT doc_id, unnest(shingles) AS s FROM sh
-    ), halves AS ({_SQL_HALVES})
-    SELECT doc_id,
+    )"""
+
+_SQL_GRAM_HALVES = f"{_SQL_GRAMS}, halves AS ({_SQL_HALVES})"
+
+_SQL_SIG_SELECT = f"""
+      SELECT doc_id,
 {_SQL_MINHASH_AGGS}
-    FROM halves GROUP BY doc_id
+      FROM halves GROUP BY doc_id"""
+
+_SQL_SIGS = f"""{_SQL_GRAM_HALVES},
+    sigs AS ({_SQL_SIG_SELECT}
+    )"""
+
+
+@register(
+    "minhash_signatures",
+    oracle=f"""{_SQL_GRAM_HALVES}{_SQL_SIG_SELECT}
     """,
 )
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -599,7 +602,7 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 def minhash_signatures_df(docs: DataFrame) -> DataFrame:
     """Signature core over any (doc_id, text) DataFrame — reused by the
     scale smoke so measured numbers always describe the shipped scheme."""
-    return _sigs_from_shingle_rows(_shingle_rows(docs))
+    return _sigs_from_halves(_halves_from_shingle_rows(gram_rows(docs, 3)))
 
 
 def _halves_from_shingle_rows(sh: DataFrame) -> DataFrame:
@@ -629,28 +632,29 @@ def _sigs_from_halves(halves: DataFrame) -> DataFrame:
     return halves.groupBy("doc_id").agg(*aggs)
 
 
-def _sigs_from_shingle_rows(sh: DataFrame) -> DataFrame:
-    """MinHash signatures from (doc_id, s) shingle rows."""
-    return _sigs_from_halves(_halves_from_shingle_rows(sh))
-
-
-def band_rows(sigs: DataFrame) -> DataFrame:
-    """(doc_id, band_idx, band_key) LSH band rows from a signature frame."""
+def band_rows(
+    sigs: DataFrame, n_bands: int = N_BANDS, n_rows: int = N_BAND_ROWS
+) -> DataFrame:
+    """(doc_id, band_idx, band_key) LSH band rows from a signature frame:
+    ``n_bands`` bands of ``n_rows`` signature components each (the 4x4
+    default, or one of minhash_band_sweep's BAND_SWEEP_CFGS)."""
     stack_args = ", ".join(
         "{}, concat_ws('|', {})".format(
-            b, ", ".join(f"sig_{N_BAND_ROWS * b + r}" for r in range(N_BAND_ROWS))
+            b, ", ".join(f"sig_{n_rows * b + r}" for r in range(n_rows))
         )
-        for b in range(N_BANDS)
+        for b in range(n_bands)
     )
     return sigs.selectExpr(
-        "doc_id", f"stack({N_BANDS}, {stack_args}) AS (band_idx, band_key)"
+        "doc_id", f"stack({n_bands}, {stack_args}) AS (band_idx, band_key)"
     )
 
 
-def _band_pairs(sigs: DataFrame) -> DataFrame:
-    """LSH banded candidate pairs from a signature DataFrame: stack the
-    bands, equi-join on (band_idx, band_key) — the near-linear candidate
-    generator shared by every MinHash query.
+def _band_pairs(
+    sigs: DataFrame, n_bands: int = N_BANDS, n_rows: int = N_BAND_ROWS
+) -> DataFrame:
+    """LSH banded candidate pairs (doc_a < doc_b) from a signature
+    DataFrame: stack the bands, equi-join on (band_idx, band_key) — the
+    near-linear candidate generator shared by every MinHash query.
 
     r15 (VERDICT r14 #5): the signature frame is persist_tracked —
     both sides of the self-join (and, via Spark's plan-equality cache
@@ -660,9 +664,10 @@ def _band_pairs(sigs: DataFrame) -> DataFrame:
     whole stop-list build) ran twice per query. A signature row is
     doc_id + 16 longs (~136 B/doc, the guide §8 lightweight proxy), so
     the cache is corpus-count-, not corpus-size-, bounded; the same
-    trade minhash_band_sweep has always made for its 3 bandings."""
-    sigs = persist_tracked(sigs)
-    bands = band_rows(sigs)
+    trade minhash_band_sweep makes for its 3 bandings."""
+    if not sigs.is_cached:
+        sigs = persist_tracked(sigs)
+    bands = band_rows(sigs, n_bands, n_rows)
     a = bands.alias("a")
     b = bands.alias("b")
     return (
@@ -683,30 +688,41 @@ def _sql_band_key(b: int) -> str:
     )
 
 
-_SQL_BANDS = "\n      UNION ALL\n".join(
+_SQL_BANDS = "bands AS (\n{}\n    )".format("\n      UNION ALL\n".join(
     f"      SELECT doc_id, {b} AS band_idx, {_sql_band_key(b)} AS band_key FROM sigs"
     for b in range(N_BANDS)
-)
+))
+
+_SQL_BAND_JOIN = """
+      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+      FROM bands a JOIN bands b
+        ON a.band_idx = b.band_idx AND a.band_key = b.band_key
+           AND a.doc_id < b.doc_id"""
+
+# bands -> cand: the banded candidate self-join as a CTE
+_SQL_CAND = f"""{_SQL_BANDS}, cand AS ({_SQL_BAND_JOIN}
+    )"""
+
+
+def _sql_verify(cand: str) -> str:
+    """exploded_k -> sizes -> common: the exact shingle-set overlap of
+    the ``cand`` CTE's (doc_a, doc_b) pairs, on 60-bit keys."""
+    return f"""exploded_k AS (
+      SELECT DISTINCT doc_id, {_sql_key64('s')} AS sk FROM exploded
+    ), sizes AS (
+      SELECT doc_id, count(*) AS n_sh FROM exploded_k GROUP BY doc_id
+    ), common AS (
+      SELECT c.doc_a, c.doc_b, count(*) AS n_common
+      FROM {cand} c
+      JOIN exploded_k a ON a.doc_id = c.doc_a
+      JOIN exploded_k b ON b.doc_id = c.doc_b AND b.sk = a.sk
+      GROUP BY c.doc_a, c.doc_b
+    )"""
 
 
 @register(
     "minhash_lsh_pairs",
-    oracle=f"""
-    WITH sh AS ({_SQL_SHINGLES}),
-    exploded AS (
-      SELECT doc_id, unnest(shingles) AS s FROM sh
-    ), halves AS ({_SQL_HALVES}),
-    sigs AS (
-      SELECT doc_id,
-{_SQL_MINHASH_AGGS}
-      FROM halves GROUP BY doc_id
-    ), bands AS (
-{_SQL_BANDS}
-    )
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a JOIN bands b
-      ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-         AND a.doc_id < b.doc_id
+    oracle=f"""{_SQL_SIGS}, {_SQL_BANDS}{_SQL_BAND_JOIN}
     """,
 )
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -733,37 +749,40 @@ def _sk_from_halves() -> Column:
     return F.expr("shiftleft(h1, 28) + shiftright(h2, 4)")
 
 
+def _stop_keys(rows: DataFrame, d: DataFrame, max_df: str) -> DataFrame:
+    """The broadcastable stop list: ``sk`` of every fingerprint in more
+    than ``max_df`` documents (a Spark-SQL expression over ``n_docs``,
+    the corpus size). ``rows`` are per-doc-distinct (doc_id, sk) rows
+    (_distinct_sk_rows), so document frequency is a plain count(*) with
+    map-side partial sums — a VOCABULARY-bounded exchange, where the
+    string shape paid a gram-volume distinct exchange plus a vocabulary
+    groupBy of strings. A fingerprint collision merges two shingles' df;
+    the oracles apply the identical transform, so parity is exact (the
+    dup-span trade)."""
+    kdf = rows.groupBy("sk").agg(F.count(F.lit(1)).alias("df_docs"))
+    total = d.agg(F.count(F.lit(1)).alias("n_docs"))
+    return (
+        kdf.crossJoin(F.broadcast(total))
+        .where(F.col("df_docs") > F.expr(max_df))
+        .select("sk")
+    )
+
+
+_STOP_MAX_DF = f"greatest({STOP_DF_FLOOR}, n_docs div 100)"
+
+
 def _stop_filtered_halves(d: DataFrame) -> DataFrame:
     """(doc_id, h1, h2) rows (dups kept — the min-agg consumer is
     set-invariant) with >1%-document-frequency shingles removed — the
-    form the stopfiltered QUERY path uses. Two structural cuts (r8c): document
-    frequency is a plain count(*) over the zero-shuffle per-doc
-    distinct rows — map-side partial sums make that exchange
-    VOCABULARY-bounded (the string shape paid a gram-volume distinct
-    exchange plus a vocabulary groupBy of strings) — and the kept side
-    is the RAW flat gram stream (no per-doc sort: the expensive array
-    pipeline runs exactly once, on the df side; a first cut fed BOTH
-    sides from the arrays and evaluated the whole map-side pipeline
-    twice, measurably slower on wall despite identical bytes). The
-    anti-join key is the 60-bit fingerprint derived arithmetically from
-    the halves (_sk_from_halves). df counts merge shingles on
-    fingerprint collision; the oracle applies the identical transform,
-    so parity is exact (the dup-span trade)."""
-    kdf = (
-        _distinct_sk_rows(d)
-        .groupBy("sk")
-        .agg(F.count(F.lit(1)).alias("df_docs"))
-    )
-    total = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    stop = (
-        kdf.crossJoin(F.broadcast(total))
-        .where(
-            F.col("df_docs")
-            > F.greatest(F.lit(STOP_DF_FLOOR), F.expr("n_docs div 100"))
-        )
-        .select("sk")
-    )
-    hv = _halves_from_shingle_rows(_shingle_rows(d)).withColumn(
+    form the stopfiltered QUERY path uses (r8c). The kept side is the
+    RAW flat gram stream (no per-doc sort: the expensive array pipeline
+    runs exactly once, on the df side; a first cut fed BOTH sides from
+    the arrays and evaluated the whole map-side pipeline twice,
+    measurably slower on wall despite identical bytes). The anti-join
+    key is the 60-bit fingerprint derived arithmetically from the
+    halves (_sk_from_halves)."""
+    stop = _stop_keys(_distinct_sk_rows(d), d, _STOP_MAX_DF)
+    hv = _halves_from_shingle_rows(gram_rows(d, 3)).withColumn(
         "sk", _sk_from_halves()
     )
     return hv.join(F.broadcast(stop), "sk", "left_anti").drop("sk")
@@ -791,43 +810,18 @@ def _pair_shingle_keys(d: DataFrame) -> DataFrame:
     Zipf-bounded, a vanishing fraction of the vocabulary) and the big
     side anti-joins shuffle-free. The self-join is the widest exchange in
     docs_jaccard_top_pairs, so its key and payload shrink from ~20-byte
-    shingle strings to 60-bit longs; df is a vocabulary-bounded
-    count(*) over the map-side per-doc-distinct array rows
-    (_doc_distinct_gram_arrays) with map-side partial sums — no
-    count_distinct exchange anywhere. A fingerprint collision
-    merges two shingles' df and can only ADD a candidate pair — the
-    exact-Jaccard verify rescores every candidate, and the oracle
-    applies the identical transform, so parity is exact. r8c: rows
-    explode from the map-side per-doc distinct arrays
-    (_doc_distinct_gram_arrays) — already globally distinct on
-    (doc_id, sk), so df is a vocabulary-bounded count(*) and the
-    trailing .distinct() exchange is gone."""
-    rows = _doc_distinct_gram_arrays(d, _gram_key64_sql).select(
-        "doc_id", F.explode("arr").alias("sk")
-    )
-    kdf = rows.groupBy("sk").agg(F.count(F.lit(1)).alias("df_docs"))
-    total = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    stop = (
-        kdf.crossJoin(F.broadcast(total))
-        .where(
-            F.col("df_docs")
-            > F.least(
-                F.greatest(F.lit(STOP_DF_FLOOR), F.expr("n_docs div 100")),
-                F.lit(PAIR_DF_CAP),
-            )
-        )
-        .select("sk")
-    )
+    shingle strings to 60-bit longs. A fingerprint collision can only
+    ADD a candidate pair — the exact-Jaccard verify rescores every
+    candidate. The rows are already globally distinct on (doc_id, sk)
+    (_distinct_sk_rows), so no trailing .distinct() exchange (r8c)."""
+    rows = _distinct_sk_rows(d)
+    stop = _stop_keys(rows, d, f"least({_STOP_MAX_DF}, {PAIR_DF_CAP})")
     return rows.join(F.broadcast(stop), "sk", "left_anti")
 
 
 @register(
     "minhash_lsh_stopfiltered",
-    oracle=f"""
-    WITH sh AS ({_SQL_SHINGLES}),
-    exploded AS (
-      SELECT doc_id, unnest(shingles) AS s FROM sh
-    ),
+    oracle=f"""{_SQL_GRAMS},
     halves_all AS ({_SQL_HALVES}),
     keyed AS (
       SELECT doc_id, h1, h2, (h1 << 28) + (h2 >> 4) AS sk FROM halves_all
@@ -844,17 +838,8 @@ def _pair_shingle_keys(d: DataFrame) -> DataFrame:
       JOIN hdf f ON k.sk = f.sk CROSS JOIN tot
       WHERE f.df_docs <= greatest({STOP_DF_FLOOR}, n_docs // 100)
     ),
-    sigs AS (
-      SELECT doc_id,
-{_SQL_MINHASH_AGGS}
-      FROM halves GROUP BY doc_id
-    ), bands AS (
-{_SQL_BANDS}
-    )
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a JOIN bands b
-      ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-         AND a.doc_id < b.doc_id
+    sigs AS ({_SQL_SIG_SELECT}
+    ), {_SQL_BANDS}{_SQL_BAND_JOIN}
     """,
 )
 def minhash_lsh_stopfiltered(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -875,11 +860,7 @@ def minhash_lsh_stopfiltered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "docs_jaccard_top_pairs",
-    oracle=f"""
-    WITH sh AS ({_SQL_SHINGLES}),
-    exploded AS (
-      SELECT doc_id, unnest(shingles) AS s FROM sh
-    ),
+    oracle=f"""{_SQL_GRAMS},
     pk_raw AS (
       SELECT doc_id, {_sql_key64('s')} AS sk FROM exploded
     ), pdf AS (
@@ -895,17 +876,7 @@ def minhash_lsh_stopfiltered(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM pair_sh a JOIN pair_sh b ON a.sk = b.sk AND a.doc_id < b.doc_id
-    ), exploded_k AS (
-      SELECT DISTINCT doc_id, {_sql_key64('s')} AS sk FROM exploded
-    ), sizes AS (
-      SELECT doc_id, count(*) AS n_sh FROM exploded_k GROUP BY doc_id
-    ), common AS (
-      SELECT c.doc_a, c.doc_b, count(*) AS n_common
-      FROM cand c
-      JOIN exploded_k a ON a.doc_id = c.doc_a
-      JOIN exploded_k b ON b.doc_id = c.doc_b AND b.sk = a.sk
-      GROUP BY c.doc_a, c.doc_b
-    )
+    ), {_sql_verify("cand")}
     SELECT doc_a, doc_b,
            CAST(CAST(CAST(n_common * 1.0 / (sa.n_sh + sb.n_sh - n_common) AS VARCHAR) AS DECIMAL(38,4)) AS DOUBLE) AS jaccard
     FROM common
@@ -965,7 +936,7 @@ def docs_jaccard_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fp NOT persisted (recompute beats the cache round-trip for the
     # plain array pipeline — see minhash_verified_pairs); kept IS
     # persisted above (its subtree carries the df-cap agg on top)
-    scored = _verify_pair_overlap(cand, _doc_fp_sets(d)).where(
+    scored = _verify_pair_overlap(cand, _doc_distinct_gram_arrays(d)).where(
         F.col("n_common") > 0
     )
     jac = _overlap_jaccard()
@@ -981,33 +952,7 @@ MINHASH_VERIFY_J = 0.5  # exact-Jaccard acceptance threshold on candidates
 
 @register(
     "minhash_verified_pairs",
-    oracle=f"""
-    WITH sh AS ({_SQL_SHINGLES}),
-    exploded AS (
-      SELECT doc_id, unnest(shingles) AS s FROM sh
-    ), halves AS ({_SQL_HALVES}),
-    sigs AS (
-      SELECT doc_id,
-{_SQL_MINHASH_AGGS}
-      FROM halves GROUP BY doc_id
-    ), bands AS (
-{_SQL_BANDS}
-    ), cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b
-        ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-           AND a.doc_id < b.doc_id
-    ), exploded_k AS (
-      SELECT DISTINCT doc_id, {_sql_key64('s')} AS sk FROM exploded
-    ), sizes AS (
-      SELECT doc_id, count(*) AS n_sh FROM exploded_k GROUP BY doc_id
-    ), common AS (
-      SELECT c.doc_a, c.doc_b, count(*) AS n_common
-      FROM cand c
-      JOIN exploded_k a ON a.doc_id = c.doc_a
-      JOIN exploded_k b ON b.doc_id = c.doc_b AND b.sk = a.sk
-      GROUP BY c.doc_a, c.doc_b
-    )
+    oracle=f"""{_SQL_SIGS}, {_SQL_CAND}, {_sql_verify("cand")}
     SELECT doc_a, doc_b,
            CAST(CAST(CAST(n_common * 1.0 / (sa.n_sh + sb.n_sh - n_common) AS VARCHAR) AS DECIMAL(38,4)) AS DOUBLE) AS jaccard
     FROM common
@@ -1027,16 +972,16 @@ def minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding/signature stages are shared with minhash_lsh_pairs."""
     d = table(spark, sf_dir, "documents")
     cand = minhash_lsh_pairs(spark, sf_dir)
-    # per-doc fingerprint arrays + map-side intersect (r8b) — see
-    # _doc_fp_sets for the measured 2.9x shuffle cut. The verify joins
-    # fp twice and subtree reuse does not fire, but persisting it
+    # per-doc key arrays + map-side intersect (r8b) — see
+    # _doc_distinct_gram_arrays for the measured 2.9x shuffle cut. The
+    # verify joins fp twice and subtree reuse does not fire, but persisting it
     # MEASURED SLOWER here (1.82 -> 2.36 s at sf0.1): this fp pipeline
     # is cheap 3-gram array algebra, and the cache write+read round
     # trip costs more than the second evaluation — the r8c
     # "keep the expensive pipeline single-consumer" rule's flip side.
     # (docs_jaccard_top_pairs DOES persist: its shared subtree carries
     # the df-cap aggregation on top, 7.95 -> 5.23 s measured.)
-    scored = _verify_pair_overlap(cand, _doc_fp_sets(d))
+    scored = _verify_pair_overlap(cand, _doc_distinct_gram_arrays(d))
     jac = _overlap_jaccard()
     return scored.where(jac >= MINHASH_VERIFY_J).select(
         "doc_a", "doc_b", dround(jac, 4).alias("jaccard")
@@ -1046,33 +991,7 @@ def minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Shared CTE chain: shingles -> signatures -> LSH candidates -> verified
 # edges -> recursive-CTE transitive closure -> per-doc component label.
 # Reused by dedup_components and dedup_keep_best.
-_SQL_COMPONENT_CTES = f"""
-    WITH sh AS ({_SQL_SHINGLES}),
-    exploded AS (
-      SELECT doc_id, unnest(shingles) AS s FROM sh
-    ), halves AS ({_SQL_HALVES}),
-    sigs AS (
-      SELECT doc_id,
-{_SQL_MINHASH_AGGS}
-      FROM halves GROUP BY doc_id
-    ), bands AS (
-{_SQL_BANDS}
-    ), cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b
-        ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-           AND a.doc_id < b.doc_id
-    ), exploded_k AS (
-      SELECT DISTINCT doc_id, {_sql_key64('s')} AS sk FROM exploded
-    ), sizes AS (
-      SELECT doc_id, count(*) AS n_sh FROM exploded_k GROUP BY doc_id
-    ), common AS (
-      SELECT c.doc_a, c.doc_b, count(*) AS n_common
-      FROM cand c
-      JOIN exploded_k a ON a.doc_id = c.doc_a
-      JOIN exploded_k b ON b.doc_id = c.doc_b AND b.sk = a.sk
-      GROUP BY c.doc_a, c.doc_b
-    ), edges AS (
+_SQL_COMPONENT_CTES = f"""{_SQL_SIGS}, {_SQL_CAND}, {_sql_verify("cand")}, edges AS (
       SELECT doc_a, doc_b FROM common
       JOIN sizes sa ON sa.doc_id = doc_a
       JOIN sizes sb ON sb.doc_id = doc_b
@@ -2057,11 +1976,7 @@ DECON_EVAL_SOURCE = "src0"  # stand-in benchmark/eval source
 
 @register(
     "docs_decontamination",
-    oracle=f"""
-    WITH sh AS ({_SQL_SHINGLES}),
-    exploded AS (
-      SELECT doc_id, unnest(shingles) AS s FROM sh
-    ), tagged AS (
+    oracle=f"""{_SQL_GRAMS}, tagged AS (
       SELECT DISTINCT e.doc_id, d.source, {_sql_key64('e.s')} AS sk
       FROM exploded e
       JOIN documents d ON d.doc_id = e.doc_id
@@ -3099,52 +3014,6 @@ def docs_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DUP_SPAN_K = 8  # tokens per gram
 
-def _dup_span_garr(d: DataFrame, k: int) -> DataFrame:
-    """(doc_id, garr) — each document's per-POSITION 60-bit gram
-    fingerprints as ONE order-preserving array row (r15, VERDICT r14
-    #3 / guide §6+§8: gram+md5 the corpus ONCE per query, not once per
-    leg).
-
-    Both dup-span queries previously ran the tokenize+gram+md5 pipeline
-    twice over the documents table — once for the instance stream and
-    once (via _distinct_sk_rows) for the document-frequency side — plus
-    a third scan for the per-doc gram count. This frame is the single
-    shared source: callers persist_tracked() it and derive all three
-    legs map-side (posexplode -> instances; array_sort + adjacent-
-    inequality dedup -> per-doc-distinct df rows; size(garr) -> gram
-    count). The persisted row is 8 B per token position — smaller than
-    the document text it replaces — so the cache footprint is bounded
-    by the input the legs would otherwise each re-scan; at 100 TB this
-    is the guide §8 'fingerprint once, decide on the proxy' split.
-
-    Barriers: explode(array(...)) binds the token array before the
-    transform so projection collapse can never re-inline the split per
-    element (the gram_rows trap, see _doc_distinct_gram_arrays)."""
-    toks = d.selectExpr(
-        "doc_id", "explode(array(split(trim(text), ' '))) AS toks"
-    ).where(F.expr(f"size(toks) >= {k}"))
-    gram = _gram_key64_sql(f"array_join(slice(toks, i, {k}), ' ')")
-    return toks.selectExpr(
-        "doc_id",
-        "explode(array(transform("
-        f"sequence(1, size(toks) - {k - 1}), i -> {gram}))) AS garr",
-    )
-
-
-def _dup_span_distinct_sk(ga: DataFrame) -> DataFrame:
-    """Per-doc-distinct (sk) rows from the shared garr frame — the df
-    side's currency, derived map-side from the cached arrays (sort +
-    adjacent-inequality dedup; no md5, no exchange). The explode(array())
-    barrier binds the sorted array once so the filter's element_at reads
-    a bound attribute."""
-    return ga.selectExpr(
-        "doc_id", "explode(array(array_sort(garr))) AS sarr"
-    ).selectExpr(
-        "explode(filter(sarr, (x, i) -> i = 0 OR x != element_at(sarr, i)))"
-        " AS sk"
-    )
-
-
 # 60-bit gram fingerprint: the two gram-keyed exchanges of the dup-span
 # family (gram-df aggregate + df join-back) carried the raw ~50-byte
 # 8-token gram text; LZ4 shrinks text but the keys still dominated the
@@ -3196,16 +3065,12 @@ def docs_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r15 (VERDICT r14 #3): ONE gram+md5 pass over the corpus, persisted
     # as 8 B/position arrays; all three legs below derive from it
     # map-side (previously: two full gram pipelines + a third doc scan).
-    ga = persist_tracked(_dup_span_garr(d, DUP_SPAN_K))
+    ga = persist_tracked(_gram_key_arrays(d, DUP_SPAN_K))
     grams = ga.select("doc_id", F.explode("garr").alias("gk"))
     # r8c: df from the zero-shuffle per-doc-distinct rows — a plain
     # count(*) with map-side partials (vocabulary-bounded exchange)
     # instead of count_distinct's gram-volume dedup exchange
-    gdf = (
-        _dup_span_distinct_sk(ga)
-        .groupBy("sk")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
+    gdf = _distinct_sk_rows(ga).groupBy("sk").agg(F.count(F.lit(1)).alias("df"))
     dup_keys = gdf.where(F.col("df") >= 2).select(F.col("sk").alias("gk"))
     # n_grams = size(garr) — identical to size(tokens) - (K-1) on the
     # >= K-token docs the garr frame keeps; no gram rows shuffled
@@ -3298,18 +3163,14 @@ def docs_dup_span_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (previously two full gram pipelines over the documents table).
     # posexplode is 0-based; pos = i0 + 1 matches the old 1-based
     # sequence explode exactly.
-    ga = persist_tracked(_dup_span_garr(d, DUP_SPAN_K))
+    ga = persist_tracked(_gram_key_arrays(d, DUP_SPAN_K))
     grams = ga.select(
         "doc_id", F.posexplode("garr").alias("i0", "gk")
     ).select("doc_id", (F.col("i0") + 1).cast("long").alias("pos"), "gk")
     # r8c: df from the zero-shuffle per-doc-distinct rows (vocabulary-
     # bounded count); only DUPLICATED gram positions reach the semi-join
     # exchange, whose right side reuses the df agg's partitioning
-    gdf = (
-        _dup_span_distinct_sk(ga)
-        .groupBy("sk")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
+    gdf = _distinct_sk_rows(ga).groupBy("sk").agg(F.count(F.lit(1)).alias("df"))
     dup_keys = gdf.where(F.col("df") >= 2).select(F.col("sk").alias("gk"))
     dup_pos = grams.join(dup_keys, "gk", "semi").select("doc_id", "pos")
     w = Window.partitionBy("doc_id").orderBy("pos")
@@ -3426,18 +3287,7 @@ INCR_BATCH_MOD = 10  # doc_id % 10 == 9 plays the incoming batch
 
 @register(
     "docs_incremental_dedup",
-    oracle=f"""
-    WITH sh AS ({_SQL_SHINGLES}),
-    exploded AS (
-      SELECT doc_id, unnest(shingles) AS s FROM sh
-    ), halves AS ({_SQL_HALVES}),
-    sigs AS (
-      SELECT doc_id,
-{_SQL_MINHASH_AGGS}
-      FROM halves GROUP BY doc_id
-    ), bands AS (
-{_SQL_BANDS}
-    ), new_bands AS (
+    oracle=f"""{_SQL_SIGS}, {_SQL_BANDS}, new_bands AS (
       SELECT * FROM bands WHERE doc_id % {INCR_BATCH_MOD} = {INCR_BATCH_MOD - 1}
     ), corpus_bands AS (
       SELECT * FROM bands WHERE doc_id % {INCR_BATCH_MOD} != {INCR_BATCH_MOD - 1}
@@ -3648,33 +3498,7 @@ _SQL_SIG_AGREE = " + ".join(
 
 @register(
     "minhash_estimate_accuracy",
-    oracle=f"""
-    WITH sh AS ({_SQL_SHINGLES}),
-    exploded AS (
-      SELECT doc_id, unnest(shingles) AS s FROM sh
-    ), halves AS ({_SQL_HALVES}),
-    sigs AS (
-      SELECT doc_id,
-{_SQL_MINHASH_AGGS}
-      FROM halves GROUP BY doc_id
-    ), bands AS (
-{_SQL_BANDS}
-    ), cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b
-        ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-           AND a.doc_id < b.doc_id
-    ), exploded_k AS (
-      SELECT DISTINCT doc_id, {_sql_key64('s')} AS sk FROM exploded
-    ), sizes AS (
-      SELECT doc_id, count(*) AS n_sh FROM exploded_k GROUP BY doc_id
-    ), common AS (
-      SELECT c.doc_a, c.doc_b, count(*) AS n_common
-      FROM cand c
-      JOIN exploded_k a ON a.doc_id = c.doc_a
-      JOIN exploded_k b ON b.doc_id = c.doc_b AND b.sk = a.sk
-      GROUP BY c.doc_a, c.doc_b
-    ), agree AS (
+    oracle=f"""{_SQL_SIGS}, {_SQL_CAND}, {_sql_verify("cand")}, agree AS (
       SELECT c.doc_a, c.doc_b, ({_SQL_SIG_AGREE}) AS n_agree
       FROM cand c
       JOIN sigs a ON a.doc_id = c.doc_a
@@ -3702,7 +3526,7 @@ def minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fp deliberately NOT persisted: measured slower (see
     # minhash_verified_pairs — recompute beats cache round-trip for the
     # plain 3-gram array pipeline)
-    scored = _verify_pair_overlap(cand, _doc_fp_sets(d)).where(
+    scored = _verify_pair_overlap(cand, _doc_distinct_gram_arrays(d)).where(
         F.col("n_common") > 0
     )
     sa_sig = sigs.alias("sa_sig")
@@ -4220,33 +4044,7 @@ def docs_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "docs_cross_source_leakage",
-    oracle=f"""
-    WITH sh AS ({_SQL_SHINGLES}),
-    exploded AS (
-      SELECT doc_id, unnest(shingles) AS s FROM sh
-    ), halves AS ({_SQL_HALVES}),
-    sigs AS (
-      SELECT doc_id,
-{_SQL_MINHASH_AGGS}
-      FROM halves GROUP BY doc_id
-    ), bands AS (
-{_SQL_BANDS}
-    ), cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b
-        ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-           AND a.doc_id < b.doc_id
-    ), exploded_k AS (
-      SELECT DISTINCT doc_id, {_sql_key64('s')} AS sk FROM exploded
-    ), sizes AS (
-      SELECT doc_id, count(*) AS n_sh FROM exploded_k GROUP BY doc_id
-    ), common AS (
-      SELECT c.doc_a, c.doc_b, count(*) AS n_common
-      FROM cand c
-      JOIN exploded_k a ON a.doc_id = c.doc_a
-      JOIN exploded_k b ON b.doc_id = c.doc_b AND b.sk = a.sk
-      GROUP BY c.doc_a, c.doc_b
-    ), verified AS (
+    oracle=f"""{_SQL_SIGS}, {_SQL_CAND}, {_sql_verify("cand")}, verified AS (
       SELECT doc_a, doc_b,
              n_common * 1.0 / (sa.n_sh + sb.n_sh - n_common) AS jac
       FROM common
@@ -4498,11 +4296,7 @@ def events_value_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "docs_ngram_novelty",
-    oracle=f"""
-    WITH sh AS ({_SQL_SHINGLES}),
-    exploded AS (
-      SELECT doc_id, unnest(shingles) AS s FROM sh
-    ), keyed AS (
+    oracle=f"""{_SQL_GRAMS}, keyed AS (
       SELECT doc_id, {_sql_key64('s')} AS sk FROM exploded
     ), first_seen AS (
       SELECT sk, min(doc_id) AS first_doc FROM keyed GROUP BY sk
@@ -4534,13 +4328,13 @@ def docs_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r9: persisted — arrs feeds both the first-seen agg (via rows) and
     # the per-doc sizes projection; un-cached, the gram-array pipeline
     # evaluated twice (subtree reuse does not fire across consumers)
-    arrs = persist_tracked(_doc_fp_sets(d))
-    rows = arrs.select("doc_id", F.explode("sks").alias("sk"))
+    arrs = persist_tracked(_doc_distinct_gram_arrays(d))
+    rows = arrs.select("doc_id", F.explode("arr").alias("sk"))
     first = rows.groupBy("sk").agg(F.min("doc_id").alias("first_doc"))
     novel = first.groupBy(F.col("first_doc").alias("doc_id")).agg(
         F.count(F.lit(1)).alias("n_novel")
     )
-    sizes = arrs.select("doc_id", F.size("sks").cast("long").alias("n_shingles"))
+    sizes = arrs.select("doc_id", F.size("arr").cast("long").alias("n_shingles"))
     return sizes.join(novel, "doc_id", "left").select(
         "doc_id",
         "n_shingles",
@@ -5073,18 +4867,6 @@ def events_lc_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 BAND_SWEEP_CFGS = [(2, 8), (4, 4), (8, 2)]  # (n_bands, rows_per_band)
 
 
-def _band_rows_cfg(sigs: DataFrame, n_bands: int, n_rows: int) -> DataFrame:
-    stack_args = ", ".join(
-        "{}, concat_ws('|', {})".format(
-            b, ", ".join(f"sig_{n_rows * b + r}" for r in range(n_rows))
-        )
-        for b in range(n_bands)
-    )
-    return sigs.selectExpr(
-        "doc_id", f"stack({n_bands}, {stack_args}) AS (band_idx, band_key)"
-    )
-
-
 def _sql_band_sweep_cfg(n_bands: int, n_rows: int) -> str:
     bands = "\n      UNION ALL\n".join(
         "      SELECT doc_id, {} AS band_idx, {} AS band_key FROM sigs".format(
@@ -5120,30 +4902,11 @@ _SQL_SWEEP_SSTAR = " ".join(
 
 @register(
     "minhash_band_sweep",
-    oracle=f"""
-    WITH sh AS ({_SQL_SHINGLES}),
-    exploded AS (
-      SELECT doc_id, unnest(shingles) AS s FROM sh
-    ), halves AS ({_SQL_HALVES}),
-    sigs AS (
-      SELECT doc_id,
-{_SQL_MINHASH_AGGS}
-      FROM halves GROUP BY doc_id
-    ), cands AS (
+    oracle=f"""{_SQL_SIGS}, cands AS (
 {_SQL_SWEEP_CANDS}
     ), distinct_pairs AS (
       SELECT DISTINCT doc_a, doc_b FROM cands
-    ), exploded_k AS (
-      SELECT DISTINCT doc_id, {_sql_key64('s')} AS sk FROM exploded
-    ), sizes AS (
-      SELECT doc_id, count(*) AS n_sh FROM exploded_k GROUP BY doc_id
-    ), common AS (
-      SELECT c.doc_a, c.doc_b, count(*) AS n_common
-      FROM distinct_pairs c
-      JOIN exploded_k a ON a.doc_id = c.doc_a
-      JOIN exploded_k b ON b.doc_id = c.doc_b AND b.sk = a.sk
-      GROUP BY c.doc_a, c.doc_b
-    ), jac AS (
+    ), {_sql_verify("distinct_pairs")}, jac AS (
       SELECT m.doc_a, m.doc_b,
              m.n_common * 1.0 / (sa.n_sh + sb.n_sh - m.n_common) AS j
       FROM common m
@@ -5173,28 +4936,14 @@ def minhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact-Jaccard verify runs once over the UNION of candidates and
     joins back, so adding configs adds band joins, not verify passes."""
     d = table(spark, sf_dir, "documents")
-    sigs = persist_tracked(_sigs_from_shingle_rows(_shingle_rows(d)))
-    # per-doc fingerprint arrays feed both sides of the verify join;
-    # persist so the gram pipeline runs once, not twice (r8b)
-    fp = persist_tracked(_doc_fp_sets(d))
+    sigs = minhash_signatures_df(d)  # persisted by the first _band_pairs
+    # per-doc key arrays feed both sides of the verify join; persist so
+    # the gram pipeline runs once, not twice (r8b)
+    fp = persist_tracked(_doc_distinct_gram_arrays(d))
     cands = None
     for b, r in BAND_SWEEP_CFGS:
-        rows = _band_rows_cfg(sigs, b, r)
-        a_, b_ = rows.alias("a"), rows.alias("b")
-        c = (
-            a_.join(
-                b_,
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_key") == F.col("b.band_key"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.lit(b).alias("n_bands"),
-                F.lit(r).alias("rows_per_band"),
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-            .distinct()
+        c = _band_pairs(sigs, b, r).select(
+            F.lit(b).alias("n_bands"), F.lit(r).alias("rows_per_band"), "doc_a", "doc_b"
         )
         cands = c if cands is None else cands.unionByName(c)
     distinct_pairs = cands.select("doc_a", "doc_b").distinct()

@@ -4,10 +4,12 @@ Run: python scripts/generate_explain.py  (writes EXPLAIN.md at repo root)
      python scripts/generate_explain.py --check
 
 ``--check`` writes nothing: it regenerates the plans in memory and exits
-1, naming each query whose plan differs from EXPLAIN.md's. Expression ids
-(``#12``) and ``plan_id=N`` are masked first, since they number whatever
-the session built before.
+1, naming each query whose plan differs from EXPLAIN.md's and printing a
+unified diff of its recorded and fresh plan, so an intended drift can be
+reviewed in the log. Expression ids (``#12``) and ``plan_id=N`` are
+masked first, since they number whatever the session built before.
 """
+import difflib
 import os
 import re
 import sys
@@ -75,15 +77,20 @@ def plans() -> dict[str, str]:
     return out
 
 
-def drifted(plans: dict[str, str], doc: str) -> list[str]:
-    """Names of the queries whose masked plan differs from ``doc``'s (or
-    that ``doc`` lacks or has in excess)."""
+def drifted(plans: dict[str, str], doc: str) -> dict[str, str]:
+    """Query name -> masked unified diff (EXPLAIN.md's plan against the
+    fresh one) for each query whose plan differs from ``doc``'s, or that
+    ``doc`` lacks or has in excess."""
     recorded = {name: IDS.sub("#", plan) for name, plan in SECTION.findall(doc)}
     fresh = {name: IDS.sub("#", plan) for name, plan in plans.items()}
-    return sorted(
-        name for name in fresh.keys() | recorded.keys()
+    return {
+        name: "\n".join(difflib.unified_diff(
+            recorded.get(name, "").splitlines(), fresh.get(name, "").splitlines(),
+            "EXPLAIN.md", "fresh", lineterm="",
+        ))
+        for name in sorted(fresh.keys() | recorded.keys())
         if fresh.get(name) != recorded.get(name)
-    )
+    }
 
 
 def main(argv: list[str]) -> int:
@@ -91,8 +98,8 @@ def main(argv: list[str]) -> int:
     if "--check" in argv:
         with open(EXPLAIN_MD) as f:
             stale = drifted(fresh, f.read())
-        for name in stale:
-            print(f"EXPLAIN.md plan drifted: {name}")
+        for name, diff in stale.items():
+            print(f"EXPLAIN.md plan drifted: {name}\n{diff}")
         print(f"[explain] {len(fresh) - len(stale)}/{len(fresh)} plans current")
         return 1 if stale else 0
     with open(EXPLAIN_MD, "w") as f:

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
-
 from edu_data_pipeline_spark.sources import csv_ingest
 
 STUDENTS_CSV = """student_id,full_name,email,phone,dob,gender,city,state,enrollment_date,program_id,fee_paid,payment_status
@@ -70,15 +68,6 @@ def test_read_raw_all_strings_with_lineage(spark, tmp_path):
         spark, str(bom), csv_ingest.REQUIRED_COLUMNS["students_enrollment"]
     )
     assert sorted(bom_df.collect()) == sorted(df.collect())
-
-
-def test_read_raw_rejects_invalid(spark, tmp_path):
-    bad = tmp_path / "student_progress.csv"
-    bad.write_text("event_id,student_id\nx,y\n")
-    with pytest.raises(csv_ingest.FileValidationError):
-        csv_ingest.read_raw_csv(
-            spark, str(bad), csv_ingest.REQUIRED_COLUMNS["student_progress"]
-        )
 
 
 def test_append_raw_is_append_only(spark, tmp_path):

@@ -1,13 +1,17 @@
-"""The r8c map-side per-doc gram machinery, pinned on crafted corpora.
+"""The near-dup family's map-side substrate, pinned on crafted corpora.
 
 _doc_distinct_gram_arrays deleted the gram family's distinct exchanges
-(SCALE.md r8c note); these tests pin the two claims the parity sweep
-can't isolate: (1) the array builder is element-for-element equivalent
-to the collect_set / .distinct() shapes it replaced, for both string
-and fingerprint elements and for k=3 and k=8 grams; (2) the zero-
-shuffle CDC rewrite reproduces the window/groupBy chunk numbering on
-every boundary edge case (boundary at position 1, no boundaries,
-consecutive boundaries, boundary at the last position).
+(SCALE.md r8c note); these tests pin the claims the parity sweep can't
+isolate: (1) the array builder is element-for-element equivalent to the
+collect_set / .distinct() shapes it replaced, for both string and
+fingerprint elements and for k=3 and k=8 grams; (2) the positional key
+arrays are gram_rows' keys in position order, and the distinct key rows
+are the same whether built from the documents or from a persisted
+positional frame; (3) _band_pairs equals a pure-Python banding of the
+signatures for every banding the registry uses; (4) the zero-shuffle CDC
+rewrite reproduces the window/groupBy chunk numbering on every boundary
+edge case (boundary at position 1, no boundaries, consecutive
+boundaries, boundary at the last position).
 """
 
 from __future__ import annotations
@@ -16,15 +20,22 @@ import random
 
 from pyspark.sql import functions as F
 
-from edu_data_pipeline_spark.suite import load_all
+from edu_data_pipeline_spark.suite import load_all, release_caches
 from edu_data_pipeline_spark.suite.scale_suite import (
+    BAND_SWEEP_CFGS,
     CDC_MODULUS,
+    N_BAND_ROWS,
+    N_BANDS,
+    _band_pairs,
+    _distinct_sk_rows,
     _doc_distinct_gram_arrays,
     _gram_key64,
     _gram_key64_sql,
+    _gram_key_arrays,
     _sk_from_halves,
     _tokens,
     gram_rows,
+    minhash_signatures_df,
 )
 
 REGISTRY = load_all()
@@ -95,6 +106,74 @@ def test_sk_from_halves_matches_gram_key64(spark):
         F.conv(F.substring(m, 9, 8), 16, 10).cast("long").alias("h2"),
     ).withColumn("derived", _sk_from_halves())
     assert both.where(F.col("direct") != F.col("derived")).count() == 0
+
+
+def _docs_with_null(spark, texts):
+    return _docs(spark, texts).unionByName(
+        spark.createDataFrame(
+            [(len(texts), None, "en", "test", 0)],
+            "doc_id long, text string, lang string, source string, n_chars int",
+        )
+    )
+
+
+def test_positional_key_arrays_are_gram_rows_keys_in_order(spark):
+    """Exploded in order, each document's positional key array is its
+    gram_rows keys in position order; documents shorter than k and NULL
+    text get no row from either."""
+    texts = CRAFTED + _random_texts(40)
+    d = _docs_with_null(spark, texts)
+    for k in (3, 8):
+        via_arrays = {
+            r["doc_id"]: r["garr"] for r in _gram_key_arrays(d, k).collect()
+        }
+        via_rows: dict[int, list[int]] = {}
+        # gram_rows is narrow, so each document's rows come back in the
+        # order its explode emitted them: position order
+        keyed = gram_rows(d, k).select("doc_id", _gram_key64(F.col("s")).alias("sk"))
+        for r in keyed.collect():
+            via_rows.setdefault(r["doc_id"], []).append(r["sk"])
+        assert via_arrays == via_rows, f"k={k}"
+        assert len(texts) not in via_arrays  # the NULL-text document
+        assert 2 not in via_arrays  # "p q": shorter than k
+
+
+def test_distinct_key_rows_same_from_documents_and_positional_frame(spark):
+    d = _docs_with_null(spark, CRAFTED + _random_texts(60))
+    for k in (3, 8):
+        ga = _gram_key_arrays(d, k).persist()
+        from_docs = sorted(map(tuple, _distinct_sk_rows(d, k=k).collect()))
+        from_ga = sorted(map(tuple, _distinct_sk_rows(ga).collect()))
+        ga.unpersist()
+        assert from_docs and from_docs == from_ga, f"k={k}"
+
+
+def test_band_pairs_match_python_banding(spark):
+    """_band_pairs for the 4x4 default and every BAND_SWEEP_CFGS banding
+    equals banding the collected signatures in pure Python."""
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
+    words = base.split()
+    texts = [base] + [
+        " ".join(words[:i] + ["x%d" % i] + words[i + 1:]) for i in range(len(words))
+    ] + _random_texts(60)
+    d = _docs(spark, texts)
+    sigs = minhash_signatures_df(d)
+    rows = sigs.collect()
+    try:
+        for n_bands, n_rows in [(N_BANDS, N_BAND_ROWS)] + BAND_SWEEP_CFGS:
+            buckets: dict[tuple, list[int]] = {}
+            for r in rows:
+                for b in range(n_bands):
+                    sig = [r[f"sig_{n_rows * b + j}"] for j in range(n_rows)]
+                    key = "|".join(map(str, sig))
+                    buckets.setdefault((b, key), []).append(r["doc_id"])
+            want = {
+                (a, b) for ids in buckets.values() for a in ids for b in ids if a < b
+            }
+            got = {tuple(r) for r in _band_pairs(sigs, n_bands, n_rows).collect()}
+            assert want and got == want, (n_bands, n_rows)
+    finally:
+        release_caches()
 
 
 def _window_cdc(spark, d):

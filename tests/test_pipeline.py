@@ -426,7 +426,6 @@ def test_failed_write_raises_and_records_no_run(spark, tmp_path, monkeypatch):
     assert not os.path.exists(os.path.join(wh_dir, "metadata", "pipeline_runs"))
 
 
-@pytest.mark.xfail(strict=True, reason="ROADMAP direction 1")
 def test_incremental_batch_newest_wins(spark, tmp_path):
     """A second batch updates a student loaded by the first: its values
     must win in staging and the warehouse, and only the rows it carries

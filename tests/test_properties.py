@@ -185,14 +185,16 @@ def test_minhash_signature_set_invariance(spark, docs):
     """Signatures are min-aggregates over the shingle SET: duplicating
     shingle rows and shuffling partitions must not change any signature."""
     from edu_data_pipeline_spark.suite.scale_suite import (
-        _shingle_rows, _sigs_from_shingle_rows,
+        _halves_from_shingle_rows, _sigs_from_halves, gram_rows,
     )
+
+    def sigs(sh):
+        rows = _sigs_from_halves(_halves_from_shingle_rows(sh)).collect()
+        return sorted(map(tuple, rows))
 
     rows = [(i, " ".join(toks)) for i, toks in enumerate(docs)]
     d = spark.createDataFrame(rows, "doc_id long, text string")
-    sh = _shingle_rows(d)
-    base = sorted(map(tuple, _sigs_from_shingle_rows(sh).collect()))
-    doubled = sorted(
-        map(tuple, _sigs_from_shingle_rows(sh.unionByName(sh).repartition(7)).collect())
-    )
+    sh = gram_rows(d, 3)
+    base = sigs(sh)
+    doubled = sigs(sh.unionByName(sh).repartition(7))
     assert base == doubled

@@ -59,7 +59,7 @@ def test_cleaning_is_the_same_under_ansi(spark, tmp_path):
     def raw(name):
         return csv_ingest.read_raw_csv(
             spark, f"{input_dir}/{name}.csv",
-            csv_ingest.REQUIRED_COLUMNS[name], validate=False,
+            csv_ingest.REQUIRED_COLUMNS[name],
         )
 
     cleaned = {
@@ -94,3 +94,60 @@ def test_cleaning_is_the_same_under_ansi(spark, tmp_path):
     on = run("true")
     for name in cleaned:
         assert on[name] == off[name], name
+
+
+def test_number_too_large_for_staging_type_is_null_and_flagged(spark):
+    """A number that does not fit its staging column (duration_seconds
+    int, fee_paid decimal(15,2)) becomes NULL and fails its rule, so the
+    row's quality score drops — the same rows with ANSI on and off. A
+    plain cast raised CAST_OVERFLOW with ANSI on and saturated the int
+    to 2147483647 with it off."""
+    from edu_data_pipeline_spark.operators import cleaning
+    from edu_data_pipeline_spark.sources import csv_ingest
+    from tests.test_cleaning import STUDENT_SCHEMA
+
+    cols = csv_ingest.REQUIRED_COLUMNS["student_progress"]
+    progress = {
+        size: spark.createDataFrame(
+            [("E1", "STU001", "C1", "quiz", "2024-01-15 10:00:00", size,
+              "80", "M1", "50")],
+            ", ".join(f"{c} string" for c in cols),
+        )
+        for size in ("99999999999", "120")
+    }
+    student = {
+        fee: spark.createDataFrame(
+            [("STU001", "John Doe", "john@example.com", "9876543210",
+              "1999-05-15", "Male", "Mumbai", "Maharashtra", "2024-01-15",
+              "PROG001", fee, "Paid")],
+            STUDENT_SCHEMA,
+        )
+        for fee in ("99999999999999999", "50000")
+    }
+    ref_date = F.lit("2026-08-13").cast("date")
+    ref_ts = F.lit("2026-08-13 00:00:00").cast("timestamp")
+
+    def run(ansi: str) -> dict:
+        saved = spark.conf.get("spark.sql.ansi.enabled")
+        try:
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            out = {}
+            for size, raw in progress.items():
+                (r,) = cleaning.clean_progress(raw, ref_ts=ref_ts).collect()
+                out[size] = (r.duration_seconds, r.quality_score)
+            for fee, raw in student.items():
+                (r,) = cleaning.clean_students(raw, ref_date=ref_date).collect()
+                out[fee] = (r.fee_paid, r.quality_score, r.cleaning_notes)
+            return out
+        finally:
+            spark.conf.set("spark.sql.ansi.enabled", saved)
+
+    off = run("false")
+    assert run("true") == off
+    assert off["99999999999"][0] is None
+    assert off["120"][0] == 120
+    assert off["99999999999"][1] < off["120"][1]
+    assert off["99999999999999999"][0] is None
+    assert float(off["50000"][0]) == 50000.0
+    assert off["99999999999999999"][1] < off["50000"][1]
+    assert '"fee_paid":"overflow"' in off["99999999999999999"][2]

@@ -33,8 +33,6 @@ def test_surrogate_keys(spark):
     # deterministic across invocations
     again = warehouse.with_surrogate_key(df, "k", "sk")
     assert {tuple(r) for r in hashed.collect()} == {tuple(r) for r in again.collect()}
-    dense = warehouse.with_surrogate_key(df, "k", "sk", dense=True)
-    assert [r.sk for r in dense.orderBy("k").collect()] == [1, 2, 3]
 
 
 def test_merge_upsert_semantics(spark):
