@@ -285,8 +285,10 @@ def run_batch_pipeline(
           ), "ticket_id"))
 
     # ---- E3: warehouse --------------------------------------------------
-    # The facts join the lazy dimension frames, not the written tables, so
-    # they need not wait for the dimension writes.
+    # The facts join the lazy student dimension, not the written table, so
+    # they need not wait for its write. plan.dim_courses holds only this
+    # batch's catalog, so the progress fact, rebuilt from every merged
+    # event, takes course_sk from the merged warehouse.dim_courses.
     plan("plan.dim_students", ("staging.stg_students", "staging.stg_progress"),
          lambda stg, progress: build_dim_students(stg, progress, ref, replicate_quirks))
     plan("plan.dim_courses", ("raw.course_catalog",),
@@ -307,7 +309,7 @@ def run_batch_pipeline(
     merge("warehouse.dim_students", ("plan.dim_students",), ["student_id"], lambda d: d)
     merge("warehouse.dim_courses", ("plan.dim_courses",), ["course_id"], lambda d: d)
     merge("warehouse.fact_student_progress",
-          ("staging.stg_progress", "plan.dim_students", "plan.dim_courses"),
+          ("staging.stg_progress", "plan.dim_students", "warehouse.dim_courses"),
           ["event_id"], warehouse.build_fact_progress)
     merge("warehouse.fact_support_tickets", ("staging.stg_tickets", "plan.dim_students"),
           ["ticket_id"], fact_tickets)

@@ -52,6 +52,7 @@ from .scale_suite import (
     _SQL_GRAM_KEY64,
     _SQL_GRAMS,
     _distinct_sk_rows,
+    _doc_distinct_gram_arrays,
     _gram_key64,
     _sql_key64,
     _n_tokens,
@@ -460,9 +461,9 @@ def docs_contamination_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     # r8c: per-doc-distinct 8-gram fingerprints explode from the
     # map-side arrays — the gram-volume distinct exchange is gone
-    grams = _distinct_sk_rows(d, carry=("source",), k=CONTAM_GRAM_K).select(
-        "doc_id", "source", F.col("sk").alias("gk")
-    )
+    grams = _distinct_sk_rows(
+        _doc_distinct_gram_arrays(d, carry=("source",), k=CONTAM_GRAM_K)
+    ).select("doc_id", "source", F.col("sk").alias("gk"))
     eval_g = (
         grams.where(F.col("source") == DECON_EVAL_SOURCE)
         .select("gk")
@@ -675,7 +676,7 @@ def docs_bloom_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     # r8c: per-doc-distinct rows explode from the map-side arrays — the
     # gram-volume distinct exchange is gone (see _distinct_sk_rows)
-    tagged = _distinct_sk_rows(d, carry=("source",))
+    tagged = _distinct_sk_rows(_doc_distinct_gram_arrays(d, carry=("source",)))
     bloom = bloom_bitmap(tagged.where(F.col("source") == DECON_EVAL_SOURCE))
     per_gram = bloom_gram_flags(
         tagged.where(F.col("source") != DECON_EVAL_SOURCE), bloom

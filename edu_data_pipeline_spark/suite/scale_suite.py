@@ -413,21 +413,37 @@ def _gram_key_arrays(d: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _distinct_arrays(
+    rows: DataFrame, sorted_sql: str, carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """(doc_id, *carry, arr) — the sorted array ``sorted_sql`` (SQL over
+    ``rows``' columns) bound behind a Generate barrier, then deduped by
+    an adjacent-inequality filter that reads the BOUND array: O(g log g)
+    CPU per doc, zero shuffle. array_distinct (O(g²) per row) stays
+    banned."""
+    return rows.selectExpr(
+        "doc_id", *carry, f"explode(array({sorted_sql})) AS arr"
+    ).selectExpr(
+        "doc_id",
+        *carry,
+        "filter(arr, (x, i) -> i = 0 OR x != element_at(arr, i)) AS arr",
+    )
+
+
 def _doc_distinct_gram_arrays(
     d: DataFrame, elem=_gram_key64_sql, carry: tuple[str, ...] = (), k: int = 3
 ) -> DataFrame:
     """(doc_id, *carry, arr) — each document's k-grams mapped through
     ``elem`` (default: the 60-bit key), SORTED and DEDUPED, built
-    entirely MAP-SIDE (r8c). ``d`` is the documents frame or a
-    _gram_key_arrays frame, whose bound ``garr`` keys are sorted in
-    place (no second tokenize or md5; ``elem`` and ``k`` are its own).
+    entirely MAP-SIDE (r8c).
 
     A document's grams come from its own row, so per-doc dedup needs no
     exchange; the DataFrame spellings (``.distinct()`` / ``collect_set``)
     all shuffle the full gram volume. Two Generate barriers keep this
-    linear: the token barrier, then the sorted gram array, so the
-    adjacent-inequality filter reads a BOUND array — O(g log g) CPU per
-    doc, zero shuffle. array_distinct (O(g²) per row) stays banned.
+    linear: the token barrier, then the sorted gram array
+    (_distinct_arrays). A persisted _gram_key_arrays frame gets the same
+    arrays, with no second tokenize or md5, as
+    ``_distinct_arrays(ga, "array_sort(garr)")``.
 
     The key arrays are the exact-Jaccard verify currency
     (_verify_pair_overlap); exploded (_distinct_sk_rows) they are the
@@ -437,20 +453,8 @@ def _doc_distinct_gram_arrays(
     folds). One array row per document replaces the exploded (doc_id,
     sk) frame's distinct exchange, two verify equi-joins and a sizes
     aggregate: 2.9x less shuffle on minhash_verified_pairs (r8b)."""
-    if "garr" in d.columns:
-        built = d.selectExpr(
-            "doc_id", *carry, "explode(array(array_sort(garr))) AS arr"
-        )
-    else:
-        built = _token_rows(d, k, carry).selectExpr(
-            "doc_id",
-            *carry,
-            f"explode(array(array_sort({_sql_gram_array(k, elem)}))) AS arr",
-        )
-    return built.selectExpr(
-        "doc_id",
-        *carry,
-        "filter(arr, (x, i) -> i = 0 OR x != element_at(arr, i)) AS arr",
+    return _distinct_arrays(
+        _token_rows(d, k, carry), f"array_sort({_sql_gram_array(k, elem)})", carry
     )
 
 
@@ -500,18 +504,16 @@ def _doc_elem_counts(
     ).selectExpr("doc_id", f"_p.elem AS {out}", "_p.cnt AS cnt")
 
 
-def _distinct_sk_rows(
-    d: DataFrame, carry: tuple[str, ...] = (), k: int = 3
-) -> DataFrame:
+def _distinct_sk_rows(arrs: DataFrame) -> DataFrame:
     """Per-doc-distinct (doc_id, *carry, sk) 60-bit key rows with ZERO
-    shuffle (r8c): the exploded _doc_distinct_gram_arrays, from the
-    documents frame or a persisted _gram_key_arrays frame. Drop-in for
-    gram_rows(...).distinct() wherever distinctness is only needed per
-    document — every (doc_id, sk)-grained consumer, since the pair is
-    the grain."""
-    return _doc_distinct_gram_arrays(d, carry=carry, k=k).select(
-        "doc_id", *carry, F.explode("arr").alias("sk")
-    )
+    shuffle (r8c): the exploded ``arr`` of a _distinct_arrays frame —
+    _doc_distinct_gram_arrays(d) from the documents, or
+    ``_distinct_arrays(ga, "array_sort(garr)")`` from a persisted
+    _gram_key_arrays frame. Drop-in for gram_rows(...).distinct()
+    wherever distinctness is only needed per document — every (doc_id,
+    sk)-grained consumer, since the pair is the grain."""
+    carry = [c for c in arrs.columns if c != "arr"]
+    return arrs.select(*carry, F.explode("arr").alias("sk"))
 
 
 def _verify_pair_overlap(cand: DataFrame, fp: DataFrame) -> DataFrame:
@@ -656,17 +658,15 @@ def _band_pairs(
     DataFrame: stack the bands, equi-join on (band_idx, band_key) — the
     near-linear candidate generator shared by every MinHash query.
 
-    r15 (VERDICT r14 #5): the signature frame is persist_tracked —
-    both sides of the self-join (and, via Spark's plan-equality cache
-    matching, any OTHER reference to the same signature plan in the
-    consumer) previously re-derived signatures from raw documents, so
-    the gram+md5+16-min-agg pipeline (and for the stopfiltered path the
-    whole stop-list build) ran twice per query. A signature row is
-    doc_id + 16 longs (~136 B/doc, the guide §8 lightweight proxy), so
-    the cache is corpus-count-, not corpus-size-, bounded; the same
-    trade minhash_band_sweep makes for its 3 bandings."""
-    if not sigs.is_cached:
-        sigs = persist_tracked(sigs)
+    r15 (VERDICT r14 #5): callers pass a persist_tracked signature
+    frame — both sides of the self-join (and, via Spark's plan-equality
+    cache matching, any OTHER reference to the same signature plan in
+    the consumer) would otherwise re-derive signatures from raw
+    documents, so the gram+md5+16-min-agg pipeline (and for the
+    stopfiltered path the whole stop-list build) ran twice per query.
+    A signature row is doc_id + 16 longs (~136 B/doc, the guide §8
+    lightweight proxy), so the cache is corpus-count-, not corpus-size-,
+    bounded; minhash_band_sweep persists once for its 3 bandings."""
     bands = band_rows(sigs, n_bands, n_rows)
     a = bands.alias("a")
     b = bands.alias("b")
@@ -726,7 +726,7 @@ def _sql_verify(cand: str) -> str:
     """,
 )
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _band_pairs(minhash_signatures(spark, sf_dir))
+    return _band_pairs(persist_tracked(minhash_signatures(spark, sf_dir)))
 
 
 # ---------------------------------------------------------------------------
@@ -781,7 +781,8 @@ def _stop_filtered_halves(d: DataFrame) -> DataFrame:
     measurably slower on wall despite identical bytes). The anti-join
     key is the 60-bit fingerprint derived arithmetically from the
     halves (_sk_from_halves)."""
-    stop = _stop_keys(_distinct_sk_rows(d), d, _STOP_MAX_DF)
+    rows = _distinct_sk_rows(_doc_distinct_gram_arrays(d))
+    stop = _stop_keys(rows, d, _STOP_MAX_DF)
     hv = _halves_from_shingle_rows(gram_rows(d, 3)).withColumn(
         "sk", _sk_from_halves()
     )
@@ -814,7 +815,7 @@ def _pair_shingle_keys(d: DataFrame) -> DataFrame:
     ADD a candidate pair — the exact-Jaccard verify rescores every
     candidate. The rows are already globally distinct on (doc_id, sk)
     (_distinct_sk_rows), so no trailing .distinct() exchange (r8c)."""
-    rows = _distinct_sk_rows(d)
+    rows = _distinct_sk_rows(_doc_distinct_gram_arrays(d))
     stop = _stop_keys(rows, d, f"least({_STOP_MAX_DF}, {PAIR_DF_CAP})")
     return rows.join(F.broadcast(stop), "sk", "left_anti")
 
@@ -855,7 +856,7 @@ def minhash_lsh_stopfiltered(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange, no distinct on the kept side — the min-agg tolerates
     duplicate rows); the oracle applies the identical transform."""
     d = table(spark, sf_dir, "documents")
-    return _band_pairs(_sigs_from_halves(_stop_filtered_halves(d)))
+    return _band_pairs(persist_tracked(_sigs_from_halves(_stop_filtered_halves(d))))
 
 
 @register(
@@ -2011,7 +2012,7 @@ def docs_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r8c: per-doc-distinct rows explode from the map-side arrays — the
     # gram-volume distinct exchange is gone; the only exchanges left are
     # the (tiny) eval-side distinct and the 1-row-per-doc final agg.
-    ex = _distinct_sk_rows(d, carry=("source",))
+    ex = _distinct_sk_rows(_doc_distinct_gram_arrays(d, carry=("source",)))
     eval_sh = (
         ex.where(F.col("source") == DECON_EVAL_SOURCE).select("sk").distinct()
     )
@@ -3070,7 +3071,8 @@ def docs_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r8c: df from the zero-shuffle per-doc-distinct rows — a plain
     # count(*) with map-side partials (vocabulary-bounded exchange)
     # instead of count_distinct's gram-volume dedup exchange
-    gdf = _distinct_sk_rows(ga).groupBy("sk").agg(F.count(F.lit(1)).alias("df"))
+    sks = _distinct_sk_rows(_distinct_arrays(ga, "array_sort(garr)"))
+    gdf = sks.groupBy("sk").agg(F.count(F.lit(1)).alias("df"))
     dup_keys = gdf.where(F.col("df") >= 2).select(F.col("sk").alias("gk"))
     # n_grams = size(garr) — identical to size(tokens) - (K-1) on the
     # >= K-token docs the garr frame keeps; no gram rows shuffled
@@ -3170,7 +3172,8 @@ def docs_dup_span_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r8c: df from the zero-shuffle per-doc-distinct rows (vocabulary-
     # bounded count); only DUPLICATED gram positions reach the semi-join
     # exchange, whose right side reuses the df agg's partitioning
-    gdf = _distinct_sk_rows(ga).groupBy("sk").agg(F.count(F.lit(1)).alias("df"))
+    sks = _distinct_sk_rows(_distinct_arrays(ga, "array_sort(garr)"))
+    gdf = sks.groupBy("sk").agg(F.count(F.lit(1)).alias("df"))
     dup_keys = gdf.where(F.col("df") >= 2).select(F.col("sk").alias("gk"))
     dup_pos = grams.join(dup_keys, "gk", "semi").select("doc_id", "pos")
     w = Window.partitionBy("doc_id").orderBy("pos")
@@ -3519,7 +3522,7 @@ _SQL_SIG_AGREE = " + ".join(
 def minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per candidate pair: signature-agreement Jaccard estimate vs exact."""
     d = table(spark, sf_dir, "documents")
-    sigs = minhash_signatures_df(d)
+    sigs = persist_tracked(minhash_signatures_df(d))
     cand = _band_pairs(sigs)
     # per-doc fingerprint arrays + map-side intersect (r8b); n_common > 0
     # replicates the oracle's inner-join drop of zero-overlap candidates.
@@ -4936,7 +4939,7 @@ def minhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact-Jaccard verify runs once over the UNION of candidates and
     joins back, so adding configs adds band joins, not verify passes."""
     d = table(spark, sf_dir, "documents")
-    sigs = minhash_signatures_df(d)  # persisted by the first _band_pairs
+    sigs = persist_tracked(minhash_signatures_df(d))
     # per-doc key arrays feed both sides of the verify join; persist so
     # the gram pipeline runs once, not twice (r8b)
     fp = persist_tracked(_doc_distinct_gram_arrays(d))

@@ -20,13 +20,14 @@ import random
 
 from pyspark.sql import functions as F
 
-from edu_data_pipeline_spark.suite import load_all, release_caches
+from edu_data_pipeline_spark.suite import load_all, persist_tracked, release_caches
 from edu_data_pipeline_spark.suite.scale_suite import (
     BAND_SWEEP_CFGS,
     CDC_MODULUS,
     N_BAND_ROWS,
     N_BANDS,
     _band_pairs,
+    _distinct_arrays,
     _distinct_sk_rows,
     _doc_distinct_gram_arrays,
     _gram_key64,
@@ -142,8 +143,9 @@ def test_distinct_key_rows_same_from_documents_and_positional_frame(spark):
     d = _docs_with_null(spark, CRAFTED + _random_texts(60))
     for k in (3, 8):
         ga = _gram_key_arrays(d, k).persist()
-        from_docs = sorted(map(tuple, _distinct_sk_rows(d, k=k).collect()))
-        from_ga = sorted(map(tuple, _distinct_sk_rows(ga).collect()))
+        from_docs = _distinct_sk_rows(_doc_distinct_gram_arrays(d, k=k))
+        from_ga = _distinct_sk_rows(_distinct_arrays(ga, "array_sort(garr)"))
+        from_docs, from_ga = (sorted(map(tuple, f.collect())) for f in (from_docs, from_ga))
         ga.unpersist()
         assert from_docs and from_docs == from_ga, f"k={k}"
 
@@ -157,7 +159,7 @@ def test_band_pairs_match_python_banding(spark):
         " ".join(words[:i] + ["x%d" % i] + words[i + 1:]) for i in range(len(words))
     ] + _random_texts(60)
     d = _docs(spark, texts)
-    sigs = minhash_signatures_df(d)
+    sigs = persist_tracked(minhash_signatures_df(d))
     rows = sigs.collect()
     try:
         for n_bands, n_rows in [(N_BANDS, N_BAND_ROWS)] + BAND_SWEEP_CFGS:

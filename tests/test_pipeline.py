@@ -430,7 +430,9 @@ def test_incremental_batch_newest_wins(spark, tmp_path):
     """A second batch updates a student loaded by the first: its values
     must win in staging and the warehouse, and only the rows it carries
     are stamped with its batch id. b2 is b1's input with a one-row
-    students file that moves STU005 (file row 5 in b1, row 1 in b2)."""
+    students file that moves STU005 (file row 5 in b1, row 1 in b2) and a
+    one-row course catalog that renames CRS010: the courses b2 leaves out
+    stay in dim_courses, and b1's progress facts keep their course_sk."""
     wh_dir = str(tmp_path / "warehouse")
     b1, b2 = str(tmp_path / "b1"), str(tmp_path / "b2")
     write_fixture_csvs(b1)
@@ -443,6 +445,11 @@ def test_incremental_batch_newest_wins(spark, tmp_path):
     assert fields[6] != old.split(",")[6]
     with open(os.path.join(b2, "students_enrollment.csv"), "w") as f:
         f.write(header + "\n" + ",".join(fields) + "\n")
+    with open(os.path.join(b1, "course_catalog.csv")) as f:
+        header, *rows = f.read().splitlines()
+    (crs010,) = [r for r in rows if r.startswith("CRS010,")]
+    with open(os.path.join(b2, "course_catalog.csv"), "w") as f:
+        f.write(header + "\n" + crs010.replace("Course 10", "Course Ten") + "\n")
 
     pipeline.run_batch_pipeline(spark, b1, wh_dir, batch_id="b1")
     pipeline.run_batch_pipeline(spark, b2, wh_dir, batch_id="b2")
@@ -458,3 +465,10 @@ def test_incremental_batch_newest_wins(spark, tmp_path):
     stg = spark.read.parquet(os.path.join(wh_dir, "staging", "stg_students"))
     stamped = {r["student_id"] for r in stg.where(stg.batch_id == "b2").collect()}
     assert stamped == {"STU005"}
+
+    courses = spark.read.parquet(os.path.join(wh_dir, "warehouse", "dim_courses"))
+    names = {r["course_id"]: r["course_name"] for r in courses.collect()}
+    assert len(names) == 10 and names["CRS010"] == "Course Ten"
+    fact = spark.read.parquet(os.path.join(wh_dir, "warehouse", "fact_student_progress"))
+    assert fact.count() == 50
+    assert fact.where(fact.course_sk.isNull()).count() == 0
